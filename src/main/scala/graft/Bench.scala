@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: every SparkEntry query timed at the configured
   * scale factor, one JSON line on stdout. A small untimed warmup first so
   * the first timed query doesn't absorb JVM/codegen/session startup.
@@ -17,7 +15,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val only: Set[String] = {
       val fromArgs = args.sliding(2).collectFirst { case Array("--queries", qs) => qs }
       fromArgs.orElse(sys.env.get("SPARK_GRAFT_BENCH_QUERIES"))
@@ -25,21 +23,7 @@ object Bench {
     }
     val materialize = args.contains("--materialize") ||
       sys.env.get("SPARK_GRAFT_BENCH_MATERIALIZE").exists(v => v == "1" || v == "true")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // InferFiltersFromGenerate turns explode/inline over an expensive
-      // parsed column (webhook regexp + url_decode + from_json) into a
-      // pushed-down filter that RE-EVALUATES the whole decode chain per
-      // row below the exchange — measured +55% on the array adapters at
-      // sf0.1. The synth/webhook arrays are non-null by construction, so
-      // the inferred filter only costs.
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
 
     // warmup: touch every table + exercise codegen/shuffle paths once
@@ -57,31 +41,40 @@ object Bench {
     // heaviest cached pipelines); min-of-two filters those pauses out
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.isEmpty || only(name) }
-    val results = selected.map { case (name, fn) =>
-      val dt = (0 until 2).map { _ =>
+    // a query that throws in either run is reported as failed, never timed
+    val timed = selected.map { case (name, fn) =>
+      val runs = (0 until 2).map { _ =>
         val t0 = System.nanoTime()
-        try {
+        val ok = try {
           val df = fn(spark, sfDir)
           if (materialize) df.write.format("noop").mode("overwrite").save()
           else df.count()
-        } catch { case _: Throwable => -1L }
+          true
+        } catch { case e: Throwable =>
+          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          false
+        }
         val d = (System.nanoTime() - t0) / 1e9
         // release the block-manager entries persisted inside the query just
         // timed — 80+ queries in one session would otherwise accumulate
         // InMemoryRelations for the whole run
         graft.util.CacheScope.release(spark)
         spark.catalog.clearCache()
-        d
-      }.min
-      name -> dt
+        Option.when(ok)(d)
+      }
+      name -> Option.when(runs.forall(_.isDefined))(runs.flatten.min)
     }
+    val results = timed.collect { case (name, Some(dt)) => name -> dt }
+    val failed = timed.collect { case (name, None) => name }
+    if (failed.nonEmpty) System.err.println(s"[bench] failed: ${failed.mkString(",")}")
     // millisecond precision keeps the line compact — the driver stores a
     // bounded tail of stdout and full-precision doubles overflowed it in r3
     val qs = results.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
       .mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
     val sfNum = "sf([0-9.]+)".r.findFirstMatchIn(sfDir).map(_.group(1)).getOrElse("0")
-    val line = s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","n_queries":${results.size},"queries":$qs,"sf":$sfNum,"sf_dir":"$sfDir"}"""
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val line = s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","n_queries":${results.size},"queries":$qs,"failed":$failedJson,"sf":$sfNum,"sf_dir":"$sfDir"}"""
     // self-report the FULL per-query map to a repo file first: always
     // recoverable even if a log collector truncates stdout
     try java.nio.file.Files.writeString(java.nio.file.Paths.get("bench_out.json"), line + "\n")

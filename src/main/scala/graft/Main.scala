@@ -67,25 +67,11 @@ object Main {
       "--input (or --transport + --transport-config) is required")
     require(args.good.nonEmpty, "--good is required")
 
-    val builder = SparkSession.builder()
-      .appName("graft-enrich")
-      .config("spark.sql.session.timeZone", "UTC")
-      // let AQE re-plan shuffles INSIDE cached plans (off by default): the
-      // iterative operators (connected components, PageRank) cache small
-      // per-round frames whose fixed-width partitioning otherwise dominates
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // InferFiltersFromGenerate turns explode/inline over an expensive
-      // parsed column (webhook regexp + url_decode + from_json) into a
-      // pushed-down filter that RE-EVALUATES the whole decode chain per
-      // row below the exchange — measured +55% on the array adapters at
-      // sf0.1. The synth/webhook arrays are non-null by construction, so
-      // the inferred filter only costs.
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
+    val builder = GraftSession.configure().appName("graft-enrich")
     // spark-submit injects the master; default for bare local runs. Track
     // whether we REUSED an existing session (tests drive main() in-process)
     // so we never stop a session we did not create.
-    val reused = org.apache.spark.sql.SparkSession.getActiveSession.isDefined
+    val reused = SparkSession.getActiveSession.isDefined
     val spark = (if (new org.apache.spark.SparkConf().contains("spark.master")) builder
                  else builder.master("local[*]")).getOrCreate()
 

@@ -115,13 +115,17 @@ object UrlF {
     null
   }
 
-  /** try_cast('int') of a digit-only run: null on int overflow. */
-  private def tryParsePort(s: String): Integer =
-    if (s.length > 10) null
+  /** try_cast('int') of a digit-only run: null on int overflow. Leading
+    * zeros do not count towards the length (try_cast reads 000…080 as 80). */
+  private def tryParsePort(s: String): Integer = {
+    var i = 0
+    while (i < s.length - 1 && s.charAt(i) == '0') i += 1
+    if (s.length - i > 10) null
     else {
-      val v = s.toLong
+      val v = s.substring(i).toLong
       if (v > Int.MaxValue) null else Integer.valueOf(v.toInt)
     }
+  }
 
   /** One-pass imperative twin of the six URL regexes (see the `*Spec`
     * Columns above for the exact patterns being mirrored). */

@@ -30,7 +30,7 @@ object AsOfJoin {
     * EnsureRequirements, then one streaming merge pass per partition with
     * O(1) carry state. Same semantics as [[leftAsOf]] (inclusive
     * `right.time <= left.time`, nulls when nothing precedes), proven
-    * equivalent by AsOfJoinNativeSpec. Self-registers the planner strategy
+    * equivalent by AsOfJoinNativeSpec. Installs the planner strategy
     * on first use; `GraftExtensions` also injects it at session build.
     *
     * Column names must be unambiguous on their side. Key and time columns
@@ -49,7 +49,7 @@ object AsOfJoin {
     import org.apache.spark.sql.catalyst.expressions.Alias
     import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
     val spark = left.sparkSession
-    graft.plans.GraftFunctions.registerAsOfStrategy(spark)
+    graft.plans.GraftFunctions.install(spark)
     val lPlan = left.queryExecution.analyzed
     val rPlan0 = right.queryExecution.analyzed
     // shared lineage would duplicate expression ids across sides and make

@@ -21,7 +21,7 @@ object IntervalJoin {
     import org.apache.spark.sql.catalyst.expressions.Alias
     import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
     val spark = facts.sparkSession
-    graft.plans.GraftFunctions.registerIntervalStrategy(spark)
+    graft.plans.GraftFunctions.install(spark)
     val lPlan = facts.queryExecution.analyzed
     val rPlan0 = ranges.queryExecution.analyzed
     val rPlan: LogicalPlan =

@@ -12,8 +12,8 @@ import org.apache.spark.sql.execution.metric.SQLMetrics
   * genuinely cannot express (reference `registry/WeatherEnrichment.scala`:
   * "latest observation at or before the event time, per station"):
   * a custom `LogicalPlan` + `SparkStrategy` + `SparkPlan`, registered via
-  * `GraftExtensions` (or self-registered through
-  * `spark.experimental.extraStrategies`).
+  * `GraftExtensions` (or on a live session through
+  * `GraftFunctions.install`).
   *
   * Physical shape: both sides hash-clustered on the key and sorted by
   * (key, time) — EnsureRequirements inserts the exchanges/sorts exactly as

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -21,8 +20,7 @@ import org.apache.spark.sql.types.LongType
   * Registered via [[GraftExtensions]] (`injectOptimizerRule` — lands in
   * the operator-optimization FIXED-POINT batch, so it must be and is
   * idempotent: a rewritten Aggregate no longer matches the Count-distinct
-  * pattern) or on a live session through
-  * [[GraftFunctions.registerBitmapRewrite]]
+  * pattern) or on a live session through [[GraftFunctions.install]]
   * (`experimental.extraOptimizations` — the once-per-plan "User Provided
   * Optimizers" batch). Both run during logical optimization, before
   * physical planning's single-distinct expansion, so the two-Exchange
@@ -39,14 +37,4 @@ object BitmapDistinctRewrite extends Rule[LogicalPlan] {
             ae.copy(aggregateFunction = BitmapDistinct(c), isDistinct = false)
         }
     }
-}
-
-object BitmapDistinctRewriteSupport {
-  /** Idempotently add the rewrite rule to a live session's experimental
-    * optimizations (the `.withExtensions` path injects it at build). */
-  def register(spark: SparkSession): Unit = {
-    val cur = spark.experimental.extraOptimizations
-    if (!cur.contains(BitmapDistinctRewrite))
-      spark.experimental.extraOptimizations = cur :+ BitmapDistinctRewrite
-  }
 }

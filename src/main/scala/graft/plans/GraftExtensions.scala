@@ -4,6 +4,9 @@ import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.SparkStrategy
 import org.apache.spark.sql.graft.ColumnBridge
 
 import graft.functions.{EventF, IpF, TextF, UaF}
@@ -15,10 +18,11 @@ import graft.functions.{EventF, IpF, TextF, UaF}
   * spark.sql("SELECT graft_anon_ip(ip, 2), graft_token_count(text) FROM t")
   * }}}
   *
-  * Two entry points:
+  * Two entry points, both attaching [[GraftFunctions.all]],
+  * [[GraftFunctions.strategies]] and [[GraftFunctions.rules]]:
   *  - `.withExtensions(new GraftExtensions)` /
   *    `spark.sql.extensions=graft.plans.GraftExtensions` at session build;
-  *  - [[GraftFunctions.register]] on a live session.
+  *  - [[GraftFunctions.install]] on a live session.
   *
   * Kernel-backed functions are expression *builders*: each call site expands
   * to the same codegen'd expression tree the Column API produces, so SQL
@@ -27,10 +31,8 @@ import graft.functions.{EventF, IpF, TextF, UaF}
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.all.foreach(ext.injectFunction)
-    ext.injectPlannerStrategy(_ => AsOfJoinStrategy)
-    ext.injectPlannerStrategy(_ => IntervalJoinStrategy)
-    ext.injectOptimizerRule(_ => BitmapDistinctRewrite)
-    ext.injectOptimizerRule(_ => TopKRewrite)
+    GraftFunctions.strategies.foreach(s => ext.injectPlannerStrategy(_ => s))
+    GraftFunctions.rules.foreach(r => ext.injectOptimizerRule(_ => r))
   }
 }
 
@@ -185,30 +187,21 @@ object GraftFunctions {
   def topK(key: org.apache.spark.sql.Column, tie: org.apache.spark.sql.Column, k: Int): org.apache.spark.sql.Column =
     c(TopKRows(x(key), x(tie), k).toAggregateExpression())
 
-  /** Register all graft SQL functions on a live session. */
-  def register(spark: SparkSession): Unit = {
+  /** graft's planner strategies (native as-of and interval joins). */
+  val strategies: Seq[SparkStrategy] = Seq(AsOfJoinStrategy, IntervalJoinStrategy)
+
+  /** graft's optimizer rules; each is off unless its session conf is set. */
+  val rules: Seq[Rule[LogicalPlan]] = Seq(BitmapDistinctRewrite, TopKRewrite)
+
+  /** Attach every graft SQL function, strategy and rule to a live session.
+    * Idempotent: a strategy or rule already present is not added again. */
+  def install(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
     all.foreach { case (ident, info, builder) =>
       registry.registerFunction(ident, info, builder)
     }
-    registerAsOfStrategy(spark)
+    val exp = spark.experimental
+    exp.extraStrategies = exp.extraStrategies ++ strategies.filterNot(exp.extraStrategies.contains)
+    exp.extraOptimizations = exp.extraOptimizations ++ rules.filterNot(exp.extraOptimizations.contains)
   }
-
-  /** Idempotently add the count(DISTINCT bigint) → bitmap rewrite on a
-    * live session (see [[BitmapDistinctRewrite]]; conf-guarded). */
-  def registerBitmapRewrite(spark: SparkSession): Unit =
-    BitmapDistinctRewriteSupport.register(spark)
-
-  /** Idempotently add [[AsOfJoinStrategy]] on a live session (the
-    * `.withExtensions` path injects it at session build instead). */
-  def registerAsOfStrategy(spark: SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
-
-  /** Idempotently add [[IntervalJoinStrategy]] on a live session. */
-  def registerIntervalStrategy(spark: SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(IntervalJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ IntervalJoinStrategy
 }

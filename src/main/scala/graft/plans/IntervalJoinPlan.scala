@@ -28,7 +28,7 @@ import org.apache.spark.sql.execution.metric.SQLMetrics
   * interval is reported unmatched (spec-pinned). Probes in no interval
   * get nulls (left-outer semantics).
   * Registered via `GraftExtensions` or
-  * `GraftFunctions.registerIntervalStrategy`.
+  * `GraftFunctions.install`.
   */
 final case class IntervalJoinPlan(
   left: LogicalPlan,

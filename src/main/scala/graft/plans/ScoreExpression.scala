@@ -26,7 +26,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 case class ScoreExpression(child: Expression, salt: String, table: Seq[Long])
     extends UnaryExpression {
 
-  require(table.nonEmpty, "score table must be non-empty")
+  require(table.length == 64,
+    s"score table must have 64 entries, got ${table.length}: the composable " +
+      "twin and the DuckDB oracle bucket by % 64")
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess

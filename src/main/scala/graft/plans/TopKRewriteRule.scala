@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Generate, LogicalPlan, Project, Window, WindowGroupLimit}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -33,7 +32,7 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   * Guarded by `spark.graft.rewriteWindowTopK` (default off). Output
   * attribute ids are preserved (aliases re-use the original exprIds), so
   * parent operators are untouched. Registered on a live session through
-  * [[TopKRewriteSupport.register]] (experimental extraOptimizations, the
+  * [[GraftFunctions.install]] (experimental extraOptimizations, the
   * once-per-plan batch — which also keeps the rule trivially idempotent:
   * the rewritten tree contains no Window to re-match).
   */
@@ -112,14 +111,4 @@ object TopKRewrite extends Rule[LogicalPlan] {
             Project(outProj, genResolved)
         }
     }
-}
-
-object TopKRewriteSupport {
-  /** Idempotently add the rewrite rule to a live session's experimental
-    * optimizations. */
-  def register(spark: SparkSession): Unit = {
-    val cur = spark.experimental.extraOptimizations
-    if (!cur.contains(TopKRewrite))
-      spark.experimental.extraOptimizations = cur :+ TopKRewrite
-  }
 }

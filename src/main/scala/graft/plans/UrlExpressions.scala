@@ -15,8 +15,9 @@ import graft.functions.UrlF
   * The enrichment chain's middle stages were regex towers: PageUrlParse ran
   * six `regexp_extract`s over page_url, CampaignAttribution ~18 more over
   * the querystring, RefererParser re-parsed the referer URL for each of its
-  * three outputs (ProfileChain, sf0.1: ~1.2 + ~3.4 + ~4.4 s per pass —
-  * the dominant per-row cost after the r15 UA kernels). Each expression
+  * three outputs (per-stage noop-sink marginals at sf0.1: ~1.2 + ~3.4 +
+  * ~4.4 s per pass — the dominant per-row cost after the r15 UA kernels;
+  * `perfbench --trace 1` reports the same marginals as `enrich.stage.*_s`). Each expression
   * here is ONE codegen'd call per row into an imperative twin
   * ([[UrlF.parseUrlParts]], [[UrlF.campaignRow]],
   * [[graft.functions.RefF.refererRow]]); multiple `getField` consumers of

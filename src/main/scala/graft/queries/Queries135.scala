@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.plans.{GraftFunctions, BitmapDistinctRewriteSupport}
+import graft.plans.GraftFunctions
 
 /** Round-9 batch #55 — the optimizer-rule surface + split hygiene:
   *
@@ -45,7 +45,7 @@ object Queries135 {
 
   val defs: Map[String, Q] = Map(
     "count_distinct_rewrite" -> { (sp, dir) =>
-      BitmapDistinctRewriteSupport.register(sp)
+      GraftFunctions.install(sp)
       val prev = sp.conf.getOption("spark.graft.rewriteCountDistinct")
       sp.conf.set("spark.graft.rewriteCountDistinct", "true")
       try {

@@ -29,7 +29,7 @@ object Queries142 {
 
   val defs: Map[String, Q] = Map(
     "sql_surface_pipeline" -> { (sp, dir) =>
-      GraftFunctions.register(sp)
+      GraftFunctions.install(sp)
       Tables.documents(sp, dir).createOrReplaceTempView("graft_docs")
       sp.sql(
         """SELECT doc_id,

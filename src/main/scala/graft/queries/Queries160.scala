@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.TextF
-import graft.plans.TopKRewriteSupport
+import graft.plans.GraftFunctions
 
 /** Round-12 batch #3 — the window-top-k optimizer rule + exploratory-stats
   * and corpus-hygiene reads:
@@ -67,7 +67,7 @@ object Queries160 {
 
   val defs: Map[String, Q] = Map(
     "topk_rewrite" -> { (sp, dir) =>
-      TopKRewriteSupport.register(sp)
+      GraftFunctions.install(sp)
       val prev = sp.conf.getOption("spark.graft.rewriteWindowTopK")
       sp.conf.set("spark.graft.rewriteWindowTopK", "true")
       try {

@@ -1,24 +1,14 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only single-query timing loop: runs the named queries N times each
   * and prints per-run wall seconds — separates JIT/codegen warmup from
   * steady-state cost when one bench entry looks like an outlier. */
 object BenchOne {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // dev-only conf experiments: SPARK_GRAFT_CONF="k1=v1;k2=v2"
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.contains("="))
-      .foreach { kv => val Array(k, v) = kv.split("=", 2); builder.config(k, v) })
-    val spark = builder.getOrCreate()
+    val spark = graft.GraftSession.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
     args.foreach { name =>
       val fn = graft.SparkEntry.queries(name)

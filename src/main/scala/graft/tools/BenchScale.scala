@@ -439,24 +439,10 @@ object BenchScale {
 
   def main(args: Array[String]): Unit = {
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val copies = sys.env.getOrElse("SPARK_GRAFT_SCALE_COPIES", "10").toInt
     val scaledDir = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/tmp/graft_scale10")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // InferFiltersFromGenerate turns explode/inline over an expensive
-      // parsed column (webhook regexp + url_decode + from_json) into a
-      // pushed-down filter that RE-EVALUATES the whole decode chain per
-      // row below the exchange — measured +55% on the array adapters at
-      // sf0.1. The synth/webhook arrays are non-null by construction, so
-      // the inferred filter only costs.
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .getOrCreate()
+    val spark = graft.GraftSession.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
 
     // SPARK_GRAFT_SCALE_ONLY=a,b re-probes a subset (dev loop; the full

@@ -2,15 +2,21 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.FormattedMode
 
-import graft.SparkEntry
+import graft.{GraftSession, SparkEntry}
 
 /** Regenerates PLANS.md: the physical plans of the headline queries, as
   * evidence that the shapes promised in SURVEY §5 are the shapes Catalyst
   * actually picks (broadcast joins, pushed filters, codegen spans).
   *
   * Run: `sbt "runMain graft.tools.DumpPlans"`.
+  *
+  * With arguments it writes before/after evidence for an optimization:
+  * `sbt "runMain graft.tools.DumpPlans --out plans/rN --suffix before q1 q2"`
+  * writes the formatted physical plan of each named query to
+  * `<out>/<query>_<suffix>.txt`, at `SPARK_GRAFT_SF_DIR` (default sf0.1)
+  * on `SPARK_GRAFT_CPUS` cores (default 32).
   */
 object DumpPlans {
   private val Headline = Seq(
@@ -156,22 +162,17 @@ object DumpPlans {
     // + sessionizer composition
     "auc_quality_vs_dup", "entry_referer_depth")
 
-  def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // InferFiltersFromGenerate turns explode/inline over an expensive
-      // parsed column (webhook regexp + url_decode + from_json) into a
-      // pushed-down filter that RE-EVALUATES the whole decode chain per
-      // row below the exchange — measured +55% on the array adapters at
-      // sf0.1. The synth/webhook arrays are non-null by construction, so
-      // the inferred filter only costs.
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .getOrCreate()
+  def main(args: Array[String]): Unit = args.toList match {
+    case Nil => writePlansMd()
+    case "--out" :: out :: "--suffix" :: suffix :: keys if keys.nonEmpty =>
+      writeFormatted(out, suffix, keys)
+    case _ =>
+      throw new IllegalArgumentException(
+        "usage: DumpPlans [--out <dir> --suffix <suffix> <query> [query ...]]")
+  }
+
+  private def writePlansMd(): Unit = {
+    val spark = GraftSession.local(8)
     spark.sparkContext.setLogLevel("ERROR")
     val dir = "/root/testdata/sf0.01"
     val sb = new StringBuilder
@@ -188,6 +189,22 @@ object DumpPlans {
     }
     Files.writeString(Paths.get("PLANS.md"), sb.toString)
     println("wrote PLANS.md")
+    spark.stop()
+  }
+
+  private def writeFormatted(out: String, suffix: String, keys: Seq[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    spark.sparkContext.setLogLevel("WARN")
+    Files.createDirectories(Paths.get(out))
+    keys.foreach { name =>
+      val txt = SparkEntry.queries(name)(spark, sfDir).queryExecution.explainString(FormattedMode)
+      val path = Paths.get(out, s"${name}_$suffix.txt")
+      Files.writeString(path, txt)
+      graft.util.CacheScope.release(spark)
+      spark.catalog.clearCache()
+      println(s"[plandump] wrote $path (${txt.length} chars)")
+    }
     spark.stop()
   }
 }

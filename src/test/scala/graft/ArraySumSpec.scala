@@ -38,7 +38,7 @@ class ArraySumSpec extends SparkSpec {
   }
 
   test("SQL surface: graft_array_sum") {
-    GraftFunctions.register(spark)
+    GraftFunctions.install(spark)
     import spark.implicits._
     Seq(Seq(1L, 10L), Seq(2L, 20L), Seq(3L, 30L)).toDF("a")
       .createOrReplaceTempView("as_t")

@@ -90,7 +90,7 @@ class BitmapDistinctSpec extends SparkSpec {
   }
 
   test("SQL surface: graft_bitmap_distinct via spark.sql") {
-    GraftFunctions.register(spark)
+    GraftFunctions.install(spark)
     import spark.implicits._
     Seq(1L, 2L, 2L, 3L, 3L, 3L).toDF("v").createOrReplaceTempView("bd_t")
     val n = spark.sql("SELECT graft_bitmap_distinct(v) AS n FROM bd_t").collect().head.getLong(0)

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.plans.BitmapDistinctRewriteSupport
+import graft.plans.GraftFunctions
 
 /** The count(DISTINCT bigint) → BitmapDistinct optimizer rule: fires only
   * under the conf flag, produces the one-Exchange plan, never changes
@@ -21,7 +21,7 @@ class BitmapRewriteSpec extends SparkSpec {
     "Exchange".r.findAllIn(df.queryExecution.executedPlan.toString).length
 
   test("rule fires under the flag: bitmap aggregate, ONE exchange, same rows") {
-    BitmapDistinctRewriteSupport.register(spark)
+    GraftFunctions.install(spark)
     val off = q.collect().map(_.toSeq).toSet
     spark.conf.set("spark.graft.rewriteCountDistinct", "true")
     try {
@@ -37,7 +37,7 @@ class BitmapRewriteSpec extends SparkSpec {
   }
 
   test("ineligible shapes keep Spark's path: strings, FILTER clauses") {
-    BitmapDistinctRewriteSupport.register(spark)
+    GraftFunctions.install(spark)
     spark.conf.set("spark.graft.rewriteCountDistinct", "true")
     try {
       val s = base.groupBy("day").agg(countDistinct(col("event_type")).as("n"))

@@ -98,7 +98,7 @@ class HllNativeSpec extends SparkSpec {
   }
 
   test("SQL surface: graft_hll_registers + graft_hll_summary via spark.sql") {
-    GraftFunctions.register(spark)
+    GraftFunctions.install(spark)
     import spark.implicits._
     (0L until 1000L).toDF("i").createOrReplaceTempView("hll_t")
     // the canonical input contract: a well-mixed 60-bit md5-derived hash

@@ -111,10 +111,7 @@ class HttpTransportSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("RemoteAdapter end-to-end over the real local HTTP fixture") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").config("spark.sql.shuffle.partitions", 2)
-      .config("spark.sql.session.timeZone", "UTC").config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkSpec.session
     import spark.implicits._
     val out = graft.adapters.RemoteAdapter(RemoteResolver.httpPostTransport(s"$base/remote"))
       .apply(Seq((1L, "ev=1"), (2L, "ev=2")).toDF("id", "payload"), "payload")

@@ -71,7 +71,7 @@ class KmvNativeSpec extends SparkSpec {
   }
 
   test("SQL surface: graft_kmv_mink via spark.sql") {
-    GraftFunctions.register(spark)
+    GraftFunctions.install(spark)
     import spark.implicits._
     Seq(5L, 1L, 1L, 9L, 3L, 3L).toDF("v").createOrReplaceTempView("kmv_t")
     val ks = spark.sql("SELECT graft_kmv_mink(v, 3) AS ks FROM kmv_t")

@@ -126,7 +126,7 @@ class PlansSpec extends SparkSpec {
   }
 
   test("SQL function registration exposes kernels to spark.sql") {
-    GraftFunctions.register(spark)
+    GraftFunctions.install(spark)
     val r = spark.sql(
       """SELECT graft_anon_ip('94.15.223.151', 2) AS a,
         |       graft_event_type('pv') AS e,

@@ -419,6 +419,7 @@ class PropertySpec extends SparkSpec {
       "", "no-scheme", "http//missing.colon/p", "://bare", "1http://digit.first/",
       "http://", "http://:8080/p", "http://host", "http://host/", "http://host:80/p",
       "https://host:443/p?q=1", "http://host:0080/p", "http://host:99999999999/p",
+      "http://h:00000000000080/", "http://h:000000000000000/p",
       "http://host:12ab/p", "http://host:/p", "HTTPS://UP.example.COM:8443/Deep/Path?A=b#Frag",
       "scheme+x.y-z://odd.scheme/p", "http://h/p?", "http://h/p?#f", "http://h/p#",
       "http://h/p##double#frag", "http://h?q=1#f?fake=2", "what?is=this#anyway",
@@ -622,6 +623,12 @@ class PropertySpec extends SparkSpec {
       .select(Queries15.scoreCol(col("arr"), "qc:", Queries15.QcWeights))
       .collect().head
     assert(nullArr.isNullAt(0))
+  }
+
+  test("scoreCol rejects a table that is not 64 entries when the plan is built") {
+    val e = intercept[IllegalArgumentException](graft.queries.Queries15.scoreCol(
+      graft.functions.TextF.tokens(col("t")), "qc:", Seq.fill(32)(1L)))
+    assert(e.getMessage.contains("64 entries"))
   }
 
   test("sign-split division lemma: truncating and flooring engines agree after the split") {

@@ -30,7 +30,7 @@ class Queries13Spec extends SparkSpec {
   }
 
   test("graft_normalize is registered as a SQL function") {
-    graft.plans.GraftFunctions.register(spark)
+    graft.plans.GraftFunctions.install(spark)
     val r = spark.sql("SELECT graft_normalize('café') AS a, " +
       "graft_normalize('ﬃ', 'NFKC') AS b").head()
     assert(r.getString(0) == "café" && r.getString(1) == "ffi")

@@ -27,7 +27,7 @@ class Queries14Spec extends SparkSpec {
   }
 
   test("graft_zorder_key is registered as a SQL function") {
-    graft.plans.GraftFunctions.register(spark)
+    graft.plans.GraftFunctions.install(spark)
     val r = spark.sql("SELECT graft_zorder_key(3, 5) AS z, graft_zorder_key(3, 5, 8) AS z8").head()
     // 3 = 0b011 (even positions), 5 = 0b101 (odd): z = 0b100111 = 39
     assert(r.getLong(0) == 39L && r.getLong(1) == 39L)

@@ -122,7 +122,7 @@ class Queries158Spec extends SparkSpec {
 
   test("graft_top_k SQL surface agrees with the Column API") {
     import spark.implicits._
-    GraftFunctions.register(spark)
+    GraftFunctions.install(spark)
     Seq((1L, 10L, 100L), (1L, 20L, 101L), (1L, 20L, 99L), (2L, 5L, 7L))
       .toDF("g", "k", "t").createOrReplaceTempView("tk_demo")
     val rows = spark.sql(

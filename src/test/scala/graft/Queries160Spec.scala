@@ -2,14 +2,14 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.plans.TopKRewriteSupport
+import graft.plans.GraftFunctions
 
 /** Window-top-k rewrite rule + median polish / newsvendor / template mass. */
 class Queries160Spec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
   private def withRewrite[A](body: => A): A = {
-    TopKRewriteSupport.register(spark)
+    GraftFunctions.install(spark)
     spark.conf.set("spark.graft.rewriteWindowTopK", "true")
     try body finally spark.conf.unset("spark.graft.rewriteWindowTopK")
   }

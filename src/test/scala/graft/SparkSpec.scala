@@ -24,19 +24,5 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // InferFiltersFromGenerate turns explode/inline over an expensive
-      // parsed column (webhook regexp + url_decode + from_json) into a
-      // pushed-down filter that RE-EVALUATES the whole decode chain per
-      // row below the exchange — measured +55% on the array adapters at
-      // sf0.1. The synth/webhook arrays are non-null by construction, so
-      // the inferred filter only costs.
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-    .getOrCreate()
+  lazy val session: SparkSession = GraftSession.local(4)
 }
