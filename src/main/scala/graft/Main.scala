@@ -1,8 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, size, struct}
 
-import graft.enrich.EnrichmentConfig
+import graft.enrich.{BadRows, EnrichmentConfig, EnrichmentPipeline}
 import graft.sources.Sources
 
 /** Standalone enrichment application — the Spark twin of the reference's
@@ -49,9 +50,9 @@ object Main {
     // drain mode: process everything available, then exit (Trigger.AvailableNow)
     case "--once" :: rest => parse(rest, acc.copy(once = true))
     // AssetRefresher semantics: rebuild the pipeline (and re-resolve its
-    // parquet dims + the --config file itself) every micro-batch — BOTH the
-    // good and bad streams, so one batch never splits across two configs.
-    // Note: this routes the sinks through foreachBatch append, which is
+    // parquet dims + the --config file itself) every micro-batch. One
+    // foreachBatch query writes both sinks from one enrichment pass, so a
+    // batch never splits across two configs. Note: foreachBatch append is
     // at-least-once on a batch retry (the default file sink's exactly-once
     // commit log does not apply in this mode).
     case "--refresh-dims" :: rest => parse(rest, acc.copy(refreshDims = true))
@@ -84,10 +85,23 @@ object Main {
     // etlTstamp: job start)
     val etlUs = org.apache.spark.sql.functions.lit(System.currentTimeMillis() * 1000L)
     // replay payload inside envelopes = the raw collector columns
-    def payloadCols(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    def payloadCols(df: DataFrame): Seq[String] =
       Sources.CollectorTsvFields.map(_._1).filter(df.columns.contains) match {
         case Nil => df.columns.toSeq.take(6)
         case cols => cols
+      }
+
+    // good parquet and, with --bad, the reference-compatible bad stream:
+    // one self-describing bad-row envelope JSON document per failed event.
+    // Two sinks share one enrichment pass (withSplit); a lone good sink
+    // needs no stored copy of the enriched rows (split).
+    def writeSinks(pipeline: EnrichmentPipeline, raw: DataFrame): Unit =
+      if (args.bad.isEmpty) pipeline.split(raw)._1.write.mode("append").parquet(args.good)
+      else pipeline.withSplit(raw) { (good, bad) =>
+        good.write.mode("append").parquet(args.good)
+        bad.select(BadRows.badRowJson(col("bad_row_errors"),
+            struct(payloadCols(raw).map(col): _*), etlUs).as("bad_row"))
+          .write.mode("append").text(args.bad)
       }
 
     args.mode match {
@@ -100,20 +114,10 @@ object Main {
           case "parquet" => spark.read.parquet(args.input)
           case other => throw new IllegalArgumentException(s"unknown format: $other")
         }
-        // two sinks with different formats (parquet rows vs envelope text)
-        // cost one chain evaluation each; when a single parquet root works,
-        // EnrichmentPipeline.splitWrite does both sides in ONE pass
-        val (good, _) = pipeline.split(raw)
-        good.write.mode("append").parquet(args.good)
-        if (args.bad.nonEmpty)
-          // the reference-compatible bad stream: one self-describing
-          // bad-row envelope JSON document per failed event
-          pipeline.badRowsJson(raw, payloadCols(raw), etlUs)
-            .select("bad_row").write.mode("append").text(args.bad)
+        writeSinks(pipeline, raw)
 
       case "stream" =>
         require(args.checkpoint.nonEmpty, "--checkpoint is required in stream mode")
-        import org.apache.spark.sql.functions.{col, size}
         val raw =
           if (args.transport.nonEmpty) {
             // reference-app transport config → connector binding → framing →
@@ -142,52 +146,34 @@ object Main {
           }
         def trigger[T](w: org.apache.spark.sql.streaming.DataStreamWriter[T]) =
           if (args.once) w.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()) else w
-        val goodQ =
-          if (args.refreshDims)
-            // AssetRefresher semantics: the pipeline (and its parquet dims,
-            // and the --config file itself) re-resolves per micro-batch
-            trigger(graft.streaming.RefreshableDim.transformEachBatch(raw)(
-              df => mkPipeline().run(df).filter(size(col("bad_row_errors")) === 0)) {
-                (batch, _) => batch.write.mode("append").parquet(args.good)
-              }
-              .option("checkpointLocation", args.checkpoint + "/good"))
-              .start()
-          else
-            trigger(pipeline.run(raw)
-              .filter(size(col("bad_row_errors")) === 0)
-              .writeStream
-              .format("parquet")
-              .option("path", args.good)
-              .option("checkpointLocation", args.checkpoint + "/good")
-              .outputMode("append"))
-              .start()
-        val badQ =
-          if (args.bad.nonEmpty) {
-            val writer =
-              if (args.refreshDims)
-                // same per-batch rebuild as the good stream: within THIS
-                // sink, every row of a micro-batch is computed under one
-                // config snapshot. The good sink is an independent query
-                // with its own batch cadence, so a mid-stream config/dim
-                // swap can still land between the two sinks' executions of
-                // the same input offsets — unify under a single
-                // foreachBatch if cross-sink snapshot consistency matters.
-                graft.streaming.RefreshableDim.transformEachBatch(raw)(df =>
-                  graft.streaming.EnrichStream
-                    .badRows(df, mkPipeline(), payloadCols(df), etlUs)
-                    .select("bad_row")) { (batch, _) =>
-                  batch.write.mode("append").text(args.bad)
-                }
-              else
-                graft.streaming.EnrichStream.badRows(raw, pipeline, payloadCols(raw), etlUs)
-                  .select("bad_row").writeStream
-                  .format("text")
-                  .option("path", args.bad)
-                  .outputMode("append")
-            Some(trigger(writer.option("checkpointLocation", args.checkpoint + "/bad")).start())
-          } else None
-        goodQ.awaitTermination()
-        badQ.foreach(_.awaitTermination())
+        if (args.refreshDims)
+          // one query, so one checkpoint: it keeps the good sink's directory
+          // and resumes where the good query of the two-query layout stopped
+          trigger(raw.writeStream
+            .foreachBatch((batch: DataFrame, _: Long) => writeSinks(mkPipeline(), batch))
+            .option("checkpointLocation", args.checkpoint + "/good"))
+            .start().awaitTermination()
+        else {
+          val goodQ = trigger(pipeline.run(raw)
+            .filter(size(col("bad_row_errors")) === 0)
+            .writeStream
+            .format("parquet")
+            .option("path", args.good)
+            .option("checkpointLocation", args.checkpoint + "/good")
+            .outputMode("append"))
+            .start()
+          val badQ =
+            if (args.bad.nonEmpty)
+              Some(trigger(graft.streaming.EnrichStream.badRows(raw, pipeline, payloadCols(raw), etlUs)
+                .select("bad_row").writeStream
+                .format("text")
+                .option("path", args.bad)
+                .option("checkpointLocation", args.checkpoint + "/bad")
+                .outputMode("append")).start())
+            else None
+          goodQ.awaitTermination()
+          badQ.foreach(_.awaitTermination())
+        }
 
       case other => throw new IllegalArgumentException(s"unknown mode: $other")
     }

@@ -2,6 +2,7 @@ package graft.enrich
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanBridge
 
 import graft.functions.{EventF, IpF, RefF, UaF, UrlF}
 import graft.operators.RangeJoin
@@ -900,11 +901,27 @@ final case class EnrichmentPipeline(enrichments: Seq[Enrichment]) {
     enrichments.foldLeft(withBad)((d, e) => e.apply(d))
   }
 
-  /** (good, bad) split — the reference's enriched/bad output streams. */
-  def split(df: DataFrame): (DataFrame, DataFrame) = {
-    val enriched = run(df)
+  /** (good, bad) split — the reference's enriched/bad output streams.
+    * Each side is its own plan over the chain: an action on both runs the
+    * chain once per side (see [[withSplit]] for one pass). */
+  def split(df: DataFrame): (DataFrame, DataFrame) = sides(run(df))
+
+  private def sides(enriched: DataFrame): (DataFrame, DataFrame) =
     (enriched.filter(size(col("bad_row_errors")) === 0),
      enriched.filter(size(col("bad_row_errors")) > 0))
+
+  /** ONE-PASS good/bad split with the reference's two-sink layout: `f` gets
+    * the good and bad sides of one enrichment pass. The enriched rows are
+    * kept at row level (`MEMORY_AND_DISK`, lineage kept) by the first
+    * action `f` runs over either side; every later action reads them back
+    * instead of re-running the chain, and no side's `size(bad_row_errors)`
+    * predicate can be pushed into the chain's projections. The rows are
+    * unpersisted when `f` returns or throws. With a single consumer, use
+    * [[split]]: it stores nothing. */
+  def withSplit[T](df: DataFrame)(f: (DataFrame, DataFrame) => T): T = {
+    val (enriched, rows) = PlanBridge.persistRows(run(df))
+    try f.tupled(sides(enriched))
+    finally rows.unpersist(blocking = true)
   }
 
   /** The bad side serialized to the reference's self-describing bad-row
@@ -920,14 +937,12 @@ final case class EnrichmentPipeline(enrichments: Seq[Enrichment]) {
       BadRows.badRowJson(col("bad_row_errors"), struct(payloadCols.map(col): _*), etlTstampUs))
   }
 
-  /** ONE-PASS good/bad split to storage. `split` + two writes evaluates the
-    * enrichment chain twice per side — Catalyst pushes each side's
-    * `size(bad_row_errors)` predicate through the projection into the scan,
-    * inlining the whole chain into the filter (see PLANS.md bad_rows_out).
-    * Here the chain computes once and the writer partitions by `is_bad`:
-    * good rows land under `is_bad=false`, failed rows under `is_bad=true`
-    * with their bad-row envelope attached. At 100 TB this halves enrichment
-    * CPU and still gives consumers partition-pruned reads of either side. */
+  /** ONE-PASS good/bad split to a single parquet root partitioned by
+    * `is_bad`: good rows land under `is_bad=false`, failed rows under
+    * `is_bad=true` with their bad-row envelope attached, and consumers get
+    * partition-pruned reads of either side. It stores nothing, so it suits
+    * a job that wants this layout; for the reference's two-sink layout
+    * (good parquet + envelope text) in one pass, use [[withSplit]]. */
   def splitWrite(
     df: DataFrame,
     path: String,
@@ -943,12 +958,11 @@ final case class EnrichmentPipeline(enrichments: Seq[Enrichment]) {
       .write.partitionBy("is_bad").mode("overwrite").parquet(path)
   }
 
-  /** Streaming twin of [[splitWrite]]: the same ONE-PASS enrich +
-    * `is_bad`-partitioned layout, appended per micro-batch through
-    * foreachBatch — so the good and bad halves of every batch are computed
-    * from one enrichment pass under one config snapshot (the cross-sink
-    * consistency a two-independent-queries layout cannot promise). The
-    * caller sets the checkpoint location / trigger and calls `.start()`. */
+  /** Streaming twin of [[splitWrite]]: the same single-root `is_bad`
+    * layout, appended per micro-batch through foreachBatch. For two sinks
+    * per micro-batch from one pass, call [[withSplit]] inside a
+    * foreachBatch (what `graft.Main --refresh-dims` does). The caller sets
+    * the checkpoint location / trigger and calls `.start()`. */
   def splitWriteStream(
     df: DataFrame,
     path: String,

@@ -62,7 +62,9 @@ class EndToEndSpec extends SparkSpec {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("main-e2e")
     val in = dir.resolve("in").toString
-    Seq(line(), line(qsOverride = qs.replace("e=pv", "e=zz")))
+    Seq(line(), line(qsOverride = qs.replace("e=pv", "e=zz")),
+        line(qsOverride = qs.replace("uid=alice", "uid=bob")),
+        line(qsOverride = qs.replace("p=web", "p=zz")))
       .toDF("value").coalesce(1).write.text(in)
     graft.Main.main(Array(
       "--mode", "batch", "--format", "collector-tsv",
@@ -71,13 +73,26 @@ class EndToEndSpec extends SparkSpec {
       "--bad", dir.resolve("bad").toString))
     assert(spark.sparkContext.isStopped == false, "main must not stop a reused session")
     val good = spark.read.parquet(dir.resolve("good").toString)
-    assert(good.count() == 1 && good.collect()(0).getAs[String]("event") == "page_view")
+    assert(good.count() == 2 && good.collect().forall(_.getAs[String]("event") == "page_view"))
     val bad = spark.read.text(dir.resolve("bad").toString).collect().map(_.getString(0))
-    assert(bad.length == 1)
-    assert(bad(0).startsWith("""{"schema":"iglu:com.snowplowanalytics.snowplow.badrows/"""))
-    assert(bad(0).contains("unknown event code"))
-    assert(bad(0).contains(""""payload":{"collector_tstamp_us":1704067200000000"""),
+    assert(bad.length == 2)
+    assert(bad.forall(_.startsWith("""{"schema":"iglu:com.snowplowanalytics.snowplow.badrows/""")))
+    assert(bad.exists(_.contains("unknown event code")))
+    assert(bad.forall(_.contains(""""payload":{"collector_tstamp_us":1704067200000000""")),
       "the replay payload carries the raw collector columns")
+
+    // the one-pass sinks equal the library's two-pass split and envelopes
+    val raw = Protocol.fromCollector(Sources.collectorTsv(spark, in))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(to_json(struct(df.columns.map(col).toSeq: _*))).collect().map(_.getString(0)).sorted.toSeq
+    assert(rows(good) == rows(PipelineQuery.pipeline.split(raw)._1))
+    // envelopes differ only in the failure timestamp (the run's etl time)
+    def noTs(envelope: String) = envelope.replaceAll("\"timestamp\":\"[^\"]*\"", "\"timestamp\":\"\"")
+    val payload = Sources.CollectorTsvFields.map(_._1).filter(raw.columns.contains)
+    val expectedBad = PipelineQuery.pipeline.badRowsJson(raw, payload, lit(0L))
+      .select("bad_row").collect().map(r => noTs(r.getString(0))).sorted.toSeq
+    assert(bad.map(noTs).sorted.toSeq == expectedBad)
+    assert(good.count() + bad.length == raw.count(), "good + bad = raw")
   }
 
   test("config-driven pipeline from JSON") {

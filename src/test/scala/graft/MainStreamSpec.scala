@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.streaming.StreamingQueryListener
+
 /** `graft.Main --mode stream --transport …` end-to-end: a reference-style
   * transport config resolves through TransportFactories, the framed lines
   * absorb redelivery, the collector TSV parses, the pipeline enriches, and
@@ -71,14 +73,31 @@ class MainStreamSpec extends SparkSpec {
     Files.write(enr,
       """{"enrichments": [{"name": "tracker_transform"}, {"name": "anon_ip", "octets": 2}]}"""
         .getBytes("UTF-8"))
-    def run() = graft.Main.main(Array(
-      "--mode", "stream",
-      "--transport", "nsq", "--transport-config", cfg.toString,
-      "--config", enr.toString,
-      "--good", root.resolve("good").toString,
-      "--bad", root.resolve("bad").toString,
-      "--checkpoint", root.resolve("ck").toString,
-      "--once", "--refresh-dims"))
+    // one query writes both sinks, so each micro-batch sees one config
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
+        started.incrementAndGet()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    }
+    def run() = {
+      started.set(0)
+      spark.streams.addListener(listener)
+      try graft.Main.main(Array(
+        "--mode", "stream",
+        "--transport", "nsq", "--transport-config", cfg.toString,
+        "--config", enr.toString,
+        "--good", root.resolve("good").toString,
+        "--bad", root.resolve("bad").toString,
+        "--checkpoint", root.resolve("ck").toString,
+        "--once", "--refresh-dims"))
+      finally {
+        org.apache.spark.ListenerBusDrain(spark.sparkContext)
+        spark.streams.removeListener(listener)
+      }
+      assert(started.get == 1, s"one streaming query per run (got ${started.get})")
+    }
     run()
     // config hot-swap: v2 anonymizes 3 octets; new data arrives, rerun
     // (same checkpoint — only the NEW file is processed, by the NEW config)
@@ -93,11 +112,11 @@ class MainStreamSpec extends SparkSpec {
       .select("user_ipaddress").collect().map(_.getString(0)).sorted
     assert(ips.toSeq == Seq("94.15.x.x", "94.x.x.x"),
       s"batch 1 under config v1, batch 2 under config v2 (got ${ips.mkString(", ")})")
-    // the bad stream rebuilds per batch too (same mkPipeline as the good
-    // side, so one batch never splits across two configs)
+    // the bad sink is written by the same per-batch pass as the good one
     val bad = spark.read.text(root.resolve("bad").toString).collect().map(_.getString(0))
     assert(bad.length == 1 && bad(0).contains("unknown event code"),
       s"bad envelope written through the refresh-dims foreachBatch path (got ${bad.length})")
+    assert(ips.length + bad.length == 3, "good + bad = raw across the config swap")
   }
 
   test("kinesis transport over an archive replay: lossless seq_str dedup absorbs a planted redelivery") {
