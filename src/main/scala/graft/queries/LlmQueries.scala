@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.{SimF, TextF}
+import graft.operators.PairEngine
+import graft.operators.PairEngine.StopShingleDf
 
 /** SURVEY §2.D — LLM training-data operators over `documents`/`embeddings`:
   * dedup (exact / MinHash-LSH / SimHash / n-gram Jaccard), similarity search
@@ -36,52 +38,15 @@ object LlmQueries {
 
   private val stopListSql = TextF.Stopwords.map(s => s"'$s'").mkString("[", ", ", "]")
 
-  /** ngram_jaccard skew guard: shingles present in more docs than this are
-    * excluded from pairing (shared Spark ↔ oracle constant). */
-  private[queries] val StopShingleDf = 64
-
   /** SQL twin of SimF.dot: element products in double, strict left fold. */
   private def dotSql(a: String, b: String): String =
     s"list_reduce(list_transform(range(1, len($a) + 1), i -> CAST(list_extract($a, i) AS DOUBLE) * CAST(list_extract($b, i) AS DOUBLE)), (x, y) -> x + y)"
 
-  /** df-capped 5-gram Jaccard pairs over an already-tokenized (doc_id,
-    * toks) frame — factored out of `ngram_jaccard` so dedup_method_venn's
-    * three detectors share ONE tokenization pass. Identical plan from the
-    * shingle step down. */
-  private[graft] def jaccardPairsFromToks(toksDf: DataFrame): DataFrame = {
-    val docs = toksDf
-      .select(col("doc_id"), array_distinct(TextF.shinglesFromTokens(col("toks"), 5)).as("sh"))
-    // the exploded shingle table feeds BOTH sides of the self-join plus the
-    // size joins — persist it once instead of re-evaluating the shingle
-    // expression tree per reference (4× otherwise; on a cluster this is a
-    // cached shuffle block, not recomputation)
-    val ex = graft.util.CacheScope.track(
-      docs.select(col("doc_id"), explode(col("sh")).as("s")))
-    // r15: set sizes come off the CACHED exploded table (sh is
-    // array_distinct'ed, so rows-per-doc == size(sh)), not a fresh
-    // tokenize+shingle pass per size join; shingle-less docs drop out of
-    // `sizes` but can never appear in `shared`, so the join output is
-    // unchanged
-    val sizes = ex.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    // stop-shingle cap: one boilerplate shingle shared by k docs makes the
-    // self-join quadratic on that key (k² pairs). df-cap the shingle table
-    // BEFORE pairing — the design control that bounds shuffle volume by
-    // cap·|ex| at any corpus size (replaces the old test-time doc_id guard)
-    val rare = ex.groupBy("s").agg(count(lit(1)).as("df"))
-      .filter(col("df") <= StopShingleDf).select("s")
-    val exF = ex.join(rare, "s")
-    val shared = exF.as("a").join(exF.as("b"), col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .agg(count(lit(1)).as("shared"))
-    shared
-      .join(sizes.withColumnRenamed("doc_id", "id_a").withColumnRenamed("n", "n_a"), "id_a")
-      .join(sizes.withColumnRenamed("doc_id", "id_b").withColumnRenamed("n", "n_b"), "id_b")
-      .withColumn("jac_permille",
-        round(lit(1000.0) * col("shared") / (col("n_a") + col("n_b") - col("shared"))).cast("bigint"))
-      .filter(col("jac_permille") >= 200)
-      .select("id_a", "id_b", "shared", "jac_permille")
-      .orderBy("id_a", "id_b")
-  }
+  /** `(doc_id, sh)` over `documents` in the pair engine's shingle spelling
+    * (one tokenization pass per doc). */
+  private[queries] def shingleDocs(sp: SparkSession, dir: String): DataFrame =
+    Tables.documents(sp, dir)
+      .select(col("doc_id"), PairEngine.shingleSets(TextF.tokens(col("text"))).as("sh"))
 
   val defs: Map[String, Q] = Map(
     "dedup_exact" -> ((sp, dir) =>
@@ -108,11 +73,10 @@ object LlmQueries {
         .select(col("doc_id"), TextF.simhash16(col("text")).as("simhash"))
         .orderBy("doc_id")),
 
-    "ngram_jaccard" -> { (sp, dir) =>
-      jaccardPairsFromToks(Tables.documents(sp, dir)
-        .withColumn("toks", TextF.tokens(col("text"))) // materialize: one regex pass per doc
-        .select(col("doc_id"), col("toks")))
-    },
+    "ngram_jaccard" -> ((sp, dir) =>
+      PairEngine.jaccard(shingleDocs(sp, dir))
+        .select("id_a", "id_b", "shared", "jac_permille")
+        .orderBy("id_a", "id_b")),
 
     "sim_bruteforce" -> { (sp, dir) =>
       // norms materialized per side before the pair join — O(N+Q) dot

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.operators.PairEngine
 
 /** Round-9 batch #20 — near-dup methodology agreement and declarative data
   * quality:
@@ -48,7 +49,7 @@ object Queries100 {
       val s = Queries28.simhashPairsOf(toks.select(col("doc_id"),
           graft.functions.TextF.simhash60FromTokens(col("toks")).as("f")))
         .select(col("id_a"), col("id_b"), lit(2L).as("bit"))
-      val j = LlmQueries.jaccardPairsFromToks(toks)
+      val j = PairEngine.jaccard(toks.select(col("doc_id"), PairEngine.shingleSets(col("toks")).as("sh")))
         .select(col("id_a"), col("id_b"), lit(4L).as("bit"))
       val label = MaskLabels.toSeq.sortBy(_._1).foldRight(lit("?")) {
         case ((k, v), acc) => when(col("mask") === k, v).otherwise(acc)

@@ -3,15 +3,14 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
-import graft.functions.TextF
+import graft.operators.PairEngine
 
 /** Round-9 batch #44 — `containment_dedup`: near-SUBSET detection. The
   * Jaccard gate misses quote/snippet duplication by construction: a 100-
   * shingle doc fully embedded in a 2000-shingle doc scores J ≈ 48‰ —
   * far below any dedup threshold — yet 100% of the smaller doc is
   * redundant. Broder's containment C(A,B) = |A∩B|/|A| is the asymmetric
-  * fix. Same df-capped shingle pair engine as `ngram_jaccard` (the
+  * fix. Candidates come from `operators/PairEngine.shared` (the
   * shared-CTE oracle composes it verbatim), with BOTH directions
   * reported in permille and pairs kept when either side is ≥ 800 —
   * the "one of these is inside the other" list `dedup_keep_longest`
@@ -23,23 +22,7 @@ object Queries124 {
 
   val defs: Map[String, Q] = Map(
     "containment_dedup" -> { (sp, dir) =>
-      val docs = Tables.documents(sp, dir)
-        .withColumn("toks", TextF.tokens(col("text")))
-        .select(col("doc_id"), array_distinct(TextF.shinglesFromTokens(col("toks"), 5)).as("sh"))
-      val ex = graft.util.CacheScope.track(
-        docs.select(col("doc_id"), explode(col("sh")).as("s")))
-      // set sizes off the cached exploded table (see jaccardPairsFromToks)
-      val sizes = ex.groupBy("doc_id").agg(count(lit(1)).as("n"))
-      val rare = ex.groupBy("s").agg(count(lit(1)).as("df"))
-        .filter(col("df") <= LlmQueries.StopShingleDf).select("s")
-      val exF = ex.join(rare, "s")
-      val shared = exF.as("a").join(exF.as("b"),
-          col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
-        .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-        .agg(count(lit(1)).as("shared"))
-      shared
-        .join(sizes.withColumnRenamed("doc_id", "id_a").withColumnRenamed("n", "n_a"), "id_a")
-        .join(sizes.withColumnRenamed("doc_id", "id_b").withColumnRenamed("n", "n_b"), "id_b")
+      PairEngine.shared(LlmQueries.shingleDocs(sp, dir))
         .withColumn("cont_a_permille",
           round(lit(1000.0) * col("shared") / col("n_a")).cast("bigint"))
         .withColumn("cont_b_permille",

@@ -3,12 +3,13 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
 import graft.functions.TextF
+import graft.operators.PairEngine
 
 /** Round-9 batch #47 — minhash SIGNATURE COMPRESSION, the two classic
-  * storage/compute reductions measured against exact Jaccard on the
-  * shared df-capped pair engine (`ngram_jaccard`'s CTE verbatim):
+  * storage/compute reductions measured against exact Jaccard from
+  * `operators/PairEngine.jaccard` (the oracle composes
+  * `ngram_jaccard`'s CTE verbatim):
   *
   *  - `bbit_minhash` (Li & König 2010, "b-Bit Minwise Hashing"): keep
   *    only the low b = 2 bits of each of 16 minwise components — the
@@ -38,40 +39,13 @@ object Queries127 {
   private val P = 1000000007L // shared with rollingHash
   private val NComp = 16
 
-  /** (doc_id, sh) with the pair engine's shingle spelling (k=5 distinct). */
-  private def docsSh(sp: SparkSession, dir: String): DataFrame =
-    Tables.documents(sp, dir)
-      .withColumn("toks", TextF.tokens(col("text")))
-      .select(col("doc_id"), array_distinct(TextF.shinglesFromTokens(col("toks"), 5)).as("sh"))
-
-  /** Candidate pairs with exact jac_permille — ngram_jaccard's engine. */
-  private def pairsExact(docs: DataFrame): DataFrame = {
-    val ex = graft.util.CacheScope.track(
-      docs.select(col("doc_id"), explode(col("sh")).as("s")))
-    // set sizes off the cached exploded table (see jaccardPairsFromToks)
-    val sizes = ex.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val rare = ex.groupBy("s").agg(count(lit(1)).as("df"))
-      .filter(col("df") <= LlmQueries.StopShingleDf).select("s")
-    val exF = ex.join(rare, "s")
-    exF.as("a").join(exF.as("b"),
-        col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .agg(count(lit(1)).as("shared"))
-      .join(sizes.withColumnRenamed("doc_id", "id_a").withColumnRenamed("n", "n_a"), "id_a")
-      .join(sizes.withColumnRenamed("doc_id", "id_b").withColumnRenamed("n", "n_b"), "id_b")
-      .withColumn("jac_permille",
-        round(lit(1000.0) * col("shared") / (col("n_a") + col("n_b") - col("shared"))).cast("bigint"))
-      .filter(col("jac_permille") >= 200)
-      .select("id_a", "id_b", "jac_permille")
-  }
-
   /** One rolling hash per shingle (bound column — HOF-safe). */
   private def hashedShingles: Column =
     transform(col("sh"), s => TextF.rollingHash(s))
 
   val defs: Map[String, Q] = Map(
     "bbit_minhash" -> { (sp, dir) =>
-      val docs = docsSh(sp, dir)
+      val docs = LlmQueries.shingleDocs(sp, dir)
       // 16 minwise components from ONE hash per shingle; keep low 2 bits,
       // pack into one BIGINT signature
       val sig = (0 until NComp).map { i =>
@@ -85,7 +59,7 @@ object Queries127 {
         when(shiftright(col("sig_a"), 2 * i).bitwiseAND(lit(3L))
           === shiftright(col("sig_b"), 2 * i).bitwiseAND(lit(3L)), 1L).otherwise(0L)
       }.reduce(_ + _)
-      pairsExact(docs)
+      PairEngine.jaccard(docs)
         .join(sigs.select(col("doc_id").as("id_a"), col("sig").as("sig_a")), Seq("id_a"))
         .join(sigs.select(col("doc_id").as("id_b"), col("sig").as("sig_b")), Seq("id_b"))
         .withColumn("matches_b2", matches)
@@ -98,7 +72,7 @@ object Queries127 {
     },
 
     "oph_minhash" -> { (sp, dir) =>
-      val docs = docsSh(sp, dir)
+      val docs = LlmQueries.shingleDocs(sp, dir)
       val mins = array((0 until NComp).map(i =>
         array_min(filter(col("hs"), h => h % NComp === i))): _*)
       val filled = array((0 until NComp).map(i =>
@@ -112,7 +86,7 @@ object Queries127 {
       val matches = (0 until NComp).map(i =>
         when(element_at(col("f_a"), i + 1) === element_at(col("f_b"), i + 1), 1L)
           .otherwise(0L)).reduce(_ + _)
-      pairsExact(docs)
+      PairEngine.jaccard(docs)
         .join(sigs.select(col("doc_id").as("id_a"), col("filled").as("f_a"),
           col("n_empty").as("n_empty_a")), Seq("id_a"))
         .join(sigs.select(col("doc_id").as("id_b"), col("filled").as("f_b"),

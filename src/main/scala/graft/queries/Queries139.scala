@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.functions.TextF
+import graft.operators.PairEngine
 
 /** Round-9 batch #59 — percolation + heavy tails:
   *
@@ -14,8 +14,9 @@ import graft.functions.TextF
   *    gates percolate: one giant cluster swallows the corpus and the
   *    keeper policy deletes half of it; the sweep shows exactly where
   *    that transition sits. Four CC runs over shrinking edge sets
-  *    (each O(log diameter) rounds); the DuckDB twin unrolls four
-  *    recursive reaches over the shared df-capped pair engine.
+  *    (each O(log diameter) rounds) over `operators/PairEngine.jaccard`
+  *    pairs; the DuckDB twin unrolls four recursive reaches over the
+  *    shared df-capped pair CTE.
   *  - `tail_index_fit`: how heavy is the purchase-value tail — the
   *    Hill estimator over the top-64 order statistics, in the repo's
   *    exact ⌊log₂⌋ quantization: α̂ = k / Σ log₂(xᵢ/x_k) bits. α ≤ 2
@@ -30,26 +31,10 @@ object Queries139 {
 
   val defs: Map[String, Q] = Map(
     "giant_component_sweep" -> { (sp, dir) =>
-      // the ngram_jaccard pair engine, unfiltered jac ≥ 200 base
-      val docs = Tables.documents(sp, dir)
-        .withColumn("toks", TextF.tokens(col("text")))
-        .select(col("doc_id"), array_distinct(TextF.shinglesFromTokens(col("toks"), 5)).as("sh"))
-      val ex = graft.util.CacheScope.track(
-        docs.select(col("doc_id"), explode(col("sh")).as("s")))
-      // set sizes off the cached exploded table (see jaccardPairsFromToks)
-      val sizes = ex.groupBy("doc_id").agg(count(lit(1)).as("n"))
-      val rare = ex.groupBy("s").agg(count(lit(1)).as("df"))
-        .filter(col("df") <= LlmQueries.StopShingleDf).select("s")
-      val exF = ex.join(rare, "s")
+      // the smallest gate equals PairEngine.MinJaccardPermille, so every
+      // gate's edge set is a filter over the engine's pairs
       val pairs = graft.util.CacheScope.track(
-        exF.as("a").join(exF.as("b"),
-            col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
-          .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-          .agg(count(lit(1)).as("shared"))
-          .join(sizes.withColumnRenamed("doc_id", "id_a").withColumnRenamed("n", "n_a"), "id_a")
-          .join(sizes.withColumnRenamed("doc_id", "id_b").withColumnRenamed("n", "n_b"), "id_b")
-          .withColumn("jac_permille",
-            round(lit(1000.0) * col("shared") / (col("n_a") + col("n_b") - col("shared"))).cast("bigint"))
+        PairEngine.jaccard(LlmQueries.shingleDocs(sp, dir))
           .select(col("id_a"), col("id_b"), col("jac_permille")))
       pairs.count()
       // the four gate-filtered CC runs are independent given the shared

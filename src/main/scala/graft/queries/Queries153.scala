@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.TextF
+import graft.operators.PairEngine
 
 /** Round-9 batch #73 — weighted similarity + pricing psychology:
   *
@@ -14,7 +15,7 @@ import graft.functions.TextF
   *    emphasis" from the set-Jaccard's "same vocabulary" (a doc that
   *    repeats one section scores high on sets, lower on bags).
   *    Exact integers via Σmax = totₐ + tot_b − Σmin, so only shared
-  *    tokens join; runs on the df-capped pair engine's candidates
+  *    tokens join; runs on `operators/PairEngine.jaccard` pairs
   *    (jac ≥ 200), both measures side by side.
   *  - `price_point_analysis`: the charm-pricing read — the cents-ending
   *    distribution of order totals (top endings by mass, the .99-style
@@ -27,38 +28,14 @@ object Queries153 {
     "weighted_jaccard_pairs" -> { (sp, dir) =>
       val docs = Tables.documents(sp, dir)
         .withColumn("toks", TextF.tokens(col("text")))
-      val tf = graft.util.CacheScope.track(docs
-        .select(col("doc_id"), explode(col("toks")).as("t"))
-        .filter(col("t") =!= "")
-        .groupBy("doc_id", "t").agg(count(lit(1)).as("tf")))
+      val tf = PairEngine.tokenFreq(docs)
       val tot = tf.groupBy("doc_id").agg(sum("tf").as("tot"))
-      // the pair engine's candidates (set-jaccard >= 200 permille)
-      val sh = docs.select(col("doc_id"),
-        array_distinct(TextF.shinglesFromTokens(col("toks"), 5)).as("sh"))
-      val ex = graft.util.CacheScope.track(
-        sh.select(col("doc_id"), explode(col("sh")).as("s")))
-      // set sizes off the cached exploded table (see jaccardPairsFromToks)
-      val sizes = ex.groupBy("doc_id").agg(count(lit(1)).as("n"))
-      val rare = ex.groupBy("s").agg(count(lit(1)).as("df"))
-        .filter(col("df") <= LlmQueries.StopShingleDf).select("s")
-      val exF = ex.join(rare, "s")
       // pin: the verified pairs feed both the weighted overlap and the
       // final join spine
-      val pairs = graft.util.CacheScope.track(exF.as("a").join(exF.as("b"),
-          col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
-        .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-        .agg(count(lit(1)).as("shared"))
-        .join(sizes.withColumnRenamed("doc_id", "id_a").withColumnRenamed("n", "n_a"), "id_a")
-        .join(sizes.withColumnRenamed("doc_id", "id_b").withColumnRenamed("n", "n_b"), "id_b")
-        .withColumn("jac_permille",
-          round(lit(1000.0) * col("shared") / (col("n_a") + col("n_b") - col("shared"))).cast("bigint"))
-        .filter(col("jac_permille") >= 200)
+      val pairs = graft.util.CacheScope.track(PairEngine.jaccard(
+          docs.select(col("doc_id"), PairEngine.shingleSets(col("toks")).as("sh")))
         .select("id_a", "id_b", "jac_permille"))
-      val sharedMin = pairs
-        .join(tf.select(col("doc_id").as("id_a"), col("t"), col("tf").as("tfa")), Seq("id_a"))
-        .join(tf.select(col("doc_id").as("id_b"), col("t"), col("tf").as("tfb")), Seq("id_b", "t"))
-        .groupBy("id_a", "id_b")
-        .agg(sum(least(col("tfa"), col("tfb"))).as("sum_min"))
+      val sharedMin = PairEngine.sumMin(pairs, tf, "sum_min")
       pairs
         .join(sharedMin, Seq("id_a", "id_b"), "left")
         .join(tot.select(col("doc_id").as("id_a"), col("tot").as("tot_a")), Seq("id_a"))

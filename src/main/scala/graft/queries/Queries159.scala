@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.TextF
+import graft.operators.PairEngine
 
 /** Round-12 batch #2 — seasonal forecasting + training-data selection and
   * hygiene:
@@ -33,7 +34,7 @@ import graft.functions.TextF
   *    (the bad-row corpus pattern) and the scan is REAL character
   *    arithmetic (length-after-replace deltas) in both engines.
   *  - `rouge_pairs`: ROUGE-1/ROUGE-2 overlap between near-dup candidate
-  *    pairs (the df-capped shingle pair engine, jac ≥ 200‰) — multiset
+  *    pairs (`operators/PairEngine.jaccard`, jac ≥ 200‰) — multiset
   *    n-gram recall/F1, the summarization-style alignment read that
   *    separates "quotes the other doc" (high R1, asymmetric) from "same
   *    phrasing" (high R2). Exact integer counts, permille outputs.
@@ -144,45 +145,21 @@ object Queries159 {
     "rouge_pairs" -> { (sp, dir) =>
       val docs = Tables.documents(sp, dir)
         .withColumn("toks", TextF.tokens(col("text")))
-      val uni = graft.util.CacheScope.track(docs
-        .select(col("doc_id"), explode(col("toks")).as("t"))
-        .filter(col("t") =!= "")
-        .groupBy("doc_id", "t").agg(count(lit(1)).as("tf")))
+      val uni = PairEngine.tokenFreq(docs)
       val totU = uni.groupBy("doc_id").agg(sum("tf").as("tot"))
       val bi = graft.util.CacheScope.track(docs
         .select(col("doc_id"), explode(TextF.shinglesFromTokens(col("toks"), 2)).as("t"))
         .groupBy("doc_id", "t").agg(count(lit(1)).as("tf")))
       val totB = bi.groupBy("doc_id").agg(sum("tf").as("tot"))
-      // the pair engine's candidates (set-jaccard >= 200 permille)
-      val sh = docs.select(col("doc_id"),
-        array_distinct(TextF.shinglesFromTokens(col("toks"), 5)).as("sh"))
-      val ex = graft.util.CacheScope.track(
-        sh.select(col("doc_id"), explode(col("sh")).as("s")))
-      // set sizes off the cached exploded table (see jaccardPairsFromToks)
-      val sizes = ex.groupBy("doc_id").agg(count(lit(1)).as("n"))
-      val rare = ex.groupBy("s").agg(count(lit(1)).as("df"))
-        .filter(col("df") <= LlmQueries.StopShingleDf).select("s")
-      val exF = ex.join(rare, "s")
       // r15: pin the verified pair set — it feeds BOTH overlap passes and
       // the final join spine, and uncached each consumer re-ran the band
       // self-join pipeline (3x the pair engine)
-      val pairs = graft.util.CacheScope.track(exF.as("a").join(exF.as("b"),
-          col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
-        .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-        .agg(count(lit(1)).as("shared"))
-        .join(sizes.withColumnRenamed("doc_id", "id_a").withColumnRenamed("n", "n_a"), "id_a")
-        .join(sizes.withColumnRenamed("doc_id", "id_b").withColumnRenamed("n", "n_b"), "id_b")
-        .filter(round(lit(1000.0) * col("shared") / (col("n_a") + col("n_b") - col("shared")))
-          .cast("bigint") >= 200)
+      val pairs = graft.util.CacheScope.track(PairEngine.jaccard(
+          docs.select(col("doc_id"), PairEngine.shingleSets(col("toks")).as("sh")))
         .select("id_a", "id_b"))
-      def overlap(tf: DataFrame, name: String): DataFrame = pairs
-        .join(tf.select(col("doc_id").as("id_a"), col("t"), col("tf").as("tfa")), Seq("id_a"))
-        .join(tf.select(col("doc_id").as("id_b"), col("t"), col("tf").as("tfb")), Seq("id_b", "t"))
-        .groupBy("id_a", "id_b")
-        .agg(sum(least(col("tfa"), col("tfb"))).as(name))
       pairs
-        .join(overlap(uni, "su1"), Seq("id_a", "id_b"), "left")
-        .join(overlap(bi, "su2"), Seq("id_a", "id_b"), "left")
+        .join(PairEngine.sumMin(pairs, uni, "su1"), Seq("id_a", "id_b"), "left")
+        .join(PairEngine.sumMin(pairs, bi, "su2"), Seq("id_a", "id_b"), "left")
         .join(totU.select(col("doc_id").as("id_a"), col("tot").as("tu_a")), Seq("id_a"))
         .join(totU.select(col("doc_id").as("id_b"), col("tot").as("tu_b")), Seq("id_b"))
         .join(totB.select(col("doc_id").as("id_a"), col("tot").as("tb_a")), Seq("id_a"))

@@ -75,10 +75,7 @@ object Queries16 {
   /** Shipped docs / batch docs split + planted cross-side duplicates: the
     * boilerplate text appears on shipped (doc_id%11==5 among non-batch)
     * AND batch (doc_id%7==2) rows, so batch probes provably hit. */
-  private[graft] def bloomDocsForSpec(sp: SparkSession, dir: String): DataFrame =
-    bloomDocs(sp, dir)
-
-  private[queries] def bloomDocs(sp: SparkSession, dir: String): DataFrame =
+  private[graft] def bloomDocs(sp: SparkSession, dir: String): DataFrame =
     Tables.documents(sp, dir).select(col("doc_id"),
       when(col("doc_id") % 11 === 5 || (col("doc_id") % 3 === 1 && col("doc_id") % 7 === 2),
         lit(BloomBoiler))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.UaF
+import graft.operators.PairEngine
 
 /** Round-15 batch #5 — LSH capacity planning, dup-graph structure, license
   * contamination, and enrichment-composition drift:
@@ -77,7 +78,7 @@ object Queries204 {
       // the labeled-pair Jaccard table materializes ONCE; each layout is a
       // cheap agg over it (without the cache, three full shingle pipelines)
       val pairs = graft.util.CacheScope.track(
-        LlmQueries.defs("ngram_jaccard")(sp, dir).select(col("jac_permille").as("s")))
+        PairEngine.jaccard(LlmQueries.shingleDocs(sp, dir)).select(col("jac_permille").as("s")))
       pairs.count()
       Layouts.map { case (r, b) =>
         pairs.agg(count(lit(1)).as("n_pairs"),
@@ -89,7 +90,7 @@ object Queries204 {
 
     "dedup_transitivity_audit" -> { (sp, dir) =>
       val p = graft.util.CacheScope.track(
-        LlmQueries.defs("ngram_jaccard")(sp, dir).select("id_a", "id_b"))
+        PairEngine.jaccard(LlmQueries.shingleDocs(sp, dir)).select("id_a", "id_b"))
       p.count()
       val e = p.select(col("id_a").as("m"), col("id_b").as("x"))
         .unionAll(p.select(col("id_b").as("m"), col("id_a").as("x")))

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.TextF
+import graft.operators.PairEngine
 
 /** Round-15 batch #6 — dispersion trend, logistics switching, Unicode
   * hygiene, and candidate-graph calibration:
@@ -85,7 +86,7 @@ object Queries205 {
       val (p, cand) = graft.util.Par.run2(
         () => {
           val v = graft.util.CacheScope.track(
-            LlmQueries.defs("ngram_jaccard")(sp, dir).select("id_a", "id_b"))
+            PairEngine.jaccard(LlmQueries.shingleDocs(sp, dir)).select("id_a", "id_b"))
           v.count(); v
         },
         () => {

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.operators.PairEngine
 
 /** Round-15 batch #9 — detector evaluation, pricing dispersion, CLV model
   * inputs, and Unicode mixing:
@@ -39,7 +40,7 @@ object Queries208 {
       val prep = graft.util.Par.run(Seq(
         () => {
           val l = graft.util.CacheScope.track(
-            LlmQueries.defs("ngram_jaccard")(sp, dir).select("id_a", "id_b"))
+            PairEngine.jaccard(LlmQueries.shingleDocs(sp, dir)).select("id_a", "id_b"))
           l.count(); l
         },
         () => {

@@ -129,7 +129,7 @@ object BenchScale {
     "subject_access_export", "quota_sample", "ab_cuped",
     // round-9 batches 45-54: the single-shuffle native sketches (64-byte /
     // k-min partials — must stay flat), the sketch reaggregation, the two
-    // signature-compression scoreboards riding the df-capped pair engine,
+    // signature-compression scoreboards riding operators/PairEngine,
     // the boundary-sweep Little's-law closure, the blocked invoice scan,
     // the ArraySum-Gram isotropy quotient, the day-grain STL/OHLC series,
     // the CC-label modularity rollup, the brand-partitioned boxplot, the

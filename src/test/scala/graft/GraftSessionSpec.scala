@@ -11,7 +11,8 @@ import graft.plans.{GraftExtensions, GraftFunctions}
 /** The session factory and the one install of graft's functions, rules and
   * strategies: install is idempotent, the `spark.sql.extensions` entry point
   * attaches the same set, and no main code builds a session or attaches a
-  * rule anywhere else. */
+  * rule anywhere else — nor df-caps or self-joins shingles outside
+  * `operators/PairEngine`. */
 class GraftSessionSpec extends SparkSpec {
 
   private def assertOnce[A](attached: Seq[A], wanted: Seq[A]): Unit =
@@ -59,5 +60,13 @@ class GraftSessionSpec extends SparkSpec {
     assert(hits("""\.extra(Strategies|Optimizations)\s*(=(?!=)|\+\+=|:\+=|\+=)""") ==
       Seq("GraftExtensions.scala", "GraftExtensions.scala"),
       "attach strategies and rules through GraftFunctions.install")
+    // the Spark-side df cap and the shingle self-join; the oracle SQL
+    // interpolates the constant as `$StopShingleDf`, which is not a filter
+    assert(hits("""<=\s*(?:\w+\.)?StopShingleDf""") == Seq("PairEngine.scala"),
+      "df-cap shingles through operators/PairEngine")
+    assert(hits("""col\("a\.s"\)\s*===\s*col\("b\.s"\)""") == Seq("PairEngine.scala"),
+      "self-join shingle tables through operators/PairEngine")
+    assert(hits("""defs\("ngram_jaccard"\)""").isEmpty,
+      "compose PairEngine.jaccard instead of calling the ngram_jaccard query")
   }
 }

@@ -1,0 +1,113 @@
+package graft
+
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.{ListenerBusDrain, Success}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.sql.functions._
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
+
+import graft.enrich.Protocol
+import graft.queries.PipelineQuery
+import graft.sources.Sources
+
+/** The whole default chain over generated malformed collector lines: bad
+  * querystrings, truncated %-escapes, user agents of 64 KB and more,
+  * invalid and mixed-family IPs, empty and NUL-laden fields. Every input
+  * event lands in exactly one of good and bad, and no task fails. */
+class MalformedInputSpec extends SparkSpec {
+
+  private val BaseUs = 1704067200000000L
+  private val Nul = "\u0000"
+
+  private def sample[A](g: Gen[A], n: Int, seed: Long): Seq[A] =
+    Iterator.from(0).map(i => g.apply(Gen.Parameters.default, Seed(seed + i)))
+      .flatten.take(n).toSeq
+
+  private val emptyOrNul = Gen.oneOf("", Nul, s"a${Nul}b", s"$Nul$Nul")
+
+  private val ip = Gen.oneOf(
+    Gen.oneOf("94.15.223.151", "999.1.1.1", "1.2.3", "1.2.3.4.5", "-1.0.0.0",
+      "::ffff:1.2.3.4", "2001:db8::1, 10.0.0.1", "10.0.0.1, 2001:db8::2", "fe80::1%eth0",
+      "1:2:3:4:5:6:7:8:9", "::", "gggg::1", "abc", " , ,"),
+    emptyOrNul)
+
+  private val ua = Gen.oneOf(
+    Gen.oneOf("Mozilla/5.0 (X11; Linux x86_64; rv:109.0) Gecko/20100101 Firefox/119.0",
+      "curl/8.0", "(((((", "Mozilla/5.0 (compatible; Googlebot/2.1"),
+    // 64 KB and more: one long token, and a long run of UA-like fragments
+    Gen.choose(65536, 70000).map(n => "Mozilla/5.0 " + "A" * n),
+    Gen.const("Mozilla/5.0 (Windows NT 10.0; Win64; x64) " * 1700),
+    emptyOrNul)
+
+  private val url = Gen.oneOf(
+    Gen.oneOf("https://shop.example.com/p/1", "http://", "://x", "https://a.com:99999/x?y=%",
+      "https://[::1/x", "not a url"),
+    emptyOrNul)
+
+  private val escape = Gen.oneOf("%", "%2", "%E2%82", "%zz", "%%", "%u00", "%2F%2")
+
+  private val qs = {
+    val param = for {
+      k <- Gen.oneOf("e", "p", "res", "uid", "url", "refr", "dtm", "stm", "ttm", "tr_tt",
+        "tr_cu", "_sp", "", "%")
+      v <- Gen.oneOf(Gen.oneOf("pv", "web", "1920x1080", "x", "1e999", "-5", "NaN",
+        "abc.def", "https%3A%2F%2Fshop.example.com%2Fp%2F1%3Futm_source%3Dg"), escape,
+        escape.map("https%3A%2F%2Fx.com" + _), emptyOrNul)
+      sep <- Gen.oneOf("=", "==", "")
+    } yield s"$k$sep$v"
+    Gen.oneOf(
+      Gen.choose(0, 8).flatMap(n => Gen.listOfN(n, param)).map(_.mkString("&")),
+      Gen.oneOf("&&&", "=&=", "e", "?e=pv", "e=pv&p=web&res=abcxdef&dtm=notanumber"),
+      emptyOrNul)
+  }
+
+  /** One collector line whose timestamp field is the event's id. */
+  private def line(id: Long): Gen[String] = for {
+    i <- ip; u <- ua; pu <- url
+    e <- Gen.oneOf(Gen.oneOf("pv", "se", "tr", "zz"), emptyOrNul)
+    q <- qs
+  } yield Seq((BaseUs + id).toString, i, u, pu, e, q).mkString("\t")
+
+  /** Lines whose timestamp itself is malformed (or missing), so they parse
+    * to a null collector timestamp. */
+  private val noTimestamp = Gen.oneOf(
+    emptyOrNul.map(t => Seq(t, "94.15.223.151", "curl/8.0", "https://a.com/", "pv", "e=pv").mkString("\t")),
+    Gen.oneOf("", Nul, "only-one-field", "17040672000000x\tip", s"1704$Nul\t\t\t\t\t"))
+
+  test("chain over malformed raw events: good and bad partition the input, no task fails") {
+    import spark.implicits._
+    val n = 160
+    val lines = (0 until n).map(i => line(i.toLong).apply(Gen.Parameters.default, Seed(1000L + i)).get)
+    val broken = sample(noTimestamp, 12, 5000L)
+    assert(lines.count(_.length >= 65536) >= 3, "the sample must carry user agents of 64 KB or more")
+
+    val failedTasks = new AtomicInteger
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.reason != Success) failedTasks.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val (goodTs, badTs) =
+      try {
+        val raw = Protocol.fromCollector(Sources.parseCollectorTsv((lines ++ broken).toDF("value")))
+        val (good, bad) = PipelineQuery.pipeline.split(raw)
+        def ts(df: org.apache.spark.sql.DataFrame): Seq[Option[Long]] =
+          df.select(col("collector_tstamp_us")).collect()
+            .map(r => if (r.isNullAt(0)) None else Some(r.getLong(0))).toSeq
+        val out = (ts(good), ts(bad))
+        ListenerBusDrain(sc)
+        out
+      } finally sc.removeSparkListener(listener)
+
+    assert(failedTasks.get == 0, "no task may fail on malformed input")
+    val ids = (goodTs ++ badTs).flatten.map(_ - BaseUs)
+    assert(ids.sorted == (0L until n.toLong), "every event id lands in exactly one of good and bad")
+    assert(goodTs.flatten.toSet.intersect(badTs.flatten.toSet).isEmpty)
+    assert((goodTs ++ badTs).count(_.isEmpty) == broken.size,
+      "every line without a timestamp lands exactly once too")
+    assert(badTs.nonEmpty && goodTs.nonEmpty, "the sample must reach both sides")
+  }
+}

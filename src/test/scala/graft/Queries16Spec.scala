@@ -24,7 +24,7 @@ class Queries16Spec extends SparkSpec {
 
   test("dedup_bloom: flagged set ⊇ true membership (false positives allowed, bounded)") {
     import graft.queries.Queries16
-    val docs = Queries16.bloomDocsForSpec(spark, dir)
+    val docs = Queries16.bloomDocs(spark, dir)
     val shippedFps = docs.filter(col("doc_id") % 3 =!= 1)
       .select("fp").distinct().collect().map(_.getString(0)).toSet
     val batch = docs.filter(col("doc_id") % 3 === 1)
@@ -92,7 +92,7 @@ class Queries16Spec extends SparkSpec {
         r.getLong(5), r.getLong(6), r.getLong(7))
     assert(m == 1024L && k == 3L)
     // ground truth from the shared doc universe
-    val docs = graft.queries.Queries16.bloomDocsForSpec(spark, dir)
+    val docs = graft.queries.Queries16.bloomDocs(spark, dir)
       .select(org.apache.spark.sql.functions.col("doc_id"),
         org.apache.spark.sql.functions.col("fp")).collect()
       .map(x => (x.getLong(0), x.getString(1)))

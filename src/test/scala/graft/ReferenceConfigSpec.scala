@@ -16,6 +16,16 @@ class ReferenceConfigSpec extends SparkSpec {
 
   private val dir = Paths.get("/root/reference/config/enrichments")
 
+  /** An `asn_lookups` config in the reference's layout: inline bot ASNs,
+    * a bypassed platform and a file-backed bot list. */
+  private val AsnLookupsCfg =
+    """{"schema": "iglu:com.snowplowanalytics.snowplow.enrichments/asn_lookups/jsonschema/1-0-0",
+      | "data": {"name": "asn_lookups", "vendor": "com.snowplowanalytics.snowplow.enrichments",
+      |   "enabled": true, "parameters": {
+      |     "botAsns": [{"asn": 123}, {"asn": 456}],
+      |     "bypassPlatforms": ["srv"],
+      |     "botAsnsFile": {"database": "bad-asn-list.csv", "uri": "http://assets.example.com/asn"}}}}""".stripMargin
+
   private def allConfigs: Seq[String] =
     Files.list(dir).iterator().asScala.toSeq
       .filter(_.toString.endsWith(".json")).sortBy(_.toString)
@@ -141,8 +151,7 @@ class ReferenceConfigSpec extends SparkSpec {
 
   test("asn_lookups: injected CSV set merges with inline list (csvAsns ++ botAsns)") {
     import spark.implicits._
-    val cfg = new String(Files.readAllBytes(dir.resolve("asn_lookups.json")), "UTF-8")
-    val (pipe, skipped) = EnrichmentConfig.fromReferenceConfigs(Seq(cfg),
+    val (pipe, skipped) = EnrichmentConfig.fromReferenceConfigs(Seq(AsnLookupsCfg),
       asnBotLists = Map("bad-asn-list.csv" -> Set(789L)))
     assert(skipped.isEmpty, skipped.mkString(", "))
     val bot = pipe.enrichments.collectFirst { case b: graft.enrich.AsnBotFlag => b }.get
@@ -162,19 +171,17 @@ class ReferenceConfigSpec extends SparkSpec {
   }
 
   test("asn_bot_flag orders after ip_asn_lookup regardless of config-file order") {
-    assume(Files.isDirectory(dir))
     import spark.implicits._
     val geoPath = java.nio.file.Files.createTempDirectory("cfg-order").resolve("asn").toString
     Seq((16777216L, 16777471L, 123L, "Bot AS"), (3221225472L, 3221225727L, 777L, "Clean AS"))
       .toDF("lo", "hi", "ip_asn", "ip_organization").write.parquet(geoPath)
-    val asnCfg = new String(Files.readAllBytes(dir.resolve("asn_lookups.json")), "UTF-8")
     val ipCfg =
       """{"schema": "iglu:com.snowplowanalytics.snowplow/ip_lookups/jsonschema/2-0-1",
         | "data": {"name": "ip_lookups", "vendor": "com.snowplowanalytics.snowplow",
         |   "enabled": true, "parameters": {
         |     "asn": {"database": "GeoLite2-ASN.mmdb", "uri": "http://assets.example.com/maxmind"}}}}""".stripMargin
     // asn_lookups FIRST in the file order — the flag must still see ip_asn
-    val (pipe, _) = EnrichmentConfig.fromReferenceConfigs(Seq(asnCfg, ipCfg),
+    val (pipe, _) = EnrichmentConfig.fromReferenceConfigs(Seq(AsnLookupsCfg, ipCfg),
       geoDims = Map("GeoLite2-ASN.mmdb" -> geoPath),
       asnBotLists = Map("bad-asn-list.csv" -> Set.empty[Long]))
     assert(pipe.enrichments.map(_.name) == Seq("ip_asn_lookup", "asn_bot_flag"))

@@ -15,7 +15,7 @@ class StreamBloomSpec extends SparkSpec {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
 
-    val docs = graft.queries.Queries16.bloomDocsForSpec(spark, dir)
+    val docs = graft.queries.Queries16.bloomDocs(spark, dir)
     val shipped = docs.filter(col("doc_id") % 3 =!= 1)
       .select("fp").distinct().as[String].collect().sorted
     assert(shipped.length > 50)
