@@ -164,7 +164,7 @@ object Main {
             .start()
           val badQ =
             if (args.bad.nonEmpty)
-              Some(trigger(graft.streaming.EnrichStream.badRows(raw, pipeline, payloadCols(raw), etlUs)
+              Some(trigger(pipeline.badRowsJson(raw, payloadCols(raw), etlUs)
                 .select("bad_row").writeStream
                 .format("text")
                 .option("path", args.bad)

@@ -1,16 +1,16 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
-import graft.queries.{AnalyticsQueries, EnrichQueries, LlmQueries, PipelineQuery, Queries2, Queries3, Queries4, Queries5, Queries6, Queries7, Queries8, Queries9, Queries10, Queries11, Queries12, Queries13, Queries14, Queries15, Queries16, Queries17, Queries18, Queries19, Queries20, Queries21, Queries22, Queries23, Queries24, Queries25, Queries26, Queries27, Queries28, Queries29, Queries30, Queries31, Queries32, Queries33, Queries34, Queries35, Queries36, Queries37, Queries38, Queries39, Queries40, Queries41, Queries42, Queries43, Queries44, Queries45, Queries46, Queries47, Queries48, Queries49, Queries50, Queries51, Queries52, Queries53, Queries54, Queries55, Queries56, Queries57, Queries58, Queries59, Queries60, Queries61, Queries62, Queries63, Queries64, Queries65, Queries66, Queries67, Queries68, Queries69, Queries70, Queries71, Queries72, Queries73, Queries74, Queries75, Queries76, Queries77, Queries78, Queries79, Queries80, Queries81, Queries82, Queries83, Queries84, Queries85, Queries86, Queries87, Queries88, Queries89, Queries90, Queries91, Queries92, Queries93, Queries94, Queries95, Queries96, Queries97, Queries98, Queries99, Queries100, Queries101, Queries102, Queries103, Queries104, Queries105, Queries106, Queries107, Queries108, Queries109, Queries110, Queries111, Queries112, Queries113, Queries114, Queries115, Queries116, Queries117, Queries118, Queries119, Queries120, Queries121, Queries122, Queries123, Queries124, Queries125, Queries126, Queries127, Queries128, Queries129, Queries130, Queries131, Queries132, Queries133, Queries134, Queries135, Queries136, Queries137, Queries138, Queries139, Queries140, Queries141, Queries142, Queries143, Queries144, Queries145, Queries146, Queries147, Queries148, Queries149, Queries150, Queries151, Queries152, Queries153, Queries154, Queries155, Queries156, Queries157, Queries158, Queries159, Queries160, Queries161, Queries162, Queries163, Queries164, Queries165, Queries166, Queries167, Queries168, Queries169, Queries170, Queries171, Queries172, Queries173, Queries174, Queries175, Queries176, Queries177, Queries178, Queries179, Queries180, Queries181, Queries182, Queries183, Queries184, Queries185, Queries186, Queries187, Queries188, Queries189, Queries190, Queries191, Queries192, Queries193, Queries194, Queries195, Queries196, Queries197, Queries198, Queries199, Queries200, Queries201, Queries202, Queries203, Queries204, Queries205, Queries206, Queries207, Queries208, Queries209, Queries210}
+import graft.queries._
 
-/** Driver contract — see /root/repo/SURVEY.md §2 for the operator inventory.
+/** Driver contract — see SURVEY.md §2 for the operator inventory.
   *
-  * Every implemented operator appears in [[queries]]; all SQL-expressible ones
-  * also appear in [[oracleSql]] with a DuckDB-runnable twin producing
-  * identically-named, engine-portable columns (BIGINT money/timestamps,
-  * hex-string hashes — see SURVEY §6).
+  * Every implemented operator appears in [[queries]] with a DuckDB twin in
+  * [[oracleSql]] under the same key, producing identically-named,
+  * engine-portable columns (BIGINT money/timestamps, hex-string hashes —
+  * see SURVEY §6). Both maps fold [[Sets]], which names each query set
+  * once; the fold rejects a key defined twice and a key without its twin.
   */
 object SparkEntry {
 
@@ -20,439 +20,41 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("enrich_pipeline")(spark, "/root/testdata/sf0.001")
 
+  /** Every query set, each listed once. */
+  private[graft] val Sets: Seq[QuerySet] = Seq(
+    EnrichQueries, AnalyticsQueries, LlmQueries, Queries2, Queries3, Queries4, Queries5, Queries6,
+    Queries7, Queries8, Queries9, Queries10, Queries11, Queries12, Queries13, Queries14, Queries15,
+    Queries16, Queries17, Queries18, Queries19, Queries20, Queries21, Queries22, Queries23,
+    Queries24, Queries25, Queries26, Queries27, Queries28, Queries29, Queries30, Queries31,
+    Queries32, Queries33, Queries34, Queries35, Queries36, Queries37, Queries38, Queries39,
+    Queries40, Queries41, Queries42, Queries43, Queries44, Queries45, Queries46, Queries47,
+    Queries48, Queries49, Queries50, Queries51, Queries52, Queries53, Queries54, Queries55,
+    Queries56, Queries57, Queries58, Queries59, Queries60, Queries61, Queries62, Queries63,
+    Queries64, Queries65, Queries66, Queries67, Queries68, Queries69, Queries70, Queries71,
+    Queries72, Queries73, Queries74, Queries75, Queries76, Queries77, Queries78, Queries79,
+    Queries80, Queries81, Queries82, Queries83, Queries84, Queries85, Queries86, Queries87,
+    Queries88, Queries89, Queries90, Queries91, Queries92, Queries93, Queries94, Queries95,
+    Queries96, Queries97, Queries98, Queries99, Queries100, Queries101, Queries102, Queries103,
+    Queries104, Queries105, Queries106, Queries107, Queries108, Queries109, Queries110, Queries111,
+    Queries112, Queries113, Queries114, Queries115, Queries116, Queries117, Queries118, Queries119,
+    Queries120, Queries121, Queries122, Queries123, Queries124, Queries125, Queries126, Queries127,
+    Queries128, Queries129, Queries130, Queries131, Queries132, Queries133, Queries134, Queries135,
+    Queries136, Queries137, Queries138, Queries139, Queries140, Queries141, Queries142, Queries143,
+    Queries144, Queries145, Queries146, Queries147, Queries148, Queries149, Queries150, Queries151,
+    Queries152, Queries153, Queries154, Queries155, Queries156, Queries157, Queries158, Queries159,
+    Queries160, Queries161, Queries162, Queries163, Queries164, Queries165, Queries166, Queries167,
+    Queries168, Queries169, Queries170, Queries171, Queries172, Queries173, Queries174, Queries175,
+    Queries176, Queries177, Queries178, Queries179, Queries180, Queries181, Queries182, Queries183,
+    Queries184, Queries185, Queries186, Queries187, Queries188, Queries189, Queries190, Queries191,
+    Queries192, Queries193, Queries194, Queries195, Queries196, Queries197, Queries198, Queries199,
+    Queries200, Queries201, Queries202, Queries203, Queries204, Queries205, Queries206, Queries207,
+    Queries208, Queries209, Queries210, PipelineQuery)
+
+  private lazy val registry = QuerySet.union(Sets)
+
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Seq(
-    EnrichQueries.defs,
-    AnalyticsQueries.defs,
-    LlmQueries.defs,
-    Queries2.defs,
-    Queries3.defs,
-    Queries4.defs,
-    Queries5.defs,
-    Queries6.defs,
-    Queries7.defs,
-    Queries8.defs,
-    Queries9.defs,
-    Queries10.defs,
-    Queries11.defs,
-    Queries12.defs,
-    Queries13.defs,
-    Queries14.defs,
-    Queries15.defs,
-    Queries16.defs,
-    Queries17.defs,
-    Queries18.defs,
-    Queries19.defs,
-    Queries20.defs,
-    Queries21.defs,
-    Queries22.defs,
-    Queries23.defs,
-    Queries24.defs,
-    Queries25.defs,
-    Queries26.defs,
-    Queries27.defs,
-    Queries28.defs,
-    Queries29.defs,
-    Queries30.defs,
-    Queries31.defs,
-    Queries32.defs,
-    Queries33.defs,
-    Queries34.defs,
-    Queries35.defs,
-    Queries36.defs,
-    Queries37.defs,
-    Queries38.defs,
-    Queries39.defs,
-    Queries40.defs,
-    Queries41.defs,
-    Queries42.defs,
-    Queries43.defs,
-    Queries44.defs,
-    Queries45.defs,
-    Queries46.defs,
-    Queries47.defs,
-    Queries48.defs,
-    Queries49.defs,
-    Queries50.defs,
-    Queries51.defs,
-    Queries52.defs,
-    Queries53.defs,
-    Queries54.defs,
-    Queries55.defs,
-    Queries56.defs,
-    Queries57.defs,
-    Queries58.defs,
-    Queries59.defs,
-    Queries60.defs,
-    Queries61.defs,
-    Queries62.defs,
-    Queries63.defs,
-    Queries64.defs,
-    Queries65.defs,
-    Queries66.defs,
-    Queries67.defs,
-    Queries68.defs,
-    Queries69.defs,
-    Queries70.defs,
-    Queries71.defs,
-    Queries72.defs,
-    Queries73.defs,
-    Queries74.defs,
-    Queries75.defs,
-    Queries76.defs,
-    Queries77.defs,
-    Queries78.defs,
-    Queries79.defs,
-    Queries80.defs,
-    Queries81.defs,
-    Queries82.defs,
-    Queries83.defs,
-    Queries84.defs,
-    Queries85.defs,
-    Queries86.defs,
-    Queries87.defs,
-    Queries88.defs,
-    Queries89.defs,
-    Queries90.defs,
-    Queries91.defs,
-    Queries92.defs,
-    Queries93.defs,
-    Queries94.defs,
-    Queries95.defs,
-    Queries96.defs,
-    Queries97.defs,
-    Queries98.defs,
-    Queries99.defs,
-    Queries100.defs,
-    Queries101.defs,
-    Queries102.defs,
-    Queries103.defs,
-    Queries104.defs,
-    Queries105.defs,
-    Queries106.defs,
-    Queries107.defs,
-    Queries108.defs,
-    Queries109.defs,
-    Queries110.defs,
-    Queries111.defs,
-    Queries112.defs,
-    Queries113.defs,
-    Queries114.defs,
-    Queries115.defs,
-    Queries116.defs,
-    Queries117.defs,
-    Queries118.defs,
-    Queries119.defs,
-    Queries120.defs,
-    Queries121.defs,
-    Queries122.defs,
-    Queries123.defs,
-    Queries124.defs,
-    Queries125.defs,
-    Queries126.defs,
-    Queries127.defs,
-    Queries128.defs,
-    Queries129.defs,
-    Queries130.defs,
-    Queries131.defs,
-    Queries132.defs,
-    Queries133.defs,
-    Queries134.defs,
-    Queries135.defs,
-    Queries136.defs,
-    Queries137.defs,
-    Queries138.defs,
-    Queries139.defs,
-    Queries140.defs,
-    Queries141.defs,
-    Queries142.defs,
-    Queries143.defs,
-    Queries144.defs,
-    Queries145.defs,
-    Queries146.defs,
-    Queries147.defs,
-    Queries148.defs,
-    Queries149.defs,
-    Queries150.defs,
-    Queries151.defs,
-    Queries152.defs,
-    Queries153.defs,
-    Queries154.defs,
-    Queries155.defs,
-    Queries156.defs,
-    Queries157.defs,
-    Queries158.defs,
-    Queries159.defs,
-    Queries160.defs,
-    Queries161.defs,
-    Queries162.defs,
-    Queries163.defs,
-    Queries164.defs,
-    Queries165.defs,
-    Queries166.defs,
-    Queries167.defs,
-    Queries168.defs,
-    Queries169.defs,
-    Queries170.defs,
-    Queries171.defs,
-    Queries172.defs,
-    Queries173.defs,
-    Queries174.defs,
-    Queries175.defs,
-    Queries176.defs,
-    Queries177.defs,
-    Queries178.defs,
-    Queries179.defs,
-    Queries180.defs,
-    Queries181.defs,
-    Queries182.defs,
-    Queries183.defs,
-    Queries184.defs,
-    Queries185.defs,
-    Queries186.defs,
-    Queries187.defs,
-    Queries188.defs,
-    Queries189.defs,
-    Queries190.defs,
-    Queries191.defs,
-    Queries192.defs,
-    Queries193.defs,
-    Queries194.defs,
-    Queries195.defs,
-    Queries196.defs,
-    Queries197.defs,
-    Queries198.defs,
-    Queries199.defs,
-    Queries200.defs,
-    Queries201.defs,
-    Queries202.defs,
-    Queries203.defs,
-    Queries204.defs,
-    Queries205.defs,
-    Queries206.defs,
-    Queries207.defs,
-    Queries208.defs,
-    Queries209.defs,
-    Queries210.defs,
-    PipelineQuery.defs
-  ).reduce(_ ++ _)
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] = registry._1
 
   /** DuckDB twins, same column names/types (driver hash-compares). */
-  def oracleSql: Map[String, String] =
-    Seq(
-    EnrichQueries.oracles,
-    AnalyticsQueries.oracles,
-    LlmQueries.oracles,
-    Queries2.oracles,
-    Queries3.oracles,
-    Queries4.oracles,
-    Queries5.oracles,
-    Queries6.oracles,
-    Queries7.oracles,
-    Queries8.oracles,
-    Queries9.oracles,
-    Queries10.oracles,
-    Queries11.oracles,
-    Queries12.oracles,
-    Queries13.oracles,
-    Queries14.oracles,
-    Queries15.oracles,
-    Queries16.oracles,
-    Queries17.oracles,
-    Queries18.oracles,
-    Queries19.oracles,
-    Queries20.oracles,
-    Queries21.oracles,
-    Queries22.oracles,
-    Queries23.oracles,
-    Queries24.oracles,
-    Queries25.oracles,
-    Queries26.oracles,
-    Queries27.oracles,
-    Queries28.oracles,
-    Queries29.oracles,
-    Queries30.oracles,
-    Queries31.oracles,
-    Queries32.oracles,
-    Queries33.oracles,
-    Queries34.oracles,
-    Queries35.oracles,
-    Queries36.oracles,
-    Queries37.oracles,
-    Queries38.oracles,
-    Queries39.oracles,
-    Queries40.oracles,
-    Queries41.oracles,
-    Queries42.oracles,
-    Queries43.oracles,
-    Queries44.oracles,
-    Queries45.oracles,
-    Queries46.oracles,
-    Queries47.oracles,
-    Queries48.oracles,
-    Queries49.oracles,
-    Queries50.oracles,
-    Queries51.oracles,
-    Queries52.oracles,
-    Queries53.oracles,
-    Queries54.oracles,
-    Queries55.oracles,
-    Queries56.oracles,
-    Queries57.oracles,
-    Queries58.oracles,
-    Queries59.oracles,
-    Queries60.oracles,
-    Queries61.oracles,
-    Queries62.oracles,
-    Queries63.oracles,
-    Queries64.oracles,
-    Queries65.oracles,
-    Queries66.oracles,
-    Queries67.oracles,
-    Queries68.oracles,
-    Queries69.oracles,
-    Queries70.oracles,
-    Queries71.oracles,
-    Queries72.oracles,
-    Queries73.oracles,
-    Queries74.oracles,
-    Queries75.oracles,
-    Queries76.oracles,
-    Queries77.oracles,
-    Queries78.oracles,
-    Queries79.oracles,
-    Queries80.oracles,
-    Queries81.oracles,
-    Queries82.oracles,
-    Queries83.oracles,
-    Queries84.oracles,
-    Queries85.oracles,
-    Queries86.oracles,
-    Queries87.oracles,
-    Queries88.oracles,
-    Queries89.oracles,
-    Queries90.oracles,
-    Queries91.oracles,
-    Queries92.oracles,
-    Queries93.oracles,
-    Queries94.oracles,
-    Queries95.oracles,
-    Queries96.oracles,
-    Queries97.oracles,
-    Queries98.oracles,
-    Queries99.oracles,
-    Queries100.oracles,
-    Queries101.oracles,
-    Queries102.oracles,
-    Queries103.oracles,
-    Queries104.oracles,
-    Queries105.oracles,
-    Queries106.oracles,
-    Queries107.oracles,
-    Queries108.oracles,
-    Queries109.oracles,
-    Queries110.oracles,
-    Queries111.oracles,
-    Queries112.oracles,
-    Queries113.oracles,
-    Queries114.oracles,
-    Queries115.oracles,
-    Queries116.oracles,
-    Queries117.oracles,
-    Queries118.oracles,
-    Queries119.oracles,
-    Queries120.oracles,
-    Queries121.oracles,
-    Queries122.oracles,
-    Queries123.oracles,
-    Queries124.oracles,
-    Queries125.oracles,
-    Queries126.oracles,
-    Queries127.oracles,
-    Queries128.oracles,
-    Queries129.oracles,
-    Queries130.oracles,
-    Queries131.oracles,
-    Queries132.oracles,
-    Queries133.oracles,
-    Queries134.oracles,
-    Queries135.oracles,
-    Queries136.oracles,
-    Queries137.oracles,
-    Queries138.oracles,
-    Queries139.oracles,
-    Queries140.oracles,
-    Queries141.oracles,
-    Queries142.oracles,
-    Queries143.oracles,
-    Queries144.oracles,
-    Queries145.oracles,
-    Queries146.oracles,
-    Queries147.oracles,
-    Queries148.oracles,
-    Queries149.oracles,
-    Queries150.oracles,
-    Queries151.oracles,
-    Queries152.oracles,
-    Queries153.oracles,
-    Queries154.oracles,
-    Queries155.oracles,
-    Queries156.oracles,
-    Queries157.oracles,
-    Queries158.oracles,
-    Queries159.oracles,
-    Queries160.oracles,
-    Queries161.oracles,
-    Queries162.oracles,
-    Queries163.oracles,
-    Queries164.oracles,
-    Queries165.oracles,
-    Queries166.oracles,
-    Queries167.oracles,
-    Queries168.oracles,
-    Queries169.oracles,
-    Queries170.oracles,
-    Queries171.oracles,
-    Queries172.oracles,
-    Queries173.oracles,
-    Queries174.oracles,
-    Queries175.oracles,
-    Queries176.oracles,
-    Queries177.oracles,
-    Queries178.oracles,
-    Queries179.oracles,
-    Queries180.oracles,
-    Queries181.oracles,
-    Queries182.oracles,
-    Queries183.oracles,
-    Queries184.oracles,
-    Queries185.oracles,
-    Queries186.oracles,
-    Queries187.oracles,
-    Queries188.oracles,
-    Queries189.oracles,
-    Queries190.oracles,
-    Queries191.oracles,
-    Queries192.oracles,
-    Queries193.oracles,
-    Queries194.oracles,
-    Queries195.oracles,
-    Queries196.oracles,
-    Queries197.oracles,
-    Queries198.oracles,
-    Queries199.oracles,
-    Queries200.oracles,
-    Queries201.oracles,
-    Queries202.oracles,
-    Queries203.oracles,
-    Queries204.oracles,
-    Queries205.oracles,
-    Queries206.oracles,
-    Queries207.oracles,
-    Queries208.oracles,
-    Queries209.oracles,
-    Queries210.oracles,
-    PipelineQuery.oracles
-  ).reduce(_ ++ _)
+  lazy val oracleSql: Map[String, String] = registry._2
 }

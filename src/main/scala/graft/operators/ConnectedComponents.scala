@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Minimum-label propagation connected components over an undirected edge
   * list — the transitive-closure step a fuzzy-dedup pipeline needs on top
@@ -55,7 +56,13 @@ object ConnectedComponents {
     // symmetrization at all (union(a,b) is direction-blind), so the local
     // path skips building and caching the 2× sym table outright (r16 —
     // saves a cache-build + count job per call vs the r15 shape).
-    val half = graft.util.CacheScope.track(edges.select(col("src"), col("dst")))
+    // A caller that pinned its pair set passes a projection of that cache:
+    // persisting it again is a no-op, and dropping it would unpersist the
+    // CALLER's cache, so the plan it returns would recompute the pair set.
+    // Cache and drop only an edge list this call pinned itself.
+    val edgeCols = edges.select(col("src"), col("dst"))
+    val owned = edgeCols.storageLevel == StorageLevel.NONE
+    val half = if (owned) graft.util.CacheScope.track(edgeCols) else edgeCols
     val n = half.count()
     val threshold = edges.sparkSession.conf
       .getOption(LocalEdgeThresholdConf).map(_.toLong)
@@ -69,7 +76,7 @@ object ConnectedComponents {
       graft.util.CacheScope.drop(sym)
       res
     }
-    graft.util.CacheScope.drop(half)
+    if (owned) graft.util.CacheScope.drop(half)
     out
   }
 

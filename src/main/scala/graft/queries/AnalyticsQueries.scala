@@ -1,10 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.queries.IntIdioms.cents
 
 /** SURVEY §2.C — OLAP / event-analytics queries over the TPC-H-ish corpus.
   *
@@ -13,11 +13,7 @@ import graft.Tables
   * Small dimensions are broadcast explicitly; the only shuffles are the
   * aggregations/joins that genuinely need them.
   */
-object AnalyticsQueries {
-  type Q = (SparkSession, String) => DataFrame
-
-  private def cents(c: org.apache.spark.sql.Column) = round(c * 100).cast("bigint")
-
+object AnalyticsQueries extends QuerySet {
   val defs: Map[String, Q] = Map(
     "q1_pricing" -> ((sp, dir) =>
       Tables.lineitem(sp, dir)

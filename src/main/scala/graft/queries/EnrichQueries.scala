@@ -13,9 +13,7 @@ import graft.functions.{EventF, IpF, UaF, UrlF}
   * aggregation is the point) and a byte-equivalent DuckDB oracle built over
   * [[Synth.cte]].
   */
-object EnrichQueries {
-  type Q = (SparkSession, String) => DataFrame
-
+object EnrichQueries extends QuerySet {
   private def raw(spark: SparkSession, dir: String): DataFrame =
     Synth.withRaw(Tables.events(spark, dir))
 

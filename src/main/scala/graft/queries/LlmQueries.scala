@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -19,9 +19,7 @@ import graft.operators.PairEngine.StopShingleDf
   * `sim_bruteforce` is the small-query-set baseline and `sim_lsh` the
   * bucketed 100 TB path.
   */
-object LlmQueries {
-  type Q = (SparkSession, String) => DataFrame
-
+object LlmQueries extends QuerySet {
   /** SQL twin of TextF.normalizeText. */
   private val normSql = graft.functions.TextF.NormalizeTextSql
   /** SQL twin of TextF.tokens (over the squeezed normalized text). */

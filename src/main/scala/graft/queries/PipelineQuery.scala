@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.enrich.EnrichmentPipeline
-import graft.functions.{EventF, RefF}
+import graft.functions.EventF
 
 /** The flagship: the whole default enrichment chain
   * ([[graft.enrich.EnrichmentPipeline.default]]) over raw collector columns,
@@ -15,9 +15,7 @@ import graft.functions.{EventF, RefF}
   * Plan shape at 100 TB: one codegen'd projection over the scan, plus two
   * broadcast hash joins (rates, geo ranges). No shuffle of the event table.
   */
-object PipelineQuery {
-  type Q = (SparkSession, String) => DataFrame
-
+object PipelineQuery extends QuerySet {
   def geoRanges: Seq[(Long, Long, String)] =
     Queries2.GeoCountries.zipWithIndex.map { case (cc, i) =>
       (i * 134217728L, i * 134217728L + 134217727L, cc)

@@ -25,9 +25,7 @@ import graft.functions.TextF
   *    keeper ∧ language gate ∧ quality gates in one pass (one window over
   *    the fingerprint + a codegen'd filter; no joins).
   */
-object Queries10 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries10 extends QuerySet {
   private def ev(sp: SparkSession, dir: String): DataFrame =
     // fan out before the CPU-bound payload-decode chain (see Queries9.ev):
     // a single-row-group test file is one split, the decode is 100x the

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -27,9 +26,7 @@ import graft.operators.PairEngine
   *    exact milli rates. The contract: adding a rule adds a column to the
   *    aggregate, never a scan.
   */
-object Queries100 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries100 extends QuerySet {
   private[graft] val MaskLabels: Map[Long, String] = Map(
     1L -> "minhash", 2L -> "simhash", 3L -> "minhash+simhash",
     4L -> "jaccard", 5L -> "minhash+jaccard", 6L -> "simhash+jaccard",

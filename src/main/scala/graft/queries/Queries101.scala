@@ -23,9 +23,7 @@ import graft.operators.KMeans
   *    a full-precision scan and the rerank touches 20 rows per query;
   *    this table measures what that buys and what it costs.
   */
-object Queries101 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries101 extends QuerySet {
   private[graft] val NprobeTiers = Seq(1L, 2L, 4L)
   private[graft] val Stage1K = 20
   private[graft] val Stage2K = 5

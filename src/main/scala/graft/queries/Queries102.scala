@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -23,9 +22,7 @@ import graft.Tables
   *    ≤#days-row aggregate BEFORE the global window touches it, so the
   *    unpartitioned range frame runs over dozens of rows, not events.
   */
-object Queries102 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries102 extends QuerySet {
   private val DayUs = 86400000000L
   private[graft] val MaxLines = 7L
   private[graft] val BacktestWindow = 7L

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -21,9 +20,7 @@ import graft.Tables
   *    sizes every per-session operator's fan-out assumption. One user
   *    window (already priced by sessionize) + two tiny aggregates.
   */
-object Queries103 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries103 extends QuerySet {
   private val FunnelWindowUs = 7L * 86400000000L
   private val GapUs = 30L * 60 * 1000 * 1000
 

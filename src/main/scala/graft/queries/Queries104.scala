@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -23,9 +22,7 @@ import graft.operators.KMeans
   *    cell is a hot partition every nprobe-probe pays for. One narrow
   *    assignment projection + a k-row aggregate.
   */
-object Queries104 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries104 extends QuerySet {
   val defs: Map[String, Q] = Map(
     "dedup_keep_quality" -> { (sp, dir) =>
       val pairs = Queries6.minhashPairs(sp, dir)

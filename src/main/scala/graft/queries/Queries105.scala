@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Round-9 batch #25 — two more enriched-composition reports (the
@@ -16,9 +15,7 @@ import org.apache.spark.sql.functions._
   *  - `device_mix_report`: the browser-family × device-class grid with
   *    corpus share — the client-mix read the UA enrichments exist for.
   */
-object Queries105 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries105 extends QuerySet {
   val defs: Map[String, Q] = Map(
     "traffic_medium_share" -> { (sp, dir) =>
       val g = PipelineQuery.run(sp, dir)

@@ -1,10 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.queries.IntIdioms.nearestRank
 
 /** Round-9 batch #26 — session time-on-site and order-fulfilment SLAs:
   *
@@ -20,9 +20,7 @@ import graft.Tables
   *    fulfilment team reads; one order-key aggregation + a 20-cell
   *    cross-tab.
   */
-object Queries106 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries106 extends QuerySet {
   private val GapUs = 30L * 60 * 1000 * 1000
   private val DayUs = 86400000000L
 
@@ -46,10 +44,9 @@ object Queries106 {
       val ranked = sessions
         .withColumn("rk", row_number().over(wRk))
         .withColumn("n", count(lit(1)).over(Window.partitionBy("dow")))
-      def pick(p: Int) =
-        max(when(col("rk") === lit(1) + expr(s"($p * (n - 1)) div 100"), col("dur_s")))
       ranked.groupBy("dow")
-        .agg(max("n").as("n_sessions"), pick(50).as("p50_s"), pick(95).as("p95_s"),
+        .agg(max("n").as("n_sessions"), nearestRank(50, col("dur_s")).as("p50_s"),
+          nearestRank(95, col("dur_s")).as("p95_s"),
           max("dur_s").as("max_s"),
           sum(when(col("depth") === 1, 1L).otherwise(0L)).as("n_bounce"))
         .orderBy("dow")

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Round-9 batch #27 — `attribution_model_compare`: the attribution
@@ -16,9 +16,7 @@ import org.apache.spark.sql.functions._
   * of the marketing suite. Cost: the five models the suite already
   * prices, plus four broadcast totals and one 10-row join chain.
   */
-object Queries107 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries107 extends QuerySet {
   private val TouchWindowUs = 7L * 86400000000L
   private val DayUs = 86400000000L
 

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -25,9 +24,7 @@ import graft.operators.KMeans
   *    and interarrival_profile (per-event). One user-window pass over the
   *    session table sessionize already pays for.
   */
-object Queries108 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries108 extends QuerySet {
   private val GapUs = 30L * 60 * 1000 * 1000
   private[graft] val OutlierK = 20
 

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -21,9 +20,7 @@ import graft.Tables
   *    quantity with sketches — this is the exact small-universe
   *    scoreboard it calibrates against.
   */
-object Queries109 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries109 extends QuerySet {
   val defs: Map[String, Q] = Map(
     "part_reorder_rate" -> { (sp, dir) =>
       val li = Tables.lineitem(sp, dir).select(col("l_orderkey"), col("l_partkey"))

@@ -39,9 +39,7 @@ import graft.js.JsTransform
   * twins); repetition/boilerplate are injected arithmetically so the
   * detectors provably fire (the dedup_embedding planted-pair pattern).
   */
-object Queries11 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries11 extends QuerySet {
   private val ParaTokens = 5 // tokens per synthetic paragraph
   private val SemK = 8 // ann_ivf_int8 cell count at test scale
   private val SemThreshold = 0.95 // cosine cut, matches dedup_embedding

@@ -1,10 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.queries.IntIdioms.nearestRank
 
 /** Round-9 batch #30 — `ltv_quantiles_by_cohort`: the distribution behind
   * `ltv_curve`'s means — per acquisition week (first-purchase week, the
@@ -15,9 +15,7 @@ import graft.Tables
   * late_arrival_stats percentile idiom with rank windows PARTITIONED BY
   * COHORT — nothing global at any scale.
   */
-object Queries110 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries110 extends QuerySet {
   private val WeekUs = 7L * 86400000000L
 
   val defs: Map[String, Q] = Map(
@@ -31,10 +29,9 @@ object Queries110 {
       val ranked = perUser
         .withColumn("rk", row_number().over(w))
         .withColumn("n", count(lit(1)).over(Window.partitionBy("cohort_wk")))
-      def pick(p: Int) =
-        max(when(col("rk") === lit(1) + expr(s"($p * (n - 1)) div 100"), col("spend_cents")))
       ranked.groupBy("cohort_wk")
-        .agg(max("n").as("n_users"), pick(50).as("p50_cents"), pick(90).as("p90_cents"),
+        .agg(max("n").as("n_users"), nearestRank(50, col("spend_cents")).as("p50_cents"),
+          nearestRank(90, col("spend_cents")).as("p90_cents"),
           max("spend_cents").as("max_cents"), sum("spend_cents").as("total_cents"))
         .select(col("cohort_wk"), col("n_users"), col("p50_cents"), col("p90_cents"),
           col("max_cents"), expr("total_cents div n_users").as("mean_cents"))

@@ -1,9 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.queries.IntIdioms.bits
 
 /** Round-9 batch #31 — graph degeneracy + two information/DQ audits:
   *
@@ -32,14 +32,9 @@ import graft.Tables
   *    fraud screen, here flagging that TPC-H-ish uniform pricing is NOT
   *    Benford (the deviation column is the finding, not a bug).
   */
-object Queries111 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries111 extends QuerySet {
   private[queries] val KcoreK = 2
   private[queries] val KcoreRounds = 6
-
-  /** ⌊log₂ v⌋ for v ≥ 1 via bit length — the transition_entropy spelling. */
-  private def bits(c: Column): Column = (length(bin(c)) - 1).cast("long")
 
   /** Benford milli expectations for digits 1..9: ⌊1000·log₁₀(1 + 1/d)⌋. */
   private[queries] val BenfordMilli = Seq(301L, 176L, 124L, 96L, 79L, 66L, 57L, 51L, 45L)

@@ -1,10 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.SimF
+import graft.queries.IntIdioms.{bits, tdivSql}
 
 /** Round-9 batch #32 — time-series memory, corpus shape, and quantization
   * cost:
@@ -33,19 +34,7 @@ import graft.functions.SimF
   *    pins BOTH kernels against each other; linear narrow self-join on
   *    vec_id+1, no pair blow-up.
   */
-object Queries112 {
-  type Q = (SparkSession, String) => DataFrame
-
-  /** Sign-split integer division (truncation toward zero on both engines;
-    * the Queries81 lemma). */
-  private def tdiv(num: String, den: String): String =
-    s"CASE WHEN $num >= 0 THEN $num div $den ELSE -((-($num)) div $den) END"
-
-  private def tdivSql(num: String, den: String): String =
-    s"CASE WHEN $num >= 0 THEN CAST($num // $den AS BIGINT) ELSE CAST(-((-($num)) // $den) AS BIGINT) END"
-
-  private def bits(c: Column): Column = (length(bin(c)) - 1).cast("long")
-
+object Queries112 extends QuerySet {
   private val DayUs = 86400000000L
   private[queries] val AutoregLags = Seq(1L, 7L)
 
@@ -58,7 +47,7 @@ object Queries112 {
         .select(expr(s"unix_micros(cast(o_orderdate as timestamp)) div $DayUs").as("d"),
           round(col("o_totalprice") * 100).cast("bigint").as("cents"))
         .groupBy("d").agg(expr("sum(cents) div 10000").as("rev"))
-      val slope = tdiv("(n_pairs * sxy - sx * sy) * 1000", "(n_pairs * sxx - sx * sx)")
+      val slope = "(n_pairs * sxy - sx * sy) * 1000 div (n_pairs * sxx - sx * sx)"
       val rows = AutoregLags.map { l =>
         val a = daily.select(col("d"), col("rev").as("x"))
         val b = daily.select((col("d") - l).as("d"), col("rev").as("y"))
@@ -67,7 +56,7 @@ object Queries112 {
             sum(col("x") * col("y")).as("sxy"), sum(col("x") * col("x")).as("sxx"))
           .select(lit(l).as("lag_days"), col("n_pairs"),
             expr(slope).as("slope_milli"),
-            expr(tdiv(s"(sy * 1000 - ($slope) * sx)", "n_pairs")).as("intercept_milli"))
+            expr(s"(sy * 1000 - ($slope) * sx) div n_pairs").as("intercept_milli"))
       }
       rows.reduce(_ unionAll _).orderBy("lag_days")
     },
@@ -75,12 +64,12 @@ object Queries112 {
     "zipf_fit" -> { (sp, dir) =>
       val pts = Queries14.defs("vocab_count")(sp, dir)
         .select(bits(col("rank")).as("x"), bits(col("cnt")).as("y"))
-      val slope = tdiv("(n_terms * sxy - sx * sy) * 1000", "(n_terms * sxx - sx * sx)")
+      val slope = "(n_terms * sxy - sx * sy) * 1000 div (n_terms * sxx - sx * sx)"
       pts.agg(count(lit(1)).as("n_terms"), sum("x").as("sx"), sum("y").as("sy"),
           sum(col("x") * col("y")).as("sxy"), sum(col("x") * col("x")).as("sxx"))
         .select(col("n_terms"), col("sx"), col("sy"), col("sxy"), col("sxx"),
           expr(slope).as("slope_milli_bits"),
-          expr(tdiv(s"(sy * 1000 - ($slope) * sx)", "n_terms")).as("intercept_milli_bits"))
+          expr(s"(sy * 1000 - ($slope) * sx) div n_terms").as("intercept_milli_bits"))
     },
 
     "int8_quant_error" -> { (sp, dir) =>

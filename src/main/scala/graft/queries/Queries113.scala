@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -33,9 +32,7 @@ import graft.plans.GraftFunctions
   *    aggregations and full-outer-joined, so subjects present in only one
   *    system still export. `erasure_impact`'s read-side twin.
   */
-object Queries113 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries113 extends QuerySet {
   private[queries] val SubjectMod = 13
   private[queries] val SubjectRem = 5
   private val DayUs = 86400000000L

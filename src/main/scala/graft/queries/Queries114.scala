@@ -1,10 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.queries.IntIdioms.tdivSql
 
 /** Round-9 batch #34 — experiment methodology + lakehouse ops:
   *
@@ -24,15 +24,7 @@ import graft.Tables
   *    the unpartitioned cumsum window rides on ~thousands of rows at any
   *    scale; the scale-bearing work is the one day-keyed count.
   */
-object Queries114 {
-  type Q = (SparkSession, String) => DataFrame
-
-  private def tdiv(num: String, den: String): String =
-    s"CASE WHEN $num >= 0 THEN $num div $den ELSE -((-($num)) div $den) END"
-
-  private def tdivSql(num: String, den: String): String =
-    s"CASE WHEN $num >= 0 THEN CAST($num // $den AS BIGINT) ELSE CAST(-((-($num)) // $den) AS BIGINT) END"
-
+object Queries114 extends QuerySet {
   private[queries] val FileRowBytes = 200L
   private[queries] val BinTarget = 64000L
 
@@ -56,7 +48,7 @@ object Queries114 {
           coalesce(col("y"), lit(0L)).as("y"))
       val pooled = u.agg(count(lit(1)).as("n"), sum("x").as("sx"), sum("y").as("sy"),
         sum(col("x") * col("y")).as("sxy"), sum(col("x") * col("x")).as("sxx"))
-      val theta = tdiv("(n * sxy - sx * sy) * 1000", "(n * sxx - sx * sx)")
+      val theta = "(n * sxy - sx * sy) * 1000 div (n * sxx - sx * sx)"
       u.groupBy("arm_a")
         .agg(count(lit(1)).as("n_users"), sum("x").as("sx_a"), sum("y").as("sy_a"))
         .crossJoin(broadcast(pooled))
@@ -65,7 +57,7 @@ object Queries114 {
           expr("sy_a * 1000 div n_users").as("mean_post_milli"),
           expr(theta).as("theta_milli"),
           expr("sy_a * 1000 div n_users - " +
-            tdiv(s"($theta) * (sx_a * 1000 div n_users - sx * 1000 div n)", "1000"))
+            s"($theta) * (sx_a * 1000 div n_users - sx * 1000 div n) div 1000")
             .as("adj_post_milli"))
         .orderBy("arm")
     },

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.plans.GraftFunctions
+import graft.queries.IntIdioms.{tdivL, tdivSql}
 
 /** Round-9 batch #35 — distributed linear algebra + classical forecasting:
   *
@@ -27,14 +28,7 @@ import graft.plans.GraftFunctions
   *    (the bpe-merge-table pattern); DuckDB replays it as a recursive
   *    CTE. The scale-bearing work is the one month-keyed aggregation.
   */
-object Queries115 {
-  type Q = (SparkSession, String) => DataFrame
-
-  private def tdivSql(num: String, den: String): String =
-    s"CASE WHEN $num >= 0 THEN CAST($num // $den AS BIGINT) ELSE CAST(-((-($num)) // $den) AS BIGINT) END"
-
-  private def tdivL(a: Long, b: Long): Long = if (a >= 0) a / b else -((-a) / b)
-
+object Queries115 extends QuerySet {
   private[queries] val Dim = 64
   private[queries] val PowerIters = 3
 

@@ -1,9 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-
-import graft.Tables
 
 /** Round-9 batch #36 — using the trained component + BFS on the dup graph:
   *
@@ -24,9 +21,7 @@ import graft.Tables
   *    4 frontiers as MATERIALIZED CTEs. Output: nodes per hop distance,
   *    plus the unreached remainder at dist = -1.
   */
-object Queries116 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries116 extends QuerySet {
   private[queries] val BfsRounds = 4
   private[queries] val TopOutliers = 10
 

@@ -1,10 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.TextF
+import graft.queries.IntIdioms.bits
 
 /** Round-9 batch #37 — corpus ML + deeper basket mining:
   *
@@ -26,10 +26,7 @@ import graft.functions.TextF
   *    support is milli over orders carrying ≥3 brands; top-20 by
   *    (support, lexicographic triple).
   */
-object Queries117 {
-  type Q = (SparkSession, String) => DataFrame
-
-  private def bits(c: Column): Column = (length(bin(c)) - 1).cast("long")
+object Queries117 extends QuerySet {
   private[queries] val TopTriples = 20
 
   val defs: Map[String, Q] = Map(

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -27,9 +26,7 @@ import graft.operators.KMeans
   *    first-event aggregations. `churn_hazard`'s per-interval rates
   *    integrate into exactly this curve.
   */
-object Queries118 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries118 extends QuerySet {
   private val DayUs = 86400000000L
   private[queries] val MarginCells = 8
 

@@ -1,11 +1,12 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.TextF
+import graft.queries.IntIdioms.{bits, tdivSql}
 
 /** Round-9 batch #39 — doc-local keyphrases + the corpus growth law:
   *
@@ -26,17 +27,7 @@ import graft.functions.TextF
   *    (milli-bits-per-doubling, the zipf_fit recipe). Checkpoint count
   *    is log₂(docs) — bounded at any scale.
   */
-object Queries119 {
-  type Q = (SparkSession, String) => DataFrame
-
-  private def tdiv(num: String, den: String): String =
-    s"CASE WHEN $num >= 0 THEN $num div $den ELSE -((-($num)) div $den) END"
-
-  private def tdivSql(num: String, den: String): String =
-    s"CASE WHEN $num >= 0 THEN CAST($num // $den AS BIGINT) ELSE CAST(-((-($num)) // $den) AS BIGINT) END"
-
-  private def bits(c: Column): Column = (length(bin(c)) - 1).cast("long")
-
+object Queries119 extends QuerySet {
   /** Stopword-run boundaries: two replace passes per stopword (the
     * second catches overlaps), then split on the boundary token. */
   private def phraseSplit(norm: Column): Column = {
@@ -97,7 +88,7 @@ object Queries119 {
       val pts = vocabAt.join(toksAt, Seq("cp"))
         .select(col("cp"), col("tokens_cum"), col("vocab_cum"),
           bits(col("tokens_cum")).as("x"), bits(col("vocab_cum")).as("y"))
-      val slope = tdiv("(n * sxy - sx * sy) * 1000", "(n * sxx - sx * sx)")
+      val slope = "(n * sxy - sx * sy) * 1000 div (n * sxx - sx * sx)"
       val m = pts.agg(count(lit(1)).as("n"), sum("x").as("sx"), sum("y").as("sy"),
         sum(col("x") * col("y")).as("sxy"), sum(col("x") * col("x")).as("sxx"))
         .select(expr(slope).as("beta_milli_bits"))

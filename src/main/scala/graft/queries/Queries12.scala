@@ -1,9 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.queries.IntIdioms.{cents, revE4, RevE4Sql}
 
 /** SURVEY §2.C completion — the ten TPC-H query shapes rounds 1–5 had not yet
   * mapped (Q2, Q4, Q7, Q8, Q9, Q11, Q15, Q16, Q20, Q21), adapted to the
@@ -31,12 +31,7 @@ import graft.Tables
   * Q21's order-level profile is one hash aggregation on `l_orderkey` —
   * co-partitioned with the candidate join that follows it.
   */
-object Queries12 {
-  type Q = (SparkSession, String) => DataFrame
-
-  private def cents(c: Column) = round(c * 100).cast("bigint")
-  private def revE4(ep: Column, disc: Column) = cents(ep) * (lit(100L) - cents(disc))
-
+object Queries12 extends QuerySet {
   val defs: Map[String, Q] = Map(
     "q2_min_cost" -> { (sp, dir) =>
       // Q2 shape: minimum-cost supplier per part within a region. The
@@ -283,9 +278,6 @@ object Queries12 {
 
   // ---- DuckDB twins ----
 
-  private val revE4Sql =
-    "CAST(round(l_extendedprice * 100) AS BIGINT) * (100 - CAST(round(l_discount * 100) AS BIGINT))"
-
   val oracles: Map[String, String] = Map(
     "q2_min_cost" ->
       """WITH eur AS (
@@ -321,7 +313,7 @@ object Queries12 {
     "q7_volume" ->
       s"""SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
          |  CAST(year(l_shipdate) AS BIGINT) AS l_year,
-         |  CAST(sum($revE4Sql) AS BIGINT) AS revenue_e4
+         |  CAST(sum($RevE4Sql) AS BIGINT) AS revenue_e4
          |FROM lineitem
          |JOIN orders ON l_orderkey = o_orderkey
          |JOIN customer ON o_custkey = c_custkey
@@ -336,7 +328,7 @@ object Queries12 {
     "q8_market_share" ->
       s"""WITH vol AS (
          |  SELECT CAST(year(o_orderdate) AS BIGINT) AS o_year,
-         |    $revE4Sql AS vol_e4, s_nationkey
+         |    $RevE4Sql AS vol_e4, s_nationkey
          |  FROM lineitem
          |  JOIN part ON l_partkey = p_partkey AND p_type = 'STANDARD'
          |  JOIN orders ON l_orderkey = o_orderkey
@@ -357,7 +349,7 @@ object Queries12 {
 
     "q9_profit" ->
       s"""SELECT n_name AS nation, CAST(year(o_orderdate) AS BIGINT) AS o_year,
-         |  CAST(sum($revE4Sql -
+         |  CAST(sum($RevE4Sql -
          |    CAST(round(p_retailprice * 100) AS BIGINT)
          |      * CAST(round(l_quantity) AS BIGINT) * 100) AS BIGINT) AS sum_profit_e4
          |FROM lineitem
@@ -385,7 +377,7 @@ object Queries12 {
 
     "q15_top_supplier" ->
       s"""WITH rev AS (
-         |  SELECT l_suppkey, CAST(sum($revE4Sql) AS BIGINT) AS total_revenue_e4
+         |  SELECT l_suppkey, CAST(sum($RevE4Sql) AS BIGINT) AS total_revenue_e4
          |  FROM lineitem
          |  WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1996-04-01'
          |  GROUP BY l_suppkey

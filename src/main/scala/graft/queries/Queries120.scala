@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -24,9 +23,7 @@ import graft.plans.GraftFunctions
   *    time-series pattern (vs the grid's pairwise pattern); oracle is
   *    the row-level exact distinct intersection.
   */
-object Queries120 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries120 extends QuerySet {
   private val DayUs = 86400000000L
 
   val defs: Map[String, Q] = Map(

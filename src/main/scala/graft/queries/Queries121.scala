@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -24,9 +24,7 @@ import graft.functions.TextF
   *    and any partitioning. Docs-as-units (not tokens) keeps the
   *    composition readable; the apportion step is shared verbatim.
   */
-object Queries121 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries121 extends QuerySet {
   private[queries] val Budget = 100000L
   private[queries] val DocBudget = 300L
 

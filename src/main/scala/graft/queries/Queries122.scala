@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -25,9 +24,7 @@ import graft.Tables
   *    control trend stands in for the counterfactual. One broadcast
   *    scalar row + one four-cell aggregation.
   */
-object Queries122 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries122 extends QuerySet {
   val defs: Map[String, Q] = Map(
     "abc_xyz_class" -> { (sp, dir) =>
       val li = Tables.lineitem(sp, dir).select(col("l_partkey"),

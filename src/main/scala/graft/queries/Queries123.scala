@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -24,9 +24,7 @@ import graft.Tables
   *    it finds keys that LOOK like determinants but aren't. Two nested
   *    key-shrinking aggregations per rule.
   */
-object Queries123 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries123 extends QuerySet {
   private[queries] val Y1 = 1996
   private[queries] val Y2 = 1997
 

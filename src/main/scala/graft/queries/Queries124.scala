@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.PairEngine
@@ -15,9 +14,7 @@ import graft.operators.PairEngine
   * reported in permille and pairs kept when either side is ≥ 800 —
   * the "one of these is inside the other" list `dedup_keep_longest`
   * should absorb. */
-object Queries124 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries124 extends QuerySet {
   private[queries] val ContainmentGate = 800L
 
   val defs: Map[String, Q] = Map(

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -32,9 +31,7 @@ import graft.plans.GraftFunctions
   * 100 TB shape: one narrow md5 projection (whole-stage codegen) + one
   * 64-byte-partial shuffle; the reaggregation shuffles only
   * |groups| × 64 bytes. */
-object Queries125 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries125 extends QuerySet {
   private val DayUs = 86400000000L
 
   val defs: Map[String, Q] = Map(

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -27,9 +26,7 @@ import graft.plans.GraftFunctions
   *    certificate columns still scan the hashed universe — the win is
   *    the sketch path, which never windows.
   */
-object Queries126 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries126 extends QuerySet {
   import Queries28.{KmvK, HashMod, kmvHashed}
 
   val defs: Map[String, Q] = Map(

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextF
@@ -33,9 +33,7 @@ import graft.operators.PairEngine
   * the ESTIMATORS, not just the plumbing. 100 TB shape: per-doc narrow
   * projections (one rolling hash per shingle) + the existing df-capped
   * pair join; signatures add O(1) per doc. */
-object Queries127 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries127 extends QuerySet {
   private val P = 1000000007L // shared with rollingHash
   private val NComp = 16
 

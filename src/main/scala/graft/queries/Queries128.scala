@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -24,9 +23,7 @@ import graft.Tables
   *    fan-out is bounded by a customer's orders in one price bucket,
   *    never |orders|². Exact-cent matches are flagged as the
   *    high-severity tier. */
-object Queries128 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries128 extends QuerySet {
   private val DayUs = 86400000000L
 
   val defs: Map[String, Q] = Map(

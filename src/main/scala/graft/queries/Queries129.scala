@@ -1,9 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.queries.IntIdioms.{bits, tdivL, tdivSql}
 
 /** Round-9 batch #49 — model-grade one-number audits:
   *
@@ -22,20 +22,8 @@ import graft.Tables
   *    ArraySum Gram pass and the e3 eigvec chain verbatim — the oracle
   *    extends `PcaCteSql` with the quotient, so the measure is
   *    hash-exact end-to-end. */
-object Queries129 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries129 extends QuerySet {
   private val WeekUs = 7L * 86400L * 1000000L
-
-  private def tdiv(num: String, den: String): String =
-    s"CASE WHEN $num >= 0 THEN $num div $den ELSE -((-($num)) div $den) END"
-
-  private def tdivSql(num: String, den: String): String =
-    s"CASE WHEN $num >= 0 THEN CAST($num // $den AS BIGINT) ELSE CAST(-((-($num)) // $den) AS BIGINT) END"
-
-  private def tdivL(a: Long, b: Long): Long = if (a >= 0) a / b else -((-a) / b)
-
-  private def bits(c: Column): Column = (length(bin(c)) - 1).cast("long")
 
   val defs: Map[String, Q] = Map(
     "retention_halflife" -> { (sp, dir) =>
@@ -45,7 +33,7 @@ object Queries129 {
       val curve = activity.join(cohorts, "user_id")
         .groupBy((col("wk") - col("cohort_wk")).as("week_offset"))
         .agg(countDistinct(col("user_id")).as("n_active"))
-      val slope = tdiv("(n_weeks * sxy - sx * sy) * 1000", "(n_weeks * sxx - sx * sx)")
+      val slope = "(n_weeks * sxy - sx * sy) * 1000 div (n_weeks * sxx - sx * sx)"
       curve
         .select(col("week_offset").as("x"), bits(col("n_active")).as("y"),
           when(col("week_offset") === 0, col("n_active")).as("n0"))
@@ -54,8 +42,8 @@ object Queries129 {
           sum(col("x") * col("y")).as("sxy"), sum(col("x") * col("x")).as("sxx"))
         .select(col("n_weeks"), col("n_users_w0"),
           expr(slope).as("slope_milli_bits"),
-          expr(tdiv(s"(sy * 1000 - ($slope) * sx)", "n_weeks")).as("intercept_milli_bits"),
-          expr(s"CASE WHEN ($slope) < 0 THEN ${tdiv("(-1000 * 1000)", s"($slope)")} ELSE 0 END")
+          expr(s"(sy * 1000 - ($slope) * sx) div n_weeks").as("intercept_milli_bits"),
+          expr(s"CASE WHEN ($slope) < 0 THEN (-1000 * 1000) div ($slope) ELSE 0 END")
             .as("halflife_milli_weeks"))
     },
 

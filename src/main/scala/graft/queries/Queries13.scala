@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -29,9 +29,7 @@ import graft.functions.TextF
   *    thresholds are exact integer rationals; membership is md5-based and
   *    reproducible at any scale (the stratified_sample pattern, 16-bit).
   */
-object Queries13 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries13 extends QuerySet {
   /** Planted non-ASCII suffixes: decomposed accents (compose under NFC),
     * a precomposed control, a ligature (NFC-invariant), plain ASCII. */
   private[graft] val NormLits: Seq[String] = Seq(

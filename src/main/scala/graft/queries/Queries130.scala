@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.queries.IntIdioms.tdivSql
 
 /** Round-9 batch #50 — classical time-series decomposition over the daily
   * revenue series (both run on the ~2.4k-row day-grain aggregate, the
@@ -25,16 +26,8 @@ import graft.Tables
   *    `min_by`/`max_by` (day keys are unique, so candles are
   *    deterministic); the aggregation-invariants (low ≤ open,close ≤
   *    high; volume conservation) are spec'd. */
-object Queries130 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries130 extends QuerySet {
   private val DayUs = 86400000000L
-
-  private def tdiv(num: String, den: String): String =
-    s"CASE WHEN $num >= 0 THEN $num div $den ELSE -((-($num)) div $den) END"
-
-  private def tdivSql(num: String, den: String): String =
-    s"CASE WHEN $num >= 0 THEN CAST($num // $den AS BIGINT) ELSE CAST(-((-($num)) // $den) AS BIGINT) END"
 
   private def daily(sp: SparkSession, dir: String): DataFrame =
     Tables.orders(sp, dir)
@@ -63,7 +56,7 @@ object Queries130 {
       val seasonal = tC.filter(col("detrended").isNotNull)
         .groupBy("dow")
         .agg(sum("detrended").as("sd"), count(lit(1)).as("nd"))
-        .select(col("dow"), expr(tdiv("sd", "nd")).as("seasonal_cents"))
+        .select(col("dow"), expr("sd div nd").as("seasonal_cents"))
       tC.join(broadcast(seasonal), Seq("dow"))
         .select(col("day"), col("dow"), col("rev_cents"), col("trend_cents"),
           col("seasonal_cents"),

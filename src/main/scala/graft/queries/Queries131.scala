@@ -1,10 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.queries.IntIdioms.nearestRank
 
 /** Round-9 batch #51 — community quality + distribution reporting:
   *
@@ -23,9 +23,7 @@ import graft.Tables
   *    `ltv_quantiles` rank convention), IQR fences at ±1.5·IQR in
   *    integer arithmetic, and the per-brand outlier count from ONE
   *    join-back pass. Brand-partitioned rank windows; nothing global. */
-object Queries131 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries131 extends QuerySet {
   val defs: Map[String, Q] = Map(
     "graph_modularity" -> { (sp, dir) =>
       val pairs = graft.util.CacheScope.track(
@@ -59,14 +57,14 @@ object Queries131 {
           round(col("l_extendedprice") * 100).cast("bigint").as("cents"))
       val valsC = graft.util.CacheScope.track(vals)
       val w = Window.partitionBy("brand").orderBy("cents")
-      def pick(p: Int) =
-        max(when(col("rk") === lit(1) + expr(s"($p * (n - 1)) div 100"), col("cents")))
       val stats = valsC
         .withColumn("rk", row_number().over(w))
         .withColumn("n", count(lit(1)).over(Window.partitionBy("brand")))
         .groupBy("brand")
         .agg(max("n").as("n"), min("cents").as("min_cents"),
-          pick(25).as("q1_cents"), pick(50).as("med_cents"), pick(75).as("q3_cents"),
+          nearestRank(25, col("cents")).as("q1_cents"),
+          nearestRank(50, col("cents")).as("med_cents"),
+          nearestRank(75, col("cents")).as("q3_cents"),
           max("cents").as("max_cents"))
         .withColumn("lo_fence", expr("q1_cents - (3 * (q3_cents - q1_cents)) div 2"))
         .withColumn("hi_fence", expr("q3_cents + (3 * (q3_cents - q1_cents)) div 2"))

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -27,9 +26,7 @@ import graft.functions.TextF
   *    flag pass (the factored `Queries38.flagged`), but each stage
   *    reports the token mass it removes; doc-count funnels hide that a
   *    "2% of docs" length gate can be 40% of tokens. */
-object Queries132 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries132 extends QuerySet {
   private val BandBits = 30
   private val BandMask = (1L << BandBits) - 1
   private val NBands = 2 // 60-bit fingerprint / 30-bit bands

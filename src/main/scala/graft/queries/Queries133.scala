@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -25,9 +24,7 @@ import graft.Tables
   *    (click AND purchase in the SAME session), abandoned, and the
   *    abandonment rate in exact milli. Composes the sessionize
   *    boundaries verbatim. */
-object Queries133 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries133 extends QuerySet {
   private val GapUs = 30L * 60 * 1000 * 1000
   private val DayUs = 86400000000L
 

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -27,9 +27,7 @@ import graft.Tables
   *    DuckDB twin unrolls all 8 rounds as CTEs (the kmeans pattern).
   *    `radius_sq` is the coverage radius the coreset guarantees
   *    (2-approximation of the optimal k-center cost). */
-object Queries134 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries134 extends QuerySet {
   private val DayUs = 86400000000L
   private val KCenters = 8
 

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -24,9 +24,7 @@ import graft.plans.GraftFunctions
   *    sends every near-dup family to ONE fold — zero leakage by
   *    construction. Both policies scored on the same minhash pair set
   *    in exact milli; labels reuse ConnectedComponents. */
-object Queries135 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries135 extends QuerySet {
   private val Folds = 5
   private val DayUs = 86400000000L
 

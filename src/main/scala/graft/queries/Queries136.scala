@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -23,9 +22,7 @@ import graft.plans.GraftFunctions
   *    (rate floor keeps small-sample noise out). Two key-shrinking
   *    aggregations + a broadcast global rate; exact milli rates and
   *    the lift vs corpus. */
-object Queries136 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries136 extends QuerySet {
   private val TopSuppliers = 20
   private val MinItems = 20L
 

@@ -1,9 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-
-import graft.Tables
 
 /** Round-9 batch #57 — dup-graph trust audits:
   *
@@ -21,9 +18,7 @@ import graft.Tables
   *    (template hubs, r > 0) or to leaves (star bursts, r < 0)? Exact
   *    integer moments over the symmetric edge list (by symmetry
   *    sx = sy), final Pearson in IEEE-deterministic double, milli. */
-object Queries137 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries137 extends QuerySet {
   val defs: Map[String, Q] = Map(
     "bridge_edge_audit" -> { (sp, dir) =>
       val pairs = graft.util.CacheScope.track(

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -20,9 +20,7 @@ import graft.Tables
   *    per order, the number of distinct ship dates and the first→last
   *    span; rolled up per split count with exact mean/max span. Two
   *    key-shrinking aggregations. */
-object Queries138 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries138 extends QuerySet {
   private val M = 1L << 60
   private val DayUs = 86400000000L
 

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -23,9 +22,7 @@ import graft.operators.PairEngine
   *    means infinite variance (whale-dominated revenue); the exact
   *    integer spelling makes the estimate oracle-stable. One
   *    distributed top-(k+1) + a 65-row fold. */
-object Queries139 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries139 extends QuerySet {
   private val Gates = Seq(200L, 400L, 600L, 800L)
   private val HillK = 64
 

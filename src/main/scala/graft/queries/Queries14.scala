@@ -1,11 +1,12 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.TextF
+import graft.queries.IntIdioms.nearestRank
 
 /** SURVEY §2 additions (round 5 continuation #2):
   *
@@ -23,9 +24,7 @@ import graft.functions.TextF
   *    dimension. (A single-column sort would confine one dimension and
   *    leave the other spanning the full range.)
   */
-object Queries14 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries14 extends QuerySet {
   private val TopK = 32
   // 8-bit dims: the synthetic events carry ~150 users over ~720 hours, so
   // 8 modular bits per dimension exercise the full bucket space (16-bit
@@ -191,11 +190,10 @@ object Queries14 {
         .select(col("event_type"), col("event_id"), cents.as("v"))
         .withColumn("rk", row_number().over(w))
         .withColumn("n", count(lit(1)).over(Window.partitionBy("event_type")))
-      def pick(p: Int) =
-        max(when(col("rk") === lit(1) + expr(s"($p * (n - 1)) div 100"), col("v")))
       ranked.groupBy("event_type")
         .agg(max("n").as("n"),
-          pick(50).as("p50_cents"), pick(95).as("p95_cents"), pick(99).as("p99_cents"))
+          nearestRank(50, col("v")).as("p50_cents"), nearestRank(95, col("v")).as("p95_cents"),
+          nearestRank(99, col("v")).as("p99_cents"))
         .orderBy("event_type")
     }
   )

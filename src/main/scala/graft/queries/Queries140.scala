@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -23,9 +22,7 @@ import graft.functions.TextF
   *    near-dup pair set — the empirical coupling that decides whether
   *    dedup-then-filter and filter-then-dedup differ materially
   *    (`keeper_policy_diff`'s upstream question). */
-object Queries140 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries140 extends QuerySet {
   private val Budgets = Seq(512L, 1024L, 2048L, 4096L)
 
   val defs: Map[String, Q] = Map(

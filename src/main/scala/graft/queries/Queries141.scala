@@ -1,10 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.SimF
+import graft.queries.IntIdioms.tdivSql
 
 /** Round-9 batch #61 — variance decomposition + quantization sizing:
   *
@@ -23,15 +24,7 @@ import graft.functions.SimF
   *    sample (`int8_quant_error`'s machinery parametrized by width):
   *    mean and max |Δcos| e6 per width. Error must fall monotonically
   *    with bits — the compression/recall trade quantified. */
-object Queries141 {
-  type Q = (SparkSession, String) => DataFrame
-
-  private def tdiv(num: String, den: String): String =
-    s"CASE WHEN $num >= 0 THEN $num div $den ELSE -((-($num)) div $den) END"
-
-  private def tdivSql(num: String, den: String): String =
-    s"CASE WHEN $num >= 0 THEN CAST($num // $den AS BIGINT) ELSE CAST(-((-($num)) // $den) AS BIGINT) END"
-
+object Queries141 extends QuerySet {
   private val Bits = Seq(4, 6, 8)
 
   val defs: Map[String, Q] = Map(
@@ -46,15 +39,15 @@ object Queries141 {
       val tot = groups.agg(count(lit(1)).as("n_platforms"),
         sum("n_g").as("n"), sum("sx_g").as("sx"), sum("sxx_g").as("sxx"))
       groups.crossJoin(broadcast(tot))
-        .withColumn("m", expr(tdiv("(sx * 1000)", "n")))
-        .withColumn("m_g", expr(tdiv("(sx_g * 1000)", "n_g")))
+        .withColumn("m", expr("(sx * 1000) div n"))
+        .withColumn("m_g", expr("(sx_g * 1000) div n_g"))
         .agg(max("n_platforms").as("n_platforms"), max("n").as("n"),
           max("m").as("grand_mean_milli"),
           sum(expr("n_g * (m_g - m) * (m_g - m)")).as("ss_between_milli2"),
           max(expr("1000000 * sxx - 2000 * m * sx + n * m * m")).as("ss_total_milli2"))
         .select(col("n_platforms"), col("n"), col("grand_mean_milli"),
           col("ss_between_milli2"), col("ss_total_milli2"),
-          expr(tdiv("ss_between_milli2", "(ss_total_milli2 div 1000)")).as("eta_milli"))
+          expr("ss_between_milli2 div (ss_total_milli2 div 1000)").as("eta_milli"))
     },
 
     "quant_bits_sweep" -> { (sp, dir) =>

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -24,9 +23,7 @@ import graft.plans.GraftFunctions
   *    the breakdown `corpus_mix` (source grain) and `dataset_card`
   *    (global grain) bracket but never show. One scan, one
   *    two-key aggregation + a broadcast source-total join. */
-object Queries142 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries142 extends QuerySet {
   val defs: Map[String, Q] = Map(
     "sql_surface_pipeline" -> { (sp, dir) =>
       GraftFunctions.install(sp)

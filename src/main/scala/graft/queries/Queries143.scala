@@ -1,9 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
 import graft.functions.IpF
 import graft.operators.IntervalJoin
 
@@ -17,9 +15,7 @@ import graft.operators.IntervalJoin
   *    tuning, no fan-out rows). Pinned VERBATIM to `ip_geo_lookup`'s
   *    oracle — same rows, third physical plan for the same semantics
   *    (closed-form / bucketed-equi-join / native binary search). */
-object Queries143 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries143 extends QuerySet {
   val defs: Map[String, Q] = Map(
     "interval_join_native" -> { (sp, dir) =>
       import sp.implicits._

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -21,9 +20,7 @@ import graft.Tables
   *    orders on one day — the order-consolidation opportunity (every
   *    extra same-day order is a mergeable shipment). Distribution of
   *    orders-per-(customer, day) with value mass. */
-object Queries144 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries144 extends QuerySet {
   private val DayUs = 86400000000L
 
   val defs: Map[String, Q] = Map(

@@ -23,9 +23,7 @@ import graft.Tables
   *    channel set: users, converters, conversion rate milli. The
   *    readable companion (which channel COMBINATIONS convert) and the
   *    spec's cross-check for the Shapley coalition values. */
-object Queries145 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries145 extends QuerySet {
   private[graft] val Channels = Seq("cpc", "email", "search", "social", "direct")
   private val N = Channels.length // 5 → 32 coalitions, 5! = 120
 

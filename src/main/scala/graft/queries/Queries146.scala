@@ -1,10 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.queries.IntIdioms.tdivSql
 
 /** Round-9 batch #66 — experimentation depth:
   *
@@ -22,16 +22,8 @@ import graft.Tables
   *    divisions spelled identically on both engines; χ² in milli. The
   *    at-risk window runs over ~hundreds of distinct durations, never
   *    the user table. */
-object Queries146 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries146 extends QuerySet {
   private val DayUs = 86400000000L
-
-  private def tdiv(num: String, den: String): String =
-    s"CASE WHEN $num >= 0 THEN $num div $den ELSE -((-($num)) div $den) END"
-
-  private def tdivSql(num: String, den: String): String =
-    s"CASE WHEN $num >= 0 THEN CAST($num // $den AS BIGINT) ELSE CAST(-((-($num)) // $den) AS BIGINT) END"
 
   private def armA = substring(md5(concat(lit("ab"), col("user_id")).cast("binary")), 1, 1) <= "7"
   private val armASql = "substr(md5(concat('ab', user_id)), 1, 1) <= '7'"
@@ -92,10 +84,9 @@ object Queries146 {
         .withColumn("cc", col("c1") + col("c2"))
         .filter(col("cc") > 0 && col("n1") + col("n2") > 1)
         .withColumn("nn", col("n1") + col("n2"))
-        .withColumn("e1_term", expr(tdiv("(cc * n1 * 1000)", "nn")))
-        .withColumn("v_term", expr(tdiv(
-          s"(${tdiv(s"(${tdiv("(cc * n1 * 1000)", "nn")} * n2)", "nn")} * (nn - cc))",
-          "greatest(nn - 1, 1)")))
+        .withColumn("e1_term", expr("(cc * n1 * 1000) div nn"))
+        .withColumn("v_term", expr(
+          "(((cc * n1 * 1000) div nn * n2) div nn * (nn - cc)) div greatest(nn - 1, 1)"))
       val oTot = byD.agg(sum("c1").as("o1"), sum("c2").as("o2"))
       terms.agg(
           sum("e1_term").as("e1_milli"), sum("v_term").as("v_milli"))
@@ -105,7 +96,7 @@ object Queries146 {
           sum(when(!col("treat"), 1L).otherwise(0L)).as("n2_users"))))
         .select(col("n1_users"), col("n2_users"), col("o1"), col("o2"),
           col("e1_milli"), col("v_milli"),
-          expr(tdiv("((o1 * 1000 - e1_milli) * (o1 * 1000 - e1_milli))", "(v_milli * 1000)"))
+          expr("((o1 * 1000 - e1_milli) * (o1 * 1000 - e1_milli)) div (v_milli * 1000)")
             .as("chi2_milli"))
     }
   )

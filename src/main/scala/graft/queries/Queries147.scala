@@ -1,10 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.TextF
+import graft.queries.IntIdioms.tdivSql
 
 /** Round-9 batch #67 — deterministic resampling + corpus linguistics:
   *
@@ -21,16 +21,8 @@ import graft.functions.TextF
   *    fraction of each source's vocabulary occurs exactly once (the
   *    productivity/diversity read Heaps' law integrates). One
   *    (source, word) count, one rollup. */
-object Queries147 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries147 extends QuerySet {
   private val G = 10
-
-  private def tdiv(num: String, den: String): String =
-    s"CASE WHEN $num >= 0 THEN $num div $den ELSE -((-($num)) div $den) END"
-
-  private def tdivSql(num: String, den: String): String =
-    s"CASE WHEN $num >= 0 THEN CAST($num // $den AS BIGINT) ELSE CAST(-((-($num)) // $den) AS BIGINT) END"
 
   val defs: Map[String, Q] = Map(
     "jackknife_mean_ci" -> { (sp, dir) =>
@@ -43,11 +35,11 @@ object Queries147 {
       val tot = folds.agg(sum("n_g").as("n"), sum("s_g").as("s"))
       val thetas = folds.crossJoin(broadcast(tot))
         // θ̂ᵢ in milli-cents: the mean with fold i deleted
-        .withColumn("theta_i", expr(tdiv("((s - s_g) * 1000)", "(n - n_g)")))
+        .withColumn("theta_i", expr("((s - s_g) * 1000) div (n - n_g)"))
       val tbar = thetas.agg(
         count(lit(1)).as("g"),
-        expr(s"${tdiv("sum(theta_i)", G.toString)}").as("theta_bar"),
-        max(expr(tdiv("(s * 1000)", "n"))).as("mean_milli_cents"))
+        expr(s"sum(theta_i) div $G").as("theta_bar"),
+        max(expr("(s * 1000) div n")).as("mean_milli_cents"))
       thetas.crossJoin(broadcast(tbar))
         .agg(max("g").as("g"), max("mean_milli_cents").as("mean_milli_cents"),
           max("theta_bar").as("theta_bar_milli_cents"),

@@ -1,10 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.queries.IntIdioms.nearestRank
 
 /** Round-9 batch #68 — experiment sizing + robust monitoring bands:
   *
@@ -22,9 +22,7 @@ import graft.Tables
   *    profile `seasonal_baseline`'s mean hides tails of), plus each
   *    band's last-day breach flag. Rank windows over the bounded
   *    ~2.4k-day table, partitioned by dow. */
-object Queries148 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries148 extends QuerySet {
   private val DayUs = 86400000000L
   private val Deltas = Seq(10L, 20L, 50L, 100L)
 
@@ -58,15 +56,13 @@ object Queries148 {
         .groupBy("day").agg(sum("cents").as("rev"))
         .withColumn("dow", expr("day % 7"))
       val w = Window.partitionBy("dow").orderBy(col("rev"), col("day"))
-      def pick(p: Int) =
-        max(when(col("rk") === lit(1) + expr(s"($p * (n - 1)) div 100"), col("rev")))
       val dailyC = graft.util.CacheScope.track(daily)
       val bands = dailyC
         .withColumn("rk", row_number().over(w))
         .withColumn("n", count(lit(1)).over(Window.partitionBy("dow")))
         .groupBy("dow")
-        .agg(max("n").as("n_days"), pick(10).as("p10_cents"),
-          pick(50).as("p50_cents"), pick(90).as("p90_cents"))
+        .agg(max("n").as("n_days"), nearestRank(10, col("rev")).as("p10_cents"),
+          nearestRank(50, col("rev")).as("p50_cents"), nearestRank(90, col("rev")).as("p90_cents"))
       val last = dailyC
         .withColumn("mx", max("day").over(Window.partitionBy("dow")))
         .filter(col("day") === col("mx"))

@@ -1,9 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.queries.IntIdioms.tdivSql
 
 /** Round-9 batch #69 — count-model diagnostics:
   *
@@ -21,16 +21,8 @@ import graft.Tables
   *    A drifting weekly rhythm invalidates every dow-keyed baseline
   *    (`seasonal_baseline`, `dow_percentile_bands`) silently; this is
   *    their guard. */
-object Queries149 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries149 extends QuerySet {
   private val DayUs = 86400000000L
-
-  private def tdiv(num: String, den: String): String =
-    s"CASE WHEN $num >= 0 THEN $num div $den ELSE -((-($num)) div $den) END"
-
-  private def tdivSql(num: String, den: String): String =
-    s"CASE WHEN $num >= 0 THEN CAST($num // $den AS BIGINT) ELSE CAST(-((-($num)) // $den) AS BIGINT) END"
 
   val defs: Map[String, Q] = Map(
     "count_model_diagnostics" -> { (sp, dir) =>
@@ -43,7 +35,7 @@ object Queries149 {
           sum(col("x") * col("x")).as("sxx"))
         .select(col("dow"), col("n_days"),
           expr("sx * 1000 div n_days").as("mean_milli"),
-          expr(tdiv("((n_days * sxx - sx * sx) * 1000)", "(n_days * sx)")).as("fano_milli"))
+          expr("((n_days * sxx - sx * sx) * 1000) div (n_days * sx)").as("fano_milli"))
         .withColumn("overdispersed",
           when(col("fano_milli") > 1000, 1L).otherwise(0L))
         .orderBy("dow")
@@ -62,8 +54,8 @@ object Queries149 {
         .join(broadcast(colTot), Seq("dow"))
         .crossJoin(broadcast(gTot))
         .withColumn("e_milli", expr("r_tot * c_tot * 1000 div g_tot"))
-        .withColumn("contrib_milli", expr(tdiv(
-          "((o * 1000 - e_milli) * (o * 1000 - e_milli))", "(e_milli * 1000)")))
+        .withColumn("contrib_milli", expr(
+          "((o * 1000 - e_milli) * (o * 1000 - e_milli)) div (e_milli * 1000)"))
         .groupBy("yr")
         .agg(sum("o").as("n_orders"), count(lit(1)).as("n_dows"),
           sum("contrib_milli").as("chi2_milli"))

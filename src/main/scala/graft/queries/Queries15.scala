@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -36,9 +36,7 @@ import graft.functions.TextF
   * Reference analogue: snowplow/enrich has no data-selection stage; these
   * extend the engine for the training-data workload (SURVEY §2.D).
   */
-object Queries15 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries15 extends QuerySet {
   // ---- substring_dedup constants ----------------------------------------
 
   /** Window width in tokens. Lee et al. use 50; the synthetic docs are

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -17,9 +16,7 @@ import graft.functions.TextF
   * query over the broadcast-filtered match set), and nDCG = DCG/IDCG
   * in exact milli. The eval every retrieval change (ann_*, bm25
   * parameters, dedup of the corpus) gets judged by. */
-object Queries150 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries150 extends QuerySet {
   /** round(1000 / log2(rk + 1)) for rk = 1..5. */
   private val W = Seq(1000L, 631L, 500L, 431L, 387L)
 

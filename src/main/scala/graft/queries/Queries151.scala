@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -20,9 +19,7 @@ import graft.Tables
   *    re-ranking every trending-items surface uses; the raw all-time
   *    rank rides along so the output IS the rank-shift table. Top-20
   *    by distributed orderBy-limit. */
-object Queries151 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries151 extends QuerySet {
   private val DayUs = 86400000000L
 
   val defs: Map[String, Q] = Map(

@@ -1,10 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.queries.IntIdioms.tdivL
 
 /** Round-9 batch #72 — sequence-shape analytics:
   *
@@ -23,14 +23,10 @@ import graft.Tables
   *    matrix run driver-side in integer ppm (the bounded-collect
   *    contract), unrolled nowhere — the DuckDB twin replays the SAME
   *    recurrence as 12 MATERIALIZED CTE steps. */
-object Queries152 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries152 extends QuerySet {
   private val GapUs = 30L * 60 * 1000 * 1000
   private val Iters = 12
   private[graft] val Types = Seq("click", "error", "purchase", "signup", "view")
-
-  private def tdivL(a: Long, b: Long): Long = if (a >= 0) a / b else -((-a) / b)
 
   val defs: Map[String, Q] = Map(
     "funnel_deviation_profile" -> { (sp, dir) =>

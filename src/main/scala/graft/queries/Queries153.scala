@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -21,9 +20,7 @@ import graft.operators.PairEngine
   *    distribution of order totals (top endings by mass, the .99-style
   *    share) — `benford_audit`'s LEADING digits complemented by the
   *    TRAILING ones retail actually sets. */
-object Queries153 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries153 extends QuerySet {
   val defs: Map[String, Q] = Map(
     "weighted_jaccard_pairs" -> { (sp, dir) =>
       val docs = Tables.documents(sp, dir)

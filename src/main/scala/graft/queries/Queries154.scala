@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -17,9 +16,7 @@ import graft.Tables
   *    users bucketed by click count (0 / 1-2 / 3-5 / 6+), each bucket's
   *    purchase rate in exact milli. The dose-response curve behind
   *    every "engaged users convert more" claim. */
-object Queries154 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries154 extends QuerySet {
   val defs: Map[String, Q] = Map(
     "catalog_coverage" -> { (sp, dir) =>
       val demand = Tables.lineitem(sp, dir)

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -18,9 +17,7 @@ import graft.Tables
   *    per discount band vs the zero-discount baseline, lift in exact
   *    milli. The demand-response read `discount_bands`' revenue mix
   *    doesn't answer. */
-object Queries155 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries155 extends QuerySet {
   val defs: Map[String, Q] = Map(
     "nation_trade_balance" -> { (sp, dir) =>
       val li = Tables.lineitem(sp, dir)

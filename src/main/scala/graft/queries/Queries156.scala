@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -44,9 +43,7 @@ private[queries] object Q156 {
   val UaContext = "iglu:com.snowplowanalytics.snowplow/ua_parser_context/jsonschema/1-0-0"
 }
 
-object Queries156 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries156 extends QuerySet {
   /** Key domain: user_id % Mod; keys with acct % 10 == 7 are NOT seeded
     * (the planted database miss — null output columns, reference
     * AT_MOST_ONE posture). */

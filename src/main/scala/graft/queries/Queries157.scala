@@ -31,9 +31,7 @@ import graft.enrich.{BadRows, EnrichmentPipeline, FieldSpec, SchemaValidate, Tra
   *    collector lines become collector_payload_format_violation envelopes
   *    via `Sources.collectorTsvSplit` (raw line base64'd for replay).
   */
-object Queries157 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries157 extends QuerySet {
   /** Fixed ETL timestamp so both engines agree: 2023-11-14T22:13:20Z. */
   private val EtlUs = 1700000000000000L
   private val Iso = "2023-11-14T22:13:20Z"

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.plans.GraftFunctions
+import graft.queries.IntIdioms.tdivSql
 
 /** Round-12 batch — robust statistics + the native top-k aggregate:
   *
@@ -36,14 +37,8 @@ import graft.plans.GraftFunctions
   *    cent value has one double representation; Queries158Spec pins the
   *    injectivity and the row-for-row window equality).
   */
-object Queries158 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries158 extends QuerySet {
   private val DayUs = 86400000000L
-
-  /** Truncated (toward-zero) integer division, engine-portable. */
-  private def tdivSql(num: String, den: String): String =
-    s"CASE WHEN $num >= 0 THEN CAST($num // $den AS BIGINT) ELSE -CAST((-($num)) // $den AS BIGINT) END"
 
   /** day index + revenue cents, one row per order day (calendar-bounded). */
   private def dailyRevenue(sp: SparkSession, dir: String): DataFrame =

@@ -1,11 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.TextF
 import graft.operators.PairEngine
+import graft.queries.IntIdioms.{tdivL, tdivSql}
 
 /** Round-12 batch #2 — seasonal forecasting + training-data selection and
   * hygiene:
@@ -39,15 +39,8 @@ import graft.operators.PairEngine
   *    separates "quotes the other doc" (high R1, asymmetric) from "same
   *    phrasing" (high R2). Exact integer counts, permille outputs.
   */
-object Queries159 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries159 extends QuerySet {
   private val DayUs = 86400000000L
-
-  private def tdivSql(num: String, den: String): String =
-    s"CASE WHEN $num >= 0 THEN CAST(($num) // $den AS BIGINT) ELSE -CAST((-($num)) // $den AS BIGINT) END"
-
-  private def tdivL(a: Long, b: Long): Long = if (a >= 0) a / b else -((-a) / b)
 
   private val Candidates = 32
   private val MmrRounds = 8

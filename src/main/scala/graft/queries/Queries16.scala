@@ -39,9 +39,7 @@ import graft.functions.{SimF, TextF}
   *    scores per source (bounded domain), and docs get buckets back
   *    through a broadcast join on (source, score). Ties share a bucket.
   */
-object Queries16 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries16 extends QuerySet {
   // ---- dedup_bloom constants (shared verbatim with the SQL twin) --------
   private[graft] val BloomBits = 16384 // m
   private[graft] val BloomWords = BloomBits / 32 // 32-bit words stored in BIGINTs

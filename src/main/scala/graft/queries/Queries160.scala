@@ -36,9 +36,7 @@ import graft.plans.GraftFunctions
   *    and the count of mostly-templated docs. The df join is bounded by
   *    the fingerprint table (≪ token table), never all-pairs.
   */
-object Queries160 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries160 extends QuerySet {
   private val DayUs = 86400000000L
   private val TemplateDf = 3
 

@@ -42,9 +42,7 @@ import graft.Tables
   *    gap is capped at 24 h so both sides stay ≪ 2⁶³). Scales as one
   *    hash-partitioned window by user — no global sort, no join.
   */
-object Queries161 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries161 extends QuerySet {
   /** The shared Synth collector-IP formula (PipelineQuery / ip_geo_lookup
     * spell the same arithmetic; valid in both Spark SQL and DuckDB). */
   private val IpNumExpr =

@@ -35,9 +35,7 @@ import graft.functions.SimF
   *    streaming drift monitors (volume_anomaly's sequential cousin);
   *    calendar-bounded series, so the ordered window is small by design.
   */
-object Queries162 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries162 extends QuerySet {
   private val Eps = 0.2 // cosine neighborhood radius (dbscan_core)
   private val MinNbrs = 2 // core ⇔ ≥ 2 neighbors within eps
   private val K = 3 // knn_graph_stats out-degree

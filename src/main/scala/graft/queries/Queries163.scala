@@ -40,9 +40,7 @@ import graft.functions.TextF
   *    with k, the pre-flight that picks k for MinHash dedup. Each k is a
   *    projection + one key-shrinking aggregate (never a pair join).
   */
-object Queries163 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries163 extends QuerySet {
   private val BurstGapUs = 3600000000L // 1 h
   private val Quantiles = Seq(25, 50, 75, 90)
   private val Ks = Seq(2, 3, 5)

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -32,9 +31,7 @@ import graft.Tables
   *    100 TB the per-dim rank window becomes a per-dim sketch or
   *    sample — the table shape (one row per dimension) is what ships.
   */
-object Queries164 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries164 extends QuerySet {
   private val Budget = 3 // frontier: links admitted per domain
   private val ShardBytes = 32768L
   private val DayUs = 86400000000L

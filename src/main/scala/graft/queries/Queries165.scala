@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -32,9 +31,7 @@ import graft.Tables
   *    the plain join, the fact side skips ~80% of rows before the
   *    shuffle at cluster scale.
   */
-object Queries165 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries165 extends QuerySet {
   private val Segments = 5
 
   val defs: Map[String, Q] = Map(

@@ -1,10 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.TextF
+import graft.queries.IntIdioms.bits
 
 /** Round-12 batch #9 — partition-pruning storage layout, corpus entropy,
   * lexical diversity, and the LSH hot-bucket cap sweep:
@@ -33,9 +34,7 @@ import graft.functions.TextF
   *    HotBucketCap skew guard; this query reads what a given cap COSTS
   *    in recall mass before it is deployed, from the bucket rollup alone.
   */
-object Queries166 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries166 extends QuerySet {
   private val Caps = Seq(1L, 2L, 4L)
 
   /** Deterministic partitioned materialization of lineitem by ship month
@@ -74,7 +73,6 @@ object Queries166 {
       val docs = graft.util.CacheScope.track(
         Tables.documents(sp, dir)
           .select(col("source"), TextF.tokens(col("text")).as("toks")))
-      def bits(c: org.apache.spark.sql.Column) = (length(bin(c)) - 1).cast("long")
       // unigram: H(w) = sum c*(log2N - log2c)/N per source, milli-bits
       val uniCounts = graft.util.CacheScope.track(
         docs.select(col("source"), explode(col("toks")).as("w"))

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -33,9 +33,7 @@ import graft.functions.TextF
   *    (token_packing's admission audit). One narrow projection + a
   *    bounded rollup.
   */
-object Queries167 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries167 extends QuerySet {
   private val MaxLen = 512L // context window, BPE tokens
   private val Buckets = 8
 

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -26,9 +25,7 @@ import graft.functions.TextF
   *    milli-units, 0 when nothing qualifies. Completes the retrieval
   *    eval tier next to ndcg_eval's graded gains.
   */
-object Queries168 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries168 extends QuerySet {
   val defs: Map[String, Q] = Map(
     "props_key_census" -> { (sp, dir) =>
       val total = Tables.events(sp, dir).count() // plan-time scalar, one agg

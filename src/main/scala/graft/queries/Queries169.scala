@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -30,9 +29,7 @@ import graft.Tables
   *    pair join is df-capped by construction: only fingerprints seen in
   *    2+ sources enter, each contributing one bounded source set.
   */
-object Queries169 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries169 extends QuerySet {
   private val DayUs = 86400000000L
   private val TopTrigrams = 25
 

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -27,9 +26,7 @@ import graft.functions.{SimF, TextF}
   *    Narrow per-doc projection + one tiny per-source aggregate; exact
   *    integer milli-units.
   */
-object Queries17 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries17 extends QuerySet {
   /** Punctuation/contraction/decimal text the BPE-ish regex splits finer
     * than whitespace does (shared verbatim with the SQL twin). */
   private val FertilitySuffix =

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -22,9 +21,7 @@ import graft.functions.TextF
   *    dedup_source_bias's fairness read over the same keeper set).
   *    Fingerprint window + two rollups, text never shuffles.
   */
-object Queries170 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries170 extends QuerySet {
   private val SchemaRe = "\"schema\":\"(iglu:[^\"]+)\""
 
   val defs: Map[String, Q] = Map(

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -32,9 +31,7 @@ import graft.functions.TextF
   *    template_syndication). Native WinnowExpression per w; densities
   *    from two key-shrinking aggregates.
   */
-object Queries171 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries171 extends QuerySet {
   private val Ws = Seq(3, 5, 9)
   private val DayUs = 86400000000L
 

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -31,9 +30,7 @@ import graft.Tables
   *    noising — no randomness; the read that decides which rollups
   *    survive a DP release).
   */
-object Queries172 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries172 extends QuerySet {
   private val EpsDeci = Seq(1L, 10L) // ε = 0.1, 1.0
 
   val defs: Map[String, Q] = Map(

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -25,9 +24,7 @@ import graft.functions.TextF
   *    months, rolled up to the catalog read (mean months-per-level in
   *    milli). Repricing cadence; two key-shrinking aggregates.
   */
-object Queries173 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries173 extends QuerySet {
   private val HourUs = 3600000000L
 
   val defs: Map[String, Q] = Map(

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -26,9 +25,7 @@ import graft.Tables
   *    (staleness) and late_arrival_stats (lateness) do not cover. A
   *    pipeline that silently dropped a day shows up here first.
   */
-object Queries174 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries174 extends QuerySet {
   private val DayUs = 86400000000L
 
   val defs: Map[String, Q] = Map(

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -26,9 +25,7 @@ import graft.Tables
   *    stickiness census over the customer×supplier matrix. Two
   *    key-shrinking aggregates + one rank window.
   */
-object Queries175 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries175 extends QuerySet {
   private val GapUs = 30L * 60 * 1000 * 1000
 
   val defs: Map[String, Q] = Map(

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -24,9 +23,7 @@ import graft.functions.TextF
   *    rank quintiles over first orders, then mean later-LTV per quintile
   *    in milli-cents: the acquisition-quality read behind ltv_curve.
   */
-object Queries176 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries176 extends QuerySet {
   val defs: Map[String, Q] = Map(
     "numeric_density" -> { (sp, dir) =>
       val toks = TextF.tokens(col("text"))

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -24,9 +23,7 @@ import graft.functions.TextF
   *    length-based quality gates across languages (a threshold tuned on
   *    English clips other languages without this table).
   */
-object Queries177 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries177 extends QuerySet {
   val defs: Map[String, Q] = Map(
     "effective_margin_profile" -> { (sp, dir) =>
       Tables.lineitem(sp, dir)

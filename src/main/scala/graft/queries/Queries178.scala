@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.queries.IntIdioms.tdivSql
 
 /** Round-13 batch #1 — classical statistics over the order calendar, all in
   * exact integer arithmetic (SURVEY §6 portability rules):
@@ -43,17 +44,8 @@ import graft.Tables
   *    earn within that intro quarter. Two aggregates + one co-partitioned
   *    join on partkey.
   */
-object Queries178 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries178 extends QuerySet {
   private val DayUs = 86400000000L
-
-  /** Truncating div for possibly-negative numerators (Queries141 idiom —
-    * Spark `div` and DuckDB `//` agree on nonnegative operands only). */
-  private def tdiv(num: String, den: String): String =
-    s"CASE WHEN $num >= 0 THEN ($num) div ($den) ELSE -((-($num)) div ($den)) END"
-  private def tdivSql(num: String, den: String): String =
-    s"CASE WHEN $num >= 0 THEN CAST(($num) // ($den) AS BIGINT) ELSE CAST(-((-($num)) // ($den)) AS BIGINT) END"
 
   /** Daily order rollup: (day, x = n_orders, rev_cents). */
   private def daily(sp: SparkSession, dir: String): DataFrame =
@@ -119,7 +111,7 @@ object Queries178 {
         .crossJoin(broadcast(nDays))
         .select(col("n_days"), col("n_pairs"), col("concordant"), col("discordant"),
           col("ties"),
-          expr(tdiv("(concordant - discordant) * 1000000", "n_pairs")).as("tau_a_micro"))
+          expr("(concordant - discordant) * 1000000 div n_pairs").as("tau_a_micro"))
     },
 
     "rolling_corr" -> { (sp, dir) =>

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -37,9 +37,7 @@ import graft.functions.TextF
   *    cross-multiplication (no division, no floats; exact to N ≈ 3×10⁹
   *    tokens). One bigram rollup + two broadcast unigram joins.
   */
-object Queries179 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries179 extends QuerySet {
   private val Thresholds = Seq(10L, 20L, 40L)
   private val ChunkTok = 8
 

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -21,9 +20,7 @@ import graft.multimodal.{Multimodal, StubEmbedder}
   *    fake payloads; a codec-backed sampler swaps in behind the same
   *    schema.
   */
-object Queries18 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries18 extends QuerySet {
   /** Frame stride in payload bytes (prime and smaller than a typical
     * payload, so docs yield several non-aligned frames); shared verbatim
     * with the SQL twin. */

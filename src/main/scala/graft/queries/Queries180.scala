@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -32,9 +31,7 @@ import graft.Tables
   *    is the base speeding up or slowing down; one hash-partitioned
   *    window by customer + one co-partitioned count join.
   */
-object Queries180 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries180 extends QuerySet {
   private val DayUs = 86400000000L
 
   /** Benford second-digit expectation in ppm: p(d) = Σ_{k=1..9}

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -31,9 +31,7 @@ import graft.functions.TextF
   *    docs (fingerprint groups ≥2) — does dedup disproportionately remove
   *    short docs; one fingerprint rollup + one join back.
   */
-object Queries181 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries181 extends QuerySet {
   private val PrefixK = 5
   private val Seeds = Seq(0, 1, 2, 3)
 

@@ -1,11 +1,12 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.TextF
+import graft.queries.IntIdioms.bits
 
 /** Round-13 batch #5 — SLA, basket, and behavioral cross-reads plus two
   * corpus planners:
@@ -33,9 +34,7 @@ import graft.functions.TextF
   *    detection (low entropy at position 1 = shared intros; the
   *    information-theoretic companion of prefix_dup_rate).
   */
-object Queries182 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries182 extends QuerySet {
   private val DayUs = 86400000000L
   private val EventTypes = Seq("click", "error", "purchase", "signup", "view")
   private val Positions = 1 to 10
@@ -131,7 +130,6 @@ object Queries182 {
 
     "positional_entropy" -> { (sp, dir) =>
       import sp.implicits._
-      def bits(c: org.apache.spark.sql.Column) = (length(bin(c)) - 1).cast("long")
       val posDf = Positions.map(_.toLong).toDF("pos")
       val at = Tables.documents(sp, dir)
         .select(TextF.tokens(col("text")).as("toks"))

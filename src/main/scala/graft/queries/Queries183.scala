@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -33,9 +32,7 @@ import graft.functions.TextF
   *    vocabulary tail actually lives); df rollup → bounded rare set →
   *    one semi-join.
   */
-object Queries183 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries183 extends QuerySet {
   private val LangThresholdsMilli = Seq(40L, 80L, 160L)
 
   /** Exact integer sqrt (Queries179's idiom). */

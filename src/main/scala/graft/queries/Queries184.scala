@@ -1,11 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.TextF
+import graft.queries.IntIdioms.tdivSql
 
 /** Round-13 batch #7 — two-factor ANOVA, SPC control charts, inventory
   * sizing, and the tokenizer-consistency audit:
@@ -31,20 +31,13 @@ import graft.functions.TextF
   *    cumulative p99 (value-domain, the percentiles_exact rule) → one
   *    broadcast threshold compare.
   */
-object Queries184 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries184 extends QuerySet {
   private val DayUs = 86400000000L
   // Shewhart constants for subgroup size 7, in milli
   private val A2Milli = 419L
   private val D3Milli = 76L
   private val D4Milli = 1924L
   private val OrderCostCents = 5000L
-
-  private def tdiv(num: String, den: String): String =
-    s"CASE WHEN $num >= 0 THEN ($num) div ($den) ELSE -((-($num)) div ($den)) END"
-  private def tdivSql(num: String, den: String): String =
-    s"CASE WHEN $num >= 0 THEN CAST(($num) // ($den) AS BIGINT) ELSE CAST(-((-($num)) // ($den)) AS BIGINT) END"
 
   private def isqrt(n: String): String = {
     val s0 = s"CAST(floor(sqrt(CAST($n AS DOUBLE))) AS BIGINT)"
@@ -65,23 +58,23 @@ object Queries184 {
       val aM = cells.groupBy("a").agg(sum("n_ab").as("n_a"), sum("s_ab").as("s_a"))
       val bM = cells.groupBy("b").agg(sum("n_ab").as("n_b"), sum("s_ab").as("s_b"))
       val g = cells.agg(sum("n_ab").as("n"), sum("s_ab").as("sx"), sum("sxx_ab").as("sxx"))
-        .withColumn("m", expr(tdiv("(sx * 1000)", "n")))
+        .withColumn("m", expr("(sx * 1000) div n"))
       val ssa = aM.crossJoin(broadcast(g))
-        .withColumn("m_a", expr(tdiv("(s_a * 1000)", "n_a")))
+        .withColumn("m_a", expr("(s_a * 1000) div n_a"))
         .agg(sum(expr("n_a * (m_a - m) * (m_a - m)")).as("ss_a"))
       val ssb = bM.crossJoin(broadcast(g))
-        .withColumn("m_b", expr(tdiv("(s_b * 1000)", "n_b")))
+        .withColumn("m_b", expr("(s_b * 1000) div n_b"))
         .agg(sum(expr("n_b * (m_b - m) * (m_b - m)")).as("ss_b"))
       val ssCells = cells.crossJoin(broadcast(g))
-        .withColumn("m_ab", expr(tdiv("(s_ab * 1000)", "n_ab")))
+        .withColumn("m_ab", expr("(s_ab * 1000) div n_ab"))
         .agg(sum(expr("n_ab * (m_ab - m) * (m_ab - m)")).as("ss_cells"),
           max(expr("1000000 * sxx - 2000 * m * sx + n * m * m")).as("ss_total"))
       g.crossJoin(broadcast(ssa)).crossJoin(broadcast(ssb)).crossJoin(broadcast(ssCells))
         .select(col("n"), col("ss_a"), col("ss_b"),
           (col("ss_cells") - col("ss_a") - col("ss_b")).as("ss_ab"),
           col("ss_total"),
-          expr(tdiv("ss_a", "(ss_total div 1000)")).as("eta_a_milli"),
-          expr(tdiv("ss_b", "(ss_total div 1000)")).as("eta_b_milli"))
+          expr("ss_a div (ss_total div 1000)").as("eta_a_milli"),
+          expr("ss_b div (ss_total div 1000)").as("eta_b_milli"))
     },
 
     "xbar_r_chart" -> { (sp, dir) =>

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -25,9 +24,7 @@ import graft.functions.TextF
   *    cross-multiplication over the bounded 10-platform × 7-dow grid;
   *    the confounder alarm for platform dashboards.
   */
-object Queries185 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries185 extends QuerySet {
   private val DayUs = 86400000000L
 
   val defs: Map[String, Q] = Map(

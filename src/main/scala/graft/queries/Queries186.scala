@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -28,9 +27,7 @@ import graft.functions.TextF
   *    lang='en') pass the same share of docs? Cochran's Q from per-doc
   *    row sums — one scan, one 1-row aggregate.
   */
-object Queries186 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries186 extends QuerySet {
   private val DayUs = 86400000000L
 
   val defs: Map[String, Q] = Map(

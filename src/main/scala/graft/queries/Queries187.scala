@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -24,9 +23,7 @@ import graft.Tables
   *    spend, reported as a bounded 11-bucket distribution — how
   *    single-brand are the customers?
   */
-object Queries187 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries187 extends QuerySet {
   private val DayUs = 86400000000L
 
   private def shipDay =

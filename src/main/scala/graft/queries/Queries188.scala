@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -22,9 +21,7 @@ import graft.Tables
   *    per order and basket width — one lineitem scan + broadcast-joined
   *    part flags, no orders join needed.
   */
-object Queries188 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries188 extends QuerySet {
   private val DayUs = 86400000000L
 
   val defs: Map[String, Q] = Map(

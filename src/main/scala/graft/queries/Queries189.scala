@@ -23,9 +23,7 @@ import graft.Tables
   * All three share the user-partitioned session windows — parallel across
   * users at any scale, the sessionize posture.
   */
-object Queries189 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries189 extends QuerySet {
   private val GapUs = 30L * 60 * 1000 * 1000
 
   private def sessions(sp: SparkSession, dir: String): DataFrame = {

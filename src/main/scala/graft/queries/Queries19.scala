@@ -22,9 +22,7 @@ import graft.operators.AsOfJoin
   *    shingle key (min-owner window), one doc-level aggregate; exact
   *    integer milli-units.
   */
-object Queries19 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries19 extends QuerySet {
   /** The weather observation dim — ONE definition for both weather_asof
     * (Queries2, composed) and weather_asof_native (below): the two queries
     * must stay row-identical, so the formula lives only here. */

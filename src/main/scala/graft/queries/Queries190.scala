@@ -1,11 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.functions.TextF
 
 /** Round-14 batch #5 — graph/text structure metrics:
   *
@@ -24,9 +22,7 @@ import graft.functions.TextF
   *    chunking-granularity planner's input. One scan + explode, bounded
   *    output.
   */
-object Queries190 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries190 extends QuerySet {
   private val KnnK = 3 // same out-degree as knn_graph_stats
 
   val defs: Map[String, Q] = Map(

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -25,9 +24,7 @@ import graft.operators.KMeans
   *    the daily purchase-revenue series — row-lag spelling over the
   *    calendar-bounded day table.
   */
-object Queries191 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries191 extends QuerySet {
   private val DayUs = 86400000000L
   private val ElbowKs = Seq(2, 4, 8)
   private val RecallKs = Seq(1, 3, 5)

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -22,9 +21,7 @@ import graft.functions.TextF
   *    (`copyright`, `all rights reserved`, `creative commons`/`cc-by`,
   *    `license`) — the redistribution-risk census; one scan, LIKE-only.
   */
-object Queries192 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries192 extends QuerySet {
   private val Horizons = Seq(60L, 600L, 3600L)
   private val PackBudget = 2048L
 

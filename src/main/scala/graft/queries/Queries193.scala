@@ -1,10 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.EventF
+import graft.queries.IntIdioms.tdivSql
 
 /** Round-14 batch #8 — enrichment-side operational audits:
   *
@@ -21,28 +21,20 @@ import graft.functions.EventF
   *    group-size classes of the surviving prefixes (singleton prefixes are
   *    re-identifiable); the privacy-budget check behind `anon_ip`.
   */
-object Queries193 {
-  type Q = (SparkSession, String) => DataFrame
-
-  /** Sign-split integer division — truncation toward zero on both engines. */
-  private def tdiv(num: String, den: String): String =
-    s"CASE WHEN $num >= 0 THEN $num div $den ELSE -((-($num)) div $den) END"
-  private def tdivSql(num: String, den: String): String =
-    s"CASE WHEN $num >= 0 THEN CAST($num // $den AS BIGINT) ELSE CAST(-((-($num)) // $den) AS BIGINT) END"
-
+object Queries193 extends QuerySet {
   val defs: Map[String, Q] = Map(
     "clock_skew_profile" -> { (sp, dir) =>
       Synth.withRaw(Tables.events(sp, dir))
         .select(col("platform_code"),
           expr("(collector_us - sent_us) div 1000").as("send_ms"),
-          expr(tdiv("(sent_us - created_us)", "1000")).as("create_ms"))
+          expr("(sent_us - created_us) div 1000").as("create_ms"))
         .groupBy("platform_code")
         .agg(count(lit(1)).as("n_events"),
           sum("send_ms").as("ss"), max("send_ms").as("max_send_ms"),
           sum("create_ms").as("sc"), min("create_ms").as("min_create_ms"))
         .select(col("platform_code"), col("n_events"),
-          expr(tdiv("ss", "n_events")).as("avg_send_ms"), col("max_send_ms"),
-          expr(tdiv("sc", "n_events")).as("avg_create_ms"), col("min_create_ms"))
+          expr("ss div n_events").as("avg_send_ms"), col("max_send_ms"),
+          expr("sc div n_events").as("avg_create_ms"), col("min_create_ms"))
         .orderBy("platform_code")
     },
 

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -20,9 +19,7 @@ import graft.Tables
   *    >1.1× the corpus rate (cross-multiplied exact, min 20 lines) —
   *    the QC escalation list.
   */
-object Queries194 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries194 extends QuerySet {
   private val DayUs = 86400000000L
 
   val defs: Map[String, Q] = Map(

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -19,9 +18,7 @@ import graft.functions.TextF
   *    3+) vs purchase conversion — does a bad experience suppress
   *    conversion; two key-shrinking rollups.
   */
-object Queries195 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries195 extends QuerySet {
   val defs: Map[String, Q] = Map(
     "cross_lang_dups" -> { (sp, dir) =>
       val langs = Tables.documents(sp, dir).select(col("doc_id"), col("lang"))

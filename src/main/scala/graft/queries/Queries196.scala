@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -19,9 +18,7 @@ import graft.Tables
   *    quantity share (cross-multiplied lift in milli) — does the fulfilment
   *    mix shift on weekends; bounded class × 2 rollup.
   */
-object Queries196 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries196 extends QuerySet {
   private val DayUs = 86400000000L
   private val HourUs = 3600000000L
 

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -24,9 +23,7 @@ import graft.functions.TextF
   *    (MinHash candidate-pair members — the corpus has no exact-text dups)
   *    from unique ones: does low breadth predict duplication?
   */
-object Queries197 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries197 extends QuerySet {
   private val DayUs = 86400000000L
   private val HourUs = 3600000000L
 

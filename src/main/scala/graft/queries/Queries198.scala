@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -18,9 +18,7 @@ import graft.Tables
   *    Composition of the flagship pipeline with the sessionizer, bounded
   *    output.
   */
-object Queries198 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries198 extends QuerySet {
   private val GapUs = 30L * 60 * 1000 * 1000
 
   private def sessionized(df: DataFrame): DataFrame = {

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -19,9 +18,7 @@ import graft.Tables
   *    twin of `psi_drift` — the monitoring read that catches a geo
   *    routing/lookup regression).
   */
-object Queries199 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries199 extends QuerySet {
   private val DayUs = 86400000000L
   private val HourUs = 3600000000L
 

@@ -13,9 +13,7 @@ import graft.operators.{AsOfJoin, RangeJoin}
   * (collector TSV round-trip, webhook JSON, enriched TSV line), and the
   * JS-script escape hatch.
   */
-object Queries2 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries2 extends QuerySet {
   private[queries] def raw(spark: SparkSession, dir: String): DataFrame =
     Synth.withRaw(Tables.events(spark, dir))
 

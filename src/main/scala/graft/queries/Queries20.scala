@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -34,9 +34,7 @@ import graft.operators.AsOfJoin
   *    enrichments/registry/CampaignAttributionEnrichment.scala ties campaign
   *    to the event that carried it; this operator ties it across events.
   */
-object Queries20 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries20 extends QuerySet {
   private val WinnowK = 4 // tokens per shingle
   private val WinnowW = 5 // shingle hashes per winnowing window
 

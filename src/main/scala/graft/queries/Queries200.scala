@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -27,9 +27,7 @@ import graft.Tables
   *    scan is one codegen'd pass, no shuffle at all before the ordered
   *    dump.
   */
-object Queries200 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries200 extends QuerySet {
   private[queries] val PvSchema = "iglu:com.acme/product_view/jsonschema/1-0-0"
   private[queries] val CoSchema = "iglu:com.acme/checkout/jsonschema/2-0-0"
   private val UnknownSchema = "iglu:com.unknown/mystery/jsonschema/1-0-0"

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -39,9 +38,7 @@ import graft.Tables
   *    domain. (At extreme row counts n·Σx needs 128-bit staging — the
   *    histogram SHAPE is what scales; coarsen the quantum past ~1e10 rows.)
   */
-object Queries201 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries201 extends QuerySet {
   /** Whole-dollar order value — bounded by the fixed TPC-H price range, so
     * every histogram below has constant size at any SF. */
   private def dollars = expr("CAST(round(o_totalprice) AS BIGINT)")

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -33,9 +32,7 @@ import graft.functions.TextF
   *    b reads the Hurst regime (persistent vs mean-reverting demand).
   *    Calendar-bounded: every window runs over the ~2.4k-day domain.
   */
-object Queries202 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries202 extends QuerySet {
   private val BlockSizes = Seq(16, 64, 256)
 
   val defs: Map[String, Q] = Map(

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -33,9 +32,7 @@ import graft.Tables
   *    finish as driver-side scalar folds) that, like kruskal_wallis,
   *    ships the exact integers instead of cross-engine doubles.
   */
-object Queries203 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries203 extends QuerySet {
   val defs: Map[String, Q] = Map(
     "emd_price_regions" -> { (sp, dir) =>
       val geo = Tables.customer(sp, dir)

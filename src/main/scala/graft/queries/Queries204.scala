@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -34,9 +34,7 @@ import graft.operators.PairEngine
   *    monitor that catches a UA-mix shift (bot fleet, app release) at the
   *    classified-output level, composed over the real UaF cascade.
   */
-object Queries204 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries204 extends QuerySet {
   /** (rows per band, bands) layouts of the k=4 signature. */
   private val Layouts = Seq((1, 4), (2, 2), (4, 1))
 

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -30,9 +29,7 @@ import graft.operators.PairEngine
   *    calibrates how much the banding over- or under-connects each real
   *    cluster. All pair work candidate-bounded.
   */
-object Queries205 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries205 extends QuerySet {
   val defs: Map[String, Q] = Map(
     "dispersion_trend" -> { (sp, dir) =>
       Tables.orders(sp, dir)

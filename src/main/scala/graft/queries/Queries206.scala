@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -28,9 +27,7 @@ import graft.Tables
   *    from the bounded lag-day histogram (cumulative windows partitioned
   *    by supplier over a ≤~130-value domain — never a row sort).
   */
-object Queries206 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries206 extends QuerySet {
   private val RrfK = 60
   private val SessGapUs = 30L * 60 * 1000 * 1000
 

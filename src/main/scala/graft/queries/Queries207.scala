@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -32,9 +32,7 @@ import graft.functions.TextF
   *    bounded degree histogram — a high Gini says a few hub documents
   *    drive most candidate pairs (the skew the df-caps exist to bound).
   */
-object Queries207 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries207 extends QuerySet {
   val defs: Map[String, Q] = Map(
     "intramonth_uniformity" -> { (sp, dir) =>
       val daily = Tables.orders(sp, dir)

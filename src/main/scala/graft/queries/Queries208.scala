@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -27,9 +27,7 @@ import graft.operators.PairEngine
   *    decorations) — the confusables/spoofing surface a single
   *    dominant-script label hides.
   */
-object Queries208 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries208 extends QuerySet {
   private val XCap = 12L
 
   val defs: Map[String, Q] = Map(

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -24,9 +23,7 @@ import graft.Tables
   *    texts are the classic false-merge smell a keeper policy should see
   *    before dropping the "duplicates".
   */
-object Queries209 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries209 extends QuerySet {
   val defs: Map[String, Q] = Map(
     "label_centroid_alignment" -> { (sp, dir) =>
       val ex = Tables.embeddings(sp, dir)

@@ -29,9 +29,7 @@ import graft.functions.TextF
   *    operators.KMeans. Encode is a NARROW literal-codebook projection —
   *    zero corpus-side joins or shuffles, same shape as ann_ivf assignment.
   */
-object Queries21 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries21 extends QuerySet {
   private[queries] val PqM = 8         // subspaces
   private[queries] val PqDim = 8       // dims per subspace
   private[queries] val PqK = 16        // centroids per subspace

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -15,9 +14,7 @@ import graft.functions.TextF
   *    |vocab| × |sources|: per-source distinct tokens, one equi-join on
   *    token, C(sources, 2) output rows.
   */
-object Queries210 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries210 extends QuerySet {
   val defs: Map[String, Q] = Map(
     "vocab_overlap_matrix" -> { (sp, dir) =>
       val vocab = graft.util.CacheScope.track(Tables.documents(sp, dir)

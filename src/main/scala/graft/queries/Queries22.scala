@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -23,9 +23,7 @@ import graft.functions.TextF
   *    (cnt·2 ≥ med·3) — the drop/spike monitor every ingest pipeline runs;
   *    one (type) shuffle, output is types × days regardless of corpus size.
   */
-object Queries22 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries22 extends QuerySet {
   /** Content-defined chunks of a (doc_id, text) frame: boundary where a
     * token's md5 first hex digit lands in {0,1} (expected chunk ≈ 8
     * tokens). Shared by the query and the shift-resistance spec (a prefix

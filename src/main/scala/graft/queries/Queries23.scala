@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -22,9 +21,7 @@ import graft.functions.TextF
   *    scattered pairs or dense boilerplate cliques (cliques make band
   *    collisions quadratic; the histogram is how you see them coming).
   */
-object Queries23 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries23 extends QuerySet {
   val defs: Map[String, Q] = Map(
     "tfidf_topterms" -> { (sp, dir) =>
       // the exploded token table feeds both the tf and the df aggregation —

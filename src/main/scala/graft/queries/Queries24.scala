@@ -3,8 +3,6 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
-
 /** Round-7 flagship composition: `corpus_pipeline`, the corpus-side twin of
   * `enrich_pipeline` — the END-TO-END shipped training dataset in one plan:
   *
@@ -25,9 +23,7 @@ import graft.Tables
   * every band, so its cluster minimum IS the exact keeper — the two
   * keeper rules agree by construction.
   */
-object Queries24 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries24 extends QuerySet {
   /** Stages 3-4 (near-dup representative keep + decontamination) over an
     * already-gated corpus — factored so pipeline_manifest can feed ONE
     * cached `gated` table to both its stage-2 manifest row and this

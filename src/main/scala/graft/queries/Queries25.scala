@@ -39,9 +39,7 @@ import graft.functions.TextF
   * extend the training-data surface (SURVEY §2.D) the way sim_lsh/semdedup
   * do, with the reference's exactness discipline.
   */
-object Queries25 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries25 extends QuerySet {
   /** The fixed retrieval query set (vocabulary words from the synth corpus;
     * q04 carries an out-of-vocabulary term to pin the miss path — an OOV
     * term contributes nothing, it must not null the whole query). */

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -37,9 +37,7 @@ import graft.functions.{SimF, TextF}
   *    100 TB the candidate generation swaps to the sim_lsh / ann_ivf
   *    bucketed index with the same downstream filter.
   */
-object Queries26 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries26 extends QuerySet {
   /** Planted boilerplate chunk (this file's own plant — distinct from
     * para_dedup's so the two detectors stay independently testable). */
   private[queries] val BoilerPara = "all rights reserved contact support team"

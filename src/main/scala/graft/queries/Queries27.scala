@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -22,9 +21,7 @@ import graft.functions.{SimF, TextF}
   * (`length(bin(16 div celldf)) − 1`) keeps the score exactly portable, as
   * in tfidf_topterms.
   */
-object Queries27 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries27 extends QuerySet {
   /** Centroid count — the ann_ivf convention (first [[NCells]] vectors are
     * the "trained" centroids; operators.KMeans is the real trainer). */
   private val NCells = 16

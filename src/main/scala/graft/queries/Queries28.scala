@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -44,9 +44,7 @@ import graft.functions.TextF
   * oracle-exactness discipline (integer milli units, md5/polynomial
   * hashes identical across engines).
   */
-object Queries28 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries28 extends QuerySet {
   /** KMV sketch size (shared with streaming.StreamKmv — one estimator). */
   private[graft] val KmvK = 32
   /** Rolling-hash modulus (the hash universe M in the KMV estimator). */

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -28,9 +27,7 @@ import graft.Tables
   * these artifacts downstream (dimension history, release audits, ingest
   * profiles); here they're first-class operators with DuckDB-exact oracles.
   */
-object Queries29 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries29 extends QuerySet {
   /** SCD2 tracked attribute: the event's props.k bucketed to a "tier" —
     * shared verbatim with the oracle. */
   private[queries] val TierSql = "CAST(get_json_object(props, '$.k') AS BIGINT) div 50"

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -14,9 +14,7 @@ import graft.operators.RangeJoin
   * (centroid assignment + nprobe cell search — the scale path beyond
   * brute force).
   */
-object Queries3 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries3 extends QuerySet {
   /** 64 synthetic ASN ranges, one per aligned 2^26 block. */
   private val AsnBlock = 67108864L
 

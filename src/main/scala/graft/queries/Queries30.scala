@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -27,9 +26,7 @@ import graft.functions.TextF
   *    up to stage boundaries + token mass. ntile is SQL-standard (first
   *    buckets take remainders) so both engines agree exactly.
   */
-object Queries30 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries30 extends QuerySet {
   /** Shard count for the two-level dedup (spreads ids, not ranges). */
   private[graft] val Shards = 64
 

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -20,9 +19,7 @@ import graft.Tables
   *    within-basket pair join (bounded by basket size, never corpus²),
   *    broadcast item counts.
   */
-object Queries31 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries31 extends QuerySet {
   /** Funnel window: 7 days in epoch micros. */
   private val FunnelWindowUs = 7L * 86400000000L
 

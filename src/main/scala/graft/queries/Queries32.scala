@@ -1,11 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.TextF
+import graft.queries.IntIdioms.nearestRank
 
 /** Round-8 continuation #4 — identity, attribution, and corpus-export
   * operators:
@@ -33,9 +33,7 @@ import graft.functions.TextF
   *    single-task global window, while the ORACLE is exactly that naive
   *    global window.
   */
-object Queries32 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries32 extends QuerySet {
   private val DayUs = 86400000000L
 
   /** Identity-graph node id offset for device nodes (user ids are tiny). */
@@ -108,10 +106,9 @@ object Queries32 {
       val ranked = raw
         .withColumn("rk", row_number().over(w))
         .withColumn("n", count(lit(1)).over(Window.partitionBy("platform_code")))
-      def pick(p: Int) =
-        max(when(col("rk") === lit(1) + expr(s"($p * (n - 1)) div 100"), col("delay_ms")))
       ranked.groupBy("platform_code")
-        .agg(max("n").as("n"), pick(50).as("p50_ms"), pick(95).as("p95_ms"),
+        .agg(max("n").as("n"), nearestRank(50, col("delay_ms")).as("p50_ms"),
+          nearestRank(95, col("delay_ms")).as("p95_ms"),
           max("delay_ms").as("max_ms"),
           sum(when(col("delay_ms") < 0, 1L).otherwise(0L)).as("n_negative"))
         .orderBy("platform_code")

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -27,9 +26,7 @@ import graft.Tables
   *    Both engines draw the same sample and use the same rank arithmetic,
   *    so even the "approximate" column is hash-exact.
   */
-object Queries33 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries33 extends QuerySet {
   private val DayUs = 86400000000L
 
   /** sample_bottomk sample size. */

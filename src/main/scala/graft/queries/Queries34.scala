@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -21,9 +20,7 @@ import graft.Tables
   *    crosstab — nothing here grows with event volume except the first
   *    distinct.
   */
-object Queries34 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries34 extends QuerySet {
   private val DayUs = 86400000000L
 
   val defs: Map[String, Q] = Map(

@@ -24,9 +24,7 @@ import graft.functions.TextF
   * "a a a" merge once). DuckDB's `list_reduce` expresses the identical
   * fold, so the oracle is hash-exact down to the merged strings.
   */
-object Queries35 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries35 extends QuerySet {
   /** Number of merge rules learned and applied. */
   val NMerges = 3
 

@@ -1,10 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.queries.IntIdioms.nearestRank
 
 /** Round-8 continuation #8 — session-behavior classics on top of the
   * gap-sessionization kernel `sessionize` established:
@@ -21,9 +21,7 @@ import graft.Tables
   *    gap-session twin of the classic bounce report. Host comes from the
   *    session's FIRST event (row_number window), rate in exact milli.
   */
-object Queries36 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries36 extends QuerySet {
   private val GapUs = 30L * 60 * 1000 * 1000
   private val TopPaths = 20
 
@@ -60,10 +58,9 @@ object Queries36 {
       val ranked = lat
         .withColumn("rk", row_number().over(wOrd))
         .withColumn("n", count(lit(1)).over())
-      def pick(p: Int) =
-        max(when(col("rk") === lit(1) + expr(s"($p * (n - 1)) div 100"), col("lat_min")))
       ranked.agg(max("n").as("n_converted"),
-        pick(50).as("p50_min"), pick(90).as("p90_min"), max("lat_min").as("max_min"))
+        nearestRank(50, col("lat_min")).as("p50_min"),
+        nearestRank(90, col("lat_min")).as("p90_min"), max("lat_min").as("max_min"))
     },
 
     "bounce_rate" -> { (sp, dir) =>

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -22,9 +21,7 @@ import graft.functions.TextF
   *    shingle spellings the dedup operators use, so the report cannot
   *    drift from the pipeline it audits.
   */
-object Queries37 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries37 extends QuerySet {
   val defs: Map[String, Q] = Map(
     "source_overlap" -> { (sp, dir) =>
       val sh = graft.util.CacheScope.track(Tables.documents(sp, dir)

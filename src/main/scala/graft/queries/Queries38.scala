@@ -25,9 +25,7 @@ import graft.functions.TextF
   * so `token_mass_funnel` (Queries132) can weight the SAME stages by token
   * mass instead of doc count.
   */
-object Queries38 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries38 extends QuerySet {
   private[graft] val StageNames = Seq(
     "exact_dup", "language", "length", "repetition", "punctuation",
     "bench_slice", "contaminated")

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -18,9 +17,7 @@ import graft.Tables
   *    G = (2·Σ rank·cnt) / (n·Σ cnt) − (n+1)/n, all in milli by integer
   *    division). The rank window runs over one row per user.
   */
-object Queries39 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries39 extends QuerySet {
   private val DayUs = 86400000000L
 
   val defs: Map[String, Q] = Map(

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -10,9 +9,7 @@ import graft.operators.SaltedAgg
   * pushdown showcase), ROLLUP grouping sets, and the salted skew-safe
   * aggregation (oracle = the plain aggregate it must equal).
   */
-object Queries4 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries4 extends QuerySet {
   val defs: Map[String, Q] = Map(
     "q6_forecast" -> { (sp, dir) =>
       Tables.lineitem(sp, dir)

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -16,9 +15,7 @@ import graft.Tables
   * ngram_jaccard precedent — which also bounds the self-join fan-out at
   * any corpus size), signature equi-join, containment in exact milli.
   */
-object Queries40 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries40 extends QuerySet {
   private val FrameStride = 131
   private val FrameSigDfCap = 64
   private val MinShared = 2

@@ -29,9 +29,7 @@ import graft.functions.TextF
   *    cluster count, total docs) over the MinHash connected components —
   *    the power-law sanity report a dedup run ships alongside its keeps.
   */
-object Queries41 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries41 extends QuerySet {
   private val VerifyJaccMilli = 500L
 
   /** incremental_dedup's planted effective-text relation (doc_id, text). */

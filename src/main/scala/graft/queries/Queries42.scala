@@ -1,11 +1,12 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.TextF
+import graft.queries.IntIdioms.nearestRank
 
 /** Round-8 continuation #14 — operability diagnostics:
   *
@@ -26,9 +27,7 @@ import graft.functions.TextF
   *    distribution-shift signal a fixed-vocab tokenizer owner watches
   *    per ingest source.
   */
-object Queries42 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries42 extends QuerySet {
   private val VocabK = 1000
 
   val defs: Map[String, Q] = Map(
@@ -41,12 +40,10 @@ object Queries42 {
           .withColumn("rk", row_number().over(wOrd))
           .withColumn("n", count(lit(1)).over())
           .withColumn("tot", sum("m").over())
-        def pick(p: Int) =
-          max(when(col("rk") === lit(1) + expr(s"($p * (n - 1)) div 100"), col("m")))
         ranked.agg(
           max("n").as("n_keys"), max("tot").as("n_rows"),
-          max("m").as("max_key_rows"), pick(99).as("p99_key_rows"),
-          pick(50).as("median_key_rows"))
+          max("m").as("max_key_rows"), nearestRank(99, col("m")).as("p99_key_rows"),
+          nearestRank(50, col("m")).as("median_key_rows"))
           .select(lit(keyName).as("join_key"), col("n_keys"), col("n_rows"),
             col("max_key_rows"), col("p99_key_rows"), col("median_key_rows"),
             // skew factor: max key mass over the uniform per-key share

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Round-8 continuation #15 — `dedup_cluster_incremental`: connected
@@ -17,9 +16,7 @@ import org.apache.spark.sql.functions._
   * labels over |batch edges| + |touched clusters|, never re-walking the
   * shipped corpus's edge set.
   */
-object Queries43 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries43 extends QuerySet {
   val defs: Map[String, Q] = Map(
     "dedup_cluster_incremental" -> { (sp, dir) =>
       val pairs = graft.util.CacheScope.track(Queries6.minhashPairs(sp, dir))

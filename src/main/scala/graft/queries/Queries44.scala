@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -20,9 +20,7 @@ import graft.Tables
   *    mismatches (integer cents) — three anti/outer-join probes sharing
   *    one lineitem aggregation, output as one fixed-size report row.
   */
-object Queries44 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries44 extends QuerySet {
   /** Outlier rule: |x − med| > MadK·MAD. 2 ≈ z-score 3 under normality
     * (MAD ≈ 0.674σ); the synthetic per-user counts are near-Poisson, so
     * the flagged tail is small but non-empty at every SF. */

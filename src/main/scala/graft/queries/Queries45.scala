@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -22,9 +21,7 @@ import graft.Tables
   *    user's most recent purchase amount via last_value IGNORE NULLS over
   *    a running frame; one (user) shuffle, no self-join.
   */
-object Queries45 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries45 extends QuerySet {
   private val WeekUs = 7L * 86400000000L
 
   val defs: Map[String, Q] = Map(

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -21,9 +21,7 @@ import graft.functions.TextF
   *    curve; truth and estimate reuse the dedup operators' exact
   *    spellings, evaluated once and swept by a tiny thresholds dimension.
   */
-object Queries46 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries46 extends QuerySet {
   /** Nominal LSH threshold (1/b)^(1/r) in milli, per layout — constants,
     * identical literals on both engines. */
   private val Sweep = Seq(("4x1", 4, 1, 250L), ("2x2", 2, 2, 707L), ("1x4", 1, 4, 1000L))

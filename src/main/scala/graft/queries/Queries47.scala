@@ -1,10 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.queries.IntIdioms.nearestRank
 
 /** Round-8 continuation #19 — temporal operations analytics:
   *
@@ -19,9 +19,7 @@ import graft.Tables
   *    but seasonally adjusted: a Monday-9am spike is judged against
   *    Monday-9am history, not against the whole day mix).
   */
-object Queries47 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries47 extends QuerySet {
   private val DayUs = 86400000000L
   private val HourUs = 3600000000L
   private val WeekUs = 7L * DayUs
@@ -42,10 +40,9 @@ object Queries47 {
       val ranked = perOrder
         .withColumn("rk", row_number().over(w))
         .withColumn("n", count(lit(1)).over(Window.partitionBy("o_orderpriority")))
-      def pick(p: Int) =
-        max(when(col("rk") === lit(1) + expr(s"($p * (n - 1)) div 100"), col("lat_days")))
       ranked.groupBy("o_orderpriority")
-        .agg(max("n").as("n_orders"), pick(50).as("p50_days"), pick(95).as("p95_days"),
+        .agg(max("n").as("n_orders"), nearestRank(50, col("lat_days")).as("p50_days"),
+          nearestRank(95, col("lat_days")).as("p95_days"),
           max("lat_days").as("max_days"), max("span_days").as("max_span_days"))
         .orderBy("o_orderpriority")
     },

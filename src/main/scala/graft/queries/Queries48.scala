@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -21,9 +20,7 @@ import graft.Tables
   *    first view), any view can anchor a window — the existence checks
   *    are user-keyed chain joins, bounded by per-user event counts.
   */
-object Queries48 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries48 extends QuerySet {
   private val HistK = 10
   private val FunnelWinUs = 86400000000L
 

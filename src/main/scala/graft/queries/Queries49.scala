@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -24,9 +23,7 @@ import graft.Tables
   *    than daily, so the ratio lands BELOW 1000 here — precisely the
   *    measurement this report exists to make before picking a design).
   */
-object Queries49 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries49 extends QuerySet {
   private val DayUs = 86400000000L
   private val NUsers = 150L // sf-invariant user-id universe stride
 

@@ -9,9 +9,7 @@ import graft.functions.{EventF, IpF}
 /** SURVEY §2 batch 5: CloudFront access-log loader round-trip, JSON event
   * output, and two more OLAP shapes (returned-items q10, shipmode q12).
   */
-object Queries5 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries5 extends QuerySet {
   private def raw(spark: SparkSession, dir: String): DataFrame =
     Synth.withRaw(Tables.events(spark, dir))
 

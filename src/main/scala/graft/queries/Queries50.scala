@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -21,9 +20,7 @@ import graft.Tables
   *    ONE conditional-aggregate pass over the stream; every feature is an
   *    exact integer so the extract is reproducible bit-for-bit.
   */
-object Queries50 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries50 extends QuerySet {
   private val DayUs = 86400000000L
 
   val defs: Map[String, Q] = Map(

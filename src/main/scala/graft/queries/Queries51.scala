@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -15,9 +14,7 @@ import graft.Tables
   *    the long-tail histogram behind `basket_rules`' support thresholds;
   *    two key-shrinking aggregations (events → baskets → histogram).
   */
-object Queries51 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries51 extends QuerySet {
   private val DayUs = 86400000000L
 
   val defs: Map[String, Q] = Map(

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -21,9 +21,7 @@ import graft.Tables
   *    relations reuse the exact operators they manifest (corpus_filter,
   *    corpus_pipeline), so the manifest cannot drift from the pipeline.
   */
-object Queries52 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries52 extends QuerySet {
   private val ChecksumMod = 1000000007L
 
   val defs: Map[String, Q] = Map(

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -32,9 +31,7 @@ import graft.Tables
   *    CENSORED, not churned — they end their interval but never fire the
   *    hazard numerator, exactly the distinction KM exists for.
   */
-object Queries53 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries53 extends QuerySet {
   private val DayUs = 86400000000L
 
   val defs: Map[String, Q] = Map(

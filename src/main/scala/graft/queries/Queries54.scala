@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -31,9 +31,7 @@ import graft.functions.TextF
   *    tiny day table. The deploy-aware cousin of `volume_anomaly`'s
   *    per-day rule: it finds WHEN the level shifted, not which days spike.
   */
-object Queries54 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries54 extends QuerySet {
   private val DayUs = 86400000000L
   private[graft] val CmsRows = 3
   private[graft] val CmsWidth = 512

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -28,9 +27,7 @@ import graft.functions.TextF
   *    labels × 2 × dims, never the vector count — the same
   *    partial-aggregate shape a streaming drift monitor ships.
   */
-object Queries55 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries55 extends QuerySet {
   /** "slow"/"big" occur in the synth vocabulary; "crash" never does. */
   private val Blocklist = Seq("slow", "big", "crash")
 

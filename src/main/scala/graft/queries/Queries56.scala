@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -22,9 +21,7 @@ import graft.Tables
   *    corpus-scale work), with the oracle composed from the SAME SQL so
   *    the two reports cannot disagree on a day.
   */
-object Queries56 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries56 extends QuerySet {
   /** (name, left table, left key, right table, right key) */
   private val Audited = Seq(
     ("customer_orders", "customer", "c_custkey", "orders", "o_custkey"),

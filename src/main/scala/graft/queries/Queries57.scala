@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -23,9 +23,7 @@ import graft.functions.TextF
   *    scan; the count-distinct columns become approx/KMV sketches
   *    (`distinct_kmv`) at the scale where exact distincts stop paying.
   */
-object Queries57 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries57 extends QuerySet {
   private val TopPairs = 30
 
   val defs: Map[String, Q] = Map(

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -23,9 +22,7 @@ import graft.Tables
   *    (`quantile_sketch` pattern); everything is integer/hash arithmetic,
   *    so even the "approximate" columns are oracle-exact.
   */
-object Queries58 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries58 extends QuerySet {
   import Queries28.{KmvK, kmvHashed, rollingHashSql}
 
   val defs: Map[String, Q] = Map(

@@ -1,10 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.queries.IntIdioms.nearestRankCum
 
 /** Round-8 continuation #31 — inter-event timing and term dispersion:
   *
@@ -25,9 +25,7 @@ import graft.Tables
   *    on BOTH engines, so the counts cannot drift from the vocabulary
   *    job that produced them.
   */
-object Queries59 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries59 extends QuerySet {
   private val DayUs = 86400000000L
 
   val defs: Map[String, Q] = Map(
@@ -46,10 +44,9 @@ object Queries59 {
         .withColumn("cum", sum("cnt").over(wCum))
         .crossJoin(broadcast(gaps.agg(count(lit(1)).as("n"),
           sum("gap_days").as("tot"))))
-      def pick(p: Int) =
-        min(when(col("cum") >= lit(1) + expr(s"($p * (n - 1)) div 100"), col("gap_days")))
       cum.groupBy("n", "tot")
-        .agg(pick(50).as("p50_days"), pick(90).as("p90_days"),
+        .agg(nearestRankCum(50, col("gap_days")).as("p50_days"),
+          nearestRankCum(90, col("gap_days")).as("p90_days"),
           max("gap_days").as("max_days"))
         .select(col("n").as("n_gaps"), col("p50_days"), col("p90_days"),
           col("max_days"), expr("tot * 1000 div n").as("mean_gap_milli_days"))

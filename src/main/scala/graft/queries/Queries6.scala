@@ -12,9 +12,7 @@ import graft.functions.{EventF, TextF}
   * band-collision candidate pairs (the step between signatures and
   * verification).
   */
-object Queries6 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries6 extends QuerySet {
   private[queries] def minhashSigs(sp: SparkSession, dir: String): DataFrame =
     minhashSigsOf(Tables.documents(sp, dir))
 

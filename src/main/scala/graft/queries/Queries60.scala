@@ -1,10 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.queries.IntIdioms.nearestRank
 
 /** Round-8 continuation #32 — the nearest-neighbor temporal join and
   * funnel step timing:
@@ -26,9 +26,7 @@ import graft.Tables
   *    per-user rows (one row per converting user — the
   *    `conversion_latency` scale shape, two steps wide).
   */
-object Queries60 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries60 extends QuerySet {
   private val HourUs = 3600000000L
   private val MinUs = 60000000L
 
@@ -87,10 +85,9 @@ object Queries60 {
       val ranked = steps
         .withColumn("rk", row_number().over(w))
         .withColumn("n", count(lit(1)).over(Window.partitionBy("step")))
-      def pick(p: Int) =
-        max(when(col("rk") === lit(1) + expr(s"($p * (n - 1)) div 100"), col("lat_min")))
       ranked.groupBy("step")
-        .agg(max("n").as("n_users"), pick(50).as("p50_min"), pick(90).as("p90_min"),
+        .agg(max("n").as("n_users"), nearestRank(50, col("lat_min")).as("p50_min"),
+          nearestRank(90, col("lat_min")).as("p90_min"),
           max("lat_min").as("max_min"))
         .orderBy("step")
     }

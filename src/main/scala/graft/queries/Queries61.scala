@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -24,9 +23,7 @@ import graft.functions.TextF
   *    TakeOrdered (`vocab_count`'s shape) and the curve itself is a
   *    3-row aggregate.
   */
-object Queries61 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries61 extends QuerySet {
   private val CoverageKs = Seq(8, 16, 32)
 
   val defs: Map[String, Q] = Map(

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -25,9 +24,7 @@ import graft.Tables
   *    operator. Boundary rows degrade to forward/backward fill, labeled
   *    per row.
   */
-object Queries62 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries62 extends QuerySet {
   private val DayUs = 86400000000L
 
   val defs: Map[String, Q] = Map(

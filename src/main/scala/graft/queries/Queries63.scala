@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -26,9 +25,7 @@ import graft.functions.TextF
   *    portable where `ln` is not; normalized to milli-bits per event.
   *    One (user, type) count + one (user) aggregate, both key-shrinking.
   */
-object Queries63 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries63 extends QuerySet {
   val defs: Map[String, Q] = Map(
     "shingle_compression" -> { (sp, dir) =>
       val planted = when(col("doc_id") % 17 === 4,

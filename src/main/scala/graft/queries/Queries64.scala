@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -25,9 +24,7 @@ import graft.Tables
   *    reproducible, order-independent sample for human QA, mergeable
   *    across partitions exactly like `sample_bottomk`.
   */
-object Queries64 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries64 extends QuerySet {
   private val ReviewK = 20
 
   val defs: Map[String, Q] = Map(

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -24,9 +23,7 @@ import graft.functions.TextF
   *    and rank movement; two key-shrinking aggregations + windows over
   *    the (type × week) table.
   */
-object Queries65 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries65 extends QuerySet {
   private val MaxAuditSize = 16
   private val WeekUs = 7L * 86400000000L
 

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -21,9 +20,7 @@ import graft.functions.TextF
   *    the open-row count; layered on `scd2_dim`'s oracle-checked interval
   *    table on BOTH engines (the oracle composes the same SQL).
   */
-object Queries66 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries66 extends QuerySet {
   private val DayUs = 86400000000L
 
   val defs: Map[String, Q] = Map(

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -26,9 +25,7 @@ import graft.functions.TextF
   *    excluded from the fill-rate denominator — it is legitimately
   *    partial.
   */
-object Queries67 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries67 extends QuerySet {
   private val Budget = 2048L
   private val BlockW = 3
 

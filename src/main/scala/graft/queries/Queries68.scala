@@ -1,10 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.queries.IntIdioms.nearestRankCum
 
 /** Round-8 continuation #40 — privacy ops and watermark sizing:
   *
@@ -30,9 +30,7 @@ import graft.Tables
   *    window. Percentiles run over the bounded value histogram of
   *    lateness minutes.
   */
-object Queries68 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries68 extends QuerySet {
   private val ErasureMod = 37
   private val ChunkSz = 1000L
   private val MinUs = 60000000L
@@ -83,10 +81,10 @@ object Queries68 {
         .withColumn("cum", sum("cnt").over(wCum))
         .crossJoin(broadcast(late.agg(count(lit(1)).as("n"),
           sum(when(col("late_min") >= 60, 1L).otherwise(0L)).as("n_over_1h"))))
-      def pick(p: Int) =
-        min(when(col("cum") >= lit(1) + expr(s"($p * (n - 1)) div 100"), col("late_min")))
       cum.groupBy("n", "n_over_1h")
-        .agg(pick(50).as("p50_min"), pick(95).as("p95_min"), pick(99).as("p99_min"),
+        .agg(nearestRankCum(50, col("late_min")).as("p50_min"),
+          nearestRankCum(95, col("late_min")).as("p95_min"),
+          nearestRankCum(99, col("late_min")).as("p99_min"),
           max("late_min").as("max_min"))
         .select(col("n").as("n_events"), col("p50_min"), col("p95_min"),
           col("p99_min"), col("max_min"),

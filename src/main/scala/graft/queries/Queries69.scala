@@ -1,11 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.TextF
+import graft.queries.IntIdioms.nearestRank
 
 /** Round-8 continuation #41 — distribution monitoring and near-dup diffs:
   *
@@ -23,9 +23,7 @@ import graft.functions.TextF
   *    remain. The triage report a reviewer reads before trusting a dedup
   *    threshold; all counts exact on both engines.
   */
-object Queries69 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries69 extends QuerySet {
   private val WeekUs = 7L * 86400000000L
 
   val defs: Map[String, Q] = Map(
@@ -38,10 +36,9 @@ object Queries69 {
       val ranked = base
         .withColumn("rk", row_number().over(w))
         .withColumn("n", count(lit(1)).over(wAll))
-      def pick(p: Int) =
-        max(when(col("rk") === lit(1) + expr(s"($p * (n - 1)) div 100"), col("cents")))
       val weekly = ranked.groupBy("event_type", "week")
-        .agg(max("n").as("n_events"), pick(50).as("p50_cents"), pick(95).as("p95_cents"))
+        .agg(max("n").as("n_events"), nearestRank(50, col("cents")).as("p50_cents"),
+          nearestRank(95, col("cents")).as("p95_cents"))
       val prev = weekly.select(col("event_type"), (col("week") + 1).as("week"),
         col("p50_cents").as("prev_p50_cents"), col("p95_cents").as("prev_p95_cents"))
       weekly.join(prev, Seq("event_type", "week"))

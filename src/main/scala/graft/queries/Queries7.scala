@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -8,9 +7,7 @@ import graft.Tables
 /** SURVEY §2 batch 7: pivot (wide conditional aggregation) and a
   * HAVING-filtered join aggregate (TPC-H q18 shape).
   */
-object Queries7 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries7 extends QuerySet {
   private val EventTypes = Seq("click", "error", "purchase", "signup", "view")
 
   val defs: Map[String, Q] = Map(

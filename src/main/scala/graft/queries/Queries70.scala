@@ -1,7 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -21,9 +19,7 @@ import graft.Tables
   *    beyond 24 h; one tiny aggregate, the ops check every ingest
   *    dashboard renders first.
   */
-object Queries70 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries70 extends QuerySet {
   private val FreshSlaMin = 1440L
 
   val defs: Map[String, Q] = Map(

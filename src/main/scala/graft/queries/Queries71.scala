@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -29,9 +28,7 @@ import graft.functions.TextF
   *    a shard at this corpus size). One fingerprint aggregation carrying
   *    (fp → n, n_shards, dups).
   */
-object Queries71 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries71 extends QuerySet {
   private val NShards = 8
   private[queries] val GlobalBoiler =
     "mirrored press release syndicated to every shard of the crawl"

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -25,9 +24,7 @@ import graft.Tables
   *    `interval_concurrency`'s open set; one per-order aggregation,
   *    3-row output.
   */
-object Queries72 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries72 extends QuerySet {
   private val Ks = Seq(8, 16, 32, 64)
   private val DayUs = 86400000000L
 

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -18,9 +18,7 @@ import graft.Tables
   *    (metric, value) shape is deliberately union-friendly: adding a
   *    panel is one more single-row relation.
   */
-object Queries73 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries73 extends QuerySet {
   val defs: Map[String, Q] = Map(
     "ops_dashboard" -> { (sp, dir) =>
       def row(name: String, df: DataFrame, valueCol: String) =

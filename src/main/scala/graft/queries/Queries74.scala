@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -22,9 +21,7 @@ import graft.functions.TextF
   *    measurement behind `activity_concentration`'s Gini, in the
   *    warehouse's own currency.
   */
-object Queries74 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries74 extends QuerySet {
   val defs: Map[String, Q] = Map(
     "ngram_inventory" -> { (sp, dir) =>
       val docs = Tables.documents(sp, dir)

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -18,9 +17,7 @@ import graft.Tables
   *    per-conversion credit conservation (≤ 1000 milli, the div
   *    remainder) spec'd like its siblings.
   */
-object Queries75 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries75 extends QuerySet {
   private val TouchWindowUs = 7L * 86400000000L
   private val DayUs = 86400000000L
 

@@ -1,7 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -21,9 +19,7 @@ import graft.Tables
   *    uses cents div quantity (TPC-H quantities are integral), one
   *    (part) aggregation.
   */
-object Queries76 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries76 extends QuerySet {
   private val TopK = 20
 
   val defs: Map[String, Q] = Map(

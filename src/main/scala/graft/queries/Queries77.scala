@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -20,9 +19,7 @@ import graft.Tables
   *    milli per ship month) — the quality-of-revenue trend line behind
   *    `q10_returned`'s per-customer ranking; one (month, flag) rollup.
   */
-object Queries77 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries77 extends QuerySet {
   private val DayUs = 86400000000L
 
   val defs: Map[String, Q] = Map(

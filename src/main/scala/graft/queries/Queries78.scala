@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -24,9 +23,7 @@ import graft.functions.TextF
   *    past the cap, and the saved-pair-mass column measurably fires.
   *    One (shingle) count, then a bounded-bucket rollup.
   */
-object Queries78 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries78 extends QuerySet {
   private val DfCap = 64L
   private[queries] val FooterPlant = "subscribe to the weekly digest newsletter"
 

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -23,9 +22,7 @@ import graft.Tables
   *    excluded BY CONSTRUCTION on both engines, so the oracle stays
   *    exact.
   */
-object Queries79 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries79 extends QuerySet {
   private val DayUs = 86400000000L
 
   val defs: Map[String, Q] = Map(

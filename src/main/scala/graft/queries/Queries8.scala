@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -14,9 +14,7 @@ import graft.sources.ThriftPayload.CollectorPayloadT
   * (`adapters/registry/snowplow/`), and Iglu-style schema validation with
   * typed bad rows (`utils/IgluUtils.scala:42`).
   */
-object Queries8 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries8 extends QuerySet {
   private val CollectorSchema =
     "iglu:com.snowplowanalytics.snowplow/CollectorPayload/thrift/1-0-0"
 

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -20,9 +19,7 @@ import graft.Tables
   *    are worth proportionally more, the revenue overlay on
   *    `order_width_hist`'s cost model; two key-shrinking aggregations.
   */
-object Queries80 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries80 extends QuerySet {
   val defs: Map[String, Q] = Map(
     "transition_entropy" -> { (sp, dir) =>
       val trans = Queries20.defs("markov_transitions")(sp, dir)

@@ -1,10 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.functions.TextF
+import graft.queries.IntIdioms.tdivSql
 
 /** Round-9 batch #1 — calibration & audit operators:
   *
@@ -41,18 +40,7 @@ import graft.functions.TextF
   *    curve for the banded search (reuses the pair set by composition on
   *    both engines).
   */
-object Queries81 {
-  type Q = (SparkSession, String) => DataFrame
-
-  /** Sign-split integer division: truncation toward zero on both engines
-    * (Spark `div` truncates, DuckDB `//` floors — they agree only on
-    * non-negative operands, so split the sign out first). */
-  private def tdiv(num: String, den: String): String =
-    s"CASE WHEN $num >= 0 THEN $num div $den ELSE -((-($num)) div $den) END"
-
-  private def tdivSql(num: String, den: String): String =
-    s"CASE WHEN $num >= 0 THEN CAST($num // $den AS BIGINT) ELSE CAST(-((-($num)) // $den) AS BIGINT) END"
-
+object Queries81 extends QuerySet {
   private[graft] val CanaryEvery = 13
   private[graft] val CanaryMod = 7
   private[graft] val CanaryKinds = 5
@@ -70,12 +58,11 @@ object Queries81 {
         .agg(count(lit(1)).as("n"), sum("x").as("sx"), sum("y").as("sy"),
           sum(col("x") * col("y")).as("sxy"), sum(col("x") * col("x")).as("sxx"))
         .select(col("l_returnflag"), col("n"),
-          expr(tdiv("(n * sxy - sx * sy) * 1000", "(n * sxx - sx * sx)"))
+          expr("(n * sxy - sx * sy) * 1000 div (n * sxx - sx * sx)")
             .as("slope_milli"),
           // intercept back-solves from the same exact moments:
           // ȳ − slope·x̄, all in milli
-          expr(tdiv("(sy * 1000 - " +
-            tdiv("(n * sxy - sx * sy) * 1000", "(n * sxx - sx * sx)") + " * sx)", "n"))
+          expr("(sy * 1000 - (n * sxy - sx * sy) * 1000 div (n * sxx - sx * sx) * sx) div n")
             .as("intercept_milli"))
         .orderBy("l_returnflag")
     },

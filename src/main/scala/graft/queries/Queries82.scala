@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -31,9 +30,7 @@ import graft.Tables
   *    (ANN poison) surface as low buckets; one narrow projection + one
   *    tiny aggregation.
   */
-object Queries82 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries82 extends QuerySet {
   private[graft] val GapsSeconds = Seq(300L, 900L, 1800L, 3600L)
   private[graft] val CosThresholdsE6 = Seq(950000L, 960000L, 980000L)
 

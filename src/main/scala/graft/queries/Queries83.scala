@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -35,9 +34,7 @@ import graft.Tables
   *    re-posts). Pair set computed once; two broadcast-able dimension
   *    joins on doc_id.
   */
-object Queries83 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries83 extends QuerySet {
   /** agg_delta_maintain cutoff: orders strictly before 1996 are "base",
     * the rest are the delta batch (shared with the oracle). */
   private[graft] val DeltaCutoffYear = 1996

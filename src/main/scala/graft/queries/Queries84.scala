@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -28,9 +27,7 @@ import graft.Tables
   *    Exact distinct per group next to the k flag; same grouping
   *    spelling as `k_anonymity` so the two gates compose row-for-row.
   */
-object Queries84 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries84 extends QuerySet {
   private[graft] val ReplayEvery = 17
   private[graft] val LDiv = 3
 

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -22,9 +21,7 @@ import graft.Tables
   *    UA-substring + bot-IP classification) — the monitoring read that
   *    sizes how much of "growth" is crawlers; exact milli.
   */
-object Queries85 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries85 extends QuerySet {
   val defs: Map[String, Q] = Map(
     "revenue_by_geo" -> { (sp, dir) =>
       PipelineQuery.run(sp, dir)

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -31,9 +30,7 @@ import graft.operators.KMeans
   *    division. The per-doc quality signal sits between the length
   *    heuristics and the trained classifier.
   */
-object Queries86 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries86 extends QuerySet {
   private[graft] val AudioWindow = 64
   private[graft] val SilenceBelow = 518400L // 64 samples at amplitude 90
   private[graft] val RecallProbeQueries = 5

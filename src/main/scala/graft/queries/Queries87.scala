@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -23,9 +23,7 @@ import graft.functions.TextF
   *    compressibility/repetitiveness one-number read of the corpus. Two
   *    map-side-combined count shuffles; corpus text never shuffles.
   */
-object Queries87 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries87 extends QuerySet {
   private[graft] val CodeEvery = 23
   private[graft] val CodeMod = 3
   private[graft] val CodeSnippet = " def f(x){ return x[0]+1; } // inline helper"

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -19,9 +18,7 @@ import graft.functions.TextF
   *    crawl-frontier / domain-reputation table; one regexp projection +
   *    one key-shrinking aggregation.
   */
-object Queries88 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries88 extends QuerySet {
   /** (term, severity-weight) — "crash" never occurs organically, the other
     * two do (same universe claim as blocklist_filter). */
   private[graft] val Severity = Seq("slow" -> 1L, "big" -> 2L, "crash" -> 5L)

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -20,9 +19,7 @@ import graft.Tables
   *    needs; the wide aggregate is computed once, the melt is a narrow
   *    in-row expansion (3 rows per day, no second scan of events).
   */
-object Queries89 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries89 extends QuerySet {
   val defs: Map[String, Q] = Map(
     "grouping_sets_report" -> { (sp, dir) =>
       val o = Tables.orders(sp, dir)

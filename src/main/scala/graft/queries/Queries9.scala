@@ -14,9 +14,7 @@ import graft.adapters.{Adapters, IgluQsAdapter, Tp1Adapter}
   * construction, each oracle states the expected output directly — any
   * decode/parse/mapping bug in the adapter shows up as a value mismatch.
   */
-object Queries9 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries9 extends QuerySet {
   private def ev(sp: SparkSession, dir: String): DataFrame =
     // fan the id projection out BEFORE the payload-decode chain: the synth
     // webhook queries are CPU-bound (regexp + url_decode + from_json) over

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -18,9 +17,7 @@ import graft.Tables
   *    event-day. Two key-shrinking aggregations off one scan — the
   *    revision report never re-reads history.
   */
-object Queries90 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries90 extends QuerySet {
   private[graft] val LateThresholdMs = 3000L
 
   val defs: Map[String, Q] = Map(

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -27,9 +27,7 @@ import graft.Tables
   *    at most 64 rows per type survive the combiner per partition;
   *    the key universe never shuffles.
   */
-object Queries91 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries91 extends QuerySet {
   private[graft] val HllP = 6
   private[graft] val HllM = 1 << HllP // 64 registers
   private[graft] val HllHashBits = 60 // 15 md5 nibbles

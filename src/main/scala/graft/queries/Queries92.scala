@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -16,9 +15,7 @@ import org.apache.spark.sql.expressions.Window
   *    the whole query is one exchange end-to-end. Output: sessions at
   *    each funnel depth + exact basis-point conversion.
   */
-object Queries92 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries92 extends QuerySet {
   private val GapUs = 30L * 60 * 1000 * 1000
 
   val defs: Map[String, Q] = Map(

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -20,9 +19,7 @@ import graft.Tables
   *    this k/m, how wrong": signed per-mille errors via positive-operand
   *    division only.
   */
-object Queries93 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries93 extends QuerySet {
   private[graft] val Ps = Seq(4, 5, 6)
   val defs: Map[String, Q] = Map(
     "hll_size_tradeoff" -> { (sp, dir) =>

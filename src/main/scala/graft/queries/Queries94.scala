@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextF
@@ -18,9 +17,7 @@ import graft.functions.TextF
   *    The n/m sizing decision this table drives is the whole reason a
   *    100 TB dedup gate ships a Bloom filter at all.
   */
-object Queries94 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries94 extends QuerySet {
   private[graft] val Widths = Seq(512, 1024, 4096)
 
   val defs: Map[String, Q] = Map(

@@ -1,9 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.queries.IntIdioms.{revE4, RevE4Sql}
 
 /** Round-9 batch #15 — warehouse trade structure, traffic shape, and the
   * embedding-column health profile:
@@ -34,14 +34,9 @@ import graft.Tables
   *    cosine ANN — surface directly. One narrow posexplode + a 64-group
   *    map-side-combined aggregation, no shuffle of the vectors themselves.
   */
-object Queries95 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries95 extends QuerySet {
   private val DayUs = 86400000000L
   private val HourUs = 3600000000L
-
-  private def cents(c: Column) = round(c * 100).cast("bigint")
-  private def revE4(ep: Column, disc: Column) = cents(ep) * (lit(100L) - cents(disc))
 
   val defs: Map[String, Q] = Map(
     "trade_flow_matrix" -> { (sp, dir) =>
@@ -102,14 +97,11 @@ object Queries95 {
     }
   )
 
-  private val revE4Sql =
-    "CAST(round(l_extendedprice * 100) AS BIGINT) * (100 - CAST(round(l_discount * 100) AS BIGINT))"
-
   val oracles: Map[String, String] = Map(
     "trade_flow_matrix" ->
       s"""WITH flows AS (
          |  SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-         |    CAST(sum($revE4Sql) AS BIGINT) AS revenue_e4,
+         |    CAST(sum($RevE4Sql) AS BIGINT) AS revenue_e4,
          |    CAST(count(*) AS BIGINT) AS n_items
          |  FROM lineitem
          |  JOIN orders ON l_orderkey = o_orderkey

@@ -1,11 +1,12 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.TextF
+import graft.queries.IntIdioms.{revE4, RevE4Sql}
 
 /** Round-9 batch #16 — lifecycle dynamics, supplier operations, cohort
   * economics, and the DSIR sampling *materialization*:
@@ -40,14 +41,9 @@ import graft.functions.TextF
   *    a DSIR paper actually trains on). Narrow per-doc projection;
   *    selectivity is data-dependent but the plan is one scan.
   */
-object Queries96 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries96 extends QuerySet {
   private val DayUs = 86400000000L
   private val WeekUs = 7L * DayUs
-
-  private def cents(c: Column) = round(c * 100).cast("bigint")
-  private def revE4(ep: Column, disc: Column) = cents(ep) * (lit(100L) - cents(disc))
 
   /** 3-digit RFM code via quintile ntiles inside one `half` partition. */
   private def rfmInHalf(p: DataFrame): DataFrame = {
@@ -170,9 +166,6 @@ object Queries96 {
     }
   )
 
-  private val revE4Sql =
-    "CAST(round(l_extendedprice * 100) AS BIGINT) * (100 - CAST(round(l_discount * 100) AS BIGINT))"
-
   val oracles: Map[String, String] = Map(
     "segment_migration" ->
       s"""WITH p AS (
@@ -215,7 +208,7 @@ object Queries96 {
     "supplier_scorecard" ->
       s"""WITH per AS (
          |  SELECT l_suppkey,
-         |    CAST(sum($revE4Sql) AS BIGINT) AS revenue_e4,
+         |    CAST(sum($RevE4Sql) AS BIGINT) AS revenue_e4,
          |    CAST(count(*) AS BIGINT) AS n_items,
          |    CAST(count(DISTINCT l_orderkey) AS BIGINT) AS n_orders,
          |    CAST(count(DISTINCT l_partkey) AS BIGINT) AS n_parts,

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -36,9 +35,7 @@ import graft.Tables
   *    rate in exact milli. The table a growth team reads next to the raw
   *    path counts.
   */
-object Queries97 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries97 extends QuerySet {
   private val GapUs = 30L * 60 * 1000 * 1000
   private val Steps = 16
   private val Start = -2L

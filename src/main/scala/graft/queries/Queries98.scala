@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -26,9 +25,7 @@ import graft.functions.TextF
   *    window over the full term table); the rank window runs over ≤ K
   *    rows.
   */
-object Queries98 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries98 extends QuerySet {
   private val TopV = 100
 
   val defs: Map[String, Q] = Map(

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -22,9 +21,7 @@ import graft.functions.LayoutF
   * aggregation, no self-joins); block counts are ≤ 64 per layout by
   * construction.
   */
-object Queries99 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Queries99 extends QuerySet {
   private val ZBits = 8
   private val TopBits = 3
   private val NBlocks = 64L

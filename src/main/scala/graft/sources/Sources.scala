@@ -29,14 +29,17 @@ object Sources {
 
   /** Parse collector TSV lines into typed raw-event columns. Works on any
     * DataFrame with a string column (batch or streaming). */
-  def parseCollectorTsv(lines: DataFrame, lineCol: String = "value"): DataFrame = {
-    val parts = split(col(lineCol), "\t")
-    val cols = CollectorTsvFields.zipWithIndex.map { case ((name, typ), i) =>
-      // try_cast: a malformed line's garbage timestamp must become a
-      // null-field row under ANSI, never a job-killing cast error
+  def parseCollectorTsv(lines: DataFrame, lineCol: String = "value"): DataFrame =
+    lines.select(collectorTsvCols(col(lineCol)): _*)
+
+  /** The [[CollectorTsvFields]] of a TSV line column, typed. try_cast: a
+    * malformed line's garbage timestamp must become a null field under
+    * ANSI, never a job-killing cast error. */
+  private def collectorTsvCols(line: Column): Seq[Column] = {
+    val parts = split(line, "\t")
+    CollectorTsvFields.zipWithIndex.map { case ((name, typ), i) =>
       try_element_at(parts, lit(i + 1)).try_cast(typ).as(name)
     }
-    lines.select(cols: _*)
   }
 
   /** [[parseCollectorTsv]] plus the reference's LOADER failure channel
@@ -51,11 +54,7 @@ object Sources {
     etlTstampUs: Column,
     lineCol: String = "value"
   ): (DataFrame, DataFrame) = {
-    val parts = split(col(lineCol), "\t")
-    val cols = CollectorTsvFields.zipWithIndex.map { case ((name, typ), i) =>
-      try_element_at(parts, lit(i + 1)).try_cast(typ).as(name)
-    }
-    val withParsed = lines.select(col(lineCol).as("_line") +: cols: _*)
+    val withParsed = lines.select(col(lineCol).as("_line") +: collectorTsvCols(col(lineCol)): _*)
     val bad = withParsed.filter(col(CollectorTsvFields.head._1).isNull)
       .select(
         col("_line").as("line"),

@@ -3,26 +3,21 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.enrich.EnrichmentPipeline
-
 /** Streaming entry points — the Spark twin of the reference's streaming apps
   * (snowplow/enrich `modules/kinesis|kafka|nsq|pubsub`: source → enrich →
   * sink with at-least-once delivery).
   *
   * Because every graft enrichment is a declarative column transform, the
-  * *same* [[EnrichmentPipeline]] instance runs unchanged on a streaming
+  * *same* [[graft.enrich.EnrichmentPipeline]] instance runs unchanged on a streaming
   * DataFrame — Structured Streaming provides incremental execution,
   * checkpointed offsets (at-least-once, like the reference's Kinesis
   * checkpointing) and watermark-based state eviction. Enrichment adds no
   * state at all (narrow transforms), so streaming enrichment scales exactly
-  * like the batch scan: partition-parallel, no shuffle.
+  * like the batch scan: partition-parallel, no shuffle. Stream enrichment
+  * is `pipeline.run(stream)` and its bad rows `pipeline.badRowsJson(...)`;
+  * this object holds the stream-only aggregates.
   */
 object EnrichStream {
-
-  /** Enrich a (possibly streaming) raw-event DataFrame. Identical code path
-    * to batch — this is the whole point of the declarative design. */
-  def enrich(raw: DataFrame, pipeline: EnrichmentPipeline): DataFrame =
-    pipeline.run(raw)
 
   /** Watermarked tumbling-window counts by key (the streaming twin of the
     * `windowed_agg` batch query). `tsUsCol` is epoch micros. */
@@ -40,28 +35,4 @@ object EnrichStream {
       // try_cast: one NaN/overflow value in a long-running stream must not
       // kill the query under ANSI — it nulls out of the sum instead
       .agg(count(lit(1)).as("cnt"), sum(round(col("value") * 100).try_cast("bigint")).as("sum_value_cents"))
-
-  /** The failed-events side of a streaming enrichment, serialized to the
-    * reference's self-describing bad-row envelope (see
-    * [[graft.enrich.BadRows]]) — the streaming twin of
-    * `EnrichmentPipeline.badRowsJson`. Split + serialization are stateless
-    * narrow transforms, so the same code path runs under Structured
-    * Streaming unchanged: wire the result to [[toParquet]] (or any sink)
-    * for the reference's bad stream. `etlTstampUs` is the batch/app etl
-    * timestamp column (e.g. `lit(startUs)` or a per-event ingest time). */
-  def badRows(
-    raw: DataFrame,
-    pipeline: EnrichmentPipeline,
-    payloadCols: Seq[String],
-    etlTstampUs: org.apache.spark.sql.Column
-  ): DataFrame =
-    pipeline.badRowsJson(raw, payloadCols, etlTstampUs)
-
-  /** Enriched-stream sink helper: parquet with checkpointing. */
-  def toParquet(enriched: DataFrame, path: String, checkpoint: String) =
-    enriched.writeStream
-      .format("parquet")
-      .option("path", path)
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
 }

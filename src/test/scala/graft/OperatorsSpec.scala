@@ -85,6 +85,19 @@ class OperatorsSpec extends SparkSpec {
       10L -> 10L, 11L -> 10L, 20L -> 20L, 21L -> 20L, 22L -> 20L, 23L -> 20L))
   }
 
+  test("ConnectedComponents.run leaves a caller's cached pair set cached") {
+    import spark.implicits._
+    import graft.operators.ConnectedComponents
+    val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("id_a", "id_b").cache()
+    try {
+      pairs.count()
+      val out = ConnectedComponents.run(pairs.select(col("id_a").as("src"), col("id_b").as("dst")))
+      assert(out.count() == 5)
+      assert(pairs.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+        "run must not unpersist a cache it did not create")
+    } finally pairs.unpersist()
+  }
+
   test("ConnectedComponents: local union-find path == distributed round loop") {
     import spark.implicits._
     import graft.operators.ConnectedComponents

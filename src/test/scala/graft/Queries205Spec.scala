@@ -48,4 +48,16 @@ class Queries205Spec extends SparkSpec {
       assert(r.getAs[Long]("density_pm") <= 1000)
     }
   }
+
+  test("cluster_candidate_precision: the returned plan reads the cached verified pairs") {
+    val df = SparkEntry.queries("cluster_candidate_precision")(spark, dir)
+    // the shingle self-join (PairEngine.shared, keyed on the shingle `s`)
+    // runs once, into the cached pair set; the plan must not redo it
+    val shingleJoins = df.queryExecution.optimizedPlan.collect {
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join
+          if j.condition.exists(_.references.exists(_.name == "s")) => j
+    }
+    assert(shingleJoins.isEmpty, df.queryExecution.optimizedPlan.treeString)
+    assert(df.count() > 0)
+  }
 }

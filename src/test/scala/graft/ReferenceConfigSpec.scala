@@ -26,6 +26,55 @@ class ReferenceConfigSpec extends SparkSpec {
       |     "bypassPlatforms": ["srv"],
       |     "botAsnsFile": {"database": "bad-asn-list.csv", "uri": "http://assets.example.com/asn"}}}}""".stripMargin
 
+  /** The reference's `ip_lookups` config: one MaxMind city database. */
+  private val IpLookupsCfg =
+    """{"schema": "iglu:com.snowplowanalytics.snowplow/ip_lookups/jsonschema/2-0-0",
+      | "data": {"name": "ip_lookups", "vendor": "com.snowplowanalytics.snowplow",
+      |   "enabled": true, "parameters": {
+      |     "geo": {"database": "GeoLite2-City.mmdb", "uri": "http://assets.example.com/maxmind"}}}}""".stripMargin
+
+  /** The reference's `currency_conversion_config`, shipped disabled. */
+  private val CurrencyCfg =
+    """{"schema": "iglu:com.snowplowanalytics.snowplow/currency_conversion_config/jsonschema/1-0-0",
+      | "data": {"name": "currency_conversion_config", "vendor": "com.snowplowanalytics.snowplow",
+      |   "enabled": false, "parameters": {
+      |     "accountType": "DEVELOPER", "apiKey": "{{KEY}}",
+      |     "baseCurrency": "USD", "rateAt": "EOD_PRIOR"}}}""".stripMargin
+
+  /** The reference's `weather_enrichment_config`, shipped disabled. */
+  private val WeatherCfg =
+    """{"schema": "iglu:com.snowplowanalytics.snowplow.enrichments/weather_enrichment_config/jsonschema/1-0-0",
+      | "data": {"name": "weather_enrichment_config", "vendor": "com.snowplowanalytics.snowplow.enrichments",
+      |   "enabled": false, "parameters": {
+      |     "apiKey": "{{KEY}}", "cacheSize": 5100, "geoPrecision": 1,
+      |     "apiHost": "history.openweathermap.org", "timeout": 5}}}""".stripMargin
+
+  /** The reference's sample JavaScript enrichment: server-side events must
+    * carry the app id `secret`, and the script returns one context with the
+    * upper-cased app id. */
+  private val SampleJs =
+    """function process(event) {
+      |  var appId = event.getApp_id();
+      |  var platform = event.getPlatform();
+      |  if (platform == "server" && appId != "secret") {
+      |    throw "Server-side event has invalid app_id: " + appId;
+      |  }
+      |  if (appId == null) {
+      |    return [];
+      |  }
+      |  var appIdUpper = appId.toUpperCase();
+      |  return [ { schema: "iglu:com.acme/foo/jsonschema/1-0-0",
+      |             data:  { appIdUpper: appIdUpper } } ];
+      |}""".stripMargin
+
+  /** The reference's `javascript_script_config`, shipped disabled, with the
+    * script base64url-encoded in `parameters.script`. */
+  private val JsCfg =
+    s"""{"schema": "iglu:com.snowplowanalytics.snowplow/javascript_script_config/jsonschema/1-0-0",
+       | "data": {"name": "javascript_script_config", "vendor": "com.snowplowanalytics.snowplow",
+       |   "enabled": false, "parameters": {"script": "$SampleJsB64"}}}""".stripMargin
+  private def SampleJsB64 = java.util.Base64.getUrlEncoder.encodeToString(SampleJs.getBytes("UTF-8"))
+
   private def allConfigs: Seq[String] =
     Files.list(dir).iterator().asScala.toSeq
       .filter(_.toString.endsWith(".json")).sortBy(_.toString)
@@ -68,7 +117,6 @@ class ReferenceConfigSpec extends SparkSpec {
   }
 
   test("ip_lookups/currency constructs LIVE when ranges/rates dims are injected") {
-    assume(Files.isDirectory(dir))
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("cfg-dims")
     val geoPath = tmp.resolve("geo").toString
@@ -78,11 +126,9 @@ class ReferenceConfigSpec extends SparkSpec {
     Seq(("EUR", 1100000L), ("USD", 1000000L))
       .toDF("cur", "rate_micro").write.parquet(ratesPath)
 
-    val ipCfg = new String(Files.readAllBytes(dir.resolve("ip_lookups.json")), "UTF-8")
-    val curCfg = new String(Files.readAllBytes(dir.resolve("currency_conversion_config.json")), "UTF-8")
-      .replace("\"enabled\": false", "\"enabled\": true")
+    val curCfg = CurrencyCfg.replace("\"enabled\": false", "\"enabled\": true")
     val (pipe, skipped) = EnrichmentConfig.fromReferenceConfigs(
-      Seq(ipCfg, curCfg),
+      Seq(IpLookupsCfg, curCfg),
       geoDims = Map("GeoLite2-City.mmdb" -> geoPath),
       ratesDims = Map("USD" -> ratesPath))
     assert(pipe.enrichments.map(_.name).toSet == Set("ip_geo_lookup", "currency_conversion"))
@@ -121,14 +167,12 @@ class ReferenceConfigSpec extends SparkSpec {
   }
 
   test("weather config constructs an as-of join over an injected observations dim") {
-    assume(Files.isDirectory(dir))
     import spark.implicits._
     val obsPath = java.nio.file.Files.createTempDirectory("cfg-weather").resolve("obs").toString
     // one grid cell (52.0, 13.0) at geoPrecision 1, two observations
     Seq((52.0, 13.0, 1000L, 18.5, "clear"), (52.0, 13.0, 5000L, 21.0, "clouds"))
       .toDF("lat_r", "lon_r", "obs_ts_us", "temp_c", "conditions").write.parquet(obsPath)
-    val cfg = new String(Files.readAllBytes(dir.resolve("weather_enrichment_config.json")), "UTF-8")
-      .replace("\"enabled\": false", "\"enabled\": true")
+    val cfg = WeatherCfg.replace("\"enabled\": false", "\"enabled\": true")
     // no injection → named skip; injected → live pipeline
     val (_, s0) = EnrichmentConfig.fromReferenceConfigs(Seq(cfg))
     assert(s0.exists { case (n, r) => n == "weather_enrichment_config" && r.contains("weatherDims") })
@@ -192,11 +236,9 @@ class ReferenceConfigSpec extends SparkSpec {
   }
 
   test("the reference's embedded sample JS script runs with reference semantics") {
-    assume(Files.isDirectory(dir))
     import spark.implicits._
     // force-enable the javascript config so it maps, then run its script
-    val raw = new String(Files.readAllBytes(dir.resolve("javascript_script_enrichment.json")), "UTF-8")
-    val enabled = raw.replace("\"enabled\": false", "\"enabled\": true")
+    val enabled = JsCfg.replace("\"enabled\": false", "\"enabled\": true")
     val (pipeline, _) = EnrichmentConfig.fromReferenceConfigs(Seq(enabled))
     assert(pipeline.enrichments.map(_.name) == Seq("js_transform"))
     val df = Seq(

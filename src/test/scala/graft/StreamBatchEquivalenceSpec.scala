@@ -90,10 +90,8 @@ class StreamBatchEquivalenceSpec extends SparkSpec {
       graft.queries.Synth.withRaw(ev.toSeq.toDF("event_id", "user_id", "event_type", "value", "props", "ts_us")))
 
     val mem = MemoryStream[(Long, Long, String, Double, String, Long)]
-    val enriched = graft.streaming.EnrichStream.enrich(
-      graft.queries.Synth.withRaw(
-        mem.toDF().toDF("event_id", "user_id", "event_type", "value", "props", "ts_us")),
-      pipeline)
+    val enriched = pipeline.run(graft.queries.Synth.withRaw(
+      mem.toDF().toDF("event_id", "user_id", "event_type", "value", "props", "ts_us")))
     val q = enriched.writeStream.format("memory").queryName("sbe_enrich")
       .outputMode("append").start()
     try {
@@ -132,8 +130,8 @@ class StreamBatchEquivalenceSpec extends SparkSpec {
       .select("id", "bad_row").collect().map(_.toString).sorted.toSeq
 
     val mem = MemoryStream[(Long, String)]
-    val bad = graft.streaming.EnrichStream.badRows(
-      prep(mem.toDF().toDF("id", "event_code")), pipeline, Seq("id", "event_code"), etl)
+    val bad = pipeline.badRowsJson(
+      prep(mem.toDF().toDF("id", "event_code")), Seq("id", "event_code"), etl)
       .select("id", "bad_row")
     val q = bad.writeStream.format("memory").queryName("sbe_badrows")
       .outputMode("append").start()

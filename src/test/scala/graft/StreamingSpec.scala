@@ -123,7 +123,7 @@ class StreamingSpec extends SparkSpec {
     val raw = graft.queries.Synth.withRaw(
       mem.toDF().toDF("event_id", "user_id", "event_type", "value", "props")
         .withColumn("ts_us", lit(1704067200000000L) + col("event_id") * 1000000L))
-    val enriched = EnrichStream.enrich(raw, PipelineNoJoins.pipeline)
+    val enriched = PipelineNoJoins.pipeline.run(raw)
     val q = enriched.select("event_id", "event", "platform", "br_family", "refr_medium",
         "dvce_type", "user_ipaddress")
       .writeStream.format("memory").queryName("enr").outputMode("append").start()
