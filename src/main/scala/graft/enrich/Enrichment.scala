@@ -1,5 +1,7 @@
 package graft.enrich
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.PlanBridge
@@ -17,6 +19,11 @@ import graft.operators.RangeJoin
   * whole chain scan-pipelines over 100 TB. Lookup enrichments (geo,
   * currency) are joins against broadcast dimension tables instead of
   * per-record RPC + LRU cache.
+  *
+  * A stage that derives several columns from its input adds them in ONE
+  * `withColumns` over an insertion-ordered `ListMap`: one analyzed
+  * projection per stage instead of one per column, with the same column
+  * order and in-place replacement as the `withColumn` chain it spells.
   *
   * Validation failures never kill the job: enrichments append STRUCTURED
   * failure entities to the `bad_row_errors` array column — the Spark twin
@@ -83,12 +90,13 @@ final case class TrackerTransform(
 ) extends Enrichment {
   val name = "tracker_transform"
   def apply(df: DataFrame): DataFrame = {
-    val out = df
-      .withColumn("event", EventF.eventTypeFromCode(col(eventCodeCol)))
-      .withColumn("platform", EventF.platformValidate(col(platformCol)))
-      .withColumn("dvce_screenwidth", EventF.resWidth(col(resCol)))
-      .withColumn("dvce_screenheight", EventF.resHeight(col(resCol)))
-      .withColumn("user_ipaddress", IpF.firstForwardedIp(col(xffCol)))
+    val out = df.withColumns(ListMap(
+      "event" -> EventF.eventTypeFromCode(col(eventCodeCol)),
+      "platform" -> EventF.platformValidate(col(platformCol)),
+      "dvce_screenwidth" -> EventF.resWidth(col(resCol)),
+      "dvce_screenheight" -> EventF.resHeight(col(resCol)),
+      "user_ipaddress" -> IpF.firstForwardedIp(col(xffCol))))
+    // the flags read the derived event/platform, so they stay a second step
     val bad1 = flagBad(out, col(eventCodeCol).isNotNull && col("event").isNull, "unknown event code")
     flagBad(bad1, col(platformCol).isNotNull && col("platform").isNull, "invalid platform")
   }
@@ -123,12 +131,9 @@ final case class PageUrlParse(urlCol: String = "page_url") extends Enrichment {
   val name = "page_url_parse"
   def apply(df: DataFrame): DataFrame = {
     val p = UrlF.urlParsed(col(urlCol))
-    df.withColumn("page_urlscheme", p.getField("scheme"))
-      .withColumn("page_urlhost", p.getField("host"))
-      .withColumn("page_urlport", p.getField("port"))
-      .withColumn("page_urlpath", p.getField("path"))
-      .withColumn("page_urlquery", p.getField("query"))
-      .withColumn("page_urlfragment", p.getField("fragment"))
+    df.withColumns(ListMap(
+      Seq("scheme", "host", "port", "path", "query", "fragment")
+        .map(f => s"page_url$f" -> p.getField(f)): _*))
   }
 }
 
@@ -154,13 +159,9 @@ final case class CampaignAttribution(
     val fused = UrlF.campaignParsed(UrlF.urlQuery(col(urlCol)),
       UrlF.CampaignCfg(mediumParams, sourceParams, termParams,
         contentParams, campaignParams, clickIdNetworks))
-    df.withColumn("mkt_medium", fused.getField("medium"))
-      .withColumn("mkt_source", fused.getField("source"))
-      .withColumn("mkt_term", fused.getField("term"))
-      .withColumn("mkt_content", fused.getField("content"))
-      .withColumn("mkt_campaign", fused.getField("campaign"))
-      .withColumn("mkt_clickid", fused.getField("clickid"))
-      .withColumn("mkt_network", fused.getField("network"))
+    df.withColumns(ListMap(
+      graft.plans.CampaignAttributionExpression.Schema.fieldNames.toSeq
+        .map(f => s"mkt_$f" -> fused.getField(f)): _*))
   }
 }
 
@@ -177,25 +178,26 @@ final case class RefererParser(
     // evaluation, and the pageHost child shares PageUrlParse's parse
     val fused = RefF.refererParsed(
       col(refrCol), UrlF.urlHost(col(pageCol)), internalDomains)
-    df.withColumn("refr_urlhost", fused.getField("host"))
-      .withColumn("refr_medium", fused.getField("medium"))
-      .withColumn("refr_source", fused.getField("source"))
-      .withColumn("refr_term", fused.getField("term"))
+    df.withColumns(ListMap(
+      "refr_urlhost" -> fused.getField("host"),
+      "refr_medium" -> fused.getField("medium"),
+      "refr_source" -> fused.getField("source"),
+      "refr_term" -> fused.getField("term")))
   }
 }
 
 /** UA classification (reference `registry/UserAgentUtilsEnrichment` /
-  * `YauaaEnrichment` / `BotDetectionEnrichment`). */
+  * `YauaaEnrichment` / `BotDetectionEnrichment`). The six classification
+  * columns are the fields of one [[graft.plans.UaParseExpression]] per row
+  * (their getFields share it under codegen subexpression elimination). */
 final case class UaParser(uaCol: String = "ua") extends Enrichment {
   val name = "ua_parser"
-  def apply(df: DataFrame): DataFrame =
-    df.withColumn("useragent", col(uaCol))
-      .withColumn("br_family", UaF.browserFamily(col(uaCol)))
-      .withColumn("br_version", UaF.browserVersion(col(uaCol)))
-      .withColumn("os_family", UaF.osFamily(col(uaCol)))
-      .withColumn("dvce_type", UaF.deviceClass(col(uaCol)))
-      .withColumn("dvce_ismobile", UaF.isMobile(col(uaCol)))
-      .withColumn("is_bot", UaF.isBot(col(uaCol)))
+  def apply(df: DataFrame): DataFrame = {
+    val ua = UaF.uaParsed(col(uaCol))
+    df.withColumns(ListMap(("useragent" -> col(uaCol)) +:
+      Seq("br_family", "br_version", "os_family", "dvce_type", "dvce_ismobile", "is_bot")
+        .map(f => f -> ua.getField(f)): _*))
+  }
 }
 
 /** Event fingerprint (reference `registry/EventFingerprintEnrichment`). */
@@ -214,7 +216,11 @@ final case class PiiPseudonymize(
 ) extends Enrichment {
   val name = "pii_pseudonymize"
   def apply(df: DataFrame): DataFrame =
-    cols.foldLeft(df)((d, c) => d.withColumn(c, EventF.pseudonymize(col(c), salt, hashFunction)))
+    if (cols.isEmpty) df
+    else df.withColumns(cols.foldLeft(ListMap.empty[String, Column]) { (m, c) =>
+      // a column named twice is hashed twice, as the per-column fold did
+      m.updated(c, EventF.pseudonymize(m.getOrElse(c, col(c)), salt, hashFunction))
+    })
 }
 
 /** JSON-path PII pseudonymization (reference
@@ -570,8 +576,9 @@ final case class IdentityLookup(
 final case class CrossNavigation(spCol: String = "sp_qs") extends Enrichment {
   val name = "cross_navigation"
   def apply(df: DataFrame): DataFrame =
-    df.withColumn("refr_domain_userid", EventF.spDomainUserId(col(spCol)))
-      .withColumn("refr_dvce_tstamp_us", EventF.spTstampMs(col(spCol)) * 1000L)
+    df.withColumns(ListMap(
+      "refr_domain_userid" -> EventF.spDomainUserId(col(spCol)),
+      "refr_dvce_tstamp_us" -> EventF.spTstampMs(col(spCol)) * 1000L))
 }
 
 /** ASN lookup via the same broadcast range join as geo (reference

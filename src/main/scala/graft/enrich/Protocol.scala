@@ -1,5 +1,7 @@
 package graft.enrich
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -15,11 +17,18 @@ import graft.functions.UrlF
   */
 object Protocol {
 
+  /** The querystring keys [[fromCollector]] reads, in one
+    * [[graft.plans.TrackerParamsExpression]] walk per row. */
+  val TrackerKeys: Seq[String] =
+    Seq("e", "p", "res", "uid", "dtm", "stm", "ttm", "url", "refr", "_sp", "tr_tt", "tr_cu")
+
   /** Collector-loader output (collector_tstamp_us, user_ipaddress,
     * useragent, page_url, event_code, querystring) → pipeline raw columns. */
   def fromCollector(df: DataFrame, qsCol: String = "querystring"): DataFrame = {
-    val qs = col(qsCol)
-    def p(key: String) = UrlF.qsParam(qs, key)
+    // every getField shares one querystring walk (codegen subexpression
+    // elimination); each field equals UrlF.qsParam(querystring, key)
+    val params = UrlF.trackerParams(col(qsCol), TrackerKeys)
+    def p(key: String) = params.getField(key)
     // try_cast / try_url_decode throughout: tracker params are
     // attacker-controlled strings, and under ANSI mode (Spark 4 default) a
     // plain cast or url_decode on one malformed row would kill the whole
@@ -27,23 +36,26 @@ object Protocol {
     def pMsToUs(key: String) = p(key).try_cast("bigint") * 1000L
     val eventCode = // CloudFront lines carry no event_code column
       if (df.columns.contains("event_code")) coalesce(p("e"), col("event_code")) else p("e")
-    df.withColumn("event_code", eventCode)
-      .withColumn("platform_code", p("p"))
-      .withColumn("res", p("res"))
-      .withColumn("user_id", p("uid"))
-      .withColumn("ua", col("useragent"))
-      .withColumn("xff", col("user_ipaddress"))
-      .withColumn("collector_us", col("collector_tstamp_us"))
+    // one projection: existing columns (event_code, page_url) are replaced
+    // in place and the rest append in this order
+    df.withColumns(ListMap(
+      "event_code" -> eventCode,
+      "platform_code" -> p("p"),
+      "res" -> p("res"),
+      "user_id" -> p("uid"),
+      "ua" -> col("useragent"),
+      "xff" -> col("user_ipaddress"),
+      "collector_us" -> col("collector_tstamp_us"),
       // tracker timestamps arrive as epoch millis strings
-      .withColumn("created_us", pMsToUs("dtm"))
-      .withColumn("sent_us", pMsToUs("stm"))
-      .withColumn("true_us", pMsToUs("ttm"))
+      "created_us" -> pMsToUs("dtm"),
+      "sent_us" -> pMsToUs("stm"),
+      "true_us" -> pMsToUs("ttm"),
       // page/referrer URLs are URL-encoded in the querystring; the loader's
       // own page_url (from the request line) is the fallback
-      .withColumn("page_url", coalesce(try_url_decode(p("url")), col("page_url")))
-      .withColumn("refr_url", try_url_decode(p("refr")))
-      .withColumn("sp_qs", p("_sp"))
-      .withColumn("amount_cents", round(p("tr_tt").try_cast("double") * 100).try_cast("bigint"))
-      .withColumn("currency", p("tr_cu"))
+      "page_url" -> coalesce(try_url_decode(p("url")), col("page_url")),
+      "refr_url" -> try_url_decode(p("refr")),
+      "sp_qs" -> p("_sp"),
+      "amount_cents" -> round(p("tr_tt").try_cast("double") * 100).try_cast("bigint"),
+      "currency" -> p("tr_cu")))
   }
 }

@@ -1,7 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** User-agent classification kernels.
   *
@@ -440,42 +443,41 @@ object UaF {
   /** Per-row twin of [[browserFamilyColumns]] for non-null UAs: "Robot" for
     * bot UAs, first matching rule's family, else "Unknown". (The Column
     * wrapper maps null UA → "Unknown" via coalesce.) */
-  def browserFamilyString(ua: String): String = {
-    if (isBotString(ua)) return "Robot"
-    var i = 0
-    while (i < BrowserTokenArrs.length) {
-      if (containsAny(ua, BrowserTokenArrs(i))) return BrowserFamilies(i)
-      i += 1
+  def browserFamilyString(ua: String): String =
+    if (isBotString(ua)) "Robot"
+    else {
+      val i = firstRule(ua, BrowserTokenArrs)
+      if (i >= 0) BrowserFamilies(i) else "Unknown"
     }
-    "Unknown"
-  }
 
   /** Per-row twin of [[browserVersionColumns]]: group 1 of the FIRST
     * matching rule's version regex; null when that rule has no version
     * pattern, the pattern finds no match (regexp_extract's '' → nullif),
     * or no rule matches. */
   def browserVersionString(ua: String): String = {
-    var i = 0
-    while (i < BrowserTokenArrs.length) {
-      if (containsAny(ua, BrowserTokenArrs(i))) {
-        val p = BrowserVerPatterns(i)
-        if (p == null) return null
-        val m = p.matcher(ua)
-        if (!m.find()) return null
-        val g = m.group(1)
-        return if (g == null || g.isEmpty) null else g
-      }
-      i += 1
-    }
-    null
+    val i = firstRule(ua, BrowserTokenArrs)
+    if (i >= 0) versionOf(i, ua) else null
+  }
+
+  /** Group 1 of browser rule `i`'s version regex over `ua`, '' → null. */
+  private def versionOf(i: Int, ua: String): String = {
+    val p = BrowserVerPatterns(i)
+    if (p == null) return null
+    val m = p.matcher(ua)
+    if (!m.find()) return null
+    val g = m.group(1)
+    if (g == null || g.isEmpty) null else g
   }
 
   /** Per-row twin of [[deviceClassColumns]]: identical cascade, indexOf
     * token scans instead of regex alternations (only AFT-models and the
     * tablet-model table stay regexes — they have real patterns). */
-  def deviceClassString(ua: String): String = {
-    if (ua == null) return null
-    if (isBotString(ua)) "Robot"
+  def deviceClassString(ua: String): String =
+    if (ua == null) null else deviceClassOf(ua, isBotString(ua))
+
+  /** [[deviceClassString]] for a non-null UA whose bot scan already ran. */
+  private def deviceClassOf(ua: String, bot: Boolean): String = {
+    if (bot) "Robot"
     else if (containsAny(ua, ConsoleTokens)) "Game Console"
     else if (containsAny(ua, TvTokens) || litThenRange(ua, "AFT", 'A', 'Z')) "TV"
     else if (ua.contains("Opera Mini/")) "Phone"
@@ -487,6 +489,58 @@ object UaF {
 
   def isMobile(ua: Column): Column =
     deviceClass(ua).isin("Phone", "Tablet")
+
+  // ---- one fused UA parse (called from graft.plans.UaParseExpression) ----
+
+  private val OsTokenArrs: Array[Array[String]] = OsRules.map(_.tokens.toArray).toArray
+  private val OsFamilies: Array[String] = OsRules.map(_.family).toArray
+
+  /** Index of the first rule whose token list hits `ua`, or -1. */
+  private def firstRule(ua: String, tokenArrs: Array[Array[String]]): Int = {
+    var i = 0
+    while (i < tokenArrs.length) {
+      if (containsAny(ua, tokenArrs(i))) return i
+      i += 1
+    }
+    -1
+  }
+
+  /** Every UaParser column from one parse of the UA: struct(br_family,
+    * br_version, os_family, dvce_type, dvce_ismobile, is_bot) — the Column
+    * entry point for [[graft.plans.UaParseExpression]]. Each field equals
+    * its Column twin, nulls included: [[browserFamilyColumns]],
+    * [[browserVersionColumns]], [[osFamily]], [[deviceClassColumns]],
+    * [[isMobile]] and [[isBotColumns]]. */
+  def uaParsed(ua: Column): Column =
+    org.apache.spark.sql.graft.ColumnBridge.column(
+      graft.plans.UaParseExpression(
+        org.apache.spark.sql.graft.ColumnBridge.expression(ua)))
+
+  /** A null UA: the two cascades that end in `otherwise("Unknown")` say
+    * "Unknown", every other column is null. */
+  private val NullUaRow: Array[Any] = Array(
+    UTF8String.fromString("Unknown"), null, UTF8String.fromString("Unknown"), null, null, null)
+
+  /** Per-row entry for [[graft.plans.UaParseExpression]]: one UTF-8 decode,
+    * one lower-cased bot scan shared by the family and the device class,
+    * one browser-rule walk shared by the family and the version. */
+  def uaParseRow(uaU: UTF8String): InternalRow = {
+    if (uaU == null) return new GenericInternalRow(NullUaRow.clone())
+    val ua = uaU.toString
+    val bot = isBotString(ua)
+    val rule = firstRule(ua, BrowserTokenArrs)
+    val family = if (bot) "Robot" else if (rule >= 0) BrowserFamilies(rule) else "Unknown"
+    val version = if (rule >= 0) versionOf(rule, ua) else null
+    val os = firstRule(ua, OsTokenArrs)
+    val dc = deviceClassOf(ua, bot)
+    new GenericInternalRow(Array[Any](
+      UTF8String.fromString(family),
+      if (version == null) null else UTF8String.fromString(version),
+      UTF8String.fromString(if (os >= 0) OsFamilies(os) else "Unknown"),
+      UTF8String.fromString(dc),
+      dc == "Phone" || dc == "Tablet",
+      bot))
+  }
 
   // ---- device brand / model ----------------------------------------------
   // Reference `registry/YauaaEnrichment.scala` emits deviceBrand/deviceName

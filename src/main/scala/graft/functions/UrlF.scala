@@ -250,6 +250,52 @@ object UrlF {
     null
   }
 
+  /** [[qsParamRaw]] for every key of `keys` in ONE walk over `qs`: slot i
+    * holds the value of the first pair whose name (the text before the
+    * pair's first '=') is `keys(i)`, null when no pair names it or that
+    * first value is empty. A pair without '=' names nothing. Equal to
+    * `keys.map(qsParamRaw(qs, _))` for keys without '&' or '='. */
+  def qsParamsRaw(qs: String, keys: Array[String]): Array[String] = {
+    val out = new Array[String](keys.length)
+    val found = new Array[Boolean](keys.length)
+    var left = keys.length
+    val n = qs.length
+    var start = 0 // first char of the current pair
+    var eq = -1 // its first '=', or -1
+    var i = 0
+    while (i <= n && left > 0) {
+      val c = if (i < n) qs.charAt(i) else '&'
+      if (c == '&') {
+        if (eq >= 0) {
+          var k = 0
+          while (k < keys.length) {
+            val key = keys(k)
+            if (!found(k) && key.length == eq - start && qs.startsWith(key, start)) {
+              found(k) = true
+              left -= 1
+              if (i > eq + 1) out(k) = qs.substring(eq + 1, i)
+            }
+            k += 1
+          }
+        }
+        start = i + 1
+        eq = -1
+      } else if (c == '=' && eq < 0) eq = i
+      i += 1
+    }
+    out
+  }
+
+  /** One querystring walk for all of `keys`: struct(key₁, …, keyₙ) of raw
+    * values, each field equal to [[qsParam]]`(qs, keyᵢ)` — the Column entry
+    * point for [[graft.plans.TrackerParamsExpression]]. */
+  def trackerParams(qs: Column, keys: Seq[String]): Column =
+    ColumnBridge.column(graft.plans.TrackerParamsExpression(ColumnBridge.expression(qs), keys))
+
+  /** Per-row entry for [[graft.plans.TrackerParamsExpression]]. */
+  def trackerParamsRow(qs: UTF8String, keys: Array[String]): InternalRow =
+    new GenericInternalRow(qsParamsRaw(qs.toString, keys).map(v => utf8(v): Any))
+
   /** Imperative twin of Spark's `try_url_decode` (form decoding, UTF-8;
     * malformed %-escapes null the value instead of aborting). */
   def tryUrlDecodeString(v: String): String =

@@ -106,7 +106,7 @@ object KMeans {
     * bit-identical across engines and partitionings: every sum in both the
     * assignment and the update is an exact integer sum, and the per-cell
     * per-dimension mean divides truncating toward zero (JVM `/`; the
-    * DuckDB twin uses the repo's sign-split `//` spelling). Seeds are the
+    * DuckDB twin's integer `//` truncates the same way). Seeds are the
     * `k` vectors with the lowest `idCol`; cells that go empty keep their
     * previous centroid. Scale shape is [[fit]]'s: assignment is a narrow
     * projection against centroid literals, and only k × dim aggregate rows

@@ -2,8 +2,10 @@ package graft.plans
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{BooleanType, DataType, StringType}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.types.{BooleanType, DataType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Fused user-agent kernels — one codegen'd call per row into the
@@ -104,5 +106,42 @@ case class BrowserVersionExpression(child: Expression) extends UnaryExpression {
     })
 
   override protected def withNewChildInternal(newChild: Expression): BrowserVersionExpression =
+    copy(child = newChild)
+}
+
+/** ua → struct(br_family, br_version, os_family, dvce_type, dvce_ismobile,
+  * is_bot): every `UaParser` column from one UTF-8 decode, one lower-cased
+  * bot scan and one browser-rule walk ([[graft.functions.UaF.uaParseRow]])
+  * where the single-column kernels above each rescan the UA. A null UA
+  * yields "Unknown" for the family and the OS (their cascades end in
+  * `otherwise`) and null elsewhere, so the struct itself is never null and
+  * each field keeps its Column twin's nullability. */
+case class UaParseExpression(child: Expression) extends UnaryExpression {
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(s"$prettyName requires a string input, got ${child.dataType}")
+
+  override def dataType: DataType = StructType(Seq(
+    StructField("br_family", StringType, nullable = false),
+    StructField("br_version", StringType),
+    StructField("os_family", StringType, nullable = false),
+    StructField("dvce_type", StringType, child.nullable),
+    StructField("dvce_ismobile", BooleanType, child.nullable),
+    StructField("is_bot", BooleanType, child.nullable)))
+  override def nullable: Boolean = false
+  override def prettyName: String = "graft_ua_parse"
+
+  override def eval(input: InternalRow): Any =
+    graft.functions.UaF.uaParseRow(child.eval(input).asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val c = child.genCode(ctx)
+    ev.copy(isNull = FalseLiteral, code = code"""
+      ${c.code}
+      org.apache.spark.sql.catalyst.InternalRow ${ev.value} = graft.functions.UaF$$.MODULE$$.uaParseRow(
+        ${c.isNull} ? null : ${c.value});""")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): UaParseExpression =
     copy(child = newChild)
 }

@@ -154,3 +154,34 @@ object RefererParseExpression {
   val Schema: StructType = StructType(
     Seq("host", "medium", "source", "term").map(StructField(_, StringType)))
 }
+
+/** querystring → struct(key₁, …, keyₙ): the raw tracker-protocol values
+  * `Protocol.fromCollector` reads, from ONE walk over the querystring
+  * ([[UrlF.qsParamsRaw]]) instead of one `regexp_extract` scan per key.
+  * Field i equals `UrlF.qsParam(qs, keys(i))` — first pair named keyᵢ wins,
+  * an empty first value is null — and a null querystring nulls the struct. */
+case class TrackerParamsExpression(child: Expression, keys: Seq[String]) extends UnaryExpression {
+  require(keys.forall(k => k.nonEmpty && !k.exists(c => c == '&' || c == '=')),
+    s"tracker parameter names must be non-empty and hold no '&' or '=': $keys")
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(s"$prettyName requires a string input, got ${child.dataType}")
+
+  override def dataType: DataType = StructType(keys.map(StructField(_, StringType)))
+  override def prettyName: String = "graft_tracker_params"
+
+  @transient private lazy val keyArr: Array[String] = keys.toArray
+
+  override protected def nullSafeEval(qs: Any): Any =
+    UrlF.trackerParamsRow(qs.asInstanceOf[UTF8String], keyArr)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val keysRef = ctx.addReferenceObj("trackerKeys", keyArr, "java.lang.String[]")
+    defineCodeGen(ctx, ev, c =>
+      s"graft.functions.UrlF$$.MODULE$$.trackerParamsRow($c, $keysRef)")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): TrackerParamsExpression =
+    copy(child = newChild)
+}

@@ -4,16 +4,15 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** The integer idioms the query sets share, so that a Spark plan and its
-  * DuckDB twin round the same way. On the Spark side truncating division
-  * needs no helper: `div` already truncates toward zero. */
+  * DuckDB twin round the same way. Truncating division needs no sign
+  * split on either engine: Spark's `div`, DuckDB 1.0's `//` on integer
+  * operands (`(-7) // 2` = -3) and the JVM's Long `/` all truncate toward
+  * zero. DuckDB's `//` with a DOUBLE or DECIMAL operand is a plain divide
+  * (`(-7.0) // 2` = -3.5), so cast such operands to an integer type first. */
 object IntIdioms {
 
-  /** DuckDB truncating division `num / den` as a BIGINT. */
-  def tdivSql(num: String, den: String): String =
-    s"CASE WHEN $num >= 0 THEN CAST(($num) // ($den) AS BIGINT) ELSE CAST(-((-($num)) // ($den)) AS BIGINT) END"
-
-  /** Truncating division on the driver, spelled like [[tdivSql]]. */
-  def tdivL(a: Long, b: Long): Long = if (a >= 0) a / b else -((-a) / b)
+  /** DuckDB truncating division `num / den` of INTEGER operands, as a BIGINT. */
+  def tdivSql(num: String, den: String): String = s"CAST(($num) // ($den) AS BIGINT)"
 
   /** ⌊log₂ c⌋ for c > 0: the bit length of `c`, minus one. */
   def bits(c: Column): Column = (length(bin(c)) - 1).cast("long")

@@ -124,7 +124,7 @@ object Queries10 extends QuerySet {
     "q14_promo" -> { (sp, dir) =>
       // TPC-H Q14 shape: promo-class revenue share over one ship month.
       // part broadcasts; the date filter pushes to the parquet scan; the
-      // share is exact integer basis points (floor division in BOTH
+      // share is exact integer basis points (truncating integer division in BOTH
       // engines — a double ratio could round differently).
       val cents = (c: Column) => round(c * 100).cast("bigint")
       val li = Tables.lineitem(sp, dir)

@@ -15,7 +15,7 @@ import graft.queries.IntIdioms.nearestRank
   *    dow, so nothing global touches the session table. The time-on-site
   *    read next to session_depth_hist's event counts.
   *  - `priority_latency_grid`: order fulfilment latency (first shipment
-  *    vs order date, sign-split days) bucketed early / ≤30d / ≤90d / 90d+
+  *    vs order date, truncated days) bucketed early / ≤30d / ≤90d / 90d+
   *    per order priority, with within-priority share — the SLA grid a
   *    fulfilment team reads; one order-key aggregation + a 20-cell
   *    cross-tab.
@@ -61,9 +61,7 @@ object Queries106 extends QuerySet {
           unix_micros(col("o_orderdate").cast("timestamp")).as("odate_us"))
         .join(li, col("o_orderkey") === col("l_orderkey"))
         .select(col("o_orderpriority").as("priority"),
-          expr(s"""CASE WHEN first_ship_us >= odate_us
-                  THEN (first_ship_us - odate_us) div $DayUs
-                  ELSE -((odate_us - first_ship_us) div $DayUs) END""").as("lat_days"))
+          expr(s"(first_ship_us - odate_us) div $DayUs").as("lat_days"))
         .select(col("priority"),
           when(col("lat_days") < 0, "0_early")
             .when(col("lat_days") <= 30, "1_within_30d")
@@ -109,10 +107,7 @@ object Queries106 extends QuerySet {
          |  FROM lineitem GROUP BY 1
          |), po AS (
          |  SELECT o_orderpriority AS priority,
-         |    CASE WHEN first_ship_us >= epoch_us(CAST(o_orderdate AS TIMESTAMP))
-         |      THEN (first_ship_us - epoch_us(CAST(o_orderdate AS TIMESTAMP))) // $DayUs
-         |      ELSE -((epoch_us(CAST(o_orderdate AS TIMESTAMP)) - first_ship_us) // $DayUs)
-         |    END AS lat_days
+         |    (first_ship_us - epoch_us(CAST(o_orderdate AS TIMESTAMP))) // $DayUs AS lat_days
          |  FROM orders JOIN li ON o_orderkey = l_orderkey
          |), b AS (
          |  SELECT priority,

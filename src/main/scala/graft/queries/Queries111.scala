@@ -23,8 +23,8 @@ import graft.queries.IntIdioms.bits
   *    pairwise-dependence companion to `transition_entropy`'s
   *    conditional-entropy read. Pointwise terms c·(⌊log₂(c·N)⌋ −
   *    ⌊log₂(c_x·c_y)⌋) in the repo's bit-length spelling, summed per
-  *    event_type; milli division is sign-split (terms can be negative)
-  *    so Spark `div` and DuckDB `//` agree. Three key-shrinking
+  *    event_type; terms can be negative, and Spark `div` and DuckDB's
+  *    integer `//` both truncate toward zero. Three key-shrinking
   *    aggregations over a |types|×4 cell table — free at any scale.
   *  - `benford_audit`: leading-digit distribution of order totals (cents)
   *    against the Benford expectation (milli constants ⌊1000·log₁₀(1+1/d)⌋
@@ -61,9 +61,7 @@ object Queries111 extends QuerySet {
         .groupBy("event_type")
         .agg(max("cx").as("n_x"), sum("term").as("mi_q"), max("n_total").as("n_total"))
         .select(col("event_type"), col("n_x"), col("mi_q"),
-          expr("""CASE WHEN mi_q < 0 THEN -((-mi_q) * 1000 div n_total)
-                 |     ELSE mi_q * 1000 div n_total END""".stripMargin)
-            .as("mi_contrib_milli_bits"))
+          expr("mi_q * 1000 div n_total").as("mi_contrib_milli_bits"))
         .orderBy("event_type")
     },
 
@@ -144,10 +142,7 @@ object Queries111 extends QuerySet {
         |)
         |SELECT event_type, CAST(max(cx) AS BIGINT) AS n_x,
         |  CAST(sum(term) AS BIGINT) AS mi_q,
-        |  CAST(CASE WHEN sum(term) < 0
-        |            THEN -((-sum(term)) * 1000 // max(n_total))
-        |            ELSE sum(term) * 1000 // max(n_total) END AS BIGINT)
-        |    AS mi_contrib_milli_bits
+        |  CAST(sum(term) * 1000 // max(n_total) AS BIGINT) AS mi_contrib_milli_bits
         |FROM terms GROUP BY event_type ORDER BY event_type""".stripMargin,
 
     "benford_audit" ->

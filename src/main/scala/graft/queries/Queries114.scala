@@ -15,7 +15,7 @@ import graft.queries.IntIdioms.tdivSql
   *    post-period spend mean shifted by θ·(arm pre-mean − overall
   *    pre-mean). Pre/post split at the global time midpoint ((min+max)/2,
   *    one broadcast scalar row); spend in whole dollars so every moment
-  *    stays overflow-safe at any probe scale; all divisions sign-split.
+  *    stays overflow-safe at any probe scale; all divisions truncate.
   *    Same md5 arm assignment as ab_lift, so the two tables read together.
   *  - `compaction_plan`: the small-file compaction planner — day-grain
   *    file manifest (bytes modeled at 200 B/row), sorted next-fit binning

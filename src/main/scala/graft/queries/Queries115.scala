@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.plans.GraftFunctions
-import graft.queries.IntIdioms.{tdivL, tdivSql}
+import graft.queries.IntIdioms.tdivSql
 
 /** Round-9 batch #35 — distributed linear algebra + classical forecasting:
   *
@@ -17,7 +17,7 @@ import graft.queries.IntIdioms.{tdivL, tdivSql}
   *    partial per partition with map-side combine, where a posexplode
   *    formulation would push N×4096 rows through the exchange). The
   *    bounded 4096-long Gram then runs three exact integer power
-  *    iterations driver-side (matvec + sign-split max-abs rescale to e3)
+  *    iterations driver-side (matvec + truncating max-abs rescale to e3)
   *    — the same bounded-collect contract as the IVF centroid trainers.
   *    The DuckDB twin unrolls identical iterations, so every component
   *    is hash-exact; the eigvec sign is pinned by the all-positive start.
@@ -51,7 +51,7 @@ object Queries115 extends QuerySet {
 
   /** Train the e3 top principal direction: the Gram pass, then
     * [[PowerIters]] exact integer iterations driver-side (matvec +
-    * sign-split max-abs rescale). */
+    * truncating max-abs rescale). */
   private[queries] def powerEigvec(sp: SparkSession, dir: String): Array[Long] =
     powerEigvecFromGram(gramMatrix(sp, dir))
 
@@ -65,7 +65,7 @@ object Queries115 extends QuerySet {
         acc
       }
       val s = w.map(math.abs).max
-      v = w.map(x => tdivL(x * 1000, s))
+      v = w.map(x => (x * 1000) / s)
     }
     v
   }
@@ -91,8 +91,8 @@ object Queries115 extends QuerySet {
       out += ((monthly.head._1, monthly.head._2, l, b, monthly.head._2))
       monthly.tail.foreach { case (mk, y) =>
         val fitted = l + b
-        val lNew = tdivL(y + l + b, 2)
-        val bNew = tdivL((lNew - l) + b, 2)
+        val lNew = (y + l + b) / 2
+        val bNew = ((lNew - l) + b) / 2
         l = lNew; b = bNew
         out += ((mk, y, l, b, fitted))
       }

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.queries.IntIdioms.{bits, tdivL, tdivSql}
+import graft.queries.IntIdioms.{bits, tdivSql}
 
 /** Round-9 batch #49 — model-grade one-number audits:
   *
@@ -12,7 +12,7 @@ import graft.queries.IntIdioms.{bits, tdivL, tdivSql}
   *    ⌊log₂ n_active⌋ on week-offset by exact-integer OLS (the
   *    `zipf_fit` bits-quantization recipe) over the pooled-cohort curve
   *    and converts the slope to a half-life in milli-weeks
-  *    (−1000·1000 / slope, sign-split division). Two user-keyed
+  *    (−1000·1000 / slope, truncating division). Two user-keyed
   *    aggregations + a fit over the tiny offset table.
   *  - `embedding_isotropy`: how anisotropic is the embedding space —
   *    λ₁/trace of the exact integer Gram (Rayleigh quotient along the
@@ -57,21 +57,19 @@ object Queries129 extends QuerySet {
         while (j < dim) { acc += gram(i * dim + j) * v(j); j += 1 }
         acc
       }
-      val num = (0 until dim).map(i => v(i) * tdivL(w(i), 1000L)).sum
-      val den = tdivL(v.map(x => x * x).sum, 1000L)
-      val lambda1 = tdivL(num, den)
+      val num = (0 until dim).map(i => v(i) * (w(i) / 1000L)).sum
+      val den = v.map(x => x * x).sum / 1000L
+      val lambda1 = num / den
       val n = Tables.embeddings(sp, dir).count()
       import sp.implicits._
-      Seq((dim.toLong, n, trace, lambda1, tdivL(lambda1 * 1000L, trace)))
+      Seq((dim.toLong, n, trace, lambda1, (lambda1 * 1000L) / trace))
         .toDF("dim", "n_vectors", "trace", "lambda1", "top_share_milli")
     }
   )
 
   val oracles: Map[String, String] = Map(
     "retention_halflife" -> {
-      val slope = "CASE WHEN (n_weeks * sxy - sx * sy) * 1000 >= 0 " +
-        "THEN CAST((n_weeks * sxy - sx * sy) * 1000 // (n_weeks * sxx - sx * sx) AS BIGINT) " +
-        "ELSE CAST(-((-((n_weeks * sxy - sx * sy) * 1000)) // (n_weeks * sxx - sx * sx)) AS BIGINT) END"
+      val slope = tdivSql("(n_weeks * sxy - sx * sy) * 1000", "(n_weeks * sxx - sx * sx)")
       s"""WITH activity AS (
          |  SELECT DISTINCT user_id, epoch_us(ts) // $WeekUs AS wk FROM events
          |),

@@ -16,7 +16,7 @@ import graft.queries.IntIdioms.tdivSql
   *    trend = centered 7-day moving mean (integer div, only where the
   *    full window exists — edges stay null rather than biased),
   *    seasonal = per-day-of-week mean of the detrended series
-  *    (sign-split integer division), residual = what's left, so
+  *    (truncating integer division), residual = what's left, so
   *    rev = trend + seasonal + resid EXACTLY on every interior day
   *    (the revenue_bridge closure discipline). The residual variance
   *    vs the detrended variance is the seasonal-strength read the

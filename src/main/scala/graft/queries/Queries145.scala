@@ -57,7 +57,7 @@ object Queries145 extends QuerySet {
             w * (v(s | (1 << c)) - v(s))
         }.sum
         (Channels(c), numer,
-          (if (numer >= 0) numer * 1000 / fact(N) else -((-numer) * 1000 / fact(N))))
+          numer * 1000 / fact(N))
       }
       import sp.implicits._
       rows.toDF("channel", "phi_numer", "phi_milli").orderBy("channel")
@@ -113,8 +113,7 @@ object Queries145 extends QuerySet {
            |SELECT list_extract([${Channels.map(c => s"'$c'").mkString(", ")}], CAST(c AS INT) + 1)
            |    AS channel,
            |  phi_numer,
-           |  CASE WHEN phi_numer >= 0 THEN CAST(phi_numer * 1000 // 120 AS BIGINT)
-           |       ELSE CAST(-((-phi_numer) * 1000 // 120) AS BIGINT) END AS phi_milli
+           |  CAST(phi_numer * 1000 // 120 AS BIGINT) AS phi_milli
            |FROM phi ORDER BY channel""".stripMargin,
 
       "channel_set_conversion" -> {

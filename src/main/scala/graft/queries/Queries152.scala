@@ -4,7 +4,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.queries.IntIdioms.tdivL
 
 /** Round-9 batch #72 — sequence-shape analytics:
   *
@@ -64,20 +63,20 @@ object Queries152 extends QuerySet {
       // P in ppm, truncating division — the shared exact spelling
       val p = Array.tabulate(Types.length, Types.length) { (i, j) =>
         if (rowTot(i) == 0) 0L
-        else tdivL(trans.getOrElse((Types(i), Types(j)), 0L) * 1000000L, rowTot(i))
+        else (trans.getOrElse((Types(i), Types(j)), 0L) * 1000000L) / rowTot(i)
       }
-      var pi = Array.fill(Types.length)(tdivL(1000000L, Types.length))
+      var pi = Array.fill(Types.length)(1000000L / Types.length)
       (1 to Iters).foreach { _ =>
         pi = Array.tabulate(Types.length)(j =>
-          tdivL((0 until Types.length).map(i => pi(i) * p(i)(j)).sum, 1000000L))
+          (0 until Types.length).map(i => pi(i) * p(i)(j)).sum / 1000000L)
       }
       val emp = Tables.events(sp, dir).groupBy("event_type").agg(count(lit(1)).as("n"))
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       val tot = emp.values.sum
       import sp.implicits._
       Types.map { t =>
-        (t, tdivL(emp.getOrElse(t, 0L) * 1000000L, tot), pi(idx(t)),
-          tdivL(emp.getOrElse(t, 0L) * 1000000L, tot) - pi(idx(t)))
+        (t, (emp.getOrElse(t, 0L) * 1000000L) / tot, pi(idx(t)),
+          (emp.getOrElse(t, 0L) * 1000000L) / tot - pi(idx(t)))
       }.toDF("event_type", "empirical_ppm", "stationary_ppm", "gap_ppm")
         .orderBy("event_type")
     }

@@ -66,8 +66,7 @@ object Queries158 extends QuerySet {
         .withColumn("n_pairs", count(lit(1)).over())
         .filter(col("rk") === expr("(n_pairs + 1) div 2"))
         .select(col("n_pairs"), col("num").as("med_num_cents"), col("den").as("med_den_days"),
-          expr("CASE WHEN num >= 0 THEN num div den ELSE -((-num) div den) END")
-            .as("slope_cents_per_day"))
+          expr("num div den").as("slope_cents_per_day"))
     },
 
     "max_drawdown" -> { (sp, dir) =>

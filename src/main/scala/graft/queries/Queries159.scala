@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.TextF
 import graft.operators.PairEngine
-import graft.queries.IntIdioms.{tdivL, tdivSql}
+import graft.queries.IntIdioms.tdivSql
 
 /** Round-12 batch #2 — seasonal forecasting + training-data selection and
   * hygiene:
@@ -65,9 +65,9 @@ object Queries159 extends QuerySet {
       daily.tail.foreach { case (d, y) =>
         val si = (d % 7).toInt
         val fitted = l + b + s(si)
-        val lNew = tdivL(y - s(si) + l + b, 2)
-        val bNew = tdivL(lNew - l + b, 2)
-        val sNew = tdivL(y - lNew + s(si), 2)
+        val lNew = (y - s(si) + l + b) / 2
+        val bNew = (lNew - l + b) / 2
+        val sNew = (y - lNew + s(si)) / 2
         l = lNew; b = bNew; s(si) = sNew
         out += ((d, y, l, b, sNew, fitted))
       }

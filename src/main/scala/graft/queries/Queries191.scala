@@ -130,8 +130,7 @@ object Queries191 extends QuerySet {
        |),
        |m${t}_$s AS (
        |  SELECT a${t}_$s.cell, d.i,
-       |    CASE WHEN sum(d.x) >= 0 THEN CAST(sum(d.x) AS BIGINT) // count(*)
-       |         ELSE -(CAST(-sum(d.x) AS BIGINT) // count(*)) END AS c
+       |    CAST(sum(d.x) AS BIGINT) // count(*) AS c
        |  FROM a${t}_$s JOIN qd d ON d.vec_id = a${t}_$s.vec_id GROUP BY a${t}_$s.cell, d.i
        |),
        |c${t}_$s AS (

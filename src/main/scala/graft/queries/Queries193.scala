@@ -11,7 +11,7 @@ import graft.queries.IntIdioms.tdivSql
   *  - `clock_skew_profile`: tracker clock health per platform — device-send
   *    skew (collector − sent) and creation skew (sent − created, can run
   *    NEGATIVE under the synth's +5 s outlier class, so averages use the
-  *    sign-split truncating division both engines agree on). The audit
+  *    truncating division both engines agree on). The audit
   *    behind `derived_tstamp`'s correction.
   *  - `fingerprint_collision_audit`: discrimination of a WEAK fingerprint
   *    config (event code + resolution) vs the standard 5-field one — how

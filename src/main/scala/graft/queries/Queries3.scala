@@ -210,7 +210,7 @@ object Queries3 extends QuerySet {
   private[queries] def dotSqlShared(a: String, b: String): String =
     s"list_reduce(list_transform(range(1, len($a) + 1), i -> CAST(list_extract($a, i) AS DOUBLE) * CAST(list_extract($b, i) AS DOUBLE)), (x, y) -> x + y)"
 
-  /** One unrolled integer-micro Lloyd iteration (assignment + sign-split
+  /** One unrolled integer-micro Lloyd iteration (assignment + truncating
     * integer-mean update + empty-cell carry) — the DuckDB twin of one
     * `KMeans.fitMicro` round. All sums are exact BIGINTs; the cosine used
     * for ranking is `dot / (sqrt(nv2) * sqrt(nc2))` over those exact
@@ -230,8 +230,7 @@ object Queries3 extends QuerySet {
        |),
        |m$t AS (
        |  SELECT a$t.cell, d.i,
-       |    CASE WHEN sum(d.x) >= 0 THEN CAST(sum(d.x) AS BIGINT) // count(*)
-       |         ELSE -(CAST(-sum(d.x) AS BIGINT) // count(*)) END AS c
+       |    CAST(sum(d.x) AS BIGINT) // count(*) AS c
        |  FROM a$t JOIN qd d ON d.vec_id = a$t.vec_id GROUP BY a$t.cell, d.i
        |),
        |c$t AS (

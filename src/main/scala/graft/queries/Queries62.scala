@@ -17,12 +17,10 @@ import graft.Tables
   *    at every interior event (`forward_fill`'s fill upgraded from
   *    step to linear — the telemetry-resampling rule): prev/next anchor
   *    (time, value) from two IGNORE-NULLS frames over ONE (user) window
-  *    shuffle, then v0 + Δv·(t−t0)/(t1−t0) with the division SIGN-SPLIT
-  *    (|num| div den, sign reapplied) because Spark `div` truncates
-  *    toward zero while DuckDB `//` floors — they agree only on
-  *    non-negatives, so negative slopes must never reach the raw
-  *    operator. Boundary rows degrade to forward/backward fill, labeled
-  *    per row.
+  *    shuffle, then v0 + Δv·(t−t0)/(t1−t0) in integer division that
+  *    truncates toward zero on both engines (Spark `div`, DuckDB's
+  *    integer `//`), negative slopes included. Boundary rows degrade to
+  *    forward/backward fill, labeled per row.
   */
 object Queries62 extends QuerySet {
   private val DayUs = 86400000000L
@@ -59,9 +57,7 @@ object Queries62 extends QuerySet {
         .withColumn("v1", first(col("v"), ignoreNulls = true).over(after))
         .withColumn("num", (col("v1") - col("v0")) * (col("ts_us") - col("t0")))
         .withColumn("den", col("t1") - col("t0"))
-        .withColumn("adj",
-          when(col("num") >= 0, expr("num div den"))
-            .otherwise(-expr("(-num) div den")))
+        .withColumn("adj", expr("num div den"))
       ev.select(col("event_id"), col("user_id"), col("event_type"),
         when(col("v").isNotNull, col("v"))
           .when(col("v0").isNotNull && col("v1").isNotNull, col("v0") + col("adj"))
@@ -125,7 +121,7 @@ object Queries62 extends QuerySet {
          |SELECT event_id, user_id, event_type,
          |  CASE WHEN v IS NOT NULL THEN v
          |       WHEN v0 IS NOT NULL AND v1 IS NOT NULL THEN
-         |         v0 + CASE WHEN num >= 0 THEN num // den ELSE -((-num) // den) END
+         |         v0 + num // den
          |       WHEN v0 IS NOT NULL THEN v0
          |       WHEN v1 IS NOT NULL THEN v1 END AS interp_cents,
          |  CASE WHEN v IS NOT NULL THEN 'exact'

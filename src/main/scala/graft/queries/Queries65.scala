@@ -72,12 +72,9 @@ object Queries65 extends QuerySet {
         .select(col("event_type"), col("cnt").as("prev_cnt"), col("rk").as("rank_prev"))
       cur.join(prev, Seq("event_type"))
         .select(col("event_type"), col("cur_week"), col("cur_cnt"), col("prev_cnt"),
-          // sign-split: Spark div truncates, DuckDB // floors — only
-          // non-negative operands agree
-          expr("""CASE WHEN cur_cnt >= prev_cnt
-                 THEN (cur_cnt - prev_cnt) * 1000 div prev_cnt
-                 ELSE -((prev_cnt - cur_cnt) * 1000 div prev_cnt) END""")
-            .as("change_milli"),
+          // a fall is negative: Spark's div and DuckDB's integer // both
+          // truncate toward zero
+          expr("(cur_cnt - prev_cnt) * 1000 div prev_cnt").as("change_milli"),
           col("rank_cur").cast("long").as("rank_cur"),
           col("rank_prev").cast("long").as("rank_prev"),
           (col("rank_prev") - col("rank_cur")).cast("long").as("rank_delta"))
@@ -140,8 +137,7 @@ object Queries65 extends QuerySet {
          |)
          |SELECT c.event_type, c.week AS cur_week, c.cnt AS cur_cnt,
          |  p.cnt AS prev_cnt,
-         |  CAST(CASE WHEN c.cnt >= p.cnt THEN (c.cnt - p.cnt) * 1000 // p.cnt
-         |       ELSE -((p.cnt - c.cnt) * 1000 // p.cnt) END AS BIGINT) AS change_milli,
+         |  CAST((c.cnt - p.cnt) * 1000 // p.cnt AS BIGINT) AS change_milli,
          |  CAST(c.rk AS BIGINT) AS rank_cur, CAST(p.rk AS BIGINT) AS rank_prev,
          |  CAST(p.rk - c.rk AS BIGINT) AS rank_delta
          |FROM ranked c

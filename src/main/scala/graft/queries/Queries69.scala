@@ -11,7 +11,7 @@ import graft.queries.IntIdioms.nearestRank
   *
   *  - `quantile_drift`: week-over-week event-value quantile monitoring
   *    per event type — p50/p95 (exact rank arithmetic in integer cents)
-  *    joined to the previous week, change in sign-split milli, flagged
+  *    joined to the previous week, change in truncated milli, flagged
   *    beyond ±10% — the money-metric twin of `volume_anomaly` (volumes
   *    drift loudly, value distributions drift silently). Percentile
   *    windows run per (type, week) partition; the week-over-week join is
@@ -44,9 +44,7 @@ object Queries69 extends QuerySet {
       weekly.join(prev, Seq("event_type", "week"))
         .select(col("event_type"), col("week"), col("n_events"),
           col("p50_cents"), col("prev_p50_cents"),
-          expr("""CASE WHEN p50_cents >= prev_p50_cents
-                 THEN (p50_cents - prev_p50_cents) * 1000 div prev_p50_cents
-                 ELSE -((prev_p50_cents - p50_cents) * 1000 div prev_p50_cents) END""")
+          expr("(p50_cents - prev_p50_cents) * 1000 div prev_p50_cents")
             .as("p50_change_milli"),
           col("p95_cents"), col("prev_p95_cents"),
           (col("p50_cents") * 10 > col("prev_p50_cents") * 11 ||
@@ -105,9 +103,7 @@ object Queries69 extends QuerySet {
          |)
          |SELECT c.event_type, c.week, c.n_events,
          |  c.p50_cents, p.p50_cents AS prev_p50_cents,
-         |  CAST(CASE WHEN c.p50_cents >= p.p50_cents
-         |       THEN (c.p50_cents - p.p50_cents) * 1000 // p.p50_cents
-         |       ELSE -((p.p50_cents - c.p50_cents) * 1000 // p.p50_cents) END AS BIGINT)
+         |  CAST((c.p50_cents - p.p50_cents) * 1000 // p.p50_cents AS BIGINT)
          |    AS p50_change_milli,
          |  c.p95_cents, p.p95_cents AS prev_p95_cents,
          |  (c.p50_cents * 10 > p.p50_cents * 11 OR c.p50_cents * 10 < p.p50_cents * 9)

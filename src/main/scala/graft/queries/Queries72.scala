@@ -48,8 +48,7 @@ object Queries72 extends QuerySet {
       }.reduce(_ unionAll _)
       curve.join(broadcast(exact), Seq("event_type"))
         .select(col("event_type"), col("k"), col("n_exact"), col("est"),
-          expr("""CASE WHEN est >= n_exact THEN (est - n_exact) * 1000 div n_exact
-                 ELSE -((n_exact - est) * 1000 div n_exact) END""").as("err_milli"))
+          expr("(est - n_exact) * 1000 div n_exact").as("err_milli"))
         .orderBy("event_type", "k")
     },
 
@@ -109,10 +108,7 @@ object Queries72 extends QuerySet {
          |$unions
          |)
          |SELECT c.event_type, c.k, e.n_exact, c.est,
-         |  CAST(CASE WHEN c.est >= e.n_exact
-         |       THEN (c.est - e.n_exact) * 1000 // e.n_exact
-         |       ELSE -((e.n_exact - c.est) * 1000 // e.n_exact) END AS BIGINT)
-         |    AS err_milli
+         |  CAST((c.est - e.n_exact) * 1000 // e.n_exact AS BIGINT) AS err_milli
          |FROM curve c JOIN exact e USING (event_type)
          |ORDER BY event_type, k""".stripMargin
     },

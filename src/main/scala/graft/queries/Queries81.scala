@@ -10,7 +10,7 @@ import graft.queries.IntIdioms.tdivSql
   *  - `price_elasticity`: EXACT distributed OLS — slope of quantity on
   *    discount per return flag, computed entirely in integer moment sums
   *    (x quantized to discount-milli, y integral): slope_milli =
-  *    (n·Σxy − Σx·Σy)·1000 / (n·Σx² − (Σx)²) with the sign-split integer
+  *    (n·Σxy − Σx·Σy)·1000 / (n·Σx² − (Σx)²) with truncating integer
   *    division. No FP summation anywhere, so the regression is
   *    bit-identical across engines AND partitionings — the recipe for
   *    any least-squares fit at 100 TB (one partial-aggregated moment

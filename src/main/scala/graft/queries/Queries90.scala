@@ -22,9 +22,8 @@ object Queries90 extends QuerySet {
 
   val defs: Map[String, Q] = Map(
     "late_data_reconciliation" -> { (sp, dir) =>
-      // compare in µs: a ms division would floor vs truncate differently
-      // across engines on the negative-skew rows (the 1-in-17 backwards
-      // clock jump in the synth universe)
+      // compare in µs, undivided: the skew is negative on the 1-in-17
+      // backwards clock jump in the synth universe
       val raw = Synth.withRaw(Tables.events(sp, dir))
         .select(expr("ts_us div 86400000000").as("day"),
           (col("collector_us") - col("created_us")).as("skew_us"))

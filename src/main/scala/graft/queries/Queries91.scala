@@ -86,9 +86,8 @@ object Queries91 extends QuerySet {
         .select(col("event_type"), col("n_exact"),
           expr(s"$HllAlphaNumer div (${HllAlphaDenom} * s)").as("est_hll"),
           (lit(HllM.toLong) - col("n_set")).as("n_zero_registers"),
-          // signed error via positive-operand division only: the ratio is
-          // computed with both operands positive, THEN shifted by -1000 —
-          // a direct signed div would floor vs truncate differently
+          // signed error: the ratio is computed with both operands
+          // positive, THEN shifted by -1000
           (expr(s"($HllAlphaNumer div (${HllAlphaDenom} * s)) * 1000 div n_exact") - 1000L)
             .as("err_milli"))
         .orderBy("event_type")

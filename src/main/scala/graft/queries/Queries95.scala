@@ -86,13 +86,8 @@ object Queries95 extends QuerySet {
         .agg(count(lit(1)).as("n"), sum(col("col")).as("sum_micro"),
           sum(col("col") * col("col")).as("sumsq_micro2"))
         .select(col("dim"), col("n"), col("sum_micro"), col("sumsq_micro2"),
-          expr("""CASE WHEN sum_micro >= 0 THEN sum_micro div n
-                 ELSE -((-sum_micro) div n) END""").as("mean_micro"),
-          expr("""sumsq_micro2 div n -
-                  (CASE WHEN sum_micro >= 0 THEN sum_micro div n
-                   ELSE -((-sum_micro) div n) END) *
-                  (CASE WHEN sum_micro >= 0 THEN sum_micro div n
-                   ELSE -((-sum_micro) div n) END)""").as("var_micro2"))
+          expr("sum_micro div n").as("mean_micro"),
+          expr("sumsq_micro2 div n - (sum_micro div n) * (sum_micro div n)").as("var_micro2"))
         .orderBy("dim")
     }
   )
@@ -143,13 +138,8 @@ object Queries95 extends QuerySet {
         |  FROM q GROUP BY 1
         |)
         |SELECT dim, n, sum_micro, sumsq_micro2,
-        |  CAST(CASE WHEN sum_micro >= 0 THEN sum_micro // n
-        |       ELSE -((-sum_micro) // n) END AS BIGINT) AS mean_micro,
-        |  CAST(sumsq_micro2 // n -
-        |    (CASE WHEN sum_micro >= 0 THEN sum_micro // n
-        |     ELSE -((-sum_micro) // n) END) *
-        |    (CASE WHEN sum_micro >= 0 THEN sum_micro // n
-        |     ELSE -((-sum_micro) // n) END) AS BIGINT) AS var_micro2
+        |  CAST(sum_micro // n AS BIGINT) AS mean_micro,
+        |  CAST(sumsq_micro2 // n - (sum_micro // n) * (sum_micro // n) AS BIGINT) AS var_micro2
         |FROM s ORDER BY dim""".stripMargin
   )
 }

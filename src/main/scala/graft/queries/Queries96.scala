@@ -21,7 +21,7 @@ import graft.queries.IntIdioms.{revE4, RevE4Sql}
   *    segments leak".
   *  - `supplier_scorecard`: per-supplier operations panel — exact e4
   *    revenue, item/order/part counts, return-rate milli, and mean
-  *    ship-latency days (sign-split integer division — the synthetic
+  *    ship-latency days (truncating integer division — the synthetic
   *    shipdate can precede the orderdate). One fact shuffle on
   *    the order key to fetch o_orderdate, one map-side-combined supplier
   *    aggregation, supplier + nation dims broadcast.
@@ -115,12 +115,9 @@ object Queries96 extends QuerySet {
           countDistinct("l_orderkey").as("n_orders"),
           countDistinct("l_partkey").as("n_parts"),
           sum(when(col("l_returnflag") === "R", 1L).otherwise(0L)).as("n_returned"),
-          // the synthetic shipdate can precede the orderdate — sign-split
-          // so Spark's truncating div and DuckDB's flooring // agree
-          sum(expr(s"""CASE WHEN ship_us >= odate_us
-                      THEN (ship_us - odate_us) div $DayUs
-                      ELSE -((odate_us - ship_us) div $DayUs) END"""))
-            .as("lat_days_sum"))
+          // the synthetic shipdate can precede the orderdate: Spark's div
+          // and DuckDB's integer // both truncate toward zero
+          sum(expr(s"(ship_us - odate_us) div $DayUs")).as("lat_days_sum"))
       val supp = broadcast(Tables.supplier(sp, dir)
         .join(Tables.nation(sp, dir), col("s_nationkey") === col("n_nationkey"))
         .select(col("s_suppkey"), col("s_name"), col("n_name").as("nation")))
@@ -128,8 +125,7 @@ object Queries96 extends QuerySet {
         .select(col("s_suppkey"), col("s_name"), col("nation"),
           col("revenue_e4"), col("n_items"), col("n_orders"), col("n_parts"),
           expr("n_returned * 1000 div n_items").as("return_milli"),
-          expr("""CASE WHEN lat_days_sum >= 0 THEN lat_days_sum div n_items
-                 ELSE -((-lat_days_sum) div n_items) END""").as("mean_latency_days"))
+          expr("lat_days_sum div n_items").as("mean_latency_days"))
         .orderBy("s_suppkey")
     },
 
@@ -147,8 +143,7 @@ object Queries96 extends QuerySet {
 
     "importance_sample" -> { (sp, dir) =>
       // materialize (doc_id, logw) FIRST: every downstream reference —
-      // the sign-split CASE (3 copies) and the pushed-down acceptance
-      // filter — would otherwise inline the interpreted HOF scorer and
+      // the halving and the pushed-down acceptance filter — would otherwise inline the interpreted HOF scorer and
       // re-run it per reference (measured 16 s at sf0.1; the barrier is a
       // two-long-column table and the query drops to the scorer's cost)
       val weights = graft.util.CacheScope.track(
@@ -158,8 +153,7 @@ object Queries96 extends QuerySet {
       weights
         .withColumn("p_milli",
           least(lit(1000L), greatest(lit(10L),
-            lit(500L) + expr("""CASE WHEN logw_milli >= 0 THEN logw_milli div 2
-                               ELSE -((-logw_milli) div 2) END"""))))
+            lit(500L) + expr("logw_milli div 2"))))
         .withColumn("draw", drawMilli(col("doc_id")))
         .filter(col("draw") < col("p_milli"))
         .orderBy("doc_id")
@@ -214,18 +208,15 @@ object Queries96 extends QuerySet {
          |    CAST(count(DISTINCT l_partkey) AS BIGINT) AS n_parts,
          |    CAST(sum(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) AS BIGINT)
          |      AS n_returned,
-         |    CAST(sum(CASE WHEN epoch_us(l_shipdate) >= epoch_us(CAST(o_orderdate AS TIMESTAMP))
-         |      THEN (epoch_us(l_shipdate) - epoch_us(CAST(o_orderdate AS TIMESTAMP))) // $DayUs
-         |      ELSE -((epoch_us(CAST(o_orderdate AS TIMESTAMP)) - epoch_us(l_shipdate)) // $DayUs)
-         |      END) AS BIGINT) AS lat_days_sum
+         |    CAST(sum((epoch_us(l_shipdate) - epoch_us(CAST(o_orderdate AS TIMESTAMP))) // $DayUs)
+         |      AS BIGINT) AS lat_days_sum
          |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
          |  GROUP BY 1
          |)
          |SELECT s_suppkey, s_name, n_name AS nation, revenue_e4, n_items, n_orders,
          |  n_parts,
          |  CAST(n_returned * 1000 // n_items AS BIGINT) AS return_milli,
-         |  CAST(CASE WHEN lat_days_sum >= 0 THEN lat_days_sum // n_items
-         |       ELSE -((-lat_days_sum) // n_items) END AS BIGINT) AS mean_latency_days
+         |  CAST(lat_days_sum // n_items AS BIGINT) AS mean_latency_days
          |FROM per
          |JOIN supplier ON l_suppkey = s_suppkey
          |JOIN nation ON s_nationkey = n_nationkey
@@ -256,9 +247,7 @@ object Queries96 extends QuerySet {
          |  FROM toks
          |), pr AS (
          |  SELECT doc_id, logw_milli,
-         |    least(1000, greatest(10, 500 +
-         |      CASE WHEN logw_milli >= 0 THEN logw_milli // 2
-         |           ELSE -((-logw_milli) // 2) END)) AS p_milli,
+         |    least(1000, greatest(10, 500 + logw_milli // 2)) AS p_milli,
          |    $drawMilliSql AS draw
          |  FROM w
          |)

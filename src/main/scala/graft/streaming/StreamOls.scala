@@ -21,15 +21,15 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 object StreamOls extends Serializable {
 
   /** One fit emission per touched key per micro-batch: the moments and the
-    * sign-split exact milli slope/intercept (both -1-free: a degenerate
+    * truncated exact milli slope/intercept (both -1-free: a degenerate
     * key with zero x-variance emits nulls via Option → -1 sentinel is
     * avoided by emitting the moments alongside). */
   case class OlsRow(
     key: String, n: Long, sx: Long, sy: Long, sxy: Long, sxx: Long,
     slope_milli: Long, intercept_milli: Long)
 
-  /** JVM `/` truncates toward zero — the same spelling as the batch
-    * query's sign-split `div` and the oracle's sign-split `//`. */
+  /** JVM `/` truncates toward zero, as the batch query's `div` and the
+    * oracle's integer `//` do. */
   private def fit(n: Long, sx: Long, sy: Long, sxy: Long, sxx: Long): (Long, Long) = {
     val den = n * sxx - sx * sx
     if (den == 0L) (0L, if (n == 0L) 0L else sy * 1000 / n)

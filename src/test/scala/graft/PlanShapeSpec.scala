@@ -142,6 +142,42 @@ class PlanShapeSpec extends SparkSpec {
       s"distinct_kmv join shape drifted:\n$pk")
   }
 
+  test("protocol mapping and UaParser: one kernel each, one projection per stage") {
+    import org.apache.spark.sql.catalyst.expressions.{Expression, RegExpExtract}
+    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
+    import graft.plans.{TrackerParamsExpression, UaParseExpression}
+    val dir = java.nio.file.Files.createTempDirectory("protocol-plan")
+    val tsv = dir.resolve("events.tsv")
+    java.nio.file.Files.writeString(tsv,
+      "1700000000000000\t10.0.0.1\tMozilla/5.0 (X11; Linux x86_64) Firefox/119.0\t" +
+        "https://shop.example.com/p/1\tpv\te=pv&p=web&uid=u1&dtm=1700000000000\n")
+    val raw = graft.enrich.Protocol.fromCollector(
+      graft.sources.Sources.collectorTsv(spark, tsv.toString))
+    def all(plan: LogicalPlan): Seq[Expression] =
+      plan.collect { case n => n.expressions.flatMap(_.collect { case e => e }) }.flatten
+    // the getFields of one kernel call are copies of one expression, which
+    // codegen subexpression elimination evaluates once per row
+    def distinctCalls(plan: LogicalPlan)(pf: PartialFunction[Expression, Expression]) =
+      all(plan).collect(pf).map(_.canonicalized).distinct.size
+    val protocol = raw.queryExecution.optimizedPlan
+    assert(distinctCalls(protocol) { case t: TrackerParamsExpression => t } == 1,
+      s"Protocol.fromCollector must walk the querystring once:\n$protocol")
+    val qsRegex = all(protocol).collect { case r: RegExpExtract => r }
+      .filter(_.references.exists(_.name == "querystring"))
+    assert(qsRegex.isEmpty, s"a regexp_extract still scans the querystring:\n$protocol")
+    val ua = graft.enrich.UaParser().apply(raw).queryExecution.optimizedPlan
+    assert(distinctCalls(ua) { case u: UaParseExpression => u } == 1,
+      s"UaParser must parse the UA once:\n$ua")
+    // the default chain over the protocol mapping analyzes to 64 Project
+    // nodes with one withColumn per derived column, 25 with one withColumns
+    // per stage (the loader's select, the mapping, the chain's stages and
+    // flags, and the joins' drops)
+    val chain = graft.queries.PipelineQuery.pipeline.run(raw)
+    val projects = chain.queryExecution.analyzed.collect { case p: Project => p }.size
+    assert(projects <= 25, s"pipeline.run analyzes to $projects Project nodes")
+    assert(chain.count() == 1)
+  }
+
   test("aggregations are map-side partial before their one exchange") {
     val p = plan("q1_pricing")
     val firstPartial = p.indexOf("partial_")

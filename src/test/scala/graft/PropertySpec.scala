@@ -165,6 +165,86 @@ class PropertySpec extends SparkSpec {
     assert(nullRow.getString(0) == "Unknown" && nullRow.isNullAt(1) && nullRow.isNullAt(2))
   }
 
+  test("uaParsed property: one-pass kernel == the six UaParser Column twins") {
+    import spark.implicits._
+    import graft.functions.UaF
+    import graft.queries.Synth
+    val token = Gen.oneOf("FBAV/412.0", "Edg/120.0.1", "OPR/105.0", "Opera Mini/7.6",
+      "Firefox/121.0", "Chrome/120.0.0.0", "Version/17.1", "Safari/605.1.15",
+      "MSIE 9.0", "Trident/7.0", "Googlebot/2.1", "curl/8.4.0", "bot",
+      "Windows NT 10.0", "Windows Phone 8.1", "Android 14", "KAIOS/2.5", "X11;",
+      "Linux", "iPad", "iPhone", "Mobile", "PlayStation", "AFTMM", "SM-T870",
+      "Nexus 7", "Tablet;", "SMART-TV")
+    val soup = Gen.listOf(token).map(_.mkString("Mozilla/5.0 (", "; ", ") test"))
+    // 64 KB UAs: a browser token past the first 64 KB, a bot token there,
+    // and a long run of non-ASCII text with a surrogate pair
+    val huge = Seq(
+      "Mozilla/5.0 " + "x" * 65536 + " Chrome/120.0.0.0 Safari/537.36",
+      "Mozilla/5.0 (Android 14; Mobile) " + "y" * 65536 + " Googlebot/2.1",
+      "Mozilla/5.0 (iPad) " + "ü😀" * 21846 + " Version/17.1 Safari/605.1.15")
+    val cases = (Synth.UAs ++ sample(soup, 300) ++ huge :+ "").distinct.map(Option(_)) :+ None
+    val fields = Seq("br_family", "br_version", "os_family", "dvce_type", "dvce_ismobile", "is_bot")
+    val k = UaF.uaParsed(col("ua"))
+    val out = cases.toDF("ua")
+      .select(col("ua") +: fields.map(f => k.getField(f).as(s"k_$f")) :+
+        UaF.browserFamilyColumns(col("ua")).as("br_family") :+
+        UaF.browserVersionColumns(col("ua")).as("br_version") :+
+        UaF.osFamily(col("ua")).as("os_family") :+
+        UaF.deviceClassColumns(col("ua")).as("dvce_type") :+
+        UaF.isMobile(col("ua")).as("dvce_ismobile") :+
+        UaF.isBotColumns(col("ua")).as("is_bot"): _*)
+      .collect()
+    assert(out.length == cases.length)
+    out.foreach { r =>
+      fields.foreach { f =>
+        val (got, want) = (r.getAs[Any](s"k_$f"), r.getAs[Any](f))
+        assert(got == want, s"$f(${Option(r.getString(0)).map(_.take(80))}): $got != $want")
+      }
+    }
+    // the struct carries each twin's nullability into the output schema
+    val schema = cases.toDF("ua").select(fields.map(f => k.getField(f).as(f)): _*).schema
+    assert(fields.map(schema(_).nullable) == Seq(false, true, false, true, true, true))
+  }
+
+  test("trackerParams property: one-walk kernel == qsParam regex twin per key") {
+    import spark.implicits._
+    import graft.functions.UrlF
+    // the protocol keys plus keys that are prefixes/suffixes of them
+    val keys = graft.enrich.Protocol.TrackerKeys ++ Seq("ev", "re", "pp", "tp", "u", "sp", "tr_t")
+    val crafted = Seq(
+      "e=pv&ev=x", "ev=x&e=pv", "re=1&e=se", "res=1x2&re=3", "pp=1&p=web",
+      "tp=2&p=mob", "p=&p=web", "e=&e=pv", "e=pv&e=pp", "&e=pv", "&&e=pv",
+      "e=pv&&p=web", "e=pv&", "p=web&e", "e", "e=", "=pv&e=se", "e==pv",
+      "url=https://x.com/a?b=c=d", "url=http%3A%2F%2Fx.com%2F%3Fa%3D1&refr=a+b",
+      "tr_tt=12.5&tr_cu=USD&tr_t=1", "uid=ü&tr_cu=€", "uid=😀x&e=😀&_sp=a😀b",
+      "E=pv&e=se", "e =pv&p=web", "e=p\nv&p=w\r\n", "_sp=abc.123&sp=x",
+      "dtm=1700000000000&stm=&ttm=17", "ue_px=eyJ9&e=ue", "", "&", "&&", "=", "==")
+    val big = Seq(
+      "x=" + "a" * 8192 + "&e=pv&p=web",
+      (0 until 900).map(i => s"k$i=v").mkString("&") + "&uid=last&e=se",
+      "refr=" + "%C3%BC" * 1400 + "&res=1920x1080")
+    val piece = Gen.oneOf(keys ++ Seq("", "x", "E", "tr_", "_")).flatMap(k =>
+      Gen.oneOf("", "=", "=pv", "=a=b", "=%41+b", "=ü", "=😀", "==").map(k + _))
+    val soup = Gen.listOf(piece).map(_.mkString("&"))
+    val cases = (crafted ++ big ++ sample(soup, 400)).distinct.map(Option(_)) :+ None
+    val k = UrlF.trackerParams(col("qs"), keys)
+    val out = cases.toDF("qs")
+      .select(col("qs") +: keys.map(f => k.getField(f).as(s"k_$f")) ++:
+        keys.map(f => UrlF.qsParam(col("qs"), f).as(s"re_$f")): _*)
+      .collect()
+    assert(out.length == cases.length)
+    out.foreach { r =>
+      keys.foreach { f =>
+        val (got, want) = (r.getAs[String](s"k_$f"), r.getAs[String](s"re_$f"))
+        assert(got == want, s"$f(${Option(r.getString(0)).map(_.take(80))}): $got != $want")
+      }
+    }
+    // a name no pair can carry is rejected when the plan is built
+    Seq("", "a=b", "a&b").foreach { bad =>
+      intercept[IllegalArgumentException](UrlF.trackerParams(col("qs"), Seq("e", bad)))
+    }
+  }
+
   test("canonicalizeUrl property: idempotent, tracking-free, port-normalized") {
     import spark.implicits._
     import graft.functions.UrlF
@@ -633,7 +713,9 @@ class PropertySpec extends SparkSpec {
 
   test("sign-split division lemma: truncating and flooring engines agree after the split") {
     def truncDiv(a: Long, b: Long) = a / b // JVM/Spark: toward zero
-    def floorDiv(a: Long, b: Long) = Math.floorDiv(a, b) // DuckDB //: floor
+    // a flooring engine (Python's //); DuckDB 1.0's // truncates on
+    // integers like Spark, so the queries no longer split the sign
+    def floorDiv(a: Long, b: Long) = Math.floorDiv(a, b)
     val gen = Gen.zip(Gen.chooseNum(-100000L, 100000L), Gen.chooseNum(1L, 999L))
     sample(gen, 500).foreach { case (num, den) =>
       def split(div: (Long, Long) => Long): Long =

@@ -72,8 +72,8 @@ class QueryRegistrySpec extends SparkSpec {
     assert(hits("""def (tdiv|tdivSql|tdivL|bits|cents|revE4|nearestRank)\b""").distinct ==
       Seq("IntIdioms.scala"))
     assert(hits("""def pick\(p: Int\)""").isEmpty, "use IntIdioms.nearestRank")
-    assert(hits("""CASE WHEN \$num >= 0""") == Seq("IntIdioms.scala"),
-      "Spark's div truncates; the sign split is the DuckDB spelling only")
+    assert(hits("""-\(\(-|-\(CAST\(-""").isEmpty,
+      "Spark's div, DuckDB's integer // and the JVM's / all truncate: no sign split")
   }
 
   test("Spark's div truncates toward zero: it equals the sign-split CASE") {
