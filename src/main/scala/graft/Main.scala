@@ -49,8 +49,11 @@ object Main {
     case "--transport-config" :: v :: rest => parse(rest, acc.copy(transportConfig = v))
     // drain mode: process everything available, then exit (Trigger.AvailableNow)
     case "--once" :: rest => parse(rest, acc.copy(once = true))
-    // AssetRefresher semantics: rebuild the pipeline (and re-resolve its
-    // parquet dims + the --config file itself) every micro-batch. One
+    // AssetRefresher semantics: dims are parquet paths resolved at plan
+    // time, so one long-lived plan pins the dim files it started with. This
+    // mode rebuilds the pipeline (re-reading --config) every micro-batch: a
+    // rebuilt plan re-lists each dim path, so a dim overwritten on disk takes
+    // effect on the next batch, for one dim re-broadcast per batch. One
     // foreachBatch query writes both sinks from one enrichment pass, so a
     // batch never splits across two configs. Note: foreachBatch append is
     // at-least-once on a batch retry (the default file sink's exactly-once

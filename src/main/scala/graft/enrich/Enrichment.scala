@@ -943,48 +943,6 @@ final case class EnrichmentPipeline(enrichments: Seq[Enrichment]) {
     bad.withColumn("bad_row",
       BadRows.badRowJson(col("bad_row_errors"), struct(payloadCols.map(col): _*), etlTstampUs))
   }
-
-  /** ONE-PASS good/bad split to a single parquet root partitioned by
-    * `is_bad`: good rows land under `is_bad=false`, failed rows under
-    * `is_bad=true` with their bad-row envelope attached, and consumers get
-    * partition-pruned reads of either side. It stores nothing, so it suits
-    * a job that wants this layout; for the reference's two-sink layout
-    * (good parquet + envelope text) in one pass, use [[withSplit]]. */
-  def splitWrite(
-    df: DataFrame,
-    path: String,
-    payloadCols: Seq[String],
-    etlTstampUs: Column
-  ): Unit = {
-    val enriched = run(df)
-    enriched
-      .withColumn("is_bad", size(col("bad_row_errors")) > 0)
-      .withColumn("bad_row",
-        when(col("is_bad"), BadRows.badRowJson(
-          col("bad_row_errors"), struct(payloadCols.map(col): _*), etlTstampUs)))
-      .write.partitionBy("is_bad").mode("overwrite").parquet(path)
-  }
-
-  /** Streaming twin of [[splitWrite]]: the same single-root `is_bad`
-    * layout, appended per micro-batch through foreachBatch. For two sinks
-    * per micro-batch from one pass, call [[withSplit]] inside a
-    * foreachBatch (what `graft.Main --refresh-dims` does). The caller sets
-    * the checkpoint location / trigger and calls `.start()`. */
-  def splitWriteStream(
-    df: DataFrame,
-    path: String,
-    payloadCols: Seq[String],
-    etlTstampUs: Column
-  ): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    run(df)
-      .withColumn("is_bad", size(col("bad_row_errors")) > 0)
-      .withColumn("bad_row",
-        when(col("is_bad"), BadRows.badRowJson(
-          col("bad_row_errors"), struct(payloadCols.map(col): _*), etlTstampUs)))
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.partitionBy("is_bad").mode("append").parquet(path)
-      }
 }
 
 /** One field predicate inside a registered schema: a dot path into the

@@ -20,8 +20,9 @@ class MainStreamSpec extends SparkSpec {
 
   // event code rides in the querystring (e=...), which wins over the TSV
   // field in Protocol.fromCollector
-  private def collectorLine(eventCode: String) =
-    Seq("1704067200000000", "94.15.223.151", "Mozilla/5.0 (X11; Linux x86_64; rv:109.0) Gecko/20100101 Firefox/119.0",
+  private def collectorLine(eventCode: String, tsUs: Long = 1704067200000000L,
+                            ip: String = "94.15.223.151") =
+    Seq(tsUs.toString, ip, "Mozilla/5.0 (X11; Linux x86_64; rv:109.0) Gecko/20100101 Firefox/119.0",
       "https://shop.example.com/p/1", eventCode,
       qs.replace("e=pv", s"e=$eventCode")).mkString("\t")
 
@@ -117,6 +118,97 @@ class MainStreamSpec extends SparkSpec {
     assert(bad.length == 1 && bad(0).contains("unknown event code"),
       s"bad envelope written through the refresh-dims foreachBatch path (got ${bad.length})")
     assert(ips.length + bad.length == 3, "good + bad = raw across the config swap")
+  }
+
+  test("--refresh-dims: a geo dim overwritten mid-stream is read by the next batch") {
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val root = Files.createTempDirectory("main_dim_swap")
+    val in = root.resolve("in")
+    Files.createDirectories(in)
+    val dim = root.resolve("geo").toString
+    val good = root.resolve("good").toString
+    // 10.0.0.0/8 -> country, published by overwriting the dim path in place
+    def publishDim(country: String): Unit =
+      Seq((167772160L, 184549375L, country)).toDF("lo", "hi", "geo_country")
+        .write.mode("overwrite").parquet(dim)
+    val cfg = root.resolve("enrich.json")
+    def writeConfig(anonOctets: Int): Unit = {
+      val anon = if (anonOctets > 0) s""", {"name": "anon_ip", "octets": $anonOctets}""" else ""
+      Files.write(cfg, s"""{"enrichments": [{"name": "ip_geo_lookup", "rangesPath": "$dim"}$anon]}"""
+        .getBytes("UTF-8"))
+    }
+    // each file lands whole: written aside, then renamed into the input dir
+    def drop(name: String, line: String): Unit = {
+      val tmp = root.resolve(name)
+      Files.write(tmp, line.getBytes("UTF-8"))
+      Files.move(tmp, in.resolve(name), java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    }
+    publishDim("SE")
+    writeConfig(anonOctets = 0)
+
+    val before = spark.streams.active.map(_.id).toSet
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]
+    val main = new Thread(() =>
+      try graft.Main.main(Array(
+        "--mode", "stream", "--format", "collector-tsv", "--input", in.toString,
+        "--config", cfg.toString, "--good", good, "--bad", root.resolve("bad").toString,
+        "--checkpoint", root.resolve("ck").toString, "--refresh-dims"))
+      catch { case t: Throwable => failure.set(t) })
+    main.setDaemon(true)
+    main.start()
+    def within[T](what: String)(probe: => Option[T]): T = {
+      val deadline = System.nanoTime() + 120L * 1000000000L
+      var found = Option.empty[T]
+      while (found.isEmpty) {
+        Option(failure.get).foreach(t => throw t)
+        assert(System.nanoTime() < deadline, s"timed out waiting for $what")
+        found = probe
+        if (found.isEmpty) Thread.sleep(200)
+      }
+      found.get
+    }
+    val q = within("the stream query")(spark.streams.active.find(s => !before(s.id)))
+    // (geo_country, user_ipaddress) of the good row with this collector timestamp
+    def goodRow(tsUs: Long): (String, String) = within(s"event $tsUs in the good sink") {
+      q.exception.foreach(e => throw e)
+      // _SUCCESS marks the first committed batch: reading earlier finds no schema
+      if (!Files.exists(java.nio.file.Paths.get(good, "_SUCCESS"))) None
+      else spark.read.parquet(good)
+        .filter(col("collector_tstamp_us") === tsUs)
+        .select("geo_country", "user_ipaddress").as[(String, String)].collect().headOption
+    }
+    try {
+      drop("b1.tsv", collectorLine("pv", tsUs = 1704067200000000L, ip = "10.1.2.3"))
+      assert(goodRow(1704067200000000L) == ("SE", "10.1.2.3"), "event 1 reads dim v1")
+      // hot swap while the query keeps running: the dim AND the config
+      publishDim("NO")
+      writeConfig(anonOctets = 1)
+      drop("b2.tsv", collectorLine("pv", tsUs = 1704067201000000L, ip = "10.1.2.4"))
+      assert(goodRow(1704067201000000L) == ("NO", "10.1.2.x"),
+        "event 2 reads dim v2 and config v2 in the same query, with no restart")
+    } finally {
+      q.stop()
+      main.join(60000)
+    }
+    assert(!main.isAlive, "Main returns once its stream query stops")
+    Option(failure.get).foreach(t => throw t)
+  }
+
+  test("source guard: one foreachBatch stream path, no second reader or split layout") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repository root: $root")
+    val files = Files.walk(root).iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+    def hits(p: String) = files.flatMap { f =>
+      p.r.findAllIn(Files.readString(f)).map(_ => f.getFileName.toString)
+    }
+    assert(hits("""\.foreachBatch\b""") == Seq("Main.scala"),
+      "per-batch stream writes go through Main --refresh-dims")
+    assert(hits("""\b(?:extends|with)\s+TableProvider\b""").isEmpty,
+      "collector TSV is read through Sources.collectorTsv")
+    assert(hits("""partitionBy\(\s*"is_bad"""").isEmpty,
+      "good and bad rows go to two sinks through EnrichmentPipeline.withSplit")
   }
 
   test("kinesis transport over an archive replay: lossless seq_str dedup absorbs a planted redelivery") {

@@ -297,33 +297,36 @@ class StreamBatchEquivalenceSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("flagship splitWrite under streaming == batch splitWrite: good AND bad, 3 micro-batches") {
+  test("flagship withSplit in foreachBatch == batch withSplit: both sinks") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
 
-    // the FULL flagship chain (PipelineQuery.pipeline) at sf0.001, split
-    // one-pass into the is_bad-partitioned layout on BOTH sides: batch
-    // splitWrite vs its streaming twin fed the same rows in three
-    // micro-batches — the reference's core promise extended to the split
-    // (good and bad halves of a batch computed under one config snapshot)
+    // the FULL flagship chain (PipelineQuery.pipeline) at sf0.001, written
+    // to good parquet + bad envelope text through withSplit the way
+    // Main.writeSinks does, once as a batch and once per micro-batch inside
+    // foreachBatch (Main --refresh-dims) over the same rows in three
+    // micro-batches — the reference's core promise extended to both sinks
     val ev = Tables.events(spark, dir)
       .select(col("event_id"), col("user_id"), col("event_type"), col("value"),
         col("props"), col("ts_us"))
       .as[(Long, Long, String, Double, String, Long)].collect().sortBy(_._1)
     val pipeline = graft.queries.PipelineQuery.pipeline
     val etl = lit(1700000000000000L)
-    val payload = Seq("event_id", "event_type")
+    val payload = struct(col("event_id"), col("event_type"))
     val root = java.nio.file.Files.createTempDirectory("split_equiv")
+    def writeSinks(side: String)(raw: org.apache.spark.sql.DataFrame): Unit =
+      pipeline.withSplit(raw) { (good, bad) =>
+        good.write.mode("append").parquet(root.resolve(s"$side/good").toString)
+        bad.select(graft.enrich.BadRows.badRowJson(col("bad_row_errors"), payload, etl).as("bad_row"))
+          .write.mode("append").text(root.resolve(s"$side/bad").toString)
+      }
+    val cols = Seq("event_id", "user_id", "event_type", "value", "props", "ts_us")
 
-    pipeline.splitWrite(
-      graft.queries.Synth.withRaw(ev.toSeq.toDF("event_id", "user_id", "event_type", "value", "props", "ts_us")),
-      root.resolve("batch").toString, payload, etl)
+    writeSinks("batch")(graft.queries.Synth.withRaw(ev.toSeq.toDF(cols: _*)))
 
     val mem = MemoryStream[(Long, Long, String, Double, String, Long)]
-    val q = pipeline.splitWriteStream(
-      graft.queries.Synth.withRaw(
-        mem.toDF().toDF("event_id", "user_id", "event_type", "value", "props", "ts_us")),
-      root.resolve("stream").toString, payload, etl)
+    val q = graft.queries.Synth.withRaw(mem.toDF().toDF(cols: _*)).writeStream
+      .foreachBatch((batch: org.apache.spark.sql.DataFrame, _: Long) => writeSinks("stream")(batch))
       .option("checkpointLocation", root.resolve("ck").toString)
       .start()
     try {
@@ -333,21 +336,33 @@ class StreamBatchEquivalenceSpec extends SparkSpec {
       }
     } finally q.stop()
 
-    def canon(path: String): (Seq[String], Long, Long) = {
-      val df = spark.read.parquet(path)
-      val cols = df.columns.sorted.toIndexedSeq
-      val rows = df.select(cols.map(col): _*).collect().map(_.toString).toIndexedSeq.sorted
-      (rows,
-        df.filter(col("is_bad") === false).count(),
-        df.filter(col("is_bad") === true).count())
+    def good(side: String): IndexedSeq[String] = {
+      val df = spark.read.parquet(root.resolve(s"$side/good").toString)
+      df.select(df.columns.sorted.toIndexedSeq.map(col): _*)
+        .collect().map(_.toString).toIndexedSeq.sorted
     }
-    val (b, bGood, bBad) = canon(root.resolve("batch").toString)
-    val (s, sGood, sBad) = canon(root.resolve("stream").toString)
-    assert(bGood > 0 && bBad > 0, s"flagship synth must exercise both sides (good=$bGood bad=$bBad)")
-    assert(sGood == bGood && sBad == bBad, s"split sizes differ: stream=($sGood,$sBad) batch=($bGood,$bBad)")
-    assert(s.length == b.length, s"row counts differ: stream=${s.length} batch=${b.length}")
-    s.zip(b).zipWithIndex.foreach { case ((sr, br), i) =>
-      assert(sr == br, s"split row $i differs:\n stream=$sr\n batch =$br")
+    def bad(side: String): IndexedSeq[String] =
+      spark.read.text(root.resolve(s"$side/bad").toString)
+        .collect().map(_.getString(0)).toIndexedSeq.sorted
+    val (bGood, bBad, sGood, sBad) = (good("batch"), bad("batch"), good("stream"), bad("stream"))
+    assert(bGood.nonEmpty && bBad.nonEmpty,
+      s"flagship synth must exercise both sides (good=${bGood.length} bad=${bBad.length})")
+    assert(sGood.length == bGood.length && sBad.length == bBad.length,
+      s"split sizes differ: stream=(${sGood.length},${sBad.length}) batch=(${bGood.length},${bBad.length})")
+    sGood.zip(bGood).zipWithIndex.foreach { case ((sr, br), i) =>
+      assert(sr == br, s"good row $i differs:\n stream=$sr\n batch =$br")
+    }
+    sBad.zip(bBad).zipWithIndex.foreach { case ((sr, br), i) =>
+      assert(sr == br, s"bad envelope $i differs:\n stream=$sr\n batch =$br")
+    }
+    // good + bad = raw: every event id lands in exactly one sink
+    for (side <- Seq("batch", "stream")) {
+      val goodIds = spark.read.parquet(root.resolve(s"$side/good").toString)
+        .select(col("event_id").cast("string")).as[String].collect().toSeq
+      val badIds = spark.read.text(root.resolve(s"$side/bad").toString)
+        .select(get_json_object(col("value"), "$.data.payload.event_id")).as[String].collect().toSeq
+      assert((goodIds ++ badIds).sorted == ev.map(_._1.toString).toSeq.sorted,
+        s"$side: good + bad != raw")
     }
   }
 }

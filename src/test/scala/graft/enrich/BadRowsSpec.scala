@@ -72,26 +72,27 @@ class BadRowsSpec extends graft.SparkSpec {
     assert(t.getAs[String]("component_version") == "1.0.0")
   }
 
-  test("splitWrite: one pass, partition-pruned sides == split() cardinalities") {
+  test("withSplit: one pass, each side == split() cardinalities") {
     val df = (1L to 60L).toDF("id")
       .withColumn("event_code", when(col("id") % 6 === 0, lit("zz")).otherwise(lit("pv")))
       .withColumn("platform_code", lit("web"))
       .withColumn("res", lit("800x600"))
       .withColumn("xff", lit(null).cast("string"))
     val pipe = EnrichmentPipeline(Seq(TrackerTransform()))
-    val out = java.nio.file.Files.createTempDirectory("splitwrite").toString + "/events"
-    pipe.splitWrite(df, out, Seq("id", "event_code"), lit(EtlUs))
-    val back = spark.read.parquet(out)
     val (good, bad) = pipe.split(df)
-    // partition columns read back as strings under default inference
-    val isBad = col("is_bad") === "true"
-    assert(back.where(!isBad).count() == good.count())
-    assert(back.where(isBad).count() == bad.count())
-    assert(back.where(isBad).where(col("bad_row").isNull).count() == 0,
-      "every failed row carries its envelope")
-    assert(back.where(!isBad).where(col("bad_row").isNotNull).count() == 0)
-    // the write really partitioned: each side readable by directory
-    assert(spark.read.parquet(out + "/is_bad=true").count() == bad.count())
+    val (goodN, badN, envelopes) = pipe.withSplit(df) { (g, b) =>
+      (g.count(), b.count(),
+        b.select(col("id"), BadRows.badRowJson(col("bad_row_errors"),
+          struct(col("id"), col("event_code")), lit(EtlUs)).as("bad_row")).collect())
+    }
+    assert(goodN == good.count() && goodN == 50)
+    assert(badN == bad.count() && badN == 10)
+    assert(envelopes.length == badN && envelopes.map(_.getLong(0)).distinct.length == badN,
+      "every failed row carries exactly one envelope")
+    envelopes.foreach { r =>
+      assert(r.getString(1).contains(s""""payload":{"id":${r.getLong(0)},"event_code":"zz"}"""),
+        s"envelope must replay its own row: ${r.getString(1)}")
+    }
   }
 
   test("adapter-stage envelopes: AdapterFailures vs TrackerProtocolViolations subtype") {

@@ -21,11 +21,14 @@ the parent (ties count for neither side) and two verdicts:
           worse than the parent's by more than the metric's bound.
 
 Every run must print `correct: true` and `failed: 0`; the summary lists any
-run that did not. Standard library only.
+run that did not. With --json, the file also keeps every pair's two result
+objects (metrics included), each with the run's `input: k=v ...` line parsed
+under "input". Standard library only.
 """
 import argparse
 import io
 import json
+import re
 import statistics
 import subprocess
 import sys
@@ -44,8 +47,34 @@ def extract(ref, dest):
         t.extractall(dest, filter="data")
 
 
+def scalar(v):
+    """`v` as an int, a float or a Scala `Map(k -> v, ...)` as a dict where it
+    reads as one, else the string."""
+    m = re.fullmatch(r"\w*Map\((.*)\)", v)
+    if m:
+        return {k: scalar(x) for k, x in re.findall(r"([\w.]+) -> ([^,]+)", m.group(1))}
+    for kind in (int, float):
+        try:
+            return kind(v)
+        except ValueError:
+            pass
+    return v
+
+
+def input_props(lines):
+    """The run's `input: k=v ...` line (the generated input's shape) as a dict.
+    A value may hold spaces; each `key=` token starts the next pair."""
+    prefix = "input: "
+    for l in lines:
+        if l.startswith(prefix):
+            pairs = re.split(r"\s+(?=[\w.]+=)", l[len(prefix):].strip())
+            return {k: scalar(v) for k, _, v in (kv.partition("=") for kv in pairs)}
+    return None
+
+
 def run_once(tree, workload, seed, seconds, trace):
-    """One benchmark run in `tree`: its result object, or None if it failed."""
+    """One benchmark run in `tree`: its result object, with the run's input
+    properties under "input", or None if it failed."""
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(seed),
            "--seconds", str(seconds), "--trace", str(trace)]
     proc = subprocess.run(cmd, cwd=tree, capture_output=True, text=True)
@@ -54,9 +83,11 @@ def run_once(tree, workload, seed, seconds, trace):
         sys.stderr.write(proc.stderr[-2000:])
         return None
     try:
-        return json.loads(lines[-1])
+        result = json.loads(lines[-1])
     except json.JSONDecodeError:
         return None
+    result["input"] = input_props(lines)
+    return result
 
 
 def quartiles(xs):
@@ -153,7 +184,9 @@ def main():
         Path(a.json).write_text(json.dumps(
             {"workload": a.workload, "parent": a.parent, "seeds": [a.seed, a.seed + a.pairs - 1],
              "seconds": a.seconds, "trace": a.trace, "invalid_runs": bad,
-             "summary": rows}, indent=1) + "\n")
+             "summary": rows,
+             "runs": [{"seed": a.seed + i, "parent": p, "change": c}
+                      for i, (p, c) in enumerate(results)]}, indent=1) + "\n")
     sys.exit(1 if bad else 0)
 
 
