@@ -25,6 +25,16 @@ import graft.operators.RangeJoin
   * projection per stage instead of one per column, with the same column
   * order and in-place replacement as the `withColumn` chain it spells.
   *
+  * That one stage compiles to one generated Java method, and HotSpot never
+  * JIT-compiles a method over 8,000 bytes of bytecode: past it, every row
+  * of the chain runs in the bytecode interpreter. Per-field Column code
+  * costs bytes per field, so the fat stages (collector parse, protocol
+  * mapping, TrackerTransform, UaParser, the URL stages, CrossNavigation,
+  * EventFingerprint, FieldLengthValidator) read their columns from one
+  * compact kernel call per row (`graft.plans`), with the Column spelling
+  * kept as a specification twin. `PlanShapeSpec` fails when the default
+  * chain's largest generated method reaches 8,000 bytes.
+  *
   * Validation failures never kill the job: enrichments append STRUCTURED
   * failure entities to the `bad_row_errors` array column — the Spark twin
   * of the reference's bad-row channel with the reference's failure-entity
@@ -81,7 +91,8 @@ object Enrichment {
 
 /** Tracker-protocol transform (reference `enrichments/Transform.scala`):
   * event code, platform, resolution, forwarded IP → atomic columns, with
-  * bad-row flags for unknown codes. */
+  * bad-row flags for unknown codes. The five columns are the fields of one
+  * [[graft.plans.TrackerFieldsExpression]] per row. */
 final case class TrackerTransform(
   eventCodeCol: String = "event_code",
   platformCol: String = "platform_code",
@@ -90,12 +101,9 @@ final case class TrackerTransform(
 ) extends Enrichment {
   val name = "tracker_transform"
   def apply(df: DataFrame): DataFrame = {
+    val k = EventF.trackerFields(col(eventCodeCol), col(platformCol), col(resCol), col(xffCol))
     val out = df.withColumns(ListMap(
-      "event" -> EventF.eventTypeFromCode(col(eventCodeCol)),
-      "platform" -> EventF.platformValidate(col(platformCol)),
-      "dvce_screenwidth" -> EventF.resWidth(col(resCol)),
-      "dvce_screenheight" -> EventF.resHeight(col(resCol)),
-      "user_ipaddress" -> IpF.firstForwardedIp(col(xffCol))))
+      graft.plans.TrackerFieldsExpression.Schema.fieldNames.toSeq.map(f => f -> k.getField(f)): _*))
     // the flags read the derived event/platform, so they stay a second step
     val bad1 = flagBad(out, col(eventCodeCol).isNotNull && col("event").isNull, "unknown event code")
     flagBad(bad1, col(platformCol).isNotNull && col("platform").isNull, "invalid platform")
@@ -200,12 +208,13 @@ final case class UaParser(uaCol: String = "ua") extends Enrichment {
   }
 }
 
-/** Event fingerprint (reference `registry/EventFingerprintEnrichment`). */
+/** Event fingerprint (reference `registry/EventFingerprintEnrichment`):
+  * one digest call per row ([[graft.plans.FingerprintExpression]]). */
 final case class EventFingerprint(algo: String, params: Seq[String]) extends Enrichment {
   val name = "event_fingerprint"
   def apply(df: DataFrame): DataFrame =
     df.withColumn("event_fingerprint",
-      EventF.eventFingerprint(algo, params.map(p => p -> col(p))))
+      EventF.fingerprintDigest(algo, params.map(p => p -> col(p))))
 }
 
 /** PII pseudonymization (reference `registry/pii/PiiPseudonymizerEnrichment`). */
@@ -266,7 +275,8 @@ final case class CurrencyConversion(
           .select(col(curField).as("__cur"), col(rateField).cast("bigint").as("__rate_micro"))
       else rates.toDF("__cur", "__rate_micro"))
     df.join(ratesDf, col(currencyCol) === col("__cur"), "left")
-      .withColumn(outCol, col(amountCentsCol) * col("__rate_micro"))
+      // null, not a job abort, when a crafted amount overflows
+      .withColumn(outCol, try_multiply(col(amountCentsCol), col("__rate_micro")))
       .drop("__cur", "__rate_micro")
   }
 }
@@ -572,13 +582,17 @@ final case class IdentityLookup(
   }
 }
 
-/** Cross-navigation `_sp` decoding (reference `registry/CrossNavigationEnrichment`). */
+/** Cross-navigation `_sp` decoding (reference `registry/CrossNavigationEnrichment`):
+  * both columns from one match ([[graft.plans.SpPairExpression]]); a
+  * timestamp whose micros overflow a bigint is null. */
 final case class CrossNavigation(spCol: String = "sp_qs") extends Enrichment {
   val name = "cross_navigation"
-  def apply(df: DataFrame): DataFrame =
+  def apply(df: DataFrame): DataFrame = {
+    val sp = EventF.spParsed(col(spCol))
     df.withColumns(ListMap(
-      "refr_domain_userid" -> EventF.spDomainUserId(col(spCol)),
-      "refr_dvce_tstamp_us" -> EventF.spTstampMs(col(spCol)) * 1000L))
+      "refr_domain_userid" -> sp.getField("duid"),
+      "refr_dvce_tstamp_us" -> sp.getField("tstamp_us")))
+  }
 }
 
 /** ASN lookup via the same broadcast range join as geo (reference
@@ -871,15 +885,39 @@ final case class CustomTransform(name: String, f: DataFrame => DataFrame) extend
 /** Atomic field length validation (reference `AtomicFieldsLengthValidator`):
   * truncates oversized values and flags them as bad.
   *
-  * Deliberately built as ONE flat projection — a fold of per-field
-  * `withColumn(array_union(...))` calls nests ~70 growing expressions and
-  * blows up the Catalyst optimizer (alias-trimming walks the product of the
-  * tree); a single `concat` of per-field error arrays stays depth-1. */
+  * One kernel call per row ([[graft.plans.FieldLengthsExpression]]) whose
+  * fields replace the limited columns in one `select`. [[applySpec]] is its
+  * Column twin: one flat projection of a `length` check, a `CASE` and a
+  * `substring` per field and one `concat` of per-field error arrays (a fold
+  * of per-field `array_union`s would nest ~70 growing expressions and blow
+  * up the optimizer). Over the default chain's 28 limited fields the twin
+  * adds 4,038 bytes to the chain's generated method, enough on its own to
+  * push it past HotSpot's 8,000-byte JIT limit. */
 final case class FieldLengthValidator(limits: Map[String, Int], truncate: Boolean = true)
     extends Enrichment {
   val name = "field_lengths"
+
+  private def present(df: DataFrame): Seq[(String, Int)] =
+    limits.filter { case (c, _) => df.columns.contains(c) }.toSeq.sortBy(_._1)
+
+  private def prevErrors(df: DataFrame): Column =
+    if (df.columns.contains("bad_row_errors")) col("bad_row_errors") else Enrichment.emptyFailures
+
   def apply(df: DataFrame): DataFrame = {
-    val present = limits.filter { case (c, _) => df.columns.contains(c) }.toSeq.sortBy(_._1)
+    val fields = present(df)
+    if (fields.isEmpty) return df
+    val k = EventF.fieldLengths(fields.map { case (c, max) => (c, col(c), max) },
+      prevErrors(df), truncate, name)
+    val truncated = if (truncate) fields.map(_._1).toSet else Set.empty[String]
+    val outCols = df.columns.toSeq.filterNot(_ == "bad_row_errors").map { c =>
+      if (truncated(c)) k.getField(c).as(c) else col(c)
+    }
+    df.select(outCols :+ k.getField("bad_row_errors").as("bad_row_errors"): _*)
+  }
+
+  /** The Column specification twin of [[apply]]. */
+  def applySpec(df: DataFrame): DataFrame = {
+    val present = this.present(df)
     if (present.isEmpty) return df
     val empty = Enrichment.emptyFailures
     val errArrays = present.map { case (c, max) =>
@@ -888,8 +926,7 @@ final case class FieldLengthValidator(limits: Map[String, Int], truncate: Boolea
         lit(null).cast("string").as("schema_key"),
         lit(s"$c exceeds $max chars").as("message")))).otherwise(empty)
     }
-    val prev = if (df.columns.contains("bad_row_errors")) col("bad_row_errors") else empty
-    val errors = concat(prev +: errArrays: _*).as("bad_row_errors")
+    val errors = concat(prevErrors(df) +: errArrays: _*).as("bad_row_errors")
     val outCols = df.columns.filterNot(_ == "bad_row_errors").map { c =>
       present.find(_._1 == c) match {
         case Some((_, max)) if truncate => substring(col(c), 1, max).as(c)

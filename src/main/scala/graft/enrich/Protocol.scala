@@ -29,11 +29,12 @@ object Protocol {
     // elimination); each field equals UrlF.qsParam(querystring, key)
     val params = UrlF.trackerParams(col(qsCol), TrackerKeys)
     def p(key: String) = params.getField(key)
-    // try_cast / try_url_decode throughout: tracker params are
-    // attacker-controlled strings, and under ANSI mode (Spark 4 default) a
-    // plain cast or url_decode on one malformed row would kill the whole
-    // job — a bad param must become a null column, not an exception
-    def pMsToUs(key: String) = p(key).try_cast("bigint") * 1000L
+    // try_cast / try_url_decode / try_multiply throughout: tracker params
+    // are attacker-controlled strings, and under ANSI mode (Spark 4
+    // default) a plain cast, url_decode or overflowing multiply on one
+    // malformed row would kill the whole job — a bad param must become a
+    // null column, not an exception
+    def pMsToUs(key: String) = try_multiply(p(key).try_cast("bigint"), lit(1000L))
     val eventCode = // CloudFront lines carry no event_code column
       if (df.columns.contains("event_code")) coalesce(p("e"), col("event_code")) else p("e")
     // one projection: existing columns (event_code, page_url) are replaced

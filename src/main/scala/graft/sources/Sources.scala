@@ -1,7 +1,11 @@
 package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Raw-event sources — the Spark twin of snowplow/enrich's loader layer
   * (`modules/common/.../loaders/`: Thrift/TSV collector payloads from
@@ -32,14 +36,60 @@ object Sources {
   def parseCollectorTsv(lines: DataFrame, lineCol: String = "value"): DataFrame =
     lines.select(collectorTsvCols(col(lineCol)): _*)
 
-  /** The [[CollectorTsvFields]] of a TSV line column, typed. try_cast: a
-    * malformed line's garbage timestamp must become a null field under
-    * ANSI, never a job-killing cast error. */
+  /** The [[CollectorTsvFields]] of a TSV line column, typed: the raw
+    * fields come from one [[graft.plans.CollectorTsvExpression]] split per
+    * row. try_cast: a malformed line's garbage timestamp must become a null
+    * field under ANSI, never a job-killing cast error. */
   private def collectorTsvCols(line: Column): Seq[Column] = {
+    val fields = ColumnBridge.column(graft.plans.CollectorTsvExpression(
+      ColumnBridge.expression(line.cast("string")), CollectorTsvFields.map(_._1)))
+    CollectorTsvFields.map { case (name, typ) =>
+      val v = fields.getField(name)
+      (if (typ == "string") v else v.try_cast(typ)).as(name)
+    }
+  }
+
+  /** The Column specification twin of the collector-TSV parse: the
+    * `split` + `try_element_at` + `try_cast` per field that the kernel
+    * replaces. */
+  def collectorTsvColsSpec(line: Column): Seq[Column] = {
     val parts = split(line, "\t")
     CollectorTsvFields.zipWithIndex.map { case ((name, typ), i) =>
       try_element_at(parts, lit(i + 1)).try_cast(typ).as(name)
     }
+  }
+
+  /** Per-row entry for [[graft.plans.CollectorTsvExpression]]: the first
+    * `n` tab-separated fields of `line`, null past its last field — what
+    * `try_element_at(split(line, "\t"), i)` returns. An ASCII line splits
+    * on its bytes; any other line splits as a Java string, as `split`
+    * does, so malformed UTF-8 decodes to U+FFFD the same way. */
+  def collectorTsvRow(line: UTF8String, n: Int): InternalRow = {
+    val out = new Array[Any](n)
+    if (line == null) return new GenericInternalRow(out)
+    val len = line.numBytes
+    var ascii = true
+    var i = 0
+    while (ascii && i < len) { ascii = line.getByte(i) >= 0; i += 1 }
+    if (ascii) {
+      val bytes = line.getBytes
+      var start = 0
+      var f = 0
+      i = 0
+      while (f < n && i <= len) {
+        if (i == len || bytes(i) == '\t') {
+          out(f) = UTF8String.fromBytes(bytes, start, i - start)
+          f += 1
+          start = i + 1
+        }
+        i += 1
+      }
+    } else {
+      val parts = line.toString.split("\t", -1)
+      var f = 0
+      while (f < n && f < parts.length) { out(f) = UTF8String.fromString(parts(f)); f += 1 }
+    }
+    new GenericInternalRow(out)
   }
 
   /** [[parseCollectorTsv]] plus the reference's LOADER failure channel

@@ -110,4 +110,54 @@ class MalformedInputSpec extends SparkSpec {
       "every line without a timestamp lands exactly once too")
     assert(badTs.nonEmpty && goodTs.nonEmpty, "the sample must reach both sides")
   }
+
+  test("overflowing tracker numbers become null columns: no task fails, each event lands once") {
+    import spark.implicits._
+    // under ANSI a long overflow aborts the job; each line below once did,
+    // through the ms → µs multiplies, the _sp multiply, the currency
+    // multiply or the derived-timestamp correction
+    val cases = Seq(
+      ("created", "1704067200000000", "dtm=99999999999999999"),
+      ("sent", "1704067200000000", "stm=99999999999999999"),
+      ("true", "1704067200000000", "ttm=99999999999999999"),
+      ("sp", "1704067200000000", "_sp=abc.99999999999999999"),
+      ("amount", "1704067200000000", "tr_tt=10000000000000000&tr_cu=EUR"),
+      ("skew", "1704067200000000", "dtm=-9000000000000000&stm=9000000000000000"),
+      ("collector", "-9000000000000000000", "dtm=0&stm=1000000000000000"),
+      ("fits", "1704067200000000", "dtm=1704067199000&stm=1704067200000&_sp=abc.1704067100000" +
+        "&tr_tt=12.5&tr_cu=EUR"))
+    val lines = cases.map { case (id, ts, qs) =>
+      Seq(ts, "94.15.223.151", s"ua-$id", "https://shop.example.com/", "pv", s"e=pv&p=web&$qs").mkString("\t")
+    }
+    val failedTasks = new AtomicInteger
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.reason != Success) failedTasks.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val (good, bad) =
+      try {
+        val raw = Protocol.fromCollector(Sources.parseCollectorTsv(lines.toDF("value")))
+        val (g, b) = PipelineQuery.pipeline.split(raw)
+        val cols = Seq("useragent", "created_us", "sent_us", "true_us", "refr_dvce_tstamp_us",
+          "base_amount_e8", "derived_tstamp_us").map(col)
+        val out = (g.select(cols: _*).collect(), b.select(cols: _*).collect())
+        ListenerBusDrain(sc)
+        out
+      } finally sc.removeSparkListener(listener)
+
+    assert(failedTasks.get == 0, "no task may fail on an overflowing number")
+    val ids = (good ++ bad).map(_.getString(0).stripPrefix("ua-"))
+    assert(ids.sorted.toSeq == cases.map(_._1).sorted, "every event lands in exactly one of good and bad")
+    val byId = (good ++ bad).map(r => r.getString(0).stripPrefix("ua-") -> r).toMap
+    def isNull(id: String, c: String) = byId(id).isNullAt(byId(id).fieldIndex(c))
+    assert(isNull("created", "created_us") && isNull("sent", "sent_us") && isNull("true", "true_us"))
+    assert(isNull("sp", "refr_dvce_tstamp_us") && isNull("amount", "base_amount_e8"))
+    assert(isNull("skew", "derived_tstamp_us") && isNull("collector", "derived_tstamp_us"))
+    val fits = byId("fits")
+    assert(fits.getAs[Long]("derived_tstamp_us") == 1704067199000000L)
+    assert(fits.getAs[Long]("refr_dvce_tstamp_us") == 1704067100000000L)
+    assert(fits.getAs[Long]("base_amount_e8") == 1250L * 1080000L)
+  }
 }

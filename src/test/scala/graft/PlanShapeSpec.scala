@@ -178,6 +178,41 @@ class PlanShapeSpec extends SparkSpec {
     assert(chain.count() == 1)
   }
 
+  test("the default chain's largest generated method stays under HotSpot's 8,000-byte JIT limit") {
+    import org.apache.spark.ListenerBusDrain
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.debug.codegenStringSeq
+    import org.apache.spark.sql.util.QueryExecutionListener
+    // HotSpot never compiles a method over 8,000 bytes of bytecode
+    // (-XX:+DontCompileHugeMethods): a fused chain past it runs every row
+    // in the interpreter. With the Column-built stages the chain's one
+    // method read 14,935 bytes.
+    val dir = java.nio.file.Files.createTempDirectory("chain-codegen")
+    val tsv = dir.resolve("events.tsv")
+    java.nio.file.Files.writeString(tsv,
+      "1700000000000000\t10.0.0.1\tMozilla/5.0 (X11; Linux x86_64) Firefox/119.0\t" +
+        "https://shop.example.com/p/1?utm_source=g\tpv\te=pv&p=web&uid=u1&res=1920x1080" +
+        "&dtm=1700000000000&_sp=abc.1700000000000&tr_tt=12.5&tr_cu=EUR\n")
+    val chain = graft.queries.PipelineQuery.pipeline.run(graft.enrich.Protocol.fromCollector(
+      graft.sources.Sources.collectorTsv(spark, tsv.toString)))
+    @volatile var written: QueryExecution = null
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = written = qe
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      chain.write.format("noop").mode("overwrite").save()
+      ListenerBusDrain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    assert(written != null, "the noop write reported no query execution")
+    // the write's plan holds the AQE plan, whose final stages are read
+    val stages = codegenStringSeq(written.executedPlan)
+    assert(stages.nonEmpty, s"no whole-stage-codegen subtree:\n${written.executedPlan}")
+    val largest = stages.map(_._3.maxMethodCodeSize).max
+    assert(largest < 8000, s"the chain's largest generated method is $largest bytes")
+  }
+
   test("aggregations are map-side partial before their one exchange") {
     val p = plan("q1_pricing")
     val firstPartial = p.indexOf("partial_")

@@ -727,4 +727,176 @@ class PropertySpec extends SparkSpec {
     }
     assert(truncDiv(-7, 2) != floorDiv(-7, 2))
   }
+
+  /** Strings that are not valid UTF-8 (truncated, stray continuation,
+    * overlong, encoded surrogate, out of range), which Scala strings cannot
+    * hold: hex → binary → string keeps the raw bytes. */
+  private def withMalformedUtf8(df: org.apache.spark.sql.DataFrame, c: String,
+      hex: Seq[String]): org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    val others = df.columns.filterNot(_ == c).map(x => lit(null).cast(df.schema(x).dataType).as(x))
+    df.unionByName(hex.toDF("h").select(unhex(col("h")).cast("string").as(c) +: others.toSeq: _*))
+  }
+
+  /** Kernel fields against their Column twins, row by row, nulls included. */
+  private def assertSame(df: org.apache.spark.sql.DataFrame,
+      pairs: Seq[(String, org.apache.spark.sql.Column, org.apache.spark.sql.Column)]): Unit = {
+    val inputs = df.columns.toSeq
+    val out = df.select(inputs.map(col) ++ pairs.flatMap { case (f, k, t) => Seq(k.as(s"k_$f"), t.as(s"t_$f")) }: _*)
+    val schema = out.schema
+    pairs.foreach { case (f, _, _) =>
+      assert(schema(s"k_$f").dataType == schema(s"t_$f").dataType, s"$f type")
+      assert(schema(s"k_$f").nullable == schema(s"t_$f").nullable, s"$f nullability")
+    }
+    val rows = out.collect()
+    assert(rows.length == df.count())
+    rows.foreach { r =>
+      pairs.foreach { case (f, _, _) =>
+        val (got, want) = (r.getAs[Any](s"k_$f"), r.getAs[Any](s"t_$f"))
+        val in = inputs.map(c => s"$c=${Option(r.getAs[Any](c)).map(_.toString.take(80))}").mkString(", ")
+        assert(got == want, s"$f($in): $got != $want")
+      }
+    }
+  }
+
+  // line terminators Java's `$` matches before, and pairs it does not
+  private val Terminators = Seq("\n", "\r", "\r\n", "\u0085", "\u2028", "\u2029")
+  private val NotTerminators = Seq("\n\n", "\r\r", "\n\r", " ", "\t", "\u000b", "\f", "x")
+
+  test("trackerFields property: one-call kernel == the five TrackerTransform Column twins") {
+    import spark.implicits._
+    val codes = EventF.EventTypeMap.map(_._1) ++ Seq("PV", "Pv", "pV", "", "zz", " pv", "pv ",
+      "pv\n", "ü", "ev\u0000", "s", "sex")
+    val platforms = EventF.ValidPlatforms ++ Seq("WEB", "Web", "", "web ", " web", "mob\n", "pc2",
+      "headsets", "tv\u0000")
+    val int = Int.MaxValue.toLong
+    val res = Seq("1920x1080", "0x0", "00001920x0001080", "1x1", "1920X1080", "x1080", "1920x", "x",
+      "", "1920x1080x1", "-1x2", "+1x2", " 1920x1080", "1920 x1080", "1920×1080",
+      s"${int}x1", s"${int + 1}x1", s"1x${int + 1}", s"${int}x$int",
+      "1234567890123456789012345x1", "1x1234567890123456789012345",
+      "9223372036854775807x1", "9223372036854775808x1", "0000000000000000000000001x2",
+      "١٩٢٠x١٠٨٠", "１９２０x１０８０", "1920x١٠٨٠") ++
+      (Terminators ++ NotTerminators).map("1920x1080" + _) ++
+      Terminators.map(t => s"1920${t}x1080") ++ Terminators.map(t => s"${int + 1}x1$t")
+    val xff = Seq("1.2.3.4", "1.2.3.4, 5.6.7.8", "1.2.3.4,5.6.7.8", "1.2.3.4|5.6.7.8",
+      "1.2.3.4 5.6.7.8", "1.2.3.4 | 5.6.7.8 , 9.9.9.9", ",1.2.3.4", " 1.2.3.4", "|1.2.3.4", ",", "",
+      "  ", "2001:db8::1, 10.0.0.1", "::ffff:1.2.3.4|x", "ü1.2.3.4,x", "😀 x", "a\tb,c", "a\nb c",
+      "1.2.3.4 ,x", "unknown, 1.2.3.4")
+    val n = Seq(codes, platforms, res, xff).map(_.size).max * 3
+    def at[A](xs: Seq[A], i: Int, k: Int): Option[A] = // every value, and null, in rotating company
+      if ((i / xs.size + k) % 7 == 6) None else Some(xs((i * (k + 1)) % xs.size))
+    val rows = (0 until n).map(i => (at(codes, i, 0), at(platforms, i, 1), at(res, i, 2), at(xff, i, 3)))
+    val df0 = rows.toDF("code", "platform", "res", "xff")
+    val df = withMalformedUtf8(withMalformedUtf8(df0, "xff",
+      Seq("31FF2C32", "C32C31", "EDA0802C31", "C0AE2031", "F4908080", "FF", "2C31FF", "61E282")),
+      "res", Seq("31FF7832", "3178320A", "317832C285", "317832E280A8", "317832E280", "317832C2"))
+    val k = EventF.trackerFields(col("code"), col("platform"), col("res"), col("xff"))
+    assertSame(df, Seq(
+      ("event", k.getField("event"), EventF.eventTypeFromCode(col("code"))),
+      ("platform", k.getField("platform"), EventF.platformValidate(col("platform"))),
+      ("dvce_screenwidth", k.getField("dvce_screenwidth"), EventF.resWidth(col("res"))),
+      ("dvce_screenheight", k.getField("dvce_screenheight"), EventF.resHeight(col("res"))),
+      ("user_ipaddress", k.getField("user_ipaddress"), graft.functions.IpF.firstForwardedIp(col("xff")))))
+    // the crafted cases reach both outcomes of every field
+    val got = df.select(k.as("k")).select("k.*").collect()
+    (0 until 5).foreach { i =>
+      assert(got.exists(_.isNullAt(i)) && got.exists(!_.isNullAt(i)), s"field $i")
+    }
+  }
+
+  test("spParsed property: one-match kernel == the cross-navigation Column twins") {
+    import spark.implicits._
+    val long = Long.MaxValue
+    val sps = Seq("abc.123", "abc.0", "a.1", "abc.", ".123", "abc..123", "a.b.123", "abc.12a",
+      "abc.-1", "abc.+1", "abc. 1", "abc.1 ", "", ".", "..", "abc", "ü😀.123", "\n.123", "a\n.1",
+      "abc.١٢٣", "abc.１２３", s"abc.${long / 1000}", s"abc.${long / 1000 + 1}", s"abc.$long",
+      s"abc.${BigInt(long) + 1}", "abc." + "9" * 25, "abc.0000000000000000000000001") ++
+      (Terminators ++ NotTerminators).map("abc.123" + _) ++ Terminators.map("abc." + "9" * 25 + _)
+    val df = withMalformedUtf8((sps.map(Option(_)) :+ None).toDF("sp"), "sp",
+      Seq("FF2E3132", "C32E31", "61FF2E310A", "EDA0802E31", "612E31C285", "612E31FF"))
+    val k = EventF.spParsed(col("sp"))
+    assertSame(df, Seq(
+      ("duid", k.getField("duid"), EventF.spDomainUserId(col("sp"))),
+      ("tstamp_us", k.getField("tstamp_us"), EventF.spTstampUs(col("sp")))))
+    // an overflowing product is null, not an error, and a fitting one is exact
+    val us = Seq(s"a.${long / 1000}", s"a.${long / 1000 + 1}").toDF("sp")
+      .select(k.getField("tstamp_us")).collect().map(r => Option(r.get(0)))
+    assert(us.toSeq == Seq(Some(long / 1000 * 1000), None))
+  }
+
+  test("fingerprintDigest property: one digest call == eventFingerprint for every algorithm") {
+    import spark.implicits._
+    val words = Gen.oneOf("", "pv", "web", "1920x1080", "ü", "😀", "a\u001fb", "\u0000", "x" * 300)
+    val gen = for {
+      a <- Gen.option(words); b <- Gen.option(words); c <- Gen.option(Gen.choose(-5, 5))
+      d <- Gen.option(Gen.oneOf(0.5, -0.0, 1e300, Double.NaN))
+    } yield (a, b, c, d)
+    val df = (sample(gen, 200) :+ ((None, None, None, None))).toDF("e", "p", "n", "x")
+    // keys out of order, non-string params, and a key repeated
+    val params = Seq("p" -> col("p"), "e" -> col("e"), "n" -> col("n"), "x" -> col("x"), "e" -> col("p"))
+    for (algo <- Seq("md5", "sha1", "sha256", "sha384", "sha512"); ps <- Seq(params, params.take(2), Nil))
+      assertSame(df.withColumn("algo", lit(algo)), Seq(
+        (algo, EventF.fingerprintDigest(algo, ps), EventF.eventFingerprint(algo, ps))))
+    intercept[IllegalArgumentException](EventF.fingerprintDigest("crc32", params))
+  }
+
+  test("fieldLengths property: one-pass kernel == the Column-built FieldLengthValidator") {
+    import spark.implicits._
+    import graft.enrich.{Enrichment, FieldLengthValidator}
+    val limits = Map("a" -> 3, "b" -> 5, "c" -> 1, "n" -> 2, "absent" -> 4)
+    val str = Gen.oneOf(Gen.const(""), Gen.const("abc"), Gen.const("abcd"), Gen.const("üüü"),
+      Gen.const("üüüü"), Gen.const("😀😀😀"), Gen.const("😀😀😀😀"), Gen.const("abcde"), Gen.const("ab😀de"),
+      Gen.const("abcdef"), Gen.const("a\u0000c"), Gen.const("éée"), Gen.const("ééée"),
+      Gen.listOf(Gen.oneOf("a", "ü", "😀", "€")).map(_.mkString))
+    val gen = for {
+      a <- Gen.option(str); b <- Gen.option(str); c <- Gen.option(str)
+      n <- Gen.option(Gen.oneOf(7, 42, 123, -5, 100000))
+    } yield (a, b, c, n)
+    // exactly max chars of multibyte text, more than max bytes, in every field
+    val crafted = Seq((Some("üüü"), Some("😀😀😀😀😀"), Some("é"), Some(99)),
+      (Some("€€€"), Some("üüüüü"), Some("😀"), Some(-9)),
+      (Some("€€€€"), Some("üüüüüü"), Some("😀😀"), Some(100)))
+    val base = (crafted ++ sample(gen, 300) :+ ((None, None, None, None))).toDF("a", "b", "c", "n")
+      .withColumn("z", lit("untouched"))
+    val entity = struct(lit("earlier").as("enrichment"), lit("enrichment_failure").as("failure_type"),
+      lit(null).cast("string").as("schema_key"), lit("prior failure").as("message"))
+    val priors = Seq(
+      "no errors column" -> base,
+      "empty errors" -> base.withColumn("bad_row_errors", Enrichment.emptyFailures),
+      "prior errors" -> base.withColumn("bad_row_errors",
+        when(length(col("a")) === 3, array(entity).cast(Enrichment.FailureEntityType))
+          .otherwise(Enrichment.emptyFailures)),
+      "null errors" -> base.withColumn("bad_row_errors",
+        when(col("c").isNull, lit(null).cast(Enrichment.FailureEntityType))
+          .otherwise(Enrichment.emptyFailures)))
+    for ((what, df) <- priors; truncate <- Seq(true, false)) {
+      val v = FieldLengthValidator(limits, truncate)
+      val (kernel, twin) = (v.apply(df), v.applySpec(df))
+      assert(kernel.schema == twin.schema, s"$what, truncate=$truncate: schema")
+      val (kRows, tRows) = (kernel.collect().toSeq, twin.collect().toSeq)
+      assert(kRows == tRows, s"$what, truncate=$truncate")
+      assert(kRows.exists(r => r.getSeq[Any](r.fieldIndex("bad_row_errors")) match {
+        case null => false
+        case errs => errs.size >= 2
+      }), s"$what: the sample must flag several fields in one row")
+    }
+  }
+
+  test("collectorTsv property: one-split kernel == the split / try_element_at twin") {
+    import spark.implicits._
+    import graft.sources.Sources
+    val field = Gen.oneOf("", "1700000000000000", "-1", "1e3", " 17 ", "abc", "94.15.223.151",
+      "Mozilla/5.0 (X11)", "ü😀", "e=pv&p=web", "\u0000", "\r", "a b")
+    val gen = Gen.choose(0, 8).flatMap(n => Gen.listOfN(n, field)).map(_.mkString("\t"))
+    val crafted = Seq("", "\t", "\t\t\t\t\t", "\t\t\t\t\t\t\t", "1\t2\t3\t4\t5\t6", "1\t2\t3\t4\t5\t6\t",
+      "\t1\t2", "1\t\t\t\t\tq", "17\tü\t😀\tx\tpv\te=€", "1\r\n", "1\t2\n3", "9" * 25 + "\tx")
+    val df = withMalformedUtf8((crafted ++ sample(gen, 300)).distinct.map(Option(_)).:+(None)
+      .toDF("value"), "value", Seq("3109FF0933", "FF", "3109C3", "C30931", "313233093109EDA080"))
+    val kernel = Sources.parseCollectorTsv(df)
+    val twin = df.select(Sources.collectorTsvColsSpec(col("value")): _*)
+    assert(kernel.schema == twin.schema)
+    val (k, t) = (kernel.collect().toSeq, twin.collect().toSeq)
+    assert(k.size == t.size)
+    k.zip(t).foreach { case (a, b) => assert(a == b) }
+  }
 }

@@ -21,7 +21,11 @@ the parent (ties count for neither side) and two verdicts:
           worse than the parent's by more than the metric's bound.
 
 Every run must print `correct: true` and `failed: 0`; the summary lists any
-run that did not. With --json, the file also keeps every pair's two result
+run that did not. A backfill run's `backfill: N runs of Main over M events,
+wall s: ...` line is kept under "backfill" (run count and per-run walls), and
+the summary prints each pair's peak_rss_mb next to both run counts: the heap
+is not pre-touched, so peak RSS grows with the number of Main runs that fit
+in the window. With --json, the file also keeps every pair's two result
 objects (metrics included), each with the run's `input: k=v ...` line parsed
 under "input". Standard library only.
 """
@@ -72,6 +76,17 @@ def input_props(lines):
     return None
 
 
+def backfill_runs(lines):
+    """The run's `backfill: N runs of Main over M events, wall s: a, b, ...`
+    line as {"runs", "events", "walls_s"}; None for a stream run."""
+    for l in lines:
+        m = re.match(r"backfill: (\d+) runs of Main over (\d+) events, wall s: (.*)$", l)
+        if m:
+            return {"runs": int(m.group(1)), "events": int(m.group(2)),
+                    "walls_s": [float(w) for w in m.group(3).split(",") if w.strip()]}
+    return None
+
+
 def run_once(tree, workload, seed, seconds, trace):
     """One benchmark run in `tree`: its result object, with the run's input
     properties under "input", or None if it failed."""
@@ -87,6 +102,7 @@ def run_once(tree, workload, seed, seconds, trace):
     except json.JSONDecodeError:
         return None
     result["input"] = input_props(lines)
+    result["backfill"] = backfill_runs(lines)
     return result
 
 
@@ -178,6 +194,11 @@ def main():
             verdict += ", within bound" if r["within_bound"] else ", BEYOND BOUND"
         side = lambda q: f"{q['q1']:.6g} / {q['median']:.6g} / {q['q3']:.6g}"
         print(f"{r['metric']:<40} {side(p):>32} {side(c):>32} {r['change_wins']:>3}/{r['pairs']:<2}  {verdict}")
+    for i, (p, c) in enumerate(results):
+        if p and c and p.get("backfill") and c.get("backfill"):
+            rss = lambda r: r["metrics"].get("peak_rss_mb", {}).get("value", float("nan"))
+            print(f"pair {i + 1} seed {a.seed + i}: peak_rss_mb parent {rss(p):.6g} "
+                  f"({p['backfill']['runs']} runs), change {rss(c):.6g} ({c['backfill']['runs']} runs)")
     for b in bad:
         print(f"INVALID RUN: {b}")
     if a.json:
