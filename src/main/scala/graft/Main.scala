@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, size, struct}
+import org.apache.spark.sql.functions.{col, struct}
 
 import graft.enrich.{BadRows, EnrichmentConfig, EnrichmentPipeline}
 import graft.sources.Sources
@@ -49,11 +49,11 @@ object Main {
     case "--transport-config" :: v :: rest => parse(rest, acc.copy(transportConfig = v))
     // drain mode: process everything available, then exit (Trigger.AvailableNow)
     case "--once" :: rest => parse(rest, acc.copy(once = true))
-    // AssetRefresher semantics: dims are parquet paths resolved at plan
-    // time, so one long-lived plan pins the dim files it started with. This
-    // mode rebuilds the pipeline (re-reading --config) every micro-batch: a
-    // rebuilt plan re-lists each dim path, so a dim overwritten on disk takes
-    // effect on the next batch, for one dim re-broadcast per batch. One
+    // AssetRefresher semantics: a lookup stage reads its dim when the
+    // pipeline is built, so one long-lived stream query keeps the dim rows
+    // it started with. This mode rebuilds the pipeline (re-reading
+    // --config) every micro-batch, so each dim is read once per batch and a
+    // dim overwritten on disk takes effect on the next batch. One
     // foreachBatch query writes both sinks from one enrichment pass, so a
     // batch never splits across two configs. Note: foreachBatch append is
     // at-least-once on a batch retry (the default file sink's exactly-once
@@ -157,8 +157,7 @@ object Main {
             .option("checkpointLocation", args.checkpoint + "/good"))
             .start().awaitTermination()
         else {
-          val goodQ = trigger(pipeline.run(raw)
-            .filter(size(col("bad_row_errors")) === 0)
+          val goodQ = trigger(pipeline.split(raw)._1
             .writeStream
             .format("parquet")
             .option("path", args.good)

@@ -2,12 +2,16 @@ package graft.enrich
 
 import scala.collection.immutable.ListMap
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.PlanBridge
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.{EventF, IpF, RefF, UaF, UrlF}
 import graft.operators.RangeJoin
+import graft.plans.{DimLookup, IpRangeTable, KeyTable}
 
 /** The graft enrichment registry — Spark twin of snowplow/enrich
   * `enrichments/EnrichmentRegistry.scala` + `EnrichmentManager.scala`.
@@ -16,9 +20,12 @@ import graft.operators.RangeJoin
   * an enrichment as a *declarative column transform* (`DataFrame =>
   * DataFrame`). Chained enrichments therefore collapse into a single
   * Catalyst projection: one WholeStageCodegen stage, no shuffle, and the
-  * whole chain scan-pipelines over 100 TB. Lookup enrichments (geo,
-  * currency) are joins against broadcast dimension tables instead of
-  * per-record RPC + LRU cache.
+  * whole chain scan-pipelines over 100 TB. A static dim (IP ranges,
+  * currency rates) is a lookup kernel ([[graft.plans.DimLookupExpression]]):
+  * read once when the stage is applied, broadcast, and looked up once per
+  * row, with no join in the plan. Dims keyed by fact columns or with
+  * inferred schemas ([[DimJoin]], [[ApiLookup]], [[IdentityLookup]],
+  * [[WeatherLookup]]) stay joins.
   *
   * A stage that derives several columns from its input adds them in ONE
   * `withColumns` over an insertion-ordered `ListMap`: one analyzed
@@ -252,10 +259,13 @@ final case class PiiJsonFields(
     })
 }
 
-/** Currency conversion via a broadcast rates dimension (reference
-  * `registry/CurrencyConversionEnrichment` — which calls Open Exchange
-  * Rates per record; at 100 TB that must be a join). Rates are micro-units
-  * so the conversion stays in exact integer arithmetic. */
+/** Currency conversion against a static rates dim (reference
+  * `registry/CurrencyConversionEnrichment`, which calls Open Exchange Rates
+  * per record). The rate is one key lookup per row
+  * ([[graft.plans.KeyTable]]): the dim is read when the stage is applied
+  * and must fit in driver memory. A currency the dim repeats fails that
+  * build. Rates are micro-units so the conversion stays in exact integer
+  * arithmetic. [[applySpec]] is the broadcast-join twin. */
 final case class CurrencyConversion(
   rates: Seq[(String, Long)],
   amountCentsCol: String = "amount_cents",
@@ -266,36 +276,51 @@ final case class CurrencyConversion(
   rateField: String = "rate_micro"
 ) extends Enrichment {
   val name = "currency_conversion"
+
+  private def ratesDf(spark: SparkSession): DataFrame =
+    spark.read.parquet(ratesPath)
+      .select(col(curField).cast("string").as("__cur"), col(rateField).cast("bigint").as("__rate_micro"))
+
   def apply(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
+    val rows =
+      if (ratesPath != null) DimLookup.collectKeys(ratesDf(spark))
+      else rates.map { case (c, r) => (UTF8String.fromString(c), java.lang.Long.valueOf(r)) }
+    val rate = DimLookup.column(spark, col(currencyCol), KeyTable(name, rows), LongType)
+    // null, not a job abort, when a crafted amount overflows
+    df.withColumn(outCol, try_multiply(col(amountCentsCol), rate))
+  }
+
+  /** The broadcast left-join twin of [[apply]]. */
+  def applySpec(df: DataFrame): DataFrame = {
+    val spark = df.sparkSession
     import spark.implicits._
-    val ratesDf = broadcast(
-      if (ratesPath != null)
-        spark.read.parquet(ratesPath)
-          .select(col(curField).as("__cur"), col(rateField).cast("bigint").as("__rate_micro"))
-      else rates.toDF("__cur", "__rate_micro"))
-    df.join(ratesDf, col(currencyCol) === col("__cur"), "left")
-      // null, not a job abort, when a crafted amount overflows
+    val dim = broadcast(if (ratesPath != null) ratesDf(spark) else rates.toDF("__cur", "__rate_micro"))
+    df.join(dim, col(currencyCol) === col("__cur"), "left")
       .withColumn(outCol, try_multiply(col(amountCentsCol), col("__rate_micro")))
       .drop("__cur", "__rate_micro")
   }
 }
 
-/** IP→geo via broadcast range join (reference `registry/IpLookupsEnrichment`,
-  * MaxMind lookup → interval join, see [[graft.operators.RangeJoin]]).
+/** IP→geo as one range lookup per row (reference
+  * `registry/IpLookupsEnrichment`, a per-record MaxMind binary search; see
+  * [[graft.plans.IpRangeTable]]). The ranges dim is read when the stage is
+  * applied and must fit in driver memory; overlapping ranges fail that
+  * build.
   *
   * `v6Ranges` adds the IPv6 block table: `(canonical /64 prefix —
-  * lowercase minimal hex, low-64 lo, low-64 hi, country)`. 2^128 overflows
-  * DECIMAL(38,0), so the 128-bit key splits as (prefix equi-key, low-64
-  * DECIMAL(20,0) range key); bucket ids are computed driver-side with
-  * BigInt (ranges are literals) and on the fact side with exact long
-  * arithmetic over the top 48 bits. Addresses route themselves: a v4
-  * address nulls the v6 parse and vice versa, so each row matches at most
-  * one family and the two left joins preserve row count. */
+  * lowercase minimal hex, low-64 lo, low-64 hi, country)`, the low 64 bits
+  * unsigned. Addresses route themselves: a v4 address has no v6 parse and
+  * vice versa, so each row matches at most one family.
+  *
+  * [[applySpec]] is the broadcast range-join twin
+  * ([[graft.operators.RangeJoin]]). 2^128 overflows DECIMAL(38,0), so its
+  * 128-bit key splits as (prefix equi-key, low-64 DECIMAL(20,0) range
+  * key); bucket ids are computed driver-side with BigInt and on the fact
+  * side with exact long arithmetic over the top 48 bits. */
 final case class IpGeoLookup(
   ranges: Seq[(Long, Long, String)],
   ipCol: String = "user_ipaddress",
-  bucketBits: Int = 27,
   rangesPath: String = null, // parquet dim table instead of inline ranges
   loField: String = "lo",
   hiField: String = "hi",
@@ -304,23 +329,34 @@ final case class IpGeoLookup(
 ) extends Enrichment {
   val name = "ip_geo_lookup"
 
-  /** lo64 bucket shift: bucket = lo64 >> 59 (facts: hi48 >> 43). */
+  /** The twin's lo64 bucket shift: bucket = lo64 >> 59 (facts: hi48 >> 43). */
   private val V6Shift = 59
+
+  private def rangesDf(spark: SparkSession): DataFrame =
+    spark.read.parquet(rangesPath)
+      .select(col(loField).cast("bigint").as("__lo"), col(hiField).cast("bigint").as("__hi"),
+        col(countryField).cast("string").as("geo_country"))
 
   def apply(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
+    val v4 =
+      if (rangesPath != null) DimLookup.collectRanges(rangesDf(spark))
+      else ranges.map { case (lo, hi, cc) => (lo, hi, UTF8String.fromString(cc)) }
+    val v6 = v6Ranges.map { case (p, lo, hi, cc) => (p, lo, hi, UTF8String.fromString(cc)) }
+    df.withColumn("geo_country",
+      DimLookup.column(spark, col(ipCol), IpRangeTable(name, v4, v6), StringType))
+  }
+
+  /** The broadcast range-join twin of [[apply]]. */
+  def applySpec(df: DataFrame): DataFrame = {
+    val spark = df.sparkSession
     import spark.implicits._
-    val rangesDf =
-      if (rangesPath != null)
-        spark.read.parquet(rangesPath)
-          .select(col(loField).cast("bigint").as("__lo"), col(hiField).cast("bigint").as("__hi"),
-            col(countryField).as("geo_country"))
-      else ranges.toDF("__lo", "__hi", "geo_country")
-    val v4 = RangeJoin.leftJoinRanges(df, IpF.ipv4ToLong(col(ipCol)), rangesDf, "__lo", "__hi", bucketBits)
+    val dim = if (rangesPath != null) rangesDf(spark) else ranges.toDF("__lo", "__hi", "geo_country")
+    val v4 = RangeJoin.leftJoinRanges(df, IpF.ipv4ToLong(col(ipCol)), dim, "__lo", "__hi", 27)
       .drop("__lo", "__hi")
     if (v6Ranges.isEmpty) v4
     else {
-      val dim = v6Ranges.flatMap { case (pfx, lo, hi, cc) =>
+      val dim6 = v6Ranges.flatMap { case (pfx, lo, hi, cc) =>
         ((lo >> V6Shift) to (hi >> V6Shift)).map(b =>
           (pfx, b.toLong, BigDecimal(lo), BigDecimal(hi), cc))
       }.toDF("__pfx", "__bkt", "__lo6", "__hi6", "__cc6")
@@ -332,7 +368,7 @@ final case class IpGeoLookup(
         .withColumn("__p", IpF.ipv6PrefixCanonical(addr))
         .withColumn("__b", shiftright(IpF.ipv6Lo64Hi48(addr), V6Shift - 16))
         .withColumn("__v", IpF.ipv6Lo64Dec(addr))
-        .join(broadcast(dim),
+        .join(broadcast(dim6),
           col("__p") === col("__pfx") && col("__b") === col("__bkt") &&
             col("__v") >= col("__lo6") && col("__v") <= col("__hi6"),
           "left")
@@ -595,12 +631,12 @@ final case class CrossNavigation(spCol: String = "sp_qs") extends Enrichment {
   }
 }
 
-/** ASN lookup via the same broadcast range join as geo (reference
-  * `registry/AsnLookupsEnrichment.scala`). */
+/** ASN lookup, the same range lookup as geo (reference
+  * `registry/AsnLookupsEnrichment.scala`); [[applySpec]] is the broadcast
+  * range-join twin. */
 final case class IpAsnLookup(
   ranges: Seq[(Long, Long, Long, String)], // lo, hi, asn, org
   ipCol: String = "user_ipaddress",
-  bucketBits: Int = 27,
   rangesPath: String = null, // parquet dim table instead of inline ranges
   loField: String = "lo",
   hiField: String = "hi",
@@ -608,31 +644,54 @@ final case class IpAsnLookup(
   orgField: String = "ip_organization"
 ) extends Enrichment {
   val name = "ip_asn_lookup"
+
+  private def rangesDf(spark: SparkSession): DataFrame =
+    spark.read.parquet(rangesPath).select(
+      col(loField).cast("bigint").as("__lo"), col(hiField).cast("bigint").as("__hi"),
+      col(asnField).cast("bigint").as("ip_asn"), col(orgField).cast("string").as("ip_organization"))
+
   def apply(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
-    import spark.implicits._
-    val rangesDf =
+    val rows =
       if (rangesPath != null)
-        spark.read.parquet(rangesPath).select(
-          col(loField).cast("bigint").as("__lo"), col(hiField).cast("bigint").as("__hi"),
-          col(asnField).cast("bigint").as("ip_asn"), col(orgField).cast("string").as("ip_organization"))
-      else ranges.toDF("__lo", "__hi", "ip_asn", "ip_organization")
-    RangeJoin.leftJoinRanges(df, IpF.ipv4ToLong(col(ipCol)), rangesDf, "__lo", "__hi", bucketBits)
+        DimLookup.collectRanges(rangesDf(spark).select(col("__lo"), col("__hi"),
+          struct(col("ip_asn"), col("ip_organization"))))
+      else ranges.map { case (lo, hi, asn, org) =>
+        (lo, hi, InternalRow(java.lang.Long.valueOf(asn), UTF8String.fromString(org)))
+      }
+    val asn = DimLookup.column(spark, col(ipCol), IpRangeTable(name, rows, Nil), IpAsnLookup.Value)
+    df.withColumns(ListMap(
+      "ip_asn" -> asn.getField("ip_asn"),
+      "ip_organization" -> asn.getField("ip_organization")))
+  }
+
+  /** The broadcast range-join twin of [[apply]]. */
+  def applySpec(df: DataFrame): DataFrame = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    val dim = if (rangesPath != null) rangesDf(spark)
+              else ranges.toDF("__lo", "__hi", "ip_asn", "ip_organization")
+    RangeJoin.leftJoinRanges(df, IpF.ipv4ToLong(col(ipCol)), dim, "__lo", "__hi", 27)
       .drop("__lo", "__hi")
   }
+}
+
+object IpAsnLookup {
+  private val Value = StructType(Seq(
+    StructField("ip_asn", LongType), StructField("ip_organization", StringType)))
 }
 
 /** The remaining IpLookups segments (reference
   * `registry/IpLookupsEnrichment` via the MaxMind ISP / Domain /
   * Connection-Type databases → atomic `ip_isp` / `ip_domain` /
   * `ip_netspeed`, EnrichmentManager.scala:491): each configured segment is
-  * one broadcast range join against its exported lo/hi ranges dim — the
-  * same shape as geo/asn. */
+  * one range lookup per row against its exported lo/hi ranges dim — the
+  * same shape as geo/asn, with [[applySpec]] the broadcast range-join
+  * twin. */
 final case class IpSegmentLookup(
   segment: String, // isp | domain | connection
   ranges: Seq[(Long, Long, String)] = Nil, // lo, hi, value
   ipCol: String = "user_ipaddress",
-  bucketBits: Int = 27,
   rangesPath: String = null, // parquet dim instead of inline ranges
   loField: String = "lo",
   hiField: String = "hi",
@@ -646,17 +705,26 @@ final case class IpSegmentLookup(
       s"ip_segment_lookup: unknown segment '$other' (isp, domain, connection; geo/asn have their own enrichments)")
   }
   val name = s"ip_${segment}_lookup"
+
+  private def rangesDf(spark: SparkSession): DataFrame =
+    spark.read.parquet(rangesPath).select(
+      col(loField).cast("bigint").as("__lo"), col(hiField).cast("bigint").as("__hi"),
+      col(if (valueField == null) outCol else valueField).cast("string").as(outCol))
+
   def apply(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
+    val rows =
+      if (rangesPath != null) DimLookup.collectRanges(rangesDf(spark))
+      else ranges.map { case (lo, hi, v) => (lo, hi, UTF8String.fromString(v)) }
+    df.withColumn(outCol, DimLookup.column(spark, col(ipCol), IpRangeTable(name, rows, Nil), StringType))
+  }
+
+  /** The broadcast range-join twin of [[apply]]. */
+  def applySpec(df: DataFrame): DataFrame = {
+    val spark = df.sparkSession
     import spark.implicits._
-    val vf = if (valueField == null) outCol else valueField
-    val rangesDf =
-      if (rangesPath != null)
-        spark.read.parquet(rangesPath).select(
-          col(loField).cast("bigint").as("__lo"), col(hiField).cast("bigint").as("__hi"),
-          col(vf).cast("string").as(outCol))
-      else ranges.toDF("__lo", "__hi", outCol)
-    RangeJoin.leftJoinRanges(df, IpF.ipv4ToLong(col(ipCol)), rangesDf, "__lo", "__hi", bucketBits)
+    val dim = if (rangesPath != null) rangesDf(spark) else ranges.toDF("__lo", "__hi", outCol)
+    RangeJoin.leftJoinRanges(df, IpF.ipv4ToLong(col(ipCol)), dim, "__lo", "__hi", 27)
       .drop("__lo", "__hi")
   }
 }
@@ -950,9 +1018,12 @@ final case class EnrichmentPipeline(enrichments: Seq[Enrichment]) {
     * chain once per side (see [[withSplit]] for one pass). */
   def split(df: DataFrame): (DataFrame, DataFrame) = sides(run(df))
 
-  private def sides(enriched: DataFrame): (DataFrame, DataFrame) =
-    (enriched.filter(size(col("bad_row_errors")) === 0),
-     enriched.filter(size(col("bad_row_errors")) > 0))
+  /** The two sides over a [[graft.plans.SplitBarrier]]: each side's
+    * filter stays above the chain instead of re-evaluating it. */
+  private def sides(enriched: DataFrame): (DataFrame, DataFrame) = {
+    val rows = graft.plans.SplitBarrier(enriched)
+    (rows.filter(size(col("bad_row_errors")) === 0), rows.filter(size(col("bad_row_errors")) > 0))
+  }
 
   /** ONE-PASS good/bad split with the reference's two-sink layout: `f` gets
     * the good and bad sides of one enrichment pass. The enriched rows are

@@ -214,9 +214,9 @@ object EnrichmentConfig {
         case "ip_lookups" =>
           // reference registry/IpLookupsEnrichment: per-segment MaxMind
           // databases (geo/isp/domain/connection/asn, each {database,
-          // uri}). A .mmdb cannot ride a Spark broadcast range join
-          // directly — deployments export it to a parquet ranges dim
-          // (lo/hi int keys) and inject the path per database FILENAME.
+          // uri}). A .mmdb cannot feed a range lookup directly —
+          // deployments export it to a parquet ranges dim (lo/hi int
+          // keys) and inject the path per database FILENAME.
           def segment(seg: String): Option[String] =
             Option(p.get(seg)).flatMap(s => Option(s.get("database")).map(_.asText()))
           var handledAny = false
@@ -510,10 +510,44 @@ object EnrichmentConfig {
           (rn.get("prefix").asText(), BigInt(rn.get("lo").asText()),
             BigInt(rn.get("hi").asText()), rn.get("country").asText())
         }.toSeq).getOrElse(Nil)
-        IpGeoLookup(inline, str(n, "ipCol", "user_ipaddress"), int(n, "bucketBits", 27),
+        // a "bucketBits" key (the range join's bucket width) is still
+        // accepted and ignored: the lookup needs no buckets
+        IpGeoLookup(inline, str(n, "ipCol", "user_ipaddress"),
           rangesPath = path, loField = str(n, "loField", "lo"),
           hiField = str(n, "hiField", "hi"), countryField = str(n, "countryField", "geo_country"),
           v6Ranges = v6)
+      case "ip_asn_lookup" =>
+        // {"name": "ip_asn_lookup",
+        //  "ranges": [{"lo": 0, "hi": 16777215, "asn": 64496, "org": "Example"}, ...]}  or
+        // {"name": "ip_asn_lookup", "rangesPath": "/dims/asn.parquet",
+        //  "loField": "lo", "hiField": "hi", "asnField": "ip_asn", "orgField": "ip_organization"}
+        val inline = Option(n.get("ranges")).map(_.elements().asScala.map { rn =>
+          (rn.get("lo").asLong(), rn.get("hi").asLong(), rn.get("asn").asLong(),
+            Option(rn.get("org")).map(_.asText()).orNull)
+        }.toSeq).getOrElse(Nil)
+        val path = Option(n.get("rangesPath")).map(_.asText()).orNull
+        if (inline.isEmpty && path == null)
+          throw new IllegalArgumentException("ip_asn_lookup needs 'ranges' or 'rangesPath'")
+        IpAsnLookup(inline, str(n, "ipCol", "user_ipaddress"), rangesPath = path,
+          loField = str(n, "loField", "lo"), hiField = str(n, "hiField", "hi"),
+          asnField = str(n, "asnField", "ip_asn"), orgField = str(n, "orgField", "ip_organization"))
+      case "ip_segment_lookup" =>
+        // {"name": "ip_segment_lookup", "segment": "isp",   (isp | domain | connection)
+        //  "ranges": [{"lo": 0, "hi": 16777215, "value": "Example ISP"}, ...]}  or
+        // {"name": "ip_segment_lookup", "segment": "isp", "rangesPath": "/dims/isp.parquet",
+        //  "loField": "lo", "hiField": "hi", "valueField": "isp"}
+        val inline = Option(n.get("ranges")).map(_.elements().asScala.map { rn =>
+          (rn.get("lo").asLong(), rn.get("hi").asLong(), Option(rn.get("value")).map(_.asText()).orNull)
+        }.toSeq).getOrElse(Nil)
+        val path = Option(n.get("rangesPath")).map(_.asText()).orNull
+        if (inline.isEmpty && path == null)
+          throw new IllegalArgumentException("ip_segment_lookup needs 'ranges' or 'rangesPath'")
+        IpSegmentLookup(
+          Option(n.get("segment")).map(_.asText())
+            .getOrElse(throw new IllegalArgumentException("ip_segment_lookup needs 'segment'")),
+          inline, str(n, "ipCol", "user_ipaddress"), rangesPath = path,
+          loField = str(n, "loField", "lo"), hiField = str(n, "hiField", "hi"),
+          valueField = Option(n.get("valueField")).map(_.asText()).orNull)
       case "dim_join" =>
         // {"name": "dim_join", "keyCol": "user_id", "dimKeyCol": "c_custkey",
         //  "select": ["c_name"], "path": "/dims/customer.parquet"}  or inline:
@@ -571,7 +605,7 @@ object EnrichmentConfig {
             "cross_navigation, pii_pseudonymize, event_fingerprint, cookie_extractor, " +
             "http_header_extractor, iab_bot_detection, schema_vendor, field_lengths, " +
             "schema_validate, contexts_validate, currency_conversion, ip_geo_lookup, " +
-            "dim_join, javascript_script, bot_detection")
+            "ip_asn_lookup, ip_segment_lookup, dim_join, javascript_script, bot_detection")
     }
   }
 }

@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** IP-address kernels.
   *
@@ -117,6 +118,17 @@ object IpF {
     sb.toString
   }
 
+  /** Per-row twin of [[expandIpv6]]: "::" shorthand expanded to 8 groups. */
+  private def expandV6(s: String): String =
+    if (!s.contains("::")) s
+    else {
+      def groups(x: String) = if (x.isEmpty) Array.empty[String] else x.split(":", -1)
+      val leftArr = groups(s.substring(0, s.indexOf("::")))
+      val rightArr = groups(s.substring(s.lastIndexOf("::") + 2))
+      val zeros = math.max(0, 8 - leftArr.length - rightArr.length)
+      (leftArr ++ Array.fill(zeros)("0") ++ rightArr).mkString(":")
+    }
+
   private def maskV6(s0: String, segments: Int): String = {
     // normalize mixed notation ("64:ff9b::1.2.3.4" → "…::102:304")
     val m = MixedTail.matcher(s0)
@@ -127,16 +139,7 @@ object IpF {
           java.lang.Long.toHexString(p(0) * 256 + p(1)) + ":" +
           java.lang.Long.toHexString(p(2) * 256 + p(3))
       } else s0
-    // expand "::" shorthand to 8 groups
-    val s2 =
-      if (s1.contains("::")) {
-        val idx = s1.indexOf("::")
-        val lidx = s1.lastIndexOf("::")
-        val leftArr = { val l = s1.substring(0, idx); if (l.isEmpty) Array.empty[String] else l.split(":", -1) }
-        val rightArr = { val r = s1.substring(lidx + 2); if (r.isEmpty) Array.empty[String] else r.split(":", -1) }
-        val zeros = math.max(0, 8 - leftArr.length - rightArr.length)
-        (leftArr ++ Array.fill(zeros)("0") ++ rightArr).mkString(":")
-      } else s1
+    val s2 = expandV6(s1)
     // pad short ::-less forms to 8 with "x" (fail closed), cap at 8, mask
     val parts = s2.split(":", -1)
     val sb = new java.lang.StringBuilder(s2.length + 16)
@@ -163,6 +166,66 @@ object IpF {
     else ip
   }
 
+  // ---- lookup keys (called from graft.plans.IpRangeTable) ----
+
+  /** Per-row twin of [[ipv4ToLong]]: the dotted quad's 32-bit value, or -1
+    * where the twin is null. An octet is 1 or 2 digits, or 3 digits from
+    * 100 to 255, as the twin's pattern allows. After the last octet Java's
+    * `$` allows one final line terminator; the twin's bigint cast trims
+    * `\n`, `\r` and `\r\n`, and the other terminators (U+0085, U+2028,
+    * U+2029) give -1. */
+  def ipv4Value(ip: UTF8String): Long = {
+    val n = ip.numBytes
+    var i = 0
+    var v = 0L
+    var k = 0
+    while (k < 4) {
+      if (k > 0) {
+        if (i >= n || ip.getByte(i) != '.') return -1L
+        i += 1
+      }
+      val start = i
+      var o = 0
+      while (i < n && i - start < 4 && ip.getByte(i) >= '0' && ip.getByte(i) <= '9') {
+        o = o * 10 + (ip.getByte(i) - '0')
+        i += 1
+      }
+      val len = i - start
+      if (len == 0 || len > 3 || (len == 3 && (o < 100 || o > 255))) return -1L
+      v = (v << 8) | o
+      k += 1
+    }
+    n - i match {
+      case 0 => v
+      case 1 if ip.getByte(i) == '\n' || ip.getByte(i) == '\r' => v
+      case 2 if ip.getByte(i) == '\r' && ip.getByte(i + 1) == '\n' => v
+      case _ => -1L
+    }
+  }
+
+  /** Per-row twin of [[ipv6PrefixCanonical]] and [[ipv6Lo64Dec]] over
+    * `expandIpv6(normalizeMixedIpv6(ip))`: the address's top and low 64
+    * bits, or null where the twins are null. A group's value is its
+    * leading hex digits, as the twins' `conv` reads the last group past a
+    * final line terminator. */
+  def ipv6Halves(ip: String): Array[Long] = {
+    val m = MixedTail.matcher(ip)
+    val norm =
+      if (!m.find()) ip
+      else {
+        def p(i: Int) = m.group(i).toLong
+        ip.substring(0, m.start()) + ip.substring(m.end()) +
+          java.lang.Long.toHexString(p(1) * 256 + p(2)) + ":" +
+          java.lang.Long.toHexString(p(3) * 256 + p(4))
+      }
+    val full = expandV6(norm)
+    if (!FullV6Pattern.matcher(full).find()) return null
+    val g = full.split(":", -1).map { s =>
+      java.lang.Long.parseLong(s.takeWhile(c => Character.digit(c, 16) >= 0 && c < 128), 16)
+    }
+    Array(g.take(4).foldLeft(0L)((a, x) => a << 16 | x), g.drop(4).foldLeft(0L)((a, x) => a << 16 | x))
+  }
+
   /** First IP of a comma/pipe/space-separated X-Forwarded-For chain
     * (the client IP — see reference `MiscEnrichments.extractIp`). */
   def firstForwardedIp(xff: Column): Column =
@@ -179,12 +242,16 @@ object IpF {
       element_at(p, 1).cast("bigint") * 16777216L +
         element_at(p, 2).cast("bigint") * 65536L +
         element_at(p, 3).cast("bigint") * 256L +
-        element_at(p, 4).cast("bigint"))
+        // Java's `$` lets a final line terminator follow the last octet;
+        // the cast trims `\n` and `\r`, and U+0085, U+2028 and U+2029 make
+        // the address a miss instead of an ANSI cast error
+        element_at(p, 4).try_cast("bigint"))
   }
 
   /** A full 8-group hex IPv6 address (run [[expandIpv6]] /
     * [[normalizeMixedIpv6]] first for shortened or mixed forms). */
   private val FullV6 = "^[0-9a-fA-F]{1,4}(:[0-9a-fA-F]{1,4}){7}$"
+  private val FullV6Pattern = java.util.regex.Pattern.compile(FullV6)
 
   /** Group `i` (0-based) of a full 8-group IPv6 address as a bigint;
     * null for anything not 8 hex groups — a malformed address at row

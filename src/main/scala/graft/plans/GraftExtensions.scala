@@ -187,8 +187,9 @@ object GraftFunctions {
   def topK(key: org.apache.spark.sql.Column, tie: org.apache.spark.sql.Column, k: Int): org.apache.spark.sql.Column =
     c(TopKRows(x(key), x(tie), k).toAggregateExpression())
 
-  /** graft's planner strategies (native as-of and interval joins). */
-  val strategies: Seq[SparkStrategy] = Seq(AsOfJoinStrategy, IntervalJoinStrategy)
+  /** graft's planner strategies (native as-of and interval joins, the
+    * split barrier). */
+  val strategies: Seq[SparkStrategy] = Seq(AsOfJoinStrategy, IntervalJoinStrategy, SplitBarrierStrategy)
 
   /** graft's optimizer rules; each is off unless its session conf is set. */
   val rules: Seq[Rule[LogicalPlan]] = Seq(BitmapDistinctRewrite, TopKRewrite)

@@ -12,8 +12,8 @@ import graft.functions.EventF
   * projected to atomic fields — with its DuckDB oracle assembled from the
   * same shared constants as the per-enrichment oracles.
   *
-  * Plan shape at 100 TB: one codegen'd projection over the scan, plus two
-  * broadcast hash joins (rates, geo ranges). No shuffle of the event table.
+  * Plan shape at 100 TB: one codegen'd projection over the scan; the geo
+  * ranges and the rates are lookup kernels, not joins. No exchange.
   */
 object PipelineQuery extends QuerySet {
   def geoRanges: Seq[(Long, Long, String)] =

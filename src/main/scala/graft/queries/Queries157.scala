@@ -184,15 +184,15 @@ object Queries157 extends QuerySet {
 
     "ip_isp_lookup" -> { (sp, dir) =>
       // the ISP segment of ip_lookups (reference IpLookupsEnrichment →
-      // atomic ip_isp): broadcast range join like geo/asn. 64 MiB blocks
+      // atomic ip_isp): a range lookup like geo/asn. 64 MiB blocks
       // over the synthetic IPv4 space; every 5th block is deliberately
-      // unmapped so the left join's null path is exercised.
+      // unmapped so the lookup's miss path is exercised.
       val b = IspBlock
       val ranges = (0 to 55).filter(_ % 5 != 2)
         .map(i => (i * b, i * b + b - 1, s"ISP-$i"))
       val facts = Synth.withRaw(Tables.events(sp, dir))
         .select(col("event_id"), col("ip").as("user_ipaddress"))
-      graft.enrich.IpSegmentLookup("isp", ranges, bucketBits = 26)(facts)
+      graft.enrich.IpSegmentLookup("isp", ranges)(facts)
         .select(col("event_id"), col("ip_isp"))
         .orderBy("event_id")
     }

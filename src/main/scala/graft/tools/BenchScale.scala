@@ -191,7 +191,7 @@ object BenchScale {
     // but the per-body work is flat, so expect ≈linear)
     "bad_rows_out", "bad_rows_triage", "adapter_remote",
     // r12 continued: the emitFailed SDJ writer (scan-linear like
-    // bad_rows_out) and the ISP range join (broadcast dim, ≈scan-linear)
+    // bad_rows_out) and the ISP range lookup (broadcast dim, ≈scan-linear)
     "failed_events_out", "ip_isp_lookup",
     // the recovery replay: two loader passes + envelope decode, scan-linear
     "bad_rows_resubmit",

@@ -160,4 +160,23 @@ class MalformedInputSpec extends SparkSpec {
     assert(fits.getAs[Long]("refr_dvce_tstamp_us") == 1704067100000000L)
     assert(fits.getAs[Long]("base_amount_e8") == 1250L * 1080000L)
   }
+
+  test("an IP ending in a line terminator the bigint cast keeps is a missed geo lookup, not a job abort") {
+    import spark.implicits._
+    // Java's `$` lets the dotted-quad pattern match before U+0085, U+2028
+    // and U+2029, and an ANSI bigint cast of "151" + U+2028 fails: the
+    // range-join geo lookup aborted the whole job on one such event
+    val ips = Seq("94.15.223.151", "94.15.223.151\n", "94.15.223.151\u0085", "94.15.223.151\u2028",
+      "94.15.223.151\u2029")
+    val lines = ips.zipWithIndex.map { case (ip, i) =>
+      Seq((BaseUs + i).toString, ip, "curl/8.0", "https://shop.example.com/", "pv", "e=pv&p=web").mkString("\t")
+    }
+    val raw = Protocol.fromCollector(Sources.parseCollectorTsv(lines.toDF("value")))
+    val (good, bad) = PipelineQuery.pipeline.split(raw)
+    val geo = (good.collect() ++ bad.collect()).map(r =>
+      (r.getAs[Long]("collector_tstamp_us") - BaseUs) -> Option(r.getAs[String]("geo_country"))).toMap
+    assert(geo.keySet == ips.indices.map(_.toLong).toSet, "every event lands once")
+    assert(geo(0L).isDefined && geo(1L) == geo(0L), "a dotted quad and one trailing \\n both resolve")
+    assert((2L to 4L).forall(i => geo(i).isEmpty), s"a kept terminator is a miss: $geo")
+  }
 }

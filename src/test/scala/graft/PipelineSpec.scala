@@ -47,6 +47,34 @@ class PipelineSpec extends SparkSpec {
       List("V4LAND", "V6HIGH", "V6LOW", null, null))
   }
 
+  test("a lookup dim that would emit an event twice fails the build and names the overlap") {
+    import spark.implicits._
+    val df = Seq((1L, "0.0.0.60", "EUR")).toDF("id", "user_ipaddress", "currency")
+      .withColumn("amount_cents", lit(100L))
+    // the broadcast-join twin emits one row per match: the event twice
+    val overlapping = IpSegmentLookup("isp", Seq((0L, 100L, "A"), (50L, 200L, "B")))
+    assert(overlapping.applySpec(df).count() == 2)
+    val e = intercept[IllegalArgumentException](overlapping(df))
+    assert(e.getMessage.contains("ip_isp_lookup: ranges [0.0.0.0, 0.0.0.100] and [0.0.0.50, 0.0.0.200] overlap"),
+      e.getMessage)
+    val asn = intercept[IllegalArgumentException](
+      IpAsnLookup(Seq((10L, 20L, 1L, "a"), (30L, 40L, 2L, "b"), (40L, 50L, 3L, "c")))(df))
+    assert(asn.getMessage.contains("[0.0.0.30, 0.0.0.40] and [0.0.0.40, 0.0.0.50]"), asn.getMessage)
+    val half = BigInt(1) << 63
+    val v6 = intercept[IllegalArgumentException](IpGeoLookup(Nil, v6Ranges = Seq(
+      ("2001:db8:1:2", BigInt(0), half, "A"), ("2001:db8:1:2", half, half + 1, "B")))(df))
+    assert(v6.getMessage.contains(s"[2001:db8:1:2/64+0, 2001:db8:1:2/64+$half] and"), v6.getMessage)
+    val rates = CurrencyConversion(Seq(("EUR", 1080000L), ("USD", 1000000L), ("EUR", 1090000L)))
+    assert(rates.applySpec(df).count() == 2)
+    val cur = intercept[IllegalArgumentException](rates(df))
+    assert(cur.getMessage.contains("currency_conversion: the dim repeats key 'EUR'"), cur.getMessage)
+    // touching ranges and distinct keys are fine; so are ranges that only
+    // overlap outside the address space
+    assert(IpSegmentLookup("isp", Seq((0L, 49L, "A"), (50L, 200L, "B")))(df)
+      .select("ip_isp").as[String].collect().toSeq == Seq("B"))
+    assert(IpSegmentLookup("isp", Seq((-10L, -1L, "A"), (-5L, 200L, "B")))(df).count() == 1)
+  }
+
   test("bad-row split matches the invalid-code injection pattern") {
     val (good, bad) = PipelineQuery.pipeline.split(rawDf)
     // Synth injects invalid event codes at e%9==8 and invalid platforms at e%10==9
@@ -74,7 +102,7 @@ class PipelineSpec extends SparkSpec {
 
   test("enrichment chain is narrow: no shuffle except lookup joins") {
     val plan = PipelineQuery.pipeline.run(rawDf).queryExecution.executedPlan.toString
-    // the only exchanges allowed are broadcast ones (rates + geo ranges)
+    // the lookup stages are kernels, so no exchange of any kind is needed
     assert(!plan.contains("ShuffleExchange") || !plan.split("\n").exists(l =>
       l.contains("Exchange hashpartitioning")), s"unexpected shuffle in plan")
   }

@@ -1,8 +1,11 @@
 package graft
 
+import org.apache.spark.sql.functions.lit
+
 /** Scale-guard plan assertions: the properties SURVEY §5 and PLANS.md
-  * promise — broadcasts where dims are small, NO hash-shuffle on fact
-  * sides, no joins in pure-projection enrichments — enforced as specs so a
+  * promise — static dims as lookup kernels, broadcasts where query dims
+  * are small, NO hash-shuffle on fact sides, no joins in pure-projection
+  * enrichments — enforced as specs so a
   * plan regression fails CI instead of only drifting the next PLANS.md
   * regeneration.
   */
@@ -37,11 +40,77 @@ class PlanShapeSpec extends SparkSpec {
       s"ua_device_class shape drifted:\n$p")
   }
 
-  test("the default enrichment chain: broadcast joins only, no hash shuffle") {
+  test("the default enrichment chain plans with no join and no hash shuffle") {
     val p = plan("enrich_pipeline")
-    assert(p.contains("BroadcastHashJoin"))
-    assert(!p.contains("SortMergeJoin"), s"enrich_pipeline fell back to SMJ:\n$p")
+    assert(!p.contains("Join"), s"enrich_pipeline grew a join:\n$p")
     assert(hashExchanges(p) == 0, s"enrich_pipeline shuffles the fact stream:\n$p")
+  }
+
+  /** A collector TSV file of `lines` under a fresh temporary directory. */
+  private def collectorTsv(prefix: String, lines: String*): java.nio.file.Path = {
+    val in = java.nio.file.Files.createTempDirectory(prefix).resolve("in")
+    java.nio.file.Files.createDirectories(in)
+    java.nio.file.Files.writeString(in.resolve("events.tsv"), lines.mkString("\n"))
+    in
+  }
+
+  private val chainLine = "1700000000000000\t10.0.0.1\tMozilla/5.0 (X11; Linux x86_64) Firefox/119.0\t" +
+    "https://shop.example.com/p/1?utm_source=g\tpv\te=pv&p=web&uid=u1&res=1920x1080" +
+    "&dtm=1700000000000&_sp=abc.1700000000000&tr_tt=12.5&tr_cu=EUR"
+
+  /** The SQL executions `body` runs. */
+  private def executions(body: => Unit): Seq[org.apache.spark.sql.execution.QueryExecution] = {
+    import org.apache.spark.ListenerBusDrain
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val done = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = done.add(qe)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try { body; ListenerBusDrain(spark.sparkContext) }
+    finally spark.listenerManager.unregister(listener)
+    scala.jdk.CollectionConverters.CollectionHasAsScala(done).asScala.toSeq
+  }
+
+  test("a batch Main write over the default chain executes without AdaptiveSparkPlan") {
+    // adaptive execution wraps only plans with an exchange: the two lookup
+    // joins' broadcasts brought it in, and with it a re-optimization of
+    // the whole chain on every write
+    val in = collectorTsv("main-no-aqe", chainLine, chainLine.replace("pv", "zz"))
+    val out = in.getParent
+    val plans = executions(graft.Main.main(Array("--mode", "batch", "--format", "collector-tsv",
+      "--input", in.toString, "--good", out.resolve("good").toString, "--bad", out.resolve("bad").toString)))
+      .map(_.executedPlan.toString)
+    assert(plans.size >= 2, s"expected the good and bad writes, got ${plans.size}")
+    plans.foreach { p =>
+      assert(!p.contains("AdaptiveSparkPlan") && !p.contains("Exchange"), s"a Main write planned:\n$p")
+    }
+    assert(spark.read.parquet(out.resolve("good").toString).count() == 1)
+    assert(spark.read.text(out.resolve("bad").toString).count() == 1)
+  }
+
+  test("an inline-dims fromJson config with geo v4+v6, asn, isp and currency plans join-free") {
+    val pipeline = graft.enrich.EnrichmentConfig.fromJson("""{"enrichments": [
+      {"name": "tracker_transform"},
+      {"name": "ip_geo_lookup", "bucketBits": 26,
+       "ranges": [{"lo": 0, "hi": 167772159, "country": "AA"}, {"lo": 167772160, "hi": 184549375, "country": "TEN"}],
+       "v6Ranges": [{"prefix": "2001:db8:1:2", "lo": "0", "hi": "18446744073709551615", "country": "V6"}]},
+      {"name": "ip_asn_lookup", "ranges": [{"lo": 167772160, "hi": 167772415, "asn": 64496, "org": "Example"}]},
+      {"name": "ip_segment_lookup", "segment": "isp",
+       "ranges": [{"lo": 167772160, "hi": 184549375, "value": "Example ISP"}]},
+      {"name": "currency_conversion", "rates": [{"cur": "EUR", "rateMicro": 1080000}]}
+    ]}""")
+    val raw = graft.enrich.Protocol.fromCollector(graft.sources.Sources.collectorTsv(spark,
+      collectorTsv("inline-dims", chainLine, chainLine.replace("10.0.0.1", "2001:db8:1:2::1")).toString))
+    val out = pipeline.run(raw)
+    val p = out.queryExecution.executedPlan.toString
+    assert(!p.contains("Join") && !p.contains("Exchange"), s"an inline-dims chain planned:\n$p")
+    val rows = out.select("geo_country", "ip_asn", "ip_organization", "ip_isp", "base_amount_e8")
+      .collect().map(_.toSeq).toSeq
+    assert(rows.toSet == Set(Seq("TEN", 64496L, "Example", "Example ISP", 1250L * 1080000L),
+      Seq("V6", null, null, null, 1250L * 1080000L)), rows)
   }
 
   test("currency conversion broadcasts the (currency, day) dim") {
@@ -179,38 +248,26 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("the default chain's largest generated method stays under HotSpot's 8,000-byte JIT limit") {
-    import org.apache.spark.ListenerBusDrain
-    import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.execution.debug.codegenStringSeq
-    import org.apache.spark.sql.util.QueryExecutionListener
     // HotSpot never compiles a method over 8,000 bytes of bytecode
     // (-XX:+DontCompileHugeMethods): a fused chain past it runs every row
     // in the interpreter. With the Column-built stages the chain's one
-    // method read 14,935 bytes.
-    val dir = java.nio.file.Files.createTempDirectory("chain-codegen")
-    val tsv = dir.resolve("events.tsv")
-    java.nio.file.Files.writeString(tsv,
-      "1700000000000000\t10.0.0.1\tMozilla/5.0 (X11; Linux x86_64) Firefox/119.0\t" +
-        "https://shop.example.com/p/1?utm_source=g\tpv\te=pv&p=web&uid=u1&res=1920x1080" +
-        "&dtm=1700000000000&_sp=abc.1700000000000&tr_tt=12.5&tr_cu=EUR\n")
-    val chain = graft.queries.PipelineQuery.pipeline.run(graft.enrich.Protocol.fromCollector(
-      graft.sources.Sources.collectorTsv(spark, tsv.toString)))
-    @volatile var written: QueryExecution = null
-    val listener = new QueryExecutionListener {
-      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = written = qe
-      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    // method read 14,935 bytes. The stream's two queries are the split's
+    // sides: with the good side's filter pushed into the chain, its method
+    // read 15,797 bytes.
+    val pipeline = graft.queries.PipelineQuery.pipeline
+    val raw = graft.enrich.Protocol.fromCollector(
+      graft.sources.Sources.collectorTsv(spark, collectorTsv("chain-codegen", chainLine).toString))
+    val payload = graft.sources.Sources.CollectorTsvFields.map(_._1)
+    for ((what, df) <- Seq("chain" -> pipeline.run(raw), "good side" -> pipeline.split(raw)._1,
+        "bad envelopes" -> pipeline.badRowsJson(raw, payload, lit(0L)).select("bad_row"))) {
+      val written = executions(df.write.format("noop").mode("overwrite").save())
+      assert(written.size == 1, s"$what: the noop write reported no query execution")
+      val stages = codegenStringSeq(written.head.executedPlan)
+      assert(stages.nonEmpty, s"$what: no whole-stage-codegen subtree:\n${written.head.executedPlan}")
+      val largest = stages.map(_._3.maxMethodCodeSize).max
+      assert(largest < 8000, s"$what: the largest generated method is $largest bytes")
     }
-    spark.listenerManager.register(listener)
-    try {
-      chain.write.format("noop").mode("overwrite").save()
-      ListenerBusDrain(spark.sparkContext)
-    } finally spark.listenerManager.unregister(listener)
-    assert(written != null, "the noop write reported no query execution")
-    // the write's plan holds the AQE plan, whose final stages are read
-    val stages = codegenStringSeq(written.executedPlan)
-    assert(stages.nonEmpty, s"no whole-stage-codegen subtree:\n${written.executedPlan}")
-    val largest = stages.map(_._3.maxMethodCodeSize).max
-    assert(largest < 8000, s"the chain's largest generated method is $largest bytes")
   }
 
   test("aggregations are map-side partial before their one exchange") {

@@ -899,4 +899,120 @@ class PropertySpec extends SparkSpec {
     assert(k.size == t.size)
     k.zip(t).foreach { case (a, b) => assert(a == b) }
   }
+
+  // ---- static-dim lookup kernels against their broadcast-join twins ----
+
+  private def dotted(v: Long): String = Seq(24, 16, 8, 0).map(s => (v >>> s) & 0xFF).mkString(".")
+
+  /** IP keys around every range bound (`lo`, `hi`, `lo-1`, `hi+1`), random
+    * addresses, and the malformed shapes the twin's pattern and casts
+    * decide on. */
+  private def ipKeys(bounds: Seq[(Long, Long)]): Seq[String] = {
+    val edges = bounds.flatMap { case (lo, hi) => Seq(lo - 1, lo, hi, hi + 1) }
+      .filter(v => v >= 0 && v <= 0xFFFFFFFFL).map(dotted)
+    val random = sample(Gen.choose(0L, 0xFFFFFFFFL), 120).map(dotted)
+    val malformed = Seq("0.0.0.0", "255.255.255.255", "256.1.1.1", "1.2.3", "1.2.3.4.5", "1.2.3.",
+      ".1.2.3", " 1.2.3.4", "1.2.3.4 ", "1.2.3.4\t", "01.2.3.4", "1.2.3.04", "001.2.3.4", "1.2.3.099",
+      "1.2.3.100", "1.2.3.255", "1.2.3.256", "1.2.3.1000", "１.２.３.４", "١.٢.٣.٤", "1.2.3.٤", "", ".", "...",
+      "-1.2.3.4", "+1.2.3.4", "1..3.4", "1.2.3.4\n\n", "1.2.3.4\n\r", "1.2.3.4x", "a.b.c.d", "::ffff:1.2.3.4")
+    edges ++ random ++ malformed ++ Terminators.map("1.2.3.4" + _) ++ NotTerminators.map("1.2.3.4" + _)
+  }
+
+  /** Rows of `stage(df)` and `twin(df)` by the `id` column, with schemas. */
+  private def assertSameStage(df: org.apache.spark.sql.DataFrame,
+      stage: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
+      twin: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): Seq[org.apache.spark.sql.Row] = {
+    val (k, t) = (stage(df), twin(df))
+    assert(k.schema == t.schema, s"schema:\n${k.schema.treeString}\n${t.schema.treeString}")
+    val (kRows, tRows) = (k.orderBy("id").collect().toSeq, t.orderBy("id").collect().toSeq)
+    assert(kRows.size == df.count(), "one row out per event in")
+    kRows.zip(tRows).foreach { case (a, b) => assert(a == b, s"kernel $a != twin $b") }
+    assert(kRows.size == tRows.size)
+    kRows
+  }
+
+  private def keyed(keys: Seq[String]): org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    (keys.map(Option(_)) :+ None).zipWithIndex.map { case (k, i) => (i.toLong, k) }.toDF("id", "user_ipaddress")
+  }
+
+  test("ipGeo property: v4 + v6 range lookup == the broadcast range-join twin") {
+    import graft.enrich.IpGeoLookup
+    val v4 = Seq((0L, 255L, "ZERO"), (16909056L, 16909311L, "ONE"), (16909312L, 16909312L, "SINGLE"),
+      (2147483648L, 2147483648L + (1L << 28), "WIDE"), (3000000000L, 3000000099L, null),
+      (4294967040L, 4294967295L, "TOP"))
+    val two63 = BigInt(1) << 63
+    val top = (BigInt(1) << 64) - 1
+    val v6 = Seq(("2001:db8:1:2", BigInt(0), two63 - 1, "LOW"), ("2001:db8:1:2", two63, two63 + 999, "MID"),
+      ("2001:db8:1:2", top - 999, top, "TOPV6"), ("0:0:0:0", BigInt(0), BigInt(1) << 40, "ZEROV6"),
+      ("2001:0db8:1:3", BigInt(0), top, "NONCANONICAL"))
+    val v6Keys = Seq("2001:db8:1:2::1", "2001:db8:1:2::", "2001:db8:1:2:7fff:ffff:ffff:ffff",
+      "2001:db8:1:2:8000::", "2001:db8:1:2:8000::3e7", "2001:db8:1:2:8000::3e8", "2001:db8:1:2:ffff:ffff:ffff:fc17",
+      "2001:db8:1:2:ffff:ffff:ffff:fc18", "2001:db8:1:2:ffff:ffff:ffff:ffff", "2001:DB8:1:2::1",
+      "2001:0db8:0001:0002::1", "2001:db8:1:2::1.2.3.4", "2001:db8:1:2:0:0:1.2.3.4", "::1.2.3.4", "::ffff:1.2.3.4",
+      "::", "::1", ":::1", "1::2::3", "0:0:0:0:0:100:0:0", "0:0:0:0:0:100:0:1", "2001:db8:1:3::1",
+      "2001:db8:1:2:0:0:0:1\n", "2001:db8:1:2::1\n", "::1.2.3.4\n", "2001:db8:1:2:0:0:0:1\u2028",
+      "2001:db8:1:2:0:0:0:1\u2029", "2001:db8:1:2:0:0:0:1 ",
+      "1:2:3:4:5:6:7:8:9", "2001:db8:1:2:0:0:0", "2001:db8:1:2:0:0:0:g",
+      "2001:db8:1:2:00000::1", "2001:db8:1:2::1%eth0", "2001:db8:1:2::256.1.1.1", "[2001:db8:1:2::1]")
+    val df = keyed(ipKeys(v4.map(r => (r._1, r._2))) ++ v6Keys)
+    val stages = Seq(IpGeoLookup(v4), IpGeoLookup(v4, v6Ranges = v6))
+    for (g <- stages) {
+      val rows = assertSameStage(df, g.apply, g.applySpec)
+      val hits = rows.flatMap(r => Option(r.getAs[String]("geo_country"))).toSet
+      assert(Set("ZERO", "ONE", "SINGLE", "WIDE", "TOP").subsetOf(hits), s"hits: $hits")
+      if (g.v6Ranges.nonEmpty) assert(Set("LOW", "MID", "TOPV6", "ZEROV6").subsetOf(hits), s"hits: $hits")
+    }
+    // a parquet dim: one collect, rows with a null bound dropped, a null
+    // country kept as a hit that reads null
+    import spark.implicits._
+    val path = java.nio.file.Files.createTempDirectory("geo-dim").resolve("d").toString
+    (v4.map { case (lo, hi, cc) => (Option(lo), Option(hi), cc) } :+ ((None, Some(5000L), "NULL_LO")))
+      .toDF("lo", "hi", "cc").write.parquet(path)
+    val fromPath = IpGeoLookup(Nil, rangesPath = path, countryField = "cc", v6Ranges = v6)
+    assertSameStage(df, fromPath.apply, fromPath.applySpec)
+  }
+
+  test("ipAsn and ipSegment properties: range lookups == the broadcast range-join twins") {
+    import graft.enrich.{IpAsnLookup, IpSegmentLookup}
+    val asn = Seq((0L, 16777215L, 64496L, "ZeroNet"), (16777216L, 16777471L, 64497L, null),
+      (3232235520L, 3232301055L, 64498L, "Private"), (4294967295L, 4294967295L, 64499L, "Last"))
+    val isp = Seq((16909056L, 16909311L, "ISP-A"), (16909312L, 16909567L, null), (167772160L, 184549375L, "ISP-C"))
+    val keys = ipKeys(asn.map(r => (r._1, r._2)) ++ isp.map(r => (r._1, r._2)))
+    val df = keyed(keys ++ Seq("2001:db8::1", "::ffff:192.168.0.1"))
+    val a = IpAsnLookup(asn)
+    val rows = assertSameStage(df, a.apply, a.applySpec)
+    val asnAt = rows.head.fieldIndex("ip_asn")
+    assert(rows.filterNot(_.isNullAt(asnAt)).map(_.getLong(asnAt)).toSet == asn.map(_._3).toSet)
+    for (seg <- Seq("isp", "domain", "connection")) {
+      val s = IpSegmentLookup(seg, isp)
+      val got = assertSameStage(df, s.apply, s.applySpec)
+      assert(got.flatMap(r => Option(r.getAs[String](s.outCol))).toSet == Set("ISP-A", "ISP-C"))
+    }
+  }
+
+  test("currency property: rate key lookup == the broadcast rates-join twin") {
+    import spark.implicits._
+    import graft.enrich.CurrencyConversion
+    val rates = Seq(("EUR", 1080000L), ("USD", 1000000L), ("JPY", 6700L), ("GBP", 1270000L), ("ZERO", 0L))
+    val currencies = rates.map(_._1) ++ Seq("eur", "Eur", "usd", "", " EUR", "EUR ", "EUR\n", "XXX", "€",
+      "ＥＵＲ", "EU", "EURO")
+    val amounts = Seq(Some(0L), Some(1250L), Some(-99L), Some(Long.MaxValue), Some(Long.MinValue),
+      Some(Long.MaxValue / 1080000L), Some(Long.MaxValue / 1080000L + 1), None)
+    val rows = for ((c, i) <- (currencies.map(Option(_)) :+ None).zipWithIndex; (a, j) <- amounts.zipWithIndex)
+      yield ((i * amounts.size + j).toLong, a, c)
+    val df = rows.toDF("id", "amount_cents", "currency")
+    val cc = CurrencyConversion(rates)
+    val got = assertSameStage(df, cc.apply, cc.applySpec)
+    // both outcomes: converted, and null on a miss, a null amount or an overflow
+    assert(got.exists(r => !r.isNullAt(r.fieldIndex("base_amount_e8"))))
+    assert(got.count(r => r.isNullAt(r.fieldIndex("base_amount_e8"))) > amounts.size * 8)
+    // a parquet rates dim
+    val path = java.nio.file.Files.createTempDirectory("rates-dim").resolve("d").toString
+    (rates.map { case (c, r) => (Option(c), Option(r)) } :+ ((None, Some(1L))) :+ ((Some("NULLRATE"), None)))
+      .toDF("cur", "rate_micro").write.parquet(path)
+    val fromPath = CurrencyConversion(Nil, ratesPath = path)
+    assertSameStage(df.union(Seq((999L, Some(5L), Some("NULLRATE"))).toDF("id", "amount_cents", "currency")),
+      fromPath.apply, fromPath.applySpec)
+  }
 }
