@@ -5,6 +5,8 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.unsafe.types.UTF8String
+
 /** Parser for the public IAB/ABC "spiders & robots" file layout the
   * reference consumes via its `registry/IabEnrichment.scala` (the three
   * files an IAB membership delivers: `ip_exclude_current_cidr.txt`,
@@ -155,6 +157,10 @@ object IabFiles {
     load(readLines(ipFile), readLines(excludeFile), readLines(includeFile))
 
   // ---- per-row kernel (called from the codegen'd IabCheckExpression) -----
+
+  /** Row function of [[graft.plans.IabCheckExpression]]: [[check]]. */
+  def checkRow(ua: UTF8String, ip: UTF8String, cfg: Config): UTF8String =
+    UTF8String.fromString(check(ua.toString, ip.toString, cfg))
 
   private val Impacts =
     Array("NONE", "PAGE_IMPRESSIONS", "AD_IMPRESSIONS", "PAGE_AND_AD_IMPRESSIONS")

@@ -166,6 +166,10 @@ object IpF {
     else ip
   }
 
+  /** Row function of [[graft.plans.AnonIpExpression]]. */
+  def anonIpRow(ip: UTF8String, octets: Int, segments: Int): UTF8String =
+    UTF8String.fromString(anonIpString(ip.toString, octets, segments))
+
   // ---- lookup keys (called from graft.plans.IpRangeTable) ----
 
   /** Per-row twin of [[ipv4ToLong]]: the dotted quad's 32-bit value, or -1

@@ -164,8 +164,10 @@ object RefF {
 
   /** Per-row entry for [[graft.plans.RefererParseExpression]]: the whole
     * referer classification from the raw referer URL + page host. Null
-    * referer host → all-null struct (the cascades' rh-null branch). */
+    * referer host → all-null struct (the cascades' rh-null branch); a null
+    * referer → null. */
   def refererRow(refrU: UTF8String, pageHostU: UTF8String, internalDomains: Seq[String]): InternalRow = {
+    if (refrU == null) return null
     val parts = UrlF.parseUrlParts(refrU.toString)
     val rh = parts.host
     if (rh == null) return new GenericInternalRow(Array[Any](null, null, null, null))

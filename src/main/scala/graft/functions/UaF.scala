@@ -282,7 +282,7 @@ object UaF {
     tokens.map(t => ua.contains(t)).reduce(_ || _)
 
   /** Fused first-match family kernel ([[graft.plans.BrowserFamilyExpression]]
-    * → [[browserFamilyString]]); the coalesce reproduces the cascade's
+    * → [[browserFamilyRow]]); the coalesce reproduces the cascade's
     * null-UA → "Unknown" fall-through. */
   def browserFamily(ua: Column): Column =
     coalesce(
@@ -301,7 +301,7 @@ object UaF {
 
   /** Version string of the detected browser family (incl. legacy
     * `Opera 7.02`, `MSIE 9.0` and Trident `rv:11.0` forms); fused kernel
-    * ([[graft.plans.BrowserVersionExpression]] → [[browserVersionString]]),
+    * ([[graft.plans.BrowserVersionExpression]] → [[browserVersionRow]]),
     * sharing the family cascade's rule order. */
   def browserVersion(ua: Column): Column =
     org.apache.spark.sql.graft.ColumnBridge.column(
@@ -309,7 +309,7 @@ object UaF {
         org.apache.spark.sql.graft.ColumnBridge.expression(ua)))
 
   /** The Column cascade the kernel replaced — specification twin of
-    * [[browserVersionString]]. */
+    * [[browserVersionRow]]. */
   def browserVersionColumns(ua: Column): Column =
     BrowserRules.foldLeft(when(lit(false), lit(""))) { case (acc, r) =>
       if (r.verRegex.isEmpty) acc.when(hasAny(ua, r.tokens), lit(null))
@@ -345,7 +345,7 @@ object UaF {
 
   /** YAUAA-style coarse device class (reference `YauaaEnrichmentSpec`
     * DeviceClass vector table), extended with TVs/streaming sticks —
-    * fused per-row kernel (see [[deviceClassString]]). */
+    * fused per-row kernel (see [[deviceClassRow]]). */
   def deviceClass(ua: Column): Column =
     org.apache.spark.sql.graft.ColumnBridge.column(
       graft.plans.DeviceClassExpression(
@@ -418,6 +418,9 @@ object UaF {
     false
   }
 
+  /** Row function of [[graft.plans.BotMatchExpression]]. */
+  def isBotRow(ua: UTF8String): Boolean = isBotString(ua.toString)
+
   private def containsAny(ua: String, tokens: Array[String]): Boolean = {
     var i = 0
     while (i < tokens.length) {
@@ -443,20 +446,24 @@ object UaF {
   /** Per-row twin of [[browserFamilyColumns]] for non-null UAs: "Robot" for
     * bot UAs, first matching rule's family, else "Unknown". (The Column
     * wrapper maps null UA → "Unknown" via coalesce.) */
-  def browserFamilyString(ua: String): String =
-    if (isBotString(ua)) "Robot"
-    else {
-      val i = firstRule(ua, BrowserTokenArrs)
-      if (i >= 0) BrowserFamilies(i) else "Unknown"
-    }
+  def browserFamilyRow(uaU: UTF8String): UTF8String = {
+    val ua = uaU.toString
+    UTF8String.fromString(
+      if (isBotString(ua)) "Robot"
+      else {
+        val i = firstRule(ua, BrowserTokenArrs)
+        if (i >= 0) BrowserFamilies(i) else "Unknown"
+      })
+  }
 
   /** Per-row twin of [[browserVersionColumns]]: group 1 of the FIRST
     * matching rule's version regex; null when that rule has no version
     * pattern, the pattern finds no match (regexp_extract's '' → nullif),
     * or no rule matches. */
-  def browserVersionString(ua: String): String = {
+  def browserVersionRow(uaU: UTF8String): UTF8String = {
+    val ua = uaU.toString
     val i = firstRule(ua, BrowserTokenArrs)
-    if (i >= 0) versionOf(i, ua) else null
+    if (i >= 0) UTF8String.fromString(versionOf(i, ua)) else null
   }
 
   /** Group 1 of browser rule `i`'s version regex over `ua`, '' → null. */
@@ -472,10 +479,12 @@ object UaF {
   /** Per-row twin of [[deviceClassColumns]]: identical cascade, indexOf
     * token scans instead of regex alternations (only AFT-models and the
     * tablet-model table stay regexes — they have real patterns). */
-  def deviceClassString(ua: String): String =
-    if (ua == null) null else deviceClassOf(ua, isBotString(ua))
+  def deviceClassRow(uaU: UTF8String): UTF8String = {
+    val ua = uaU.toString
+    UTF8String.fromString(deviceClassOf(ua, isBotString(ua)))
+  }
 
-  /** [[deviceClassString]] for a non-null UA whose bot scan already ran. */
+  /** [[deviceClassRow]] for a non-null UA whose bot scan already ran. */
   private def deviceClassOf(ua: String, bot: Boolean): String = {
     if (bot) "Robot"
     else if (containsAny(ua, ConsoleTokens)) "Game Console"

@@ -1,13 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.types.{DataType, StringType}
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Fused IP pseudonymization kernel — one codegen'd call into
-  * [[graft.functions.IpF.anonIpString]] per row instead of the ~10
+  * [[graft.functions.IpF.anonIpRow]] per row instead of the ~10
   * regex/split/array built-ins the Column routing composes (v4/v6 routing,
   * mixed-notation normalize, `::` expansion, pad-to-8 fail-closed, masking).
   *
@@ -17,25 +15,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * specification twin survives as `IpF.anonIpColumns`.
   */
 case class AnonIpExpression(child: Expression, octets: Int, segments: Int)
-  extends UnaryExpression {
+    extends RowKernel("graft_anon_ip", graft.functions.IpF, "anonIpRow") with UnaryLike[Expression] {
 
   require(octets >= 1 && octets <= 4, "octets must be 1..4")
   require(segments >= 1 && segments <= 8, "segments must be 1..8")
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"$prettyName requires a string input, got ${child.dataType}")
-
+  override def inputTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType = StringType
-  override def prettyName: String = "graft_anon_ip"
-
-  override protected def nullSafeEval(ip: Any): Any =
-    UTF8String.fromString(
-      graft.functions.IpF.anonIpString(ip.asInstanceOf[UTF8String].toString, octets, segments))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"UTF8String.fromString(graft.functions.IpF$$.MODULE$$.anonIpString($c.toString(), $octets, $segments))")
+  override protected def consts: Seq[Any] = Seq(octets, segments)
 
   override protected def withNewChildInternal(newChild: Expression): AnonIpExpression =
     copy(child = newChild)

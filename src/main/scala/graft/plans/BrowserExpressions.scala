@@ -1,15 +1,13 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.types.{BooleanType, DataType, StringType, StructField, StructType}
-import org.apache.spark.unsafe.types.UTF8String
 
-/** Fused user-agent kernels — one codegen'd call per row into the
-  * imperative twins in [[graft.functions.UaF]] instead of the Column
+import graft.functions.UaF
+
+/** Fused user-agent kernels — one codegen'd call per row ([[RowKernel]])
+  * into the imperative twins in [[graft.functions.UaF]] instead of the Column
   * cascades they replace (r15 optimization round; guide §1.2 "per-task
   * work" / §4 "prefer codegen-friendly expressions").
   *
@@ -31,20 +29,10 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** True iff lower(ua) contains any bot token — fused twin of
   * `lower(ua) rlike BotRegex` (every token is a literal). */
-case class BotMatchExpression(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"$prettyName requires a string input, got ${child.dataType}")
-
+case class BotMatchExpression(child: Expression)
+    extends RowKernel("graft_is_bot", UaF, "isBotRow") with UnaryLike[Expression] {
+  override def inputTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType = BooleanType
-  override def prettyName: String = "graft_is_bot"
-
-  override protected def nullSafeEval(ua: Any): Any =
-    graft.functions.UaF.isBotString(ua.asInstanceOf[UTF8String].toString)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.UaF$$.MODULE$$.isBotString($c.toString())")
 
   override protected def withNewChildInternal(newChild: Expression): BotMatchExpression =
     copy(child = newChild)
@@ -54,21 +42,10 @@ case class BotMatchExpression(child: Expression) extends UnaryExpression {
   * "Robot" for bot UAs, "Unknown" when nothing matches. Null input stays
   * null here; the Column wrapper coalesces to "Unknown" to match the
   * cascade's when-falls-through-to-otherwise semantics. */
-case class BrowserFamilyExpression(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"$prettyName requires a string input, got ${child.dataType}")
-
+case class BrowserFamilyExpression(child: Expression)
+    extends RowKernel("graft_browser_family", UaF, "browserFamilyRow") with UnaryLike[Expression] {
+  override def inputTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType = StringType
-  override def prettyName: String = "graft_browser_family"
-
-  override protected def nullSafeEval(ua: Any): Any =
-    UTF8String.fromString(
-      graft.functions.UaF.browserFamilyString(ua.asInstanceOf[UTF8String].toString))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"UTF8String.fromString(graft.functions.UaF$$.MODULE$$.browserFamilyString($c.toString()))")
 
   override protected def withNewChildInternal(newChild: Expression): BrowserFamilyExpression =
     copy(child = newChild)
@@ -78,32 +55,11 @@ case class BrowserFamilyExpression(child: Expression) extends UnaryExpression {
   * precompiled verRegex), null when the rule carries no version pattern,
   * the pattern does not match, or no rule matches — exactly the
   * `nullif(regexp_extract(...), '')` cascade the Column twin spells. */
-case class BrowserVersionExpression(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"$prettyName requires a string input, got ${child.dataType}")
-
+case class BrowserVersionExpression(child: Expression)
+    extends RowKernel("graft_browser_version", UaF, "browserVersionRow") with UnaryLike[Expression] {
+  override def inputTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType = StringType
-  override def prettyName: String = "graft_browser_version"
-
-  override protected def nullSafeEval(ua: Any): Any = {
-    val v = graft.functions.UaF.browserVersionString(ua.asInstanceOf[UTF8String].toString)
-    if (v == null) null else UTF8String.fromString(v)
-  }
-
-  override def nullable: Boolean = true
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      s"""
-         |String ${ev.value}Str = graft.functions.UaF$$.MODULE$$.browserVersionString($c.toString());
-         |if (${ev.value}Str == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = UTF8String.fromString(${ev.value}Str);
-         |}
-       """.stripMargin
-    })
+  override protected def nullResult: Boolean = true
 
   override protected def withNewChildInternal(newChild: Expression): BrowserVersionExpression =
     copy(child = newChild)
@@ -116,11 +72,9 @@ case class BrowserVersionExpression(child: Expression) extends UnaryExpression {
   * yields "Unknown" for the family and the OS (their cascades end in
   * `otherwise`) and null elsewhere, so the struct itself is never null and
   * each field keeps its Column twin's nullability. */
-case class UaParseExpression(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"$prettyName requires a string input, got ${child.dataType}")
-
+case class UaParseExpression(child: Expression)
+    extends RowKernel("graft_ua_parse", UaF, "uaParseRow") with UnaryLike[Expression] {
+  override def inputTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType = StructType(Seq(
     StructField("br_family", StringType, nullable = false),
     StructField("br_version", StringType),
@@ -128,19 +82,7 @@ case class UaParseExpression(child: Expression) extends UnaryExpression {
     StructField("dvce_type", StringType, child.nullable),
     StructField("dvce_ismobile", BooleanType, child.nullable),
     StructField("is_bot", BooleanType, child.nullable)))
-  override def nullable: Boolean = false
-  override def prettyName: String = "graft_ua_parse"
-
-  override def eval(input: InternalRow): Any =
-    graft.functions.UaF.uaParseRow(child.eval(input).asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    ev.copy(isNull = FalseLiteral, code = code"""
-      ${c.code}
-      org.apache.spark.sql.catalyst.InternalRow ${ev.value} = graft.functions.UaF$$.MODULE$$.uaParseRow(
-        ${c.isNull} ? null : ${c.value});""")
-  }
+  override protected def passNulls: Boolean = true
 
   override protected def withNewChildInternal(newChild: Expression): UaParseExpression =
     copy(child = newChild)

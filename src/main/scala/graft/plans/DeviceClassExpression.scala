@@ -1,13 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.types.{DataType, StringType}
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Fused device-class kernel — one codegen'd call into
-  * [[graft.functions.UaF.deviceClassString]] per row instead of the four
+  * [[graft.functions.UaF.deviceClassRow]] per row instead of the four
   * regex-alternation scans the Column cascade runs (bot tokens, consoles,
   * TVs, tablet models). Every alternation is a literal-token list, so the
   * kernel uses indexOf scans; only the two genuinely patterned tables
@@ -19,22 +17,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * against the Column twin (`UaF.deviceClassColumns`), and the
   * ua_device_class / enrich_pipeline DuckDB oracles.
   */
-case class DeviceClassExpression(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"$prettyName requires a string input, got ${child.dataType}")
-
+case class DeviceClassExpression(child: Expression)
+    extends RowKernel("graft_device_class", graft.functions.UaF, "deviceClassRow") with UnaryLike[Expression] {
+  override def inputTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType = StringType
-  override def prettyName: String = "graft_device_class"
-
-  override protected def nullSafeEval(ua: Any): Any =
-    UTF8String.fromString(
-      graft.functions.UaF.deviceClassString(ua.asInstanceOf[UTF8String].toString))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"UTF8String.fromString(graft.functions.UaF$$.MODULE$$.deviceClassString($c.toString()))")
 
   override protected def withNewChildInternal(newChild: Expression): DeviceClassExpression =
     copy(child = newChild)

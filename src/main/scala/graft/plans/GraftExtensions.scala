@@ -53,7 +53,8 @@ object GraftFunctions {
     usage: String,
     builder: Seq[Expression] => Expression
   ): (FunctionIdentifier, ExpressionInfo, FunctionRegistry.FunctionBuilder) =
-    (FunctionIdentifier(name), new ExpressionInfo("graft", name), (exprs: Seq[Expression]) => builder(exprs))
+    (FunctionIdentifier(name), new ExpressionInfo("graft", null, name, usage, ""),
+      (exprs: Seq[Expression]) => builder(exprs))
 
   private def c(e: Expression) = ColumnBridge.column(e)
   private def x(col: org.apache.spark.sql.Column) = ColumnBridge.expression(col)

@@ -1,8 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.types.{BinaryType, DataType}
 
 /** Gzip + zstd codec kernels for collector-payload batches (reference
@@ -12,8 +11,8 @@ import org.apache.spark.sql.types.{BinaryType, DataType}
   * rides zstd-jni, which Spark already ships for shuffle compression.
   *
   * The expressions stay inside whole-stage codegen as a single static
-  * call per row (the stream codec itself is library code; inlining it
-  * would only bloat the generated method past the JIT limit).
+  * call per row ([[RowKernel]]; the stream codec itself is library code;
+  * inlining it would only bloat the generated method past the JIT limit).
   * Decompression enforces `maxBytes` while inflating — a decompression
   * bomb fails the ROW with a clear error before allocating its payload,
   * never the executor.
@@ -75,99 +74,47 @@ object GzipCodec {
     } finally in.close()
 }
 
-case class GzipExpression(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_gzip requires binary, got ${other.catalogString}")
-  }
+case class GzipExpression(child: Expression)
+    extends RowKernel("graft_gzip", GzipCodec, "gzip") with UnaryLike[Expression] {
+  override def inputTypes: Seq[DataType] = Seq(BinaryType)
   override def dataType: DataType = BinaryType
-  override def prettyName: String = "graft_gzip"
-
-  override protected def nullSafeEval(input: Any): Any =
-    GzipCodec.gzip(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.GzipCodec.gzip($c)")
 
   override protected def withNewChildInternal(newChild: Expression): GzipExpression =
     copy(child = newChild)
 }
 
 case class GunzipExpression(child: Expression, maxBytes: Int, lenient: Boolean = false)
-  extends UnaryExpression {
+    extends RowKernel("graft_gunzip", GzipCodec, if (lenient) "gunzipLenient" else "gunzip")
+    with UnaryLike[Expression] {
   require(maxBytes > 0, "maxBytes must be positive")
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_gunzip requires binary, got ${other.catalogString}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(BinaryType)
   override def dataType: DataType = BinaryType
-  override def nullable: Boolean = lenient || super.nullable
-  override def prettyName: String = "graft_gunzip"
-  private def fnName = if (lenient) "gunzipLenient" else "gunzip"
-
-  override protected def nullSafeEval(input: Any): Any =
-    if (lenient) GzipCodec.gunzipLenient(input.asInstanceOf[Array[Byte]], maxBytes)
-    else GzipCodec.gunzip(input.asInstanceOf[Array[Byte]], maxBytes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    if (!lenient) defineCodeGen(ctx, ev, c => s"graft.plans.GzipCodec.$fnName($c, $maxBytes)")
-    else nullSafeCodeGen(ctx, ev, c =>
-      s"""
-         |${ev.value} = graft.plans.GzipCodec.$fnName($c, $maxBytes);
-         |if (${ev.value} == null) { ${ev.isNull} = true; }
-       """.stripMargin)
+  override protected def nullResult: Boolean = lenient
+  override protected def consts: Seq[Any] = Seq(maxBytes)
 
   override protected def withNewChildInternal(newChild: Expression): GunzipExpression =
     copy(child = newChild)
 }
 
-case class ZstdExpression(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_zstd requires binary, got ${other.catalogString}")
-  }
+case class ZstdExpression(child: Expression)
+    extends RowKernel("graft_zstd", GzipCodec, "zstd") with UnaryLike[Expression] {
+  override def inputTypes: Seq[DataType] = Seq(BinaryType)
   override def dataType: DataType = BinaryType
-  override def prettyName: String = "graft_zstd"
-
-  override protected def nullSafeEval(input: Any): Any =
-    GzipCodec.zstd(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.GzipCodec.zstd($c)")
 
   override protected def withNewChildInternal(newChild: Expression): ZstdExpression =
     copy(child = newChild)
 }
 
 case class UnzstdExpression(child: Expression, maxBytes: Int, lenient: Boolean = false)
-  extends UnaryExpression {
+    extends RowKernel("graft_unzstd", GzipCodec, if (lenient) "unzstdLenient" else "unzstd")
+    with UnaryLike[Expression] {
   require(maxBytes > 0, "maxBytes must be positive")
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_unzstd requires binary, got ${other.catalogString}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(BinaryType)
   override def dataType: DataType = BinaryType
-  override def nullable: Boolean = lenient || super.nullable
-  override def prettyName: String = "graft_unzstd"
-  private def fnName = if (lenient) "unzstdLenient" else "unzstd"
-
-  override protected def nullSafeEval(input: Any): Any =
-    if (lenient) GzipCodec.unzstdLenient(input.asInstanceOf[Array[Byte]], maxBytes)
-    else GzipCodec.unzstd(input.asInstanceOf[Array[Byte]], maxBytes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    if (!lenient) defineCodeGen(ctx, ev, c => s"graft.plans.GzipCodec.$fnName($c, $maxBytes)")
-    else nullSafeCodeGen(ctx, ev, c =>
-      s"""
-         |${ev.value} = graft.plans.GzipCodec.$fnName($c, $maxBytes);
-         |if (${ev.value} == null) { ${ev.isNull} = true; }
-       """.stripMargin)
+  override protected def nullResult: Boolean = lenient
+  override protected def consts: Seq[Any] = Seq(maxBytes)
 
   override protected def withNewChildInternal(newChild: Expression): UnzstdExpression =
     copy(child = newChild)

@@ -1,10 +1,8 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.types.{DataType, StringType}
-import org.apache.spark.unsafe.types.UTF8String
 
 import graft.enrich.IabFiles
 
@@ -13,36 +11,17 @@ import graft.enrich.IabFiles
   * `"reason|primaryImpact"`. The parsed file config rides along as a
   * codegen reference object — one driver-side parse, zero per-record file
   * access; the IP check is a binary search over merged CIDR intervals so
-  * the full ~40k-line membership file costs O(log n) per row. Same
-  * kernel-behind-an-Expression design as [[DeviceClassExpression]];
+  * the full ~40k-line membership file costs O(log n) per row. A
+  * [[RowKernel]] over [[IabFiles.checkRow]], like [[DeviceClassExpression]];
   * null ua or ip → null result (the reference likewise requires both). */
 case class IabCheckExpression(
   left: Expression,
   right: Expression,
   cfg: IabFiles.Config
-) extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == StringType && right.dataType == StringType)
-      TypeCheckResult.TypeCheckSuccess
-    else
-      TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (string ua, string ip), got (${left.dataType}, ${right.dataType})")
-
+) extends RowKernel("graft_iab_check", IabFiles, "checkRow") with BinaryLike[Expression] {
+  override def inputTypes: Seq[DataType] = Seq(StringType, StringType)
   override def dataType: DataType = StringType
-  override def prettyName: String = "graft_iab_check"
-
-  override protected def nullSafeEval(ua: Any, ip: Any): Any =
-    UTF8String.fromString(IabFiles.check(
-      ua.asInstanceOf[UTF8String].toString,
-      ip.asInstanceOf[UTF8String].toString, cfg))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cfgRef = ctx.addReferenceObj("iabCfg", cfg, classOf[IabFiles.Config].getName)
-    defineCodeGen(ctx, ev, (ua, ip) =>
-      s"UTF8String.fromString(graft.enrich.IabFiles$$.MODULE$$.check(" +
-        s"$ua.toString(), $ip.toString(), $cfgRef))")
-  }
+  override protected def consts: Seq[Any] = Seq(cfg)
 
   override protected def withNewChildrenInternal(
     newLeft: Expression, newRight: Expression): IabCheckExpression =

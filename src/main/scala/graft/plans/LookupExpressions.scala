@@ -2,13 +2,11 @@ package graft.plans
 
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.DataType
+import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.IpF
@@ -46,28 +44,11 @@ final class DimHandle(table: Broadcast[DimTable]) extends Serializable {
 
 /** key → the dim value from [[DimHandle.lookup]], null on a miss. */
 case class DimLookupExpression(child: Expression, dim: DimHandle, dataType: DataType)
-    extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = KernelCall.stringsOnly(prettyName, Seq(child))
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_dim_lookup"
+    extends RowKernel("graft_dim_lookup", DimLookup, "lookup") with UnaryLike[Expression] {
+  override def inputTypes: Seq[DataType] = Seq(StringType)
+  override protected def nullResult: Boolean = true
+  override protected def consts: Seq[Any] = Seq(dim)
   override protected def flatArguments: Iterator[Any] = Iterator(child)
-
-  override def eval(input: InternalRow): Any = {
-    val k = child.eval(input)
-    if (k == null) null else dim.lookup(k.asInstanceOf[UTF8String])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val dimRef = ctx.addReferenceObj("dim", dim, classOf[DimHandle].getName)
-    val c = child.genCode(ctx)
-    val hit = ctx.freshName("hit")
-    ev.copy(code = code"""
-      ${c.code}
-      Object $hit = ${c.isNull} ? null : $dimRef.lookup(${c.value});
-      boolean ${ev.isNull} = $hit == null;
-      ${CodeGenerator.javaType(dataType)} ${ev.value} = ${ev.isNull} ?
-        ${CodeGenerator.defaultValue(dataType)} : (${CodeGenerator.boxedType(dataType)}) $hit;""")
-  }
 
   override protected def withNewChildInternal(newChild: Expression): DimLookupExpression =
     copy(child = newChild)
@@ -174,8 +155,12 @@ object KeyTable {
   }
 }
 
-/** Driver-side builds of [[DimLookupExpression]] columns. */
+/** Driver-side builds of [[DimLookupExpression]] columns, and its row
+  * function. */
 object DimLookup {
+  /** The row function of [[DimLookupExpression]]. */
+  def lookup(key: UTF8String, dim: DimHandle): AnyRef = dim.lookup(key)
+
   /** `table` broadcast once; `key` cast to string. */
   def column(spark: SparkSession, key: Column, table: DimTable, dataType: DataType): Column =
     ColumnBridge.column(DimLookupExpression(ColumnBridge.expression(key.cast("string")),

@@ -2,9 +2,8 @@ package graft.plans
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -29,29 +28,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * array_min; empty / all-null arrays → null component; otherwise the
   * lexicographic minimum of lowercase-hex `md5(seed || ":" || shingle)`.
   */
-case class MinHashExpression(child: Expression, seeds: Seq[Int]) extends UnaryExpression {
+case class MinHashExpression(child: Expression, seeds: Seq[Int])
+    extends RowKernel("graft_minhash", MinHashExpression, "minhashRow") with UnaryLike[Expression] {
 
   require(seeds.nonEmpty, "at least one seed")
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<string>, got ${other.catalogString}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
   override def dataType: DataType = ArrayType(StringType, containsNull = true)
-  override def prettyName: String = "graft_minhash"
-
-  @transient private lazy val prefixes: Array[Array[Byte]] =
-    MinHashExpression.prefixBytes(seeds)
-
-  override protected def nullSafeEval(input: Any): Any =
-    MinHashExpression.minhashRow(input.asInstanceOf[ArrayData], prefixes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val pref = ctx.addReferenceObj("mhPrefixes", prefixes, "byte[][]")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.plans.MinHashExpression$$.MODULE$$.minhashRow($c, $pref)")
-  }
+  override protected def consts: Seq[Any] = Seq(MinHashExpression.prefixBytes(seeds))
 
   override protected def withNewChildInternal(newChild: Expression): MinHashExpression =
     copy(child = newChild)

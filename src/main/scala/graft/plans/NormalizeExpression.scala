@@ -2,9 +2,8 @@ package graft.plans
 
 import java.text.Normalizer
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -18,13 +17,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * Fast path: an all-ASCII string (numBytes == numChars) is already in every
   * normal form — no JDK call, no allocation. That is the overwhelmingly
   * common case in a web corpus and keeps the kernel nearly free inside a
-  * codegen'd stage. The DuckDB oracle twin is `nfc_normalize()`; both sides
-  * implement the same Unicode normalization spec, so results are
+  * codegen'd stage ([[RowKernel]]). The DuckDB oracle twin is
+  * `nfc_normalize()`; both sides implement the same Unicode normalization
+  * spec, so results are
   * byte-identical (pinned over planted decomposed/ligature inputs in
   * FunctionsSpec and the `text_normalize` oracle query).
   */
 case class NormalizeExpression(child: Expression, form: String)
-  extends UnaryExpression {
+    extends RowKernel("graft_normalize", NormalizeExpression, "normalize") with UnaryLike[Expression] {
 
   private val normForm: Normalizer.Form = form.toUpperCase match {
     case "NFC" => Normalizer.Form.NFC
@@ -35,33 +35,17 @@ case class NormalizeExpression(child: Expression, form: String)
       s"graft_normalize form must be NFC|NFD|NFKC|NFKD, got $other")
   }
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_normalize requires string, got ${other.catalogString}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType = StringType
-  override def prettyName: String = "graft_normalize"
-
-  override protected def nullSafeEval(input: Any): Any = {
-    val s = input.asInstanceOf[UTF8String]
-    if (s.numBytes == s.numChars) s // all-ASCII: already normalized
-    else UTF8String.fromString(Normalizer.normalize(s.toString, normForm))
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val utf8 = classOf[UTF8String].getName
-      s"""
-         |if ($c.numBytes() == $c.numChars()) {
-         |  ${ev.value} = $c;
-         |} else {
-         |  ${ev.value} = $utf8.fromString(java.text.Normalizer.normalize(
-         |    $c.toString(), java.text.Normalizer.Form.${normForm.name()}));
-         |}
-       """.stripMargin
-    })
+  override protected def consts: Seq[Any] = Seq(normForm)
 
   override protected def withNewChildInternal(newChild: Expression): NormalizeExpression =
     copy(child = newChild)
+}
+
+object NormalizeExpression {
+  /** The row function. */
+  def normalize(s: UTF8String, form: Normalizer.Form): UTF8String =
+    if (s.numBytes == s.numChars) s // all-ASCII: already normalized
+    else UTF8String.fromString(Normalizer.normalize(s.toString, form))
 }

@@ -1,8 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
@@ -16,27 +15,15 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * interpreted-HOF trap CLAUDE.md documents). One codegen'd call into a
   * tight double loop instead; values are identical (same multiplies, same
   * order). */
-case class OuterProductExpression(child: Expression) extends UnaryExpression {
+case class OuterProductExpression(child: Expression)
+    extends RowKernel("graft_outer_product", OuterProductExpression, "compute") with UnaryLike[Expression] {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    // the actual producer (round(..).cast(long) quantization) carries
-    // containsNull=true in its TYPE though it never emits null elements;
-    // compute() guards each slot and fails LOUDLY on a null instead of
-    // silently reading it as 0 under UnsafeArrayData (r16, advisor note)
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires ARRAY<BIGINT> input, got ${other.sql}")
-  }
-
+  // the actual producer (round(..).cast(long) quantization) carries
+  // containsNull=true in its TYPE though it never emits null elements;
+  // compute() guards each slot and fails LOUDLY on a null instead of
+  // silently reading it as 0 under UnsafeArrayData (r16, advisor note)
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(LongType))
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_outer_product"
-
-  override protected def nullSafeEval(q: Any): Any =
-    OuterProductExpression.compute(q.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.plans.OuterProductExpression$$.MODULE$$.compute($c)")
 
   override protected def withNewChildInternal(newChild: Expression): OuterProductExpression =
     copy(child = newChild)

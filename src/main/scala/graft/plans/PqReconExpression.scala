@@ -1,8 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
@@ -19,37 +18,21 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * the composable form — encode stays a narrow projection with zero
   * corpus-side joins. Byte parity with the composable spelling is spec'd
   * (Queries21Spec: codebook members reconstruct exactly; FunctionsSpec
-  * twin-checks a corpus scan).
+  * twin-checks a corpus scan). A vector whose length is not the
+  * codebook's, or that holds a null element, yields NULL, as in
+  * [[VecMatMulExpression]].
   */
 case class PqReconExpression(child: Expression, codebook: Seq[Seq[Long]], subDim: Int)
-  extends UnaryExpression {
+    extends RowKernel("graft_pq_recon", PqReconExpression, "compute") with UnaryLike[Expression] {
 
   require(codebook.nonEmpty && codebook.forall(_.length == codebook.head.length),
     "codebook rows must be equal-length")
   require(codebook.head.length % subDim == 0, "vector length must divide into subspaces")
 
-  private val dim = codebook.head.length
-  private val m = dim / subDim
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_pq_recon requires array<bigint>, got ${other.catalogString}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(LongType))
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_pq_recon"
-
-  @transient private lazy val flatCodebook: Array[Long] = codebook.flatten.toArray
-
-  override protected def nullSafeEval(input: Any): Any =
-    PqReconExpression.compute(input.asInstanceOf[ArrayData], flatCodebook, dim, subDim)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cbRef = ctx.addReferenceObj("pqCodebook", flatCodebook, "long[]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = ${PqReconExpression.getClass.getName.stripSuffix("$")}" +
-        s".compute($c, $cbRef, $dim, $subDim);")
-  }
+  override protected def nullResult: Boolean = true
+  override protected def consts: Seq[Any] = Seq(codebook.flatten.toArray, codebook.head.length, subDim)
 
   override protected def withNewChildInternal(newChild: Expression): PqReconExpression =
     copy(child = newChild)
@@ -57,11 +40,15 @@ case class PqReconExpression(child: Expression, codebook: Seq[Seq[Long]], subDim
 
 object PqReconExpression {
 
-  /** Shared by eval and generated code. `cb` is row-major (k × dim);
-    * distances are per-subspace L2 over the m-th slice; strict `<` keeps
-    * the first (lowest-index) centroid on ties, matching
-    * `array_min(array(struct(d, c)…))`. */
+  /** The row function. `cb` is row-major (k × dim); distances are
+    * per-subspace L2 over the m-th slice; strict `<` keeps the first
+    * (lowest-index) centroid on ties, matching
+    * `array_min(array(struct(d, c)…))`. Null when `arr` is not `dim` long
+    * or holds a null. */
   def compute(arr: ArrayData, cb: Array[Long], dim: Int, subDim: Int): ArrayData = {
+    if (arr.numElements() != dim) return null
+    var i = 0
+    while (i < dim) { if (arr.isNullAt(i)) return null; i += 1 }
     val k = cb.length / dim
     val m = dim / subDim
     val out = new Array[Long](dim)

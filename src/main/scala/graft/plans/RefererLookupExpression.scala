@@ -1,10 +1,8 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
-import org.apache.spark.unsafe.types.UTF8String
 
 /** referer-parser database lookup: (host, path) → source id into
   * [[graft.functions.RefererDbData.Sources]], or -1 when the referer is
@@ -24,23 +22,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * library, like a charset table.
   */
 case class RefererLookupExpression(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == StringType && right.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires (string, string) inputs, got (${left.dataType}, ${right.dataType})")
-
+    extends RowKernel("graft_referer_lookup", graft.functions.RefererDb, "lookupIdx") with BinaryLike[Expression] {
+  override def inputTypes: Seq[DataType] = Seq(StringType, StringType)
   override def dataType: DataType = IntegerType
-  override def prettyName: String = "graft_referer_lookup"
-
-  override protected def nullSafeEval(host: Any, path: Any): Any =
-    graft.functions.RefererDb.lookupIdx(
-      host.asInstanceOf[UTF8String], path.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (h, p) =>
-      s"graft.functions.RefererDb$$.MODULE$$.lookupIdx($h, $p)")
 
   override protected def withNewChildrenInternal(
     newLeft: Expression,

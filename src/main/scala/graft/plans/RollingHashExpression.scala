@@ -1,8 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -10,28 +9,30 @@ import org.apache.spark.unsafe.types.UTF8String
   * `h = Σ (h·B + byte) mod M`, left to right — the Rabin–Karp document
   * fingerprint a training-data pipeline uses for cheap shift-resistant
   * dedup keys (SURVEY §2.D `doc_fingerprint`'s rolling-hash sibling).
-  * A tight generated loop over the bytes; the composable form would explode
-  * the string into a character array per row.
+  * One call per row into a tight loop over the bytes ([[RowKernel]]); the
+  * composable form would explode the string into a character array per row.
   *
   * B and M are small-literal parameters; M must keep `(M−1)·B + 255` inside
   * a signed long, which `require` enforces.
   */
 case class RollingHashExpression(child: Expression, base: Long, mod: Long)
-  extends UnaryExpression {
+    extends RowKernel("graft_rolling_hash", RollingHashExpression, "hash") with UnaryLike[Expression] {
 
   require(base > 0 && mod > 1, "base and mod must be positive")
   require(mod - 1 <= (Long.MaxValue - 255) / base, "base*mod must fit a long")
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_rolling_hash requires string, got ${other.catalogString}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType = LongType
-  override def prettyName: String = "graft_rolling_hash"
+  override protected def consts: Seq[Any] = Seq(base, mod)
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val bytes = input.asInstanceOf[UTF8String].getBytes
+  override protected def withNewChildInternal(newChild: Expression): RollingHashExpression =
+    copy(child = newChild)
+}
+
+object RollingHashExpression {
+  /** The row function. */
+  def hash(s: UTF8String, base: Long, mod: Long): Long = {
+    val bytes = s.getBytes
     var h = 0L
     var i = 0
     while (i < bytes.length) {
@@ -40,22 +41,4 @@ case class RollingHashExpression(child: Expression, base: Long, mod: Long)
     }
     h
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val bytes = ctx.freshName("bytes")
-      val h = ctx.freshName("h")
-      val i = ctx.freshName("i")
-      s"""
-         |byte[] $bytes = $c.getBytes();
-         |long $h = 0L;
-         |for (int $i = 0; $i < $bytes.length; $i++) {
-         |  $h = ($h * ${base}L + ($bytes[$i] & 0xff)) % ${mod}L;
-         |}
-         |${ev.value} = $h;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): RollingHashExpression =
-    copy(child = newChild)
 }

@@ -2,9 +2,8 @@ package graft.plans
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 
@@ -24,40 +23,17 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * `acc + null` and never recovers).
   */
 case class ScoreExpression(child: Expression, salt: String, table: Seq[Long])
-    extends UnaryExpression {
+    extends RowKernel("graft_feature_score", ScoreExpression, "scoreRow") with UnaryLike[Expression] {
 
   require(table.length == 64,
     s"score table must have 64 entries, got ${table.length}: the composable " +
       "twin and the DuckDB oracle bucket by % 64")
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<string>, got ${other.catalogString}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
   override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_feature_score"
-
-  @transient private lazy val saltBytes: Array[Byte] =
-    salt.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-  @transient private lazy val tableArr: Array[Long] = table.toArray
-
-  override protected def nullSafeEval(input: Any): Any =
-    ScoreExpression.scoreRow(input.asInstanceOf[ArrayData], saltBytes, tableArr)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val saltRef = ctx.addReferenceObj("scoreSalt", saltBytes, "byte[]")
-    val tableRef = ctx.addReferenceObj("scoreTable", tableArr, "long[]")
-    nullSafeCodeGen(ctx, ev, c => {
-      val r = ctx.freshName("scoreRes")
-      s"""
-         |java.lang.Long $r = graft.plans.ScoreExpression$$.MODULE$$.scoreRow(
-         |  $c, $saltRef, $tableRef);
-         |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r.longValue(); }
-       """.stripMargin
-    })
-  }
+  override protected def nullResult: Boolean = true
+  override protected def consts: Seq[Any] =
+    Seq(salt.getBytes(java.nio.charset.StandardCharsets.UTF_8), table.toArray)
 
   override protected def withNewChildInternal(newChild: Expression): ScoreExpression =
     copy(child = newChild)
@@ -68,7 +44,7 @@ object ScoreExpression {
   private val digestTL: ThreadLocal[MessageDigest] =
     ThreadLocal.withInitial(() => MessageDigest.getInstance("MD5"))
 
-  /** Null ARRAY is handled by the caller (nullSafe*); a null ELEMENT nulls
+  /** A null ARRAY nulls the result before the call; a null ELEMENT nulls
     * the sum, matching the composable fold's `acc + null`. */
   def scoreRow(arr: ArrayData, salt: Array[Byte], table: Array[Long]): java.lang.Long = {
     val md = digestTL.get()

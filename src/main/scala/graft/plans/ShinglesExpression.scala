@@ -1,8 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -14,63 +13,40 @@ import org.apache.spark.unsafe.types.UTF8String
   * This is the (b)-tier extension path from SURVEY §3: the composable form
   * (`transform(sequence(...), i -> concat_ws(...element_at...))`) evaluates
   * its lambda interpreted, costing k array probes + an interpreted concat
-  * per shingle; this expression participates in whole-stage codegen with a
-  * tight generated loop. Used by `TextF.shinglesFromTokens`, i.e. by the
+  * per shingle; this expression participates in whole-stage codegen as one
+  * call per row into a tight loop ([[RowKernel]]). Used by `TextF.shinglesFromTokens`, i.e. by the
   * MinHash / Jaccard dedup operators that shingle every document at corpus
   * scale.
   */
-case class ShinglesExpression(child: Expression, k: Int) extends UnaryExpression {
+case class ShinglesExpression(child: Expression, k: Int)
+    extends RowKernel("graft_shingles", ShinglesExpression, "shingles") with UnaryLike[Expression] {
 
   require(k >= 1, "k must be >= 1")
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_shingles requires array<string>, got ${other.catalogString}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "graft_shingles"
+  override protected def consts: Seq[Any] = Seq(k)
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  override protected def withNewChildInternal(newChild: Expression): ShinglesExpression =
+    copy(child = newChild)
+}
+
+object ShinglesExpression {
+  private val Sep = UTF8String.fromString(" ")
+
+  /** The row function. */
+  def shingles(arr: ArrayData, k: Int): ArrayData = {
     val n = arr.numElements()
     val m = math.max(n - k + 1, 0)
     val out = new Array[Any](m)
-    val sep = UTF8String.fromString(" ")
     var i = 0
     while (i < m) {
       val parts = new Array[UTF8String](k)
       var j = 0
       while (j < k) { parts(j) = arr.getUTF8String(i + j); j += 1 }
-      out(i) = UTF8String.concatWs(sep, parts: _*)
+      out(i) = UTF8String.concatWs(Sep, parts: _*)
       i += 1
     }
     new GenericArrayData(out)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val arrCls = classOf[GenericArrayData].getName
-      val u = "org.apache.spark.unsafe.types.UTF8String"
-      val n = ctx.freshName("n")
-      val m = ctx.freshName("m")
-      val out = ctx.freshName("out")
-      val parts = ctx.freshName("parts")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      s"""
-         |int $n = $c.numElements();
-         |int $m = $n - ${k - 1}; if ($m < 0) $m = 0;
-         |$u[] $out = new $u[$m];
-         |for (int $i = 0; $i < $m; $i++) {
-         |  $u[] $parts = new $u[$k];
-         |  for (int $j = 0; $j < $k; $j++) $parts[$j] = $c.getUTF8String($i + $j);
-         |  $out[$i] = $u.concatWs($u.fromString(" "), $parts);
-         |}
-         |${ev.value} = new $arrCls($out);
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): ShinglesExpression =
-    copy(child = newChild)
 }

@@ -2,9 +2,8 @@ package graft.plans
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -24,26 +23,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * token's UTF-8 bytes, first `bits` bits big-endian-hex order, ties
   * (2·ones ≥ n) set the bit, empty array → 0.
   */
-case class SimHashExpression(child: Expression, bits: Int) extends UnaryExpression {
+case class SimHashExpression(child: Expression, bits: Int)
+    extends RowKernel("graft_simhash", SimHashExpression, "compute") with UnaryLike[Expression] {
 
   require(bits % 4 == 0 && bits >= 4 && bits <= 64,
     "bits must be a multiple of 4 in 4..64 (a whole number of md5 hex digits)")
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_simhash requires array<string>, got ${other.catalogString}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
   override def dataType: DataType = LongType
-  override def prettyName: String = "graft_simhash"
-
-  override protected def nullSafeEval(input: Any): Any =
-    SimHashExpression.compute(input.asInstanceOf[ArrayData], bits)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = ${SimHashExpression.getClass.getName.stripSuffix("$")}" +
-        s".compute($c, $bits);")
+  override protected def consts: Seq[Any] = Seq(bits)
 
   override protected def withNewChildInternal(newChild: Expression): SimHashExpression =
     copy(child = newChild)
@@ -51,7 +39,7 @@ case class SimHashExpression(child: Expression, bits: Int) extends UnaryExpressi
 
 object SimHashExpression {
 
-  /** Shared by eval and the generated code: distinct tokens, per-token
+  /** The row function: distinct tokens, per-token
     * value = the first bits/4 md5 hex digits as an integer (== DuckDB
     * `'0x' || substr(md5, 1, bits/4)` cast; for bits = 32 that is the first
     * 4 bytes big-endian, the original spelling), majority vote per bit. */

@@ -1,12 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
-/** Native codegen'd vector × matrix-literal kernel: for each row j of the
+/** Native codegen'd vector × matrix-literal kernel ([[RowKernel]]): for each row j of the
   * plan-time `mat`, emits the left-to-right dot product Σᵢ v(i)·mat(j)(i)
   * in double — byte-identical to the composable
   * `aggregate(zip_with(v, lit(row), _*_), 0.0, _+_)` fold, minus the
@@ -16,41 +15,40 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * IVF centroid similarity (mat = centroids).
   */
 case class VecMatMulExpression(child: Expression, mat: Array[Array[Double]])
-  extends UnaryExpression {
+    extends RowKernel("graft_vecmatmul", VecMatMulExpression, "matmul") with UnaryLike[Expression] {
 
   require(mat.nonEmpty, "matrix must have at least one row")
   require(mat.forall(_.length == mat(0).length), "matrix rows must have equal length")
 
-  /** Shared input dimensionality; a vector of any other length yields NULL
-    * (like the zip_with-pads-with-null HOF fold this kernel mirrors) rather
-    * than a silently-truncated partial dot product. */
-  private val dim: Int = mat(0).length
-
-  // def, not val: child.dataType is unavailable while still unresolved
-  private def isFloat: Boolean = child.dataType match {
+  // array<float> or, for any other input, array<double>
+  override def inputTypes: Seq[DataType] = Seq(child.dataType match {
+    case ArrayType(FloatType, _) => ArrayType(FloatType)
+    case _ => ArrayType(DoubleType)
+  })
+  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
+  override protected def nullResult: Boolean = true
+  // lazy in the base: child.dataType is unavailable while still unresolved
+  override protected def consts: Seq[Any] = Seq(mat, child.dataType match {
     case ArrayType(FloatType, _) => true
     case _ => false
-  }
+  })
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_vecmatmul requires array<float> or array<double>, got ${other.catalogString}")
-  }
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def prettyName: String = "graft_vecmatmul"
+  override protected def withNewChildInternal(newChild: Expression): VecMatMulExpression =
+    copy(child = newChild)
+}
 
-  override def nullable: Boolean = true
-
-  override protected def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
+object VecMatMulExpression {
+  /** The row function. The matrix rows share one input dimensionality; a
+    * vector of any other length yields NULL (like the zip_with-pads-with-null
+    * HOF fold this kernel mirrors) rather than a silently-truncated partial
+    * dot product, and so does a null element, which would otherwise
+    * contribute 0.0. */
+  def matmul(v: ArrayData, mat: Array[Array[Double]], isFloat: Boolean): ArrayData = {
     val n = v.numElements()
-    if (n != dim) return null
-    // a null element would silently contribute 0.0 where the HOF fold this
-    // kernel mirrors returns NULL — propagate null for the whole result
+    if (n != mat(0).length) return null
     var k = 0
     while (k < n) { if (v.isNullAt(k)) return null; k += 1 }
-    val out = new Array[Any](mat.length)
+    val out = new Array[Double](mat.length)
     var j = 0
     while (j < mat.length) {
       val row = mat(j)
@@ -66,44 +64,4 @@ case class VecMatMulExpression(child: Expression, mat: Array[Array[Double]])
     }
     new GenericArrayData(out)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val matRef = ctx.addReferenceObj("mat", mat, "double[][]")
-    val getter = if (isFloat) "getFloat" else "getDouble"
-    nullSafeCodeGen(ctx, ev, c => {
-      val arrCls = classOf[GenericArrayData].getName
-      val out = ctx.freshName("out")
-      val row = ctx.freshName("row")
-      val acc = ctx.freshName("acc")
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val k = ctx.freshName("k")
-      val anyNull = ctx.freshName("anyNull")
-      s"""
-         |int $n = $c.numElements();
-         |boolean $anyNull = ($n != $dim);
-         |for (int $k = 0; !$anyNull && $k < $n; $k++) {
-         |  if ($c.isNullAt($k)) { $anyNull = true; }
-         |}
-         |if ($anyNull) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double[] $out = new double[$matRef.length];
-         |  for (int $j = 0; $j < $matRef.length; $j++) {
-         |    double[] $row = $matRef[$j];
-         |    double $acc = 0.0;
-         |    for (int $i = 0; $i < $n; $i++) {
-         |      $acc += ((double) $c.$getter($i)) * $row[$i];
-         |    }
-         |    $out[$j] = $acc;
-         |  }
-         |  ${ev.value} = new $arrCls($out);
-         |}
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): VecMatMulExpression =
-    copy(child = newChild)
 }

@@ -1,8 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -14,26 +13,29 @@ import org.apache.spark.unsafe.types.UTF8String
   * The composable form (`transform(sequence(...), i ->
   * array_min(slice(...)))`) evaluates its lambda interpreted and re-scans w
   * elements per window — O(n·w) with per-window array allocation. This
-  * kernel is the textbook O(n) monotonic deque inside whole-stage codegen:
+  * kernel is the textbook O(n) monotonic deque, one call per row inside
+  * whole-stage codegen ([[RowKernel]]):
   * one pass, one int[] of indices, then one sort+dedup of the ≈n/w selected
   * minima. Fewer than w hashes (but ≥ 1) form a single window; null
   * elements are ignored by the window minimum (a window of only nulls
   * selects nothing).
   */
-case class WinnowExpression(child: Expression, w: Int) extends UnaryExpression {
+case class WinnowExpression(child: Expression, w: Int)
+    extends RowKernel("graft_winnow", WinnowExpression, "winnow") with UnaryLike[Expression] {
 
   require(w >= 1, "window must be >= 1")
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_winnow requires array<string>, got ${other.catalogString}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "graft_winnow"
+  override protected def consts: Seq[Any] = Seq(w)
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  override protected def withNewChildInternal(newChild: Expression): WinnowExpression =
+    copy(child = newChild)
+}
+
+object WinnowExpression {
+  /** The row function. */
+  def winnow(arr: ArrayData, w: Int): ArrayData = {
     val n = arr.numElements()
     if (n == 0) return new GenericArrayData(Array.empty[Any])
     val vals = new Array[UTF8String](n)
@@ -67,53 +69,4 @@ case class WinnowExpression(child: Expression, w: Int) extends UnaryExpression {
     System.arraycopy(mins, 0, out, 0, u)
     new GenericArrayData(out)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val arrCls = classOf[GenericArrayData].getName
-      val u8 = "org.apache.spark.unsafe.types.UTF8String"
-      val n = ctx.freshName("n")
-      val vals = ctx.freshName("vals")
-      val mins = ctx.freshName("mins")
-      val cnt = ctx.freshName("cnt")
-      val dq = ctx.freshName("dq")
-      val head = ctx.freshName("head")
-      val tail = ctx.freshName("tail")
-      val i = ctx.freshName("i")
-      val uq = ctx.freshName("uq")
-      val out = ctx.freshName("out")
-      val nw = ctx.freshName("nw")
-      s"""
-         |int $n = $c.numElements();
-         |$u8[] $vals = new $u8[$n];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $vals[$i] = $c.isNullAt($i) ? null : $c.getUTF8String($i);
-         |}
-         |int $nw = $n - ${w - 1}; if ($nw < 1) $nw = ($n > 0 ? 1 : 0);
-         |$u8[] $mins = new $u8[$nw];
-         |int $cnt = 0;
-         |int[] $dq = new int[$n];
-         |int $head = 0, $tail = 0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if ($vals[$i] != null) {
-         |    while ($tail > $head && $vals[$dq[$tail - 1]].compareTo($vals[$i]) >= 0) $tail--;
-         |    $dq[$tail++] = $i;
-         |  }
-         |  while ($tail > $head && $dq[$head] <= $i - $w) $head++;
-         |  if ($i >= ${w - 1} && $tail > $head) $mins[$cnt++] = $vals[$dq[$head]];
-         |}
-         |if ($n > 0 && $n < $w && $tail > $head) $mins[$cnt++] = $vals[$dq[$head]];
-         |java.util.Arrays.sort($mins, 0, $cnt);
-         |int $uq = 0;
-         |for (int $i = 0; $i < $cnt; $i++) {
-         |  if ($i == 0 || !$mins[$i].equals($mins[$i - 1])) $mins[$uq++] = $mins[$i];
-         |}
-         |$u8[] $out = new $u8[$uq];
-         |System.arraycopy($mins, 0, $out, 0, $uq);
-         |${ev.value} = new $arrCls($out);
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): WinnowExpression =
-    copy(child = newChild)
 }

@@ -260,15 +260,48 @@ class PlanShapeSpec extends SparkSpec {
       graft.sources.Sources.collectorTsv(spark, collectorTsv("chain-codegen", chainLine).toString))
     val payload = graft.sources.Sources.CollectorTsvFields.map(_._1)
     for ((what, df) <- Seq("chain" -> pipeline.run(raw), "good side" -> pipeline.split(raw)._1,
-        "bad envelopes" -> pipeline.badRowsJson(raw, payload, lit(0L)).select("bad_row"))) {
+        "bad envelopes" -> pipeline.badRowsJson(raw, payload, lit(0L)).select("bad_row"),
+        "all-enrichments config chain" -> allEnrichments.run(raw))) {
       val written = executions(df.write.format("noop").mode("overwrite").save())
       assert(written.size == 1, s"$what: the noop write reported no query execution")
       val stages = codegenStringSeq(written.head.executedPlan)
       assert(stages.nonEmpty, s"$what: no whole-stage-codegen subtree:\n${written.head.executedPlan}")
       val largest = stages.map(_._3.maxMethodCodeSize).max
+      info(s"$what: $largest bytes")
       assert(largest < 8000, s"$what: the largest generated method is $largest bytes")
     }
   }
+
+  /** Every stage `fromJson` builds from inline data, with no network and no
+    * JDBC: the default chain's 13 stages, then the IAB, ASN, segment and
+    * bot stages, the extractors and the schema vendor. The collector TSV
+    * carries no cookie or header column, so the extractors read string
+    * columns it has. */
+  private def allEnrichments = graft.enrich.EnrichmentConfig.fromJson("""{"enrichments": [
+    {"name": "tracker_transform"},
+    {"name": "derived_tstamp"},
+    {"name": "page_url_parse"},
+    {"name": "campaign_attribution"},
+    {"name": "referer_parser", "internalDomains": ["internal.example.com", "shop.example.com"]},
+    {"name": "ua_parser"},
+    {"name": "ip_geo_lookup",
+     "ranges": [{"lo": 0, "hi": 167772159, "country": "AA"}, {"lo": 167772160, "hi": 184549375, "country": "TEN"}],
+     "v6Ranges": [{"prefix": "2001:db8:1:2", "lo": "0", "hi": "18446744073709551615", "country": "V6"}]},
+    {"name": "currency_conversion", "rates": [{"cur": "EUR", "rateMicro": 1080000}]},
+    {"name": "cross_navigation"},
+    {"name": "anon_ip"},
+    {"name": "pii_pseudonymize", "fields": ["user_id"], "salt": "pepper"},
+    {"name": "event_fingerprint", "params": ["event_code", "platform_code", "res"]},
+    {"name": "iab_bot_detection", "botIpList": ["10.0.0.9"]},
+    {"name": "ip_asn_lookup", "ranges": [{"lo": 167772160, "hi": 167772415, "asn": 64496, "org": "Example"}]},
+    {"name": "ip_segment_lookup", "segment": "isp",
+     "ranges": [{"lo": 167772160, "hi": 184549375, "value": "Example ISP"}]},
+    {"name": "bot_detection", "useAsnLookups": true, "botAsns": [64496]},
+    {"name": "cookie_extractor", "cookieCol": "querystring", "cookies": ["sp", "uid"]},
+    {"name": "http_header_extractor", "headerCol": "useragent"},
+    {"name": "schema_vendor"},
+    {"name": "field_lengths"}
+  ]}""")
 
   test("aggregations are map-side partial before their one exchange") {
     val p = plan("q1_pricing")

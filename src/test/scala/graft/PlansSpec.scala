@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextF
@@ -7,50 +8,63 @@ import graft.plans.GraftFunctions
 
 class PlansSpec extends SparkSpec {
 
+  /** `q`'s rows on one path: generated code only (whole-stage codegen on,
+    * codegen factory only) or interpreted only (both off). Local relations
+    * stay scans on both: `ConvertToLocalRelation` would evaluate a `toDF`
+    * frame's projection through `eval` at planning, whatever the path. */
+  private def onPath[T](codegen: Boolean)(q: => DataFrame)(read: DataFrame => T): T = {
+    val confs = Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode",
+      "spark.sql.optimizer.excludedRules")
+    val saved = confs.map(k => k -> spark.conf.getOption(k))
+    spark.conf.set(confs(0), codegen)
+    spark.conf.set(confs(1), if (codegen) "CODEGEN_ONLY" else "NO_CODEGEN")
+    spark.conf.set(confs(2), (saved(2)._2.toSeq :+
+      "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation").mkString(","))
+    try {
+      val df = q
+      val out = read(df)
+      val plan = df.queryExecution.executedPlan.toString
+      assert(plan.contains("Project"), s"the projection was folded away at planning:\n$plan")
+      out
+    } finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
   test("ShinglesExpression matches the composable form (codegen + interpreted)") {
     import spark.implicits._
     val df = Seq("a b c d e", "a b", "", "x y z").toDF("t")
       .withColumn("toks", split(col("t"), " "))
-    val native = df.select(TextF.shinglesFromTokens(col("toks"), 3).as("s"))
-      .collect().map(_.getSeq[String](0).toList)
+    def run(codegen: Boolean) = onPath(codegen)(df.select(TextF.shinglesFromTokens(col("toks"), 3).as("s")))(
+      _.collect().map(_.getSeq[String](0).toList).toList)
+    val native = run(codegen = true)
     assert(native(0) == List("a b c", "b c d", "c d e"))
     assert(native(1) == Nil)
     assert(native(3) == List("x y z"))
-    // interpreted path (codegen disabled)
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    try {
-      val interp = df.select(TextF.shinglesFromTokens(col("toks"), 3).as("s"))
-        .collect().map(_.getSeq[String](0).toList)
-      assert(interp.toList == native.toList)
-    } finally spark.conf.set("spark.sql.codegen.wholeStage", "true")
+    assert(run(codegen = false) == native)
   }
 
   test("WinnowExpression matches the composable form on the corpus (codegen + interpreted)") {
     val dir = "/root/testdata/sf0.001"
-    def sels(f: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame) =
-      f(Tables.documents(spark, dir))
-        .select(col("doc_id"), col("sel")).collect()
-        .map(r => r.getLong(0) -> r.getSeq[String](1).toList).toMap
-    val native = sels(graft.queries.Queries20.winnowSel)
-    val composed = sels(graft.queries.Queries20.winnowSelComposed)
+    def sels(codegen: Boolean)(f: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame) =
+      onPath(codegen)(f(Tables.documents(spark, dir)).select(col("doc_id"), col("sel")))(
+        _.collect().map(r => r.getLong(0) -> r.getSeq[String](1).toList).toMap)
+    val native = sels(codegen = true)(graft.queries.Queries20.winnowSel)
+    val composed = sels(codegen = true)(graft.queries.Queries20.winnowSelComposed)
     assert(native == composed, "native deque kernel must equal the slice/array_min form")
-    // interpreted path
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    try assert(sels(graft.queries.Queries20.winnowSel) == composed)
-    finally spark.conf.set("spark.sql.codegen.wholeStage", "true")
+    assert(sels(codegen = false)(graft.queries.Queries20.winnowSel) == composed)
     // edge shapes: fewer hashes than the window, single element, empty
     import spark.implicits._
     val edge = Seq((1L, "a b c d e"), (2L, "a b c d"), (3L, "")).toDF("doc_id", "text")
-    val en = sels(_ => graft.queries.Queries20.winnowSel(edge))
-    val ec = sels(_ => graft.queries.Queries20.winnowSelComposed(edge))
-    assert(en == ec, s"edge shapes diverge: $en vs $ec")
-    assert(en(3L).isEmpty)
+    val ec = sels(codegen = true)(_ => graft.queries.Queries20.winnowSelComposed(edge))
+    for (cg <- Seq(true, false)) {
+      val en = sels(cg)(_ => graft.queries.Queries20.winnowSel(edge))
+      assert(en == ec, s"edge shapes diverge (codegen=$cg): $en vs $ec")
+      assert(en(3L).isEmpty)
+    }
   }
 
   test("VecMatMulExpression matches the composable HOF fold (codegen + interpreted)") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    import graft.functions.SimF
     val mat = Seq(Seq(1.5, -2.0, 0.25), Seq(0.0, 4.0, -1.0))
     val df = Seq((1L, Seq(1.0f, 2.0f, 3.0f)), (2L, Seq(-0.5f, 0.0f, 8.0f))).toDF("id", "v")
     def hof(row: Seq[Double]) =
@@ -59,14 +73,11 @@ class PlansSpec extends SparkSpec {
     val expected = df.select(col("id"), array(hof(mat(0)), hof(mat(1))).as("d"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Double](1).toList).toMap
     def viaKernel(codegen: Boolean) = {
-      spark.conf.set("spark.sql.codegen.wholeStage", codegen)
-      try {
-        import org.apache.spark.sql.graft.ColumnBridge
-        df.select(col("id"), ColumnBridge.column(
-            graft.plans.VecMatMulExpression(ColumnBridge.expression(col("v")),
-              mat.map(_.toArray).toArray)).as("d"))
-          .collect().map(r => r.getLong(0) -> r.getSeq[Double](1).toList).toMap
-      } finally spark.conf.set("spark.sql.codegen.wholeStage", "true")
+      import org.apache.spark.sql.graft.ColumnBridge
+      onPath(codegen)(df.select(col("id"), ColumnBridge.column(
+          graft.plans.VecMatMulExpression(ColumnBridge.expression(col("v")),
+            mat.map(_.toArray).toArray)).as("d")))(
+        _.collect().map(r => r.getLong(0) -> r.getSeq[Double](1).toList).toMap)
     }
     assert(viaKernel(codegen = true) == expected)
     assert(viaKernel(codegen = false) == expected)
@@ -92,18 +103,30 @@ class PlansSpec extends SparkSpec {
     }
   }
 
+  test("PqReconExpression: short, long and null-element vectors yield NULL") {
+    import spark.implicits._
+    import org.apache.spark.sql.graft.ColumnBridge
+    val codebook = Seq(Seq(0L, 0L, 0L, 0L), Seq(10L, 10L, 10L, 10L))
+    val df = Seq[(Long, Seq[java.lang.Long])]((1L, Seq(1L, 2L)), (2L, Seq(1L, 2L, 3L, 4L, 5L)),
+      (3L, Seq(1L, null, 3L, 4L)), (4L, Seq(1L, 2L, 9L, 9L))).toDF("id", "v")
+    for (cg <- Seq(true, false)) {
+      val out = onPath(cg)(df.select(col("id"), ColumnBridge.column(
+          graft.plans.PqReconExpression(ColumnBridge.expression(col("v")), codebook, 2)).as("r")))(
+        _.collect().map(r => r.getLong(0) -> Option(r.getSeq[Long](1)).map(_.toList)).toMap)
+      assert(out(1L).isEmpty && out(2L).isEmpty && out(3L).isEmpty, s"malformed vectors must be null (codegen=$cg): $out")
+      assert(out(4L).contains(List(0L, 0L, 10L, 10L)), s"a well-formed vector still decodes (codegen=$cg)")
+    }
+  }
+
   test("RollingHashExpression: known vectors, codegen == interpreted") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     import graft.functions.TextF
     // hand-computed: "ab" → (97*257 + 98) % 1000000007 = 25027
     val df = Seq((1L, "ab"), (2L, ""), (3L, "hello world")).toDF("id", "t")
-    def run(codegen: Boolean) = {
-      spark.conf.set("spark.sql.codegen.wholeStage", codegen)
-      try df.select(col("id"), TextF.rollingHash(col("t")).as("h"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      finally spark.conf.set("spark.sql.codegen.wholeStage", "true")
-    }
+    def run(codegen: Boolean) =
+      onPath(codegen)(df.select(col("id"), TextF.rollingHash(col("t")).as("h")))(
+        _.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
     val cg = run(codegen = true)
     assert(cg(1L) == 25027L)
     assert(cg(2L) == 0L)
@@ -123,6 +146,12 @@ class PlansSpec extends SparkSpec {
     assert(dedup.contains("graft_vecmatmul"))
     assert(!dedup.contains("CartesianProduct") && !dedup.contains("BroadcastNestedLoop"),
       "band join must be an equi-join, never an all-pairs product")
+  }
+
+  test("DESCRIBE FUNCTION prints a graft kernel's usage") {
+    GraftFunctions.install(spark)
+    val lines = spark.sql("DESCRIBE FUNCTION graft_shingles").collect().map(_.getString(0)).toSeq
+    assert(lines.contains("Usage: graft_shingles(tokens, k)"), lines)
   }
 
   test("SQL function registration exposes kernels to spark.sql") {
