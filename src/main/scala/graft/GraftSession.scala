@@ -5,13 +5,24 @@ import org.apache.spark.sql.SparkSession
 import graft.plans.GraftFunctions
 
 /** The one place graft builds a SparkSession, so that the library, the app
-  * and every tool plan their queries under the same optimizer config. */
+  * and every tool plan their queries under the same optimizer config and
+  * do their local I/O through the same filesystem. */
 object GraftSession {
 
-  /** Set the session time zone and graft's two optimizer confs. */
+  /** Set the session time zone, graft's two optimizer confs and its
+    * fork-free `file:` filesystem. */
   def configure(builder: SparkSession.Builder = SparkSession.builder()): SparkSession.Builder =
     builder
       .config("spark.sql.session.timeZone", "UTC")
+      // local writes and checkpoint commits start no process (graft.io).
+      // Session options, not spark.hadoop.*: they reach every Hadoop conf
+      // the session hands out, also when getOrCreate reuses a session built
+      // elsewhere. Hadoop caches a FileSystem per scheme, authority and user
+      // (not per class), so a cached plain LocalFileSystem would win; an
+      // uncached get costs about 3.5 µs.
+      .config("fs.file.impl", classOf[graft.io.NoForkLocalFileSystem].getName)
+      .config("fs.AbstractFileSystem.file.impl", classOf[graft.io.NoForkLocalFs].getName)
+      .config("fs.file.impl.disable.cache", "true")
       // let AQE re-plan shuffles INSIDE cached plans (off by default): the
       // iterative operators (connected components, PageRank) cache small
       // per-round frames whose fixed-width partitioning otherwise dominates

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, struct}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.enrich.{BadRows, EnrichmentConfig, EnrichmentPipeline}
 import graft.sources.Sources
@@ -157,24 +158,28 @@ object Main {
             .option("checkpointLocation", args.checkpoint + "/good"))
             .start().awaitTermination()
         else {
-          val goodQ = trigger(pipeline.split(raw)._1
-            .writeStream
-            .format("parquet")
-            .option("path", args.good)
-            .option("checkpointLocation", args.checkpoint + "/good")
-            .outputMode("append"))
-            .start()
-          val badQ =
+          // a sink query that fails, at start or mid-stream, stops the
+          // other and its error is rethrown: neither sink keeps writing
+          // alone. Each query may end by itself (--once) or by stop().
+          val queries = scala.collection.mutable.ArrayBuffer.empty[StreamingQuery]
+          try {
+            queries += trigger(pipeline.split(raw)._1
+              .writeStream
+              .format("parquet")
+              .option("path", args.good)
+              .option("checkpointLocation", args.checkpoint + "/good")
+              .outputMode("append"))
+              .start()
             if (args.bad.nonEmpty)
-              Some(trigger(pipeline.badRowsJson(raw, payloadCols(raw), etlUs)
+              queries += trigger(pipeline.badRowsJson(raw, payloadCols(raw), etlUs)
                 .select("bad_row").writeStream
                 .format("text")
                 .option("path", args.bad)
                 .option("checkpointLocation", args.checkpoint + "/bad")
-                .outputMode("append")).start())
-            else None
-          goodQ.awaitTermination()
-          badQ.foreach(_.awaitTermination())
+                .outputMode("append")).start()
+            // awaitTermination rethrows a query's failure
+            while (!queries.map(_.awaitTermination(100)).forall(identity)) ()
+          } finally queries.foreach(_.stop())
         }
 
       case other => throw new IllegalArgumentException(s"unknown mode: $other")

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener}
 
 /** `graft.Main --mode stream --transport …` end-to-end: a reference-style
   * transport config resolves through TransportFactories, the framed lines
@@ -193,6 +193,74 @@ class MainStreamSpec extends SparkSpec {
     }
     assert(!main.isAlive, "Main returns once its stream query stops")
     Option(failure.get).foreach(t => throw t)
+  }
+
+  /** Runs a two-sink stream Main (no --once) on a thread and calls
+    * `during` with the input dir and the run's active queries while it
+    * runs. Asserts that Main then returns within two minutes and leaves
+    * none of its queries active; returns what Main threw. */
+  private def runMain(root: java.nio.file.Path, bad: java.nio.file.Path)(
+      during: (java.nio.file.Path, () => Seq[StreamingQuery]) => Unit): Option[Throwable] = {
+    val in = root.resolve("in")
+    Files.createDirectories(in)
+    Files.write(in.resolve("b1.tsv"),
+      Seq(collectorLine("pv"), collectorLine("zz")).mkString("\n").getBytes("UTF-8"))
+    val before = spark.streams.active.map(_.id).toSet
+    def ours = spark.streams.active.toSeq.filterNot(q => before(q.id))
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]
+    val main = new Thread(() =>
+      try graft.Main.main(Array(
+        "--mode", "stream", "--format", "collector-tsv", "--input", in.toString,
+        "--good", root.resolve("good").toString, "--bad", bad.toString,
+        "--checkpoint", root.resolve("ck").toString))
+      catch { case t: Throwable => failure.set(t) })
+    main.setDaemon(true)
+    main.start()
+    try {
+      during(in, () => ours)
+      main.join(120000)
+      assert(!main.isAlive, "Main returns")
+      assert(ours.isEmpty, "no query of the run stays active")
+      Option(failure.get)
+    } finally ours.foreach(_.stop())
+  }
+
+  private def awaitFile(p: java.nio.file.Path): Unit = {
+    val deadline = System.nanoTime() + 120L * 1000000000L
+    while (!Files.exists(p)) {
+      assert(System.nanoTime() < deadline, s"timed out waiting for $p")
+      Thread.sleep(100)
+    }
+  }
+
+  test("a bad sink that fails at start stops the good query, and Main throws") {
+    val root = Files.createTempDirectory("main_bad_start")
+    // the bad sink's path is a regular file
+    val bad = Files.write(root.resolve("bad"), "not a directory".getBytes("UTF-8"))
+    assert(runMain(root, bad)((_, _) => ()).isDefined, "Main rethrows the failed query's error")
+  }
+
+  test("a bad sink that fails mid-stream stops the good query, and Main throws") {
+    val root = Files.createTempDirectory("main_bad_mid")
+    val badLog = root.resolve("bad/_spark_metadata")
+    val failure = runMain(root, root.resolve("bad")) { (in, _) =>
+      awaitFile(badLog.resolve("0"))
+      // the bad sink's log directory becomes a file: its next commit fails
+      Files.walk(badLog).sorted(java.util.Comparator.reverseOrder()).forEach(p => Files.delete(p))
+      Files.write(badLog, "not a directory".getBytes("UTF-8"))
+      Files.write(in.resolve("b2.tsv"), collectorLine("zz").getBytes("UTF-8"))
+    }
+    assert(failure.isDefined, "Main rethrows the failed query's error")
+  }
+
+  test("a two-sink stream Main whose queries are stopped returns cleanly") {
+    val root = Files.createTempDirectory("main_stop")
+    val failure = runMain(root, root.resolve("bad")) { (_, ours) =>
+      Seq("good", "bad").foreach(s => awaitFile(root.resolve(s"$s/_spark_metadata/0")))
+      assert(ours().size == 2)
+      ours().foreach(_.stop())
+    }
+    assert(failure.isEmpty, s"Main threw $failure")
   }
 
   test("source guard: one foreachBatch stream path, no second reader or split layout") {
